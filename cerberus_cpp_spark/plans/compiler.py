@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field as dc_field
 from functools import reduce
-from typing import Any, Callable, Optional
+from typing import Any, Optional
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -73,33 +73,33 @@ def _truthy(arg: Any) -> bool:
 
 
 class ScalarViol:
-    """One rule violation: the raw boolean condition AND the
-    struct<path,message>-when-cond column. Keeping the condition
-    separate lets the engine compile ``n_violations`` as a pure
+    """One rule violation: the boolean firing condition, the path and
+    the message (both Columns). The struct<path,message> entry is
+    built only where a violation array is assembled, so the engine
+    compiles ``n_violations`` from the conditions alone as a pure
     integer sum — zero per-row allocations on the verdict/count path
     (the 100TB hot path); the struct array is only evaluated by the
     violation-explode path, which Catalyst filter-pushdown restricts
     to violating rows."""
 
-    __slots__ = ("cond", "struct")
+    __slots__ = ("cond", "path", "message")
 
-    def __init__(self, cond: Column, struct: Column):
+    def __init__(self, cond: Column, path: Column, message: Column):
         self.cond = cond
-        self.struct = struct
+        self.path = path
+        self.message = message
 
 
 def _viol(cond: Column, path: Column, message) -> ScalarViol:
-    """struct<path,message> when cond else NULL (filtered later)."""
+    """A violation at ``path`` whenever ``cond`` holds."""
     msg = message if isinstance(message, Column) else F.lit(message)
-    return ScalarViol(
-        cond,
-        F.when(cond, F.struct(path.alias("path"), msg.alias("message"))),
-    )
+    return ScalarViol(cond, path, msg)
 
 
 class ArrayViol:
     """Marker wrapper: a Column of array<struct<path,message>> (one
-    entry per element) as opposed to a scalar struct-or-null viol."""
+    entry per element, null entries allowed) as opposed to a
+    :class:`ScalarViol`."""
 
     __slots__ = ("col",)
 
@@ -132,12 +132,6 @@ class CompilerOpts:
     presence: str = "null"  # "null" | "defined"
     allow_unknown: bool = False
     purge_unknown: bool = False
-    # opt-in regex-free structural predicate for eligible patterns
-    # (see _regex_fast_path): 2x faster STANDALONE (single-rule scan
-    # jobs), but measured ~15% SLOWER inside the fused wide projection
-    # (translate's per-row allocation at 32 threads vs anchored
-    # rlike) — hence default False; BENCH.md §6 has the A/B numbers
-    structural_regex: bool = False
     extra_cols: tuple[str, ...] = ()
     # engine-supplied registries
     schema_registry: dict = dc_field(default_factory=dict)
@@ -152,12 +146,15 @@ class FieldCtx:
     value: Optional[Column]
     dtype: Optional[T.DataType]
     defined: Column
-    path: str
+    # a Column only for element contexts (_elem_viols), whose index or
+    # map key is known at run time alone
+    path: str | Column
     scope: Scope
-    # True when this ctx is a list ELEMENT (items rule): null is then
-    # unambiguously explicit (definedness comes from the list length,
-    # not isNotNull), so injected nullable:false fires in every
-    # presence mode and explicit nullable gates on definedness.
+    # True when this ctx is a list ELEMENT (items rule), an element
+    # under list-form schema / keysrules / valuesrules, or a field of
+    # such an element: null is then unambiguously explicit, so
+    # injected nullable:false fires in every presence mode and
+    # explicit nullable gates on definedness.
     elem: bool = False
 
     def declared_type(self) -> str:
@@ -175,7 +172,7 @@ class FieldCtx:
                             self.declared_type())
 
     def path_lit(self) -> Column:
-        return F.lit(self.path)
+        return self.path if isinstance(self.path, Column) else F.lit(self.path)
 
 
 def _child_ref(parent: FieldRef, name: str, opts: CompilerOpts) -> Optional[FieldRef]:
@@ -208,47 +205,6 @@ def _child_ref(parent: FieldRef, name: str, opts: CompilerOpts) -> Optional[Fiel
 import re as _re
 
 _PATH_TOKEN = _re.compile(r"([^.\[\]]+)|\[(\d+)\]")
-
-# regex-rule structural fast path (OPT-IN via
-# CompilerOpts.structural_regex): full-match patterns of the EXACT
-# shape <literal prefix>[0-9]{n} (prefix limited to characters that
-# are literals in both regex and the emitted predicates; notably no
-# '.', no LIKE metacharacters). Eligible patterns compile to
-# startswith + two length checks over translate() instead of rlike.
-# Measured (BENCH.md §6): 2.0x faster STANDALONE (8.9M vs 4.4M
-# rows/s, single-expression scan), but ~15% SLOWER inside the fused
-# 25-rule flagship projection (interleaved A/B best-of-3: 10.8s vs
-# 9.05s at 120M rows) — translate's per-row allocation hurts at 32
-# codegen threads where anchored rlike allocates nothing. Use it for
-# sparse single-rule filter jobs; the fused default stays rlike.
-_STRUCT_REGEX = _re.compile(
-    r"^(?P<prefix>[A-Za-z0-9\- :#/@]*)\[0-9\]\{(?P<n>\d+)\}$")
-_DIGITS = "0123456789"
-
-
-def _regex_fast_path(sdec: Column, pattern_body: str) -> Optional[Column]:
-    """Regex-free equivalent of ``^<prefix>[0-9]{n}$`` or None.
-
-    Equivalence: startswith(prefix) pins the first |prefix| chars;
-    length = |prefix| + n pins the total; non-digit-count(s) ==
-    non-digit-count(prefix) then forces the remaining n characters to
-    be digits (translate strips digits; comparing LENGTHS avoids the
-    order-ambiguity of comparing the stripped string itself — e.g.
-    'i1mg-…' strips to 'img-' but has 5 non-digits, so it still
-    fails). NULL propagates through every branch exactly like rlike.
-    """
-    m = _STRUCT_REGEX.match(str(pattern_body))
-    if not m:
-        return None
-    prefix, n = m.group("prefix"), int(m.group("n"))
-    if n < 1:
-        return None
-    nondigit = sum(1 for c in prefix if not c.isdigit())
-    cond = (F.length(sdec) == (len(prefix) + n)) & (
-        F.length(F.translate(sdec, _DIGITS, "")) == nondigit)
-    if prefix:
-        cond = cond & sdec.startswith(prefix)
-    return cond
 
 
 def _resolve(scope: Scope, path_str: str, opts: CompilerOpts) -> Optional[FieldRef]:
@@ -287,8 +243,10 @@ def _resolve(scope: Scope, path_str: str, opts: CompilerOpts) -> Optional[FieldR
 
 
 # ---------------------------------------------------------------------------
-# Element-wise scalar rule conditions (used inside F.transform lambdas
-# for schema-list / items / keysrules / valuesrules).
+# Element-level rules: one array element (an F.transform lambda
+# variable) or one key/value under keysrules/valuesrules, compiled by
+# compile_field's own rule table. Element paths are Columns: the index
+# or map key is only known at run time.
 # ---------------------------------------------------------------------------
 
 _ELEMENT_SAFE = {
@@ -296,141 +254,176 @@ _ELEMENT_SAFE = {
     "meta", "required", "empty", "minlength", "maxlength",
 }
 
+# dict-form rules an element mapping applies itself (_mapping_viols)
+_NESTED_RULES = ("schema", "keysrules", "valuesrules")
+_MAPPING_RULES = _NESTED_RULES + ("allow_unknown",)
 
-def _scalar_conds(
-    rules: dict, x: Column, dtype: T.DataType, opts: CompilerOpts
-) -> list[tuple[Column, str]]:
-    """(violation-condition, message) pairs for the scalar rule subset,
-    evaluated on an element value ``x`` (elements are always
-    'defined'; explicit null elements follow reference semantics)."""
-    unsupported = {
-        k for k in rules
-        if k not in _ELEMENT_SAFE and not k.startswith("__")
-        and k not in ("schema", "items", "keysrules", "valuesrules",
-                      "default", "rename", "contains", "dependencies",
-                      "excludes", "allow_unknown", "purge_unknown",
-                      "require_all")
-    }
-    t = rules.get("type", "string")
-    tname = str(t[0]) if isinstance(t, list) and t else str(t)
-    out: list[tuple[Column, str]] = []
-    for name, arg in rules.items():
-        if name == "type":
-            names = [str(n) for n in _as_list(arg)]
-            if isinstance(dtype, T.ArrayType):
-                ok = "list" in names
-                if not ok:
-                    out.append((x.isNotNull(),
-                                "type-rule violated: expected " + "/".join(names)))
-                continue
-            if isinstance(dtype, (T.MapType, T.StructType)):
-                ok = "dict" in names
-                if not ok:
-                    out.append((x.isNotNull(),
-                                "type-rule violated: expected " + "/".join(names)))
-                continue
-            preds = [
-                opts.spark_types[n].convertible(x, dtype)
-                if n in opts.spark_types
-                else convertible_expr(x, dtype, n)
-                for n in names
-                if n in _BUILTIN_TYPE_NAMES or n in opts.spark_types
-            ]
-            if preds:
-                ok_expr = reduce(lambda a, b: a | b, preds)
-                out.append((x.isNotNull() & ~ok_expr,
-                            "type-rule violated: expected " + "/".join(names)))
-            else:
-                out.append((x.isNotNull(),
-                            "type-rule violated: expected " + "/".join(names)))
-        elif name == "allowed":
-            dec = decode_with(opts.spark_types, x, dtype, tname)
-            if dec is None:
-                out.append((x.isNotNull(), "value disallowed by allowed-rule"))
-            else:
-                lits = [literal_with(opts.spark_types, v, tname)
-                        for v in _as_list(arg)]
-                out.append((
-                    x.isNotNull()
-                    & ~F.coalesce(dec.isin(*lits), F.lit(False)),
-                    "value disallowed by allowed-rule",
-                ))
-        elif name == "forbidden":
-            dec = decode_with(opts.spark_types, x, dtype, tname)
-            if dec is not None:
-                for cand in _as_list(arg):
-                    out.append((
-                        x.isNotNull()
-                        & F.coalesce(
-                            dec.eqNullSafe(
-                                literal_with(opts.spark_types, cand, tname)),
-                            F.lit(False),
-                        ),
-                        f"forbidden-rule violated: {cand}",
-                    ))
-        elif name == "min":
-            dec = decode_with(opts.spark_types, x, dtype, tname)
-            cond = (
-                ~F.coalesce(dec > literal_with(opts.spark_types, arg, tname),
-                            F.lit(False))
-                if dec is not None else F.lit(True)
-            )
-            out.append((cond, "min-rule violated"))
-        elif name == "max":
-            dec = decode_with(opts.spark_types, x, dtype, tname)
-            if dec is not None:
-                out.append((
-                    F.coalesce(
-                        dec >= literal_with(opts.spark_types, arg, tname),
-                        F.lit(False)),
-                    "max-rule violated",
-                ))
-        elif name == "regex":
-            sdec = decode_expr(x, dtype, "string")
-            # std::regex_match is a FULL match. \A..\z, not ^..$:
-            # Java's $ matches BEFORE a final line terminator, so
-            # "img-123\n" would pass ^-$ anchoring but fails
-            # re.fullmatch / std::regex_match (ADVICE r3).
-            pattern = f"\\A(?:{arg})\\z"
-            if sdec is None:
-                out.append((x.isNotNull(), "regex-rule violated"))
-            else:
-                out.append((
-                    x.isNotNull()
-                    & ~F.coalesce(sdec.rlike(pattern), F.lit(False)),
-                    "regex-rule violated",
-                ))
-        elif name == "nullable":
-            # elements/map-values are unambiguously explicit nulls (no
-            # absent-key ambiguity), so the auto-injected nullable:false
-            # (rules.hh:393-397) fires here in EVERY presence mode —
-            # matching the interpreter's per-element validateItem.
-            if not _truthy(arg):
-                out.append((x.isNull(), "nullable-rule violated"))
-        elif name in ("meta", "required"):
-            continue  # elements are always defined
-        elif name in ("empty", "minlength", "maxlength"):
-            if isinstance(dtype, (T.ArrayType, T.MapType)):
-                count = F.coalesce(F.size(x), F.lit(0))
-                if name == "empty" and not _truthy(arg):
-                    out.append((x.isNotNull() & (count == 0),
-                                "empty-rule violated for sequence"))
-                elif name == "minlength":
-                    out.append((count < F.lit(int(arg)), "minlength-rule violated"))
-                elif name == "maxlength":
-                    out.append((count > F.lit(int(arg)), "maxlength-rule violated"))
-        elif name.startswith("__"):
-            continue
-        else:
+
+def _without(rules: dict, names: tuple) -> dict:
+    return {k: v for k, v in rules.items() if k not in names}
+
+
+def _elem_viols(
+    rules: dict, ref: FieldRef, path: Column, opts: CompilerOpts
+) -> list:
+    """``rules`` on one element ``ref``: the ``_ELEMENT_SAFE`` part of
+    the ``compile_field`` table, with element null semantics
+    (``FieldCtx.elem``)."""
+    for name in rules:
+        if name not in _ELEMENT_SAFE and not name.startswith("__"):
             raise CompileError(
                 f"rule {name!r} not supported on array/map elements by the"
                 " columnar compiler (use the dynamic interpreter path)"
             )
-    if unsupported:
-        raise CompileError(
-            f"rules {sorted(unsupported)} not compilable on elements"
-        )
-    return out
+    viols, _, _ = compile_field(FieldCtx(
+        opts, rules, ref.value, ref.dtype, ref.defined, path,
+        Scope({}, None), elem=True))
+    return viols
+
+
+def _array_rule_viols(ctx: FieldCtx, elem_rules: dict) -> list:
+    """schema (list form): ``elem_rules`` on every element inside one
+    F.transform, under the element's own ``path[i]``
+    (``stack.hh:39-54``), flattened into one array. Struct/map
+    elements also get dict-form nested ``schema`` and
+    keysrules/valuesrules (map-in-list-in-struct)."""
+    elem_dt = ctx.dtype.elementType
+
+    def one(x: Column, i: Column) -> Column:
+        ref = FieldRef(x, elem_dt, F.lit(True))
+        path = F.concat(F.lit(ctx.path + "["), i.cast("string"), F.lit("]"))
+        viols = _elem_viols(_without(elem_rules, _MAPPING_RULES), ref,
+                            path, ctx.opts)
+        if isinstance(elem_dt, (T.StructType, T.MapType)):
+            # nested rules skip null elements (the injected
+            # nullable:false already fires on them)
+            viols += _gate_viols(
+                _mapping_viols(elem_rules, ref, path, ctx.opts),
+                x.isNotNull())
+        else:
+            for r in _NESTED_RULES:
+                if r in elem_rules:
+                    raise CompileError(
+                        f"`{r}` inside list elements requires struct/map"
+                        " elements in the columnar compiler (use the"
+                        " dynamic interpreter path for list-in-list"
+                        " nesting)")
+        return assemble_violations(viols)
+
+    arr = F.flatten(F.transform(ctx.value, one))
+    return [ArrayViol(F.coalesce(arr, F.array().cast(VIOL_ARRAY_T)))]
+
+
+def _mapping_viols(
+    rules: dict, ref: FieldRef, path: Column, opts: CompilerOpts
+) -> list:
+    """validateDict (``validator.hh:302-344``) over a non-null
+    struct/map element ``ref``: nested ``schema`` recursion,
+    keysrules/valuesrules and unknown keys."""
+    viols: list = []
+    nested = rules.get("schema")
+    if nested is not None:
+        nested = _registered_schema(nested, opts)
+        for fname, frules in nested.items():
+            child = (_child_ref(ref, fname, opts)
+                     or FieldRef(None, None, F.lit(False)))
+            cpath = F.concat(path, F.lit(f".{fname}"))
+            is_mapping = isinstance(child.dtype, (T.StructType, T.MapType))
+            # nested rules recurse below on a mapping child and no-op
+            # on an absent one; on any other child they raise
+            skip = (_MAPPING_RULES if is_mapping or child.value is None
+                    else _NESTED_RULES)
+            viols += _elem_viols(_without(frules, skip), child, cpath, opts)
+            if is_mapping:
+                viols += _gate_viols(
+                    _mapping_viols(frules, child, cpath, opts),
+                    child.defined & child.value.isNotNull())
+            elif child.value is not None and any(
+                    r in frules for r in _NESTED_RULES):
+                raise CompileError(
+                    "nested mapping rules under a non-mapping element"
+                    " field are not columnar-compilable (use the"
+                    " dynamic interpreter path)")
+    for which in ("keysrules", "valuesrules"):
+        if which in rules:
+            viols += _kv_viols(which, rules[which], ref, path, opts)
+    # the unknown-key check belongs to the `schema` rule's
+    # validateDict: keysrules alone puts no constraint on key NAMES
+    if nested is not None and not (
+            _truthy(rules.get("allow_unknown", False)) or opts.allow_unknown):
+        viols += _unknown_key_viols(nested, ref, path, opts)
+    return viols
+
+
+def _kv_viols(
+    which: str, arg: dict, ref: FieldRef, path: Column, opts: CompilerOpts
+) -> list:
+    """keysrules/valuesrules (``rules.hh:270-288, 614-632``): ``arg``
+    on every key/value PRESENT in the mapping ``ref`` — known and
+    unknown keys alike — at ``path.<key>``. A struct's key names are
+    compile-time constants (a dict-form ``schema`` alongside types the
+    value as a struct), so its checks stay scalar; a map's entries
+    are iterated in one F.transform."""
+    if isinstance(ref.dtype, T.MapType):
+        dt = ref.dtype.keyType if which == "keysrules" else ref.dtype.valueType
+
+        def one(e: Column) -> Column:
+            target = e["key"] if which == "keysrules" else e["value"]
+            return assemble_violations(_elem_viols(
+                arg, FieldRef(target, dt, F.lit(True)),
+                F.concat(path, F.lit("."), e["key"].cast("string")), opts))
+
+        arr = F.flatten(F.transform(F.map_entries(ref.value), one))
+        return [ArrayViol(F.coalesce(arr, F.array().cast(VIOL_ARRAY_T)))]
+    viols: list = []
+    for fname in ref.dtype.fieldNames():
+        if fname == "__defined__":
+            continue
+        child = _child_ref(ref, fname, opts)
+        target = (FieldRef(F.lit(fname), T.StringType(), F.lit(True))
+                  if which == "keysrules"
+                  else FieldRef(child.value, child.dtype, F.lit(True)))
+        viols += _gate_viols(
+            _elem_viols(arg, target, F.concat(path, F.lit(f".{fname}")),
+                        opts),
+            child.defined)
+    return viols
+
+
+def _unknown_key_viols(
+    schema: dict, parent: FieldRef, path: Column, opts: CompilerOpts
+) -> list:
+    """Keys of the struct/map ``parent`` that ``schema`` does not name
+    (``validator.hh:334-339``), reported at the mapping's own path."""
+    if isinstance(parent.dtype, T.StructType):
+        return [
+            _viol(_child_ref(parent, fname, opts).defined, path,
+                  f"unknown field not permitted: {fname}")
+            for fname in parent.dtype.fieldNames()
+            if fname not in schema and fname != "__defined__"
+        ]
+    known = (F.array(*[F.lit(str(k)) for k in schema]) if schema
+             else F.array().cast("array<string>"))
+    arr = F.transform(
+        F.map_keys(parent.value),
+        lambda k: F.when(
+            ~F.array_contains(known, k.cast("string")),
+            F.struct(
+                path.alias("path"),
+                F.concat(F.lit("unknown field not permitted: "),
+                         k.cast("string")).alias("message"))))
+    return [ArrayViol(F.coalesce(arr, F.array().cast(VIOL_ARRAY_T)))]
+
+
+def _registered_schema(arg: Any, opts: CompilerOpts) -> Any:
+    """A ``schema`` rule argument, with a registered schema name
+    resolved (``validator.hh:408-415``)."""
+    if not isinstance(arg, str):
+        return arg
+    resolved = opts.schema_registry.get(arg)
+    if resolved is None:
+        raise CompileError(f"unknown registered schema: {arg}")
+    return resolved
 
 
 # ---------------------------------------------------------------------------
@@ -456,295 +449,6 @@ def _count_expr(ctx: FieldCtx) -> Column:
         base = reduce(lambda a, b: a + b, counts) if counts else F.lit(0)
         return F.when(ctx.value.isNotNull(), base).otherwise(F.lit(0))
     return F.lit(0)
-
-
-def _elem_path(prefix: str) -> Callable[[Column], Column]:
-    return lambda i: F.concat(
-        F.lit(prefix + "["), i.cast("string"), F.lit("]")
-    )
-
-
-def _array_rule_viols(
-    ctx: FieldCtx, elem_rules: dict
-) -> list[Column]:
-    """schema(list form): each emitter is ``fn(x, base_path) →
-    array<struct<path,message>>`` (null entries allowed) evaluated per
-    element inside one F.transform, then flattened. Scalar rules emit
-    one-entry arrays; nested dict-form ``schema`` over struct/map
-    elements (map-in-list-in-struct) emits suffixed-path entries,
-    keysrules/valuesrules emit one entry per offending key."""
-    assert isinstance(ctx.dtype, T.ArrayType)
-    elem_dt = ctx.dtype.elementType
-    path_of = _elem_path(ctx.path)
-    empty = F.array().cast(VIOL_ARRAY_T)
-    out: list[Column] = []
-
-    def make(emitter):
-        def fn(x, i):
-            return F.coalesce(emitter(x, path_of(i)), empty)
-        return fn
-
-    for emitter in _elem_emitters(elem_rules, elem_dt, ctx.opts):
-        arr = F.flatten(F.transform(ctx.value, make(emitter)))
-        out.append(ArrayViol(F.coalesce(arr, empty)))
-    return out
-
-
-def _one(cond: Column, path: Column, msg: Column) -> Column:
-    """One-entry violation array (entry null when passing)."""
-    return F.array(F.when(cond, F.struct(path.alias("path"),
-                                         msg.alias("message"))))
-
-
-def _elem_emitters(
-    elem_rules: dict, dtype: T.DataType, opts: CompilerOpts
-) -> list[Callable[[Column, Column], Column]]:
-    """Violation emitters ``fn(x, base) → array<viol>`` for one array
-    element ``x`` whose own path is the Column ``base``: the scalar
-    rule subset plus dict-form nested ``schema`` /
-    keysrules/valuesrules when elements are structs/maps."""
-    mapping_rules = ("schema", "keysrules", "valuesrules",
-                     "allow_unknown")
-    scalar = {k: v for k, v in elem_rules.items()
-              if k not in mapping_rules}
-    emitters: list = []
-    for b, m in _probe_scalar_conds(scalar, dtype, opts):
-        emitters.append(
-            lambda x, base, _b=b, _m=m: _one(_b(x), base, F.lit(_m)))
-
-    if not isinstance(dtype, (T.StructType, T.MapType)):
-        for r in ("schema", "keysrules", "valuesrules"):
-            if r in elem_rules:
-                raise CompileError(
-                    f"`{r}` inside list elements requires struct/map"
-                    " elements in the columnar compiler (use the"
-                    " dynamic interpreter path for list-in-list"
-                    " nesting)")
-        return emitters
-
-    # nested rules skip null elements (the injected nullable:false
-    # already fires on them via the scalar path)
-    inner = _mapping_emitters(elem_rules, dtype, opts)
-    emitters.extend(
-        lambda x, base, _ib=ib: F.when(x.isNotNull(), _ib(x, base))
-        for ib in inner)
-    return emitters
-
-
-def _mapping_emitters(
-    rules: dict, dtype: T.DataType, opts: CompilerOpts
-) -> list[Callable[[Column, Column], Column]]:
-    """validateDict (``validator.hh:302-344``) over a struct/map value
-    inside an array element: nested ``schema`` recursion,
-    keysrules/valuesrules, unknown-key checks — all as dynamic-path
-    emitters. The caller gates on the mapping's definedness."""
-    emitters: list = []
-    is_struct = isinstance(dtype, T.StructType)
-    names = dtype.fieldNames() if is_struct else ()
-    has_def = (opts.presence == "defined" and "__defined__" in names)
-    allow_unknown = (_truthy(rules.get("allow_unknown", False))
-                     or opts.allow_unknown)
-
-    def accessors(fname: str):
-        if is_struct:
-            val = (lambda x, _f=fname: x[_f])
-            if has_def:
-                dfn = (lambda x, _f=fname: F.coalesce(
-                    F.array_contains(x["__defined__"], _f), F.lit(False)))
-            else:
-                dfn = (lambda x, _f=fname: F.coalesce(
-                    x[_f].isNotNull(), F.lit(False)))
-            fdt = dtype[fname].dataType
-        else:
-            val = (lambda x, _f=fname: F.try_element_at(x, F.lit(_f)))
-            dfn = (lambda x, _f=fname: F.coalesce(
-                F.map_contains_key(x, F.lit(_f)), F.lit(False)))
-            fdt = dtype.valueType
-        return val, dfn, fdt
-
-    nested = rules.get("schema")
-    if nested is not None:
-        if isinstance(nested, str):
-            resolved = opts.schema_registry.get(nested)
-            if resolved is None:
-                raise CompileError(
-                    f"unknown registered schema: {nested}")
-            nested = resolved
-        for fname, frules in nested.items():
-            sfx = F.lit(f".{fname}")
-            if is_struct and fname not in names:
-                # field absent from the frame: undefined everywhere
-                if _truthy(frules.get("required")):
-                    emitters.append(
-                        lambda x, base, _s=sfx: _one(
-                            F.lit(True), F.concat(base, _s),
-                            F.lit("required-rule violated: field"
-                                  " missing")))
-                continue
-            val, dfn, fdt = accessors(fname)
-            if _truthy(frules.get("required")):
-                emitters.append(
-                    lambda x, base, _d=dfn, _s=sfx: _one(
-                        ~_d(x), F.concat(base, _s),
-                        F.lit("required-rule violated: field missing")))
-            # nested-mapping rule names are excluded from the scalar
-            # probe for EVERY child dtype: on mapping children the
-            # recursion below owns them, on non-mapping children the
-            # tailored CompileError below must fire (leaving them in
-            # made _probe_scalar_conds raise its generic message
-            # first, turning that branch into dead code)
-            sub_scalar = {
-                k: v for k, v in frules.items()
-                if k not in ("required", "schema", "keysrules",
-                             "valuesrules") + mapping_excl(fdt)}
-            for b, m in _probe_scalar_conds(sub_scalar, fdt, opts):
-                emitters.append(
-                    lambda x, base, _d=dfn, _v=val, _b=b, _m=m, _s=sfx:
-                        _one(_d(x) & F.coalesce(_b(_v(x)), F.lit(False)),
-                             F.concat(base, _s), F.lit(_m)))
-            if isinstance(fdt, (T.StructType, T.MapType)):
-                # recurse; nested rules no-op on undefined/null child
-                for ib in _mapping_emitters(frules, fdt, opts):
-                    emitters.append(
-                        lambda x, base, _d=dfn, _v=val, _ib=ib, _s=sfx:
-                            F.when(_d(x) & _v(x).isNotNull(),
-                                   _ib(_v(x), F.concat(base, _s))))
-            elif any(r in frules
-                     for r in ("schema", "keysrules", "valuesrules")):
-                raise CompileError(
-                    "nested mapping rules under a non-mapping element"
-                    " field are not columnar-compilable (use the"
-                    " dynamic interpreter path)")
-
-    if "keysrules" in rules:
-        if isinstance(dtype, T.StructType):
-            emitters.extend(_struct_kv_emitters(
-                rules["keysrules"], "keysrules", dtype, opts))
-        elif not isinstance(dtype, T.MapType):
-            raise CompileError(
-                "keysrules inside elements requires a mapping-typed value")
-        else:
-            for b, m in _probe_scalar_conds(rules["keysrules"],
-                                            dtype.keyType, opts):
-                emitters.append(
-                    lambda x, base, _b=b, _m=m: F.transform(
-                        F.map_keys(x),
-                        lambda k: F.when(
-                            _b(k),
-                            F.struct(
-                                F.concat(base, F.lit("."),
-                                         k.cast("string")).alias("path"),
-                                F.lit(_m).alias("message")))))
-    if "valuesrules" in rules:
-        if isinstance(dtype, T.StructType):
-            emitters.extend(_struct_kv_emitters(
-                rules["valuesrules"], "valuesrules", dtype, opts))
-        elif not isinstance(dtype, T.MapType):
-            raise CompileError(
-                "valuesrules inside elements requires a mapping-typed value")
-        else:
-            for b, m in _probe_scalar_conds(rules["valuesrules"],
-                                            dtype.valueType, opts):
-                emitters.append(
-                    lambda x, base, _b=b, _m=m: F.transform(
-                        F.map_entries(x),
-                        lambda e: F.when(
-                            _b(e["value"]),
-                            F.struct(
-                                F.concat(base, F.lit("."),
-                                         e["key"].cast("string")
-                                         ).alias("path"),
-                                F.lit(_m).alias("message")))))
-
-    # unknown keys (validator.hh:334-339), at the mapping's own path —
-    # the check belongs to the `schema` rule's validateDict, so it
-    # fires iff a dict-form schema is present (keysrules alone puts no
-    # constraint on key NAMES beyond its own rule)
-    known_names = set((nested or {}).keys()) if nested is not None else set()
-    if not allow_unknown and nested is not None:
-        if is_struct:
-            for fname in names:
-                if fname in known_names or fname == "__defined__":
-                    continue
-                _, dfn, _ = accessors(fname)
-                emitters.append(
-                    lambda x, base, _d=dfn, _f=fname: _one(
-                        _d(x), base,
-                        F.lit(f"unknown field not permitted: {_f}")))
-        else:
-            known = (F.array(*[F.lit(str(k)) for k in known_names])
-                     if known_names else F.array().cast("array<string>"))
-
-            def unk(x, _k=known):
-                return F.array_except(
-                    F.transform(F.map_keys(x),
-                                lambda k: k.cast("string")), _k)
-
-            emitters.append(
-                lambda x, base: F.transform(
-                    F.sort_array(unk(x)),
-                    lambda k: F.struct(
-                        base.alias("path"),
-                        F.concat(F.lit("unknown field not permitted: "),
-                                 k).alias("message"))))
-    return emitters
-
-
-def _struct_kv_emitters(
-    arg: dict, which: str, dtype: T.StructType, opts: CompilerOpts
-) -> list[Callable[[Column, Column], Column]]:
-    """keysrules/valuesrules over a STRUCT-typed mapping (a dict-form
-    ``schema`` alongside keysrules/valuesrules types the value as a
-    struct, so key names are compile-time constants): key checks fold
-    to literal probes, value checks probe each field's own dtype.
-    Matches the interpreter, which runs keysrules/valuesrules over
-    every key PRESENT in the document — known and unknown alike
-    (``rules.hh:270-288, 614-632``)."""
-    names = dtype.fieldNames()
-    has_def = (opts.presence == "defined" and "__defined__" in names)
-    ems: list = []
-    for fname in names:
-        if fname == "__defined__":
-            continue
-        if has_def:
-            dfn = (lambda x, _f=fname: F.coalesce(
-                F.array_contains(x["__defined__"], _f), F.lit(False)))
-        else:
-            dfn = (lambda x, _f=fname: F.coalesce(
-                x[_f].isNotNull(), F.lit(False)))
-        if which == "keysrules":
-            probe_dt: T.DataType = T.StringType()
-            val = (lambda x, _f=fname: F.lit(_f))
-        else:
-            probe_dt = dtype[fname].dataType
-            val = (lambda x, _f=fname: x[_f])
-        for b, m in _probe_scalar_conds(arg, probe_dt, opts):
-            ems.append(
-                lambda x, base, _d=dfn, _v=val, _b=b, _m=m, _f=fname:
-                    _one(_d(x) & F.coalesce(_b(_v(x)), F.lit(False)),
-                         F.concat(base, F.lit("." + _f)), F.lit(_m)))
-    return ems
-
-
-def mapping_excl(fdt: T.DataType) -> tuple:
-    """Rule names handled by the mapping recursion (not the scalar
-    probe) for a child of dtype ``fdt``."""
-    if isinstance(fdt, (T.StructType, T.MapType)):
-        return ("schema", "keysrules", "valuesrules", "allow_unknown")
-    return ()
-
-
-def _probe_scalar_conds(rules: dict, dtype: T.DataType, opts: CompilerOpts):
-    """Turn _scalar_conds into re-usable (builder, message) pairs: the
-    condition must be rebuilt per lambda variable, so probe once for
-    messages/ordering, then rebuild inside each transform."""
-    probe = _scalar_conds(rules, F.lit(None).cast(dtype), dtype, opts)
-    pairs = []
-    for idx, (_, msg) in enumerate(probe):
-        def builder(x, _i=idx):
-            return _scalar_conds(rules, x, dtype, opts)[_i][0]
-        pairs.append((builder, msg))
-    return pairs
 
 
 def compile_field(ctx: FieldCtx) -> tuple[list[Column], Column, Column]:
@@ -779,7 +483,13 @@ def compile_field(ctx: FieldCtx) -> tuple[list[Column], Column, Column]:
         if name.startswith("__"):
             continue
         if name in opts.column_rules:  # custom registered column rules
-            viols.extend(opts.column_rules[name](ctx, arg) or [])
+            for v in opts.column_rules[name](ctx, arg) or []:
+                # a custom rule may also return a raw
+                # struct<path,message>-or-null Column: it violates
+                # wherever it is not null
+                viols.append(
+                    v if isinstance(v, (ScalarViol, ArrayViol))
+                    else ScalarViol(v.isNotNull(), v["path"], v["message"]))
             continue
         if name == "required":
             if _truthy(arg):
@@ -838,18 +548,15 @@ def compile_field(ctx: FieldCtx) -> tuple[list[Column], Column, Column]:
                 if ctx.dtype is not None else None
             # full match (rules.hh:448); \A..\z so a trailing newline
             # can't sneak past Java's line-terminator-tolerant $ —
-            # keeps rlike, the structural fast path, the interpreter
-            # twin (re.fullmatch), and the C++ reference in agreement
+            # keeps rlike, the interpreter twin (re.fullmatch), and the
+            # C++ reference in agreement
             pattern = f"\\A(?:{arg})\\z"
             base = defined & ctx.value.isNotNull()
             if sdec is None:
                 viols.append(_viol(base, path, "regex-rule violated"))
             else:
-                fast = _regex_fast_path(sdec, arg) \
-                    if ctx.opts.structural_regex else None
-                match = fast if fast is not None else sdec.rlike(pattern)
                 viols.append(_viol(
-                    base & ~F.coalesce(match, F.lit(False)),
+                    base & ~F.coalesce(sdec.rlike(pattern), F.lit(False)),
                     path, "regex-rule violated"))
         elif name == "empty":
             if (ctx.value is not None and isinstance(ctx.dtype, T.ArrayType)
@@ -960,60 +667,12 @@ def compile_field(ctx: FieldCtx) -> tuple[list[Column], Column, Column]:
                     # items no-ops on an undefined list (same skip
                     # semantics as the schema rule)
                     viols.extend(_gate_viols(v2, defined))
-        elif name == "keysrules":
-            if ctx.value is not None and isinstance(ctx.dtype, T.StructType):
-                base = F.lit(ctx.path)
-                gate = defined & ctx.value.isNotNull()
-                for em in _struct_kv_emitters(arg, "keysrules",
-                                              ctx.dtype, opts):
-                    viols.append(ArrayViol(
-                        F.when(gate, em(ctx.value, base))
-                        .otherwise(F.array().cast(VIOL_ARRAY_T))))
-            elif ctx.value is not None and isinstance(ctx.dtype, T.MapType):
-                key_dt = ctx.dtype.keyType
-                prefix = ctx.path + "."
-
-                def make_key_fn(cb, m):
-                    def fn(k):
-                        return F.when(
-                            cb(k),
-                            F.struct(
-                                F.concat(F.lit(prefix),
-                                         k.cast("string")).alias("path"),
-                                F.lit(m).alias("message")))
-                    return fn
-
-                for cb, msg in _probe_scalar_conds(arg, key_dt, opts):
-                    arr = F.transform(F.map_keys(ctx.value),
-                                      make_key_fn(cb, msg))
-                    viols.append(ArrayViol(F.coalesce(arr, F.array().cast(VIOL_ARRAY_T))))
-        elif name == "valuesrules":
-            if ctx.value is not None and isinstance(ctx.dtype, T.StructType):
-                base = F.lit(ctx.path)
-                gate = defined & ctx.value.isNotNull()
-                for em in _struct_kv_emitters(arg, "valuesrules",
-                                              ctx.dtype, opts):
-                    viols.append(ArrayViol(
-                        F.when(gate, em(ctx.value, base))
-                        .otherwise(F.array().cast(VIOL_ARRAY_T))))
-            elif ctx.value is not None and isinstance(ctx.dtype, T.MapType):
-                val_dt = ctx.dtype.valueType
-                prefix = ctx.path + "."
-
-                def make_val_fn(cb, m):
-                    def fn(e):
-                        return F.when(
-                            cb(e["value"]),
-                            F.struct(
-                                F.concat(F.lit(prefix),
-                                         e["key"].cast("string")).alias("path"),
-                                F.lit(m).alias("message")))
-                    return fn
-
-                for cb, msg in _probe_scalar_conds(arg, val_dt, opts):
-                    arr = F.transform(F.map_entries(ctx.value),
-                                      make_val_fn(cb, msg))
-                    viols.append(ArrayViol(F.coalesce(arr, F.array().cast(VIOL_ARRAY_T))))
+        elif name in ("keysrules", "valuesrules"):
+            if ctx.value is not None and isinstance(
+                    ctx.dtype, (T.StructType, T.MapType)):
+                viols.extend(_kv_viols(
+                    name, arg, FieldRef(ctx.value, ctx.dtype, defined),
+                    path, opts))
         elif name in ("meta", "rename", "default", "allow_unknown",
                       "purge_unknown", "require_all"):
             pass  # no-op / handled by normalization & engine preprocessing
@@ -1029,11 +688,7 @@ def _compile_schema_rule(ctx: FieldCtx, arg: Any, defined: Column) -> list[Colum
     into struct/map fields; list form applies one rule-map per element
     via F.transform."""
     opts = ctx.opts
-    if isinstance(arg, str):
-        resolved = opts.schema_registry.get(arg)
-        if resolved is None:
-            raise CompileError(f"unknown registered schema: {arg}")
-        arg = resolved
+    arg = _registered_schema(arg, opts)
     if ctx.value is None or ctx.dtype is None:
         return []
     if isinstance(ctx.dtype, T.ArrayType):
@@ -1060,13 +715,9 @@ def _gate_viols(viols: list, gate: Column) -> list:
     for v in viols:
         if isinstance(v, ArrayViol):
             out.append(ArrayViol(F.when(gate, v.col).otherwise(empty)))
-        elif isinstance(v, ScalarViol):
-            out.append(ScalarViol(
-                gate & F.coalesce(v.cond, F.lit(False)),
-                F.when(gate, v.struct),
-            ))
-        else:  # raw struct-or-null Column
-            out.append(F.when(gate, v))
+        else:
+            out.append(ScalarViol(gate & F.coalesce(v.cond, F.lit(False)),
+                                  v.path, v.message))
     return out
 
 
@@ -1096,29 +747,8 @@ def _compile_mapping(
                         f"{path}.{fname}", scope)
         v2, _, _ = compile_field(fctx)
         viols.extend(v2)
-    # unknown keys (validator.hh:334-339)
-    if not allow_unknown and parent.dtype is not None:
-        if isinstance(parent.dtype, T.StructType):
-            for fname in parent.dtype.fieldNames():
-                if fname in schema or fname == "__defined__":
-                    continue
-                ref = _child_ref(parent, fname, opts)
-                if ref is not None:
-                    viols.append(_viol(
-                        ref.defined, F.lit(path),
-                        f"unknown field not permitted: {fname}"))
-        elif isinstance(parent.dtype, T.MapType):
-            known = F.array(*[F.lit(k) for k in schema]) if schema \
-                else F.array().cast("array<string>")
-            arr = F.transform(
-                F.map_keys(parent.value),
-                lambda k: F.when(
-                    ~F.array_contains(known, k.cast("string")),
-                    F.struct(
-                        F.lit(path).alias("path"),
-                        F.concat(F.lit("unknown field not permitted: "),
-                                 k.cast("string")).alias("message"))))
-            viols.append(ArrayViol(F.coalesce(arr, F.array().cast(VIOL_ARRAY_T))))
+    if not allow_unknown:
+        viols.extend(_unknown_key_viols(schema, parent, F.lit(path), opts))
     return viols
 
 
@@ -1142,14 +772,9 @@ def assemble_violations(viols: list) -> Column:
                 F.filter(v.col, lambda x: x.isNotNull())
                 .cast(VIOL_ARRAY_T)
             )
-        elif isinstance(v, ScalarViol):
-            parts.append(
-                F.when(v.cond, F.array(v.struct)).otherwise(empty)
-            )
-        else:  # raw struct-or-null Column (custom-rule back-compat)
-            parts.append(
-                F.when(v.isNotNull(), F.array(v)).otherwise(empty)
-            )
+        else:
+            entry = F.struct(v.path.alias("path"), v.message.alias("message"))
+            parts.append(F.when(v.cond, F.array(entry)).otherwise(empty))
     if not parts:
         return empty
     merged = F.concat(*parts) if len(parts) > 1 else parts[0]
@@ -1169,12 +794,8 @@ def assemble_violation_count(viols: list) -> Column:
                     F.lit(0),
                 )
             )
-        elif isinstance(v, ScalarViol):
-            terms.append(F.when(v.cond, F.lit(1)).otherwise(F.lit(0)))
         else:
-            terms.append(
-                F.when(v.isNotNull(), F.lit(1)).otherwise(F.lit(0))
-            )
+            terms.append(F.when(v.cond, F.lit(1)).otherwise(F.lit(0)))
     if not terms:
         return F.lit(0)
     out = terms[0]

@@ -37,10 +37,9 @@ from .compiler import (
     CompilerOpts,
     FieldCtx,
     FieldRef,
-    ScalarViol,
     Scope,
-    VIOL_ARRAY_T,
     _truthy,
+    _viol,
     assemble_violation_count,
     assemble_violations,
     compile_field,
@@ -144,7 +143,6 @@ class TableValidator:
         presence: str = "null",
         extra_cols: tuple[str, ...] = (),
         registry: dict[str, dict] | None = None,
-        structural_regex: bool = False,
     ) -> None:
         self._interp = Validator(
             allow_unknown=allow_unknown,
@@ -159,7 +157,6 @@ class TableValidator:
         self.allow_unknown = allow_unknown
         self.purge_unknown = purge_unknown
         self.presence = presence
-        self.structural_regex = structural_regex
         self.extra_cols = tuple(extra_cols)
         self._column_rules: dict[str, Callable] = {}
         self._spark_types: dict[str, Callable] = {}
@@ -266,7 +263,6 @@ class TableValidator:
             presence=self.presence,
             allow_unknown=self.allow_unknown,
             purge_unknown=self.purge_unknown,
-            structural_regex=self.structural_regex,
             extra_cols=self.extra_cols,
             schema_registry=self._normalized_registry(),
             column_rules=self._column_rules,
@@ -322,20 +318,8 @@ class TableValidator:
         # (validator.hh:326-339), so purge implies no unknown violations
         if not self.allow_unknown and not self.purge_unknown:
             for k in unknown:
-                viols.append(
-                    ScalarViol(
-                        refs[k].defined,
-                        F.when(
-                            refs[k].defined,
-                            F.struct(
-                                F.lit("^").alias("path"),
-                                F.lit(
-                                    f"unknown field not permitted: {k}"
-                                ).alias("message"),
-                            ),
-                        ),
-                    )
-                )
+                viols.append(_viol(refs[k].defined, F.lit("^"),
+                                   f"unknown field not permitted: {k}"))
         keep_unknown = [] if self.purge_unknown else unknown
         for k in keep_unknown:
             norm_cols.append(F.col(k))

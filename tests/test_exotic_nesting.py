@@ -1,7 +1,8 @@
 """Exotic nesting parity — map-in-list-in-struct and deeper: the
-columnar engine's element emitters (``plans/compiler.py``
-``_elem_emitters``/``_mapping_emitters``) must agree with the dynamic
-interpreter on verdicts AND violation (path, message) sets for
+columnar engine's element-level rules (``plans/compiler.py``
+``_array_rule_viols``/``_mapping_viols``/``_kv_viols``, which apply
+``compile_field``'s rule table to each element) must agree with the
+dynamic interpreter on verdicts AND violation (path, message) sets for
 list-of-dict documents (reference semantics: ``rules.hh:519-573``
 schema recursion, ``validator.hh:302-344`` validateDict,
 ``rules.hh:270-288``/``614-632`` keysrules/valuesrules)."""
@@ -231,5 +232,26 @@ def test_schema_plus_kv_rules_top_level_field(spark) -> None:
         {"cfg": {"a": 1, "zz": 2}},    # unknown key only
         {"cfg": {"a": 1, "Z9": 99}},   # unknown + keysrules + valuesrules
         {},                            # cfg undefined: all skip
+    ]
+    _differential(spark, schema, docs)
+
+
+@pytest.mark.parametrize("form", ["schema", "items"])
+def test_length_rules_count_dict_element_keys(form: str, spark) -> None:
+    """minlength/maxlength on dict-typed list elements count the
+    element's keys (``rules.hh:341-387``) — the same under list-form
+    ``schema`` and positional ``items``."""
+    elem = {"type": "dict", "minlength": 2, "maxlength": 2,
+            "schema": {"a": {"type": "integer"}, "b": {"type": "integer"},
+                       "c": {"type": "integer"}}}
+    schema = {"docs": {"type": "list",
+                       form: elem if form == "schema" else [elem]}}
+    docs = [
+        {"docs": [{"a": 1}]},                   # minlength
+        {"docs": [{"a": 1, "b": 2}]},
+        {"docs": [{"a": 1, "b": 2, "c": 3}]},   # maxlength
+        {"docs": [{}]},                         # minlength
+        {"docs": [None]},                       # nullable + minlength
+        {"docs": []},
     ]
     _differential(spark, schema, docs)

@@ -660,16 +660,24 @@ def test_opq_guards(spark, emb, books) -> None:
 def test_rotate_embeddings_math_and_passthrough(spark, emb) -> None:
     rng = np.random.RandomState(5)
     q, _ = np.linalg.qr(rng.standard_normal((64, 64)))
-    src = emb.withColumn("tag", F.col("vec_id") % 7)
+    # the operator rotates each Arrow batch with ONE matrix product,
+    # whose rows may differ bitwise from per-row products; one
+    # partition smaller than a batch makes the whole frame that batch,
+    # so the expectation below is the same product over the same rows
+    src = emb.coalesce(1).withColumn("tag", F.col("vec_id") % 7)
+    rows = src.collect()
+    assert len(rows) <= int(spark.conf.get(
+        "spark.sql.execution.arrow.maxRecordsPerBatch"))
     out = {r["vec_id"]: r for r in SIM.rotate_embeddings(
         src, q).collect()}
-    raw = {r["vec_id"]: r for r in src.collect()}
+    raw = {r["vec_id"]: r for r in rows}
     assert set(out) == set(raw)
+    batch = np.asarray([r["embedding"] for r in rows], dtype=np.float64)
+    rotated = {r["vec_id"]: v for r, v in zip(rows, batch @ q)}
     some = list(raw)[:25]
     for vid in some:
-        want = np.asarray(raw[vid]["embedding"], dtype=np.float64) @ q
         got = np.asarray(out[vid]["embedding"])
-        assert np.array_equal(got, want)       # bit-exact, same op
+        assert np.array_equal(got, rotated[vid])   # bit-exact, same op
         assert out[vid]["tag"] == raw[vid]["tag"]
     # norms preserved (orthogonal R) up to f64 noise
     for vid in some[:5]:

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from cerberus_cpp_spark.operators import checks
 from cerberus_cpp_spark.operators import similarity as SIM
@@ -294,71 +293,6 @@ def test_near_duplicate_groups_end_to_end(spark):
     out = near_duplicate_groups(df, threshold=0.5, max_bucket=None)
     got = {r["doc_id"]: r["keep_id"] for r in out.collect()}
     assert got == {1: 1, 2: 1, 3: 1}
-
-
-# ---------------------------------------------------------------------------
-# regex structural fast path
-# ---------------------------------------------------------------------------
-
-
-def test_regex_fast_path_equivalence(spark):
-    """The translate-based structural predicate must agree with the
-    anchored rlike on every adversarial case — including the
-    interleaved-digit trap ('i1mg-…' strips to 'img-' but has five
-    non-digits) and non-ASCII digits (not in [0-9])."""
-    from cerberus_cpp_spark.plans.compiler import _regex_fast_path
-
-    cases = ["img-123456789012", "i1mg-23456789012", "img-12345678901",
-             "img-1234567890123", "IMG-123456789012", "img-1234567890x2",
-             "ximg-12345678901", "", "img-", "123456789012img-",
-             "img-12345678901١", "img-123456789012\n", None]
-    df = spark.createDataFrame([(c,) for c in cases], "s string")
-    fast = _regex_fast_path(F.col("s"), "img-[0-9]{12}")
-    assert fast is not None
-    out = df.select(
-        "s",
-        F.coalesce(fast, F.lit(False)).alias("fast"),
-        # \A..\z = the compiler's anchoring since round 4: Java's $
-        # matches before a trailing newline, \z does not (ADVICE r3)
-        F.coalesce(F.col("s").rlike("\\A(?:img-[0-9]{12})\\z"),
-                   F.lit(False)).alias("slow"),
-    ).collect()
-    for r in out:
-        assert r["fast"] == r["slow"], r["s"]
-
-
-def test_regex_fast_path_eligibility():
-    from pyspark.sql import functions as F
-
-    from cerberus_cpp_spark.plans.compiler import _regex_fast_path
-
-    s = F.col("s")
-    assert _regex_fast_path(s, "[0-9]+") is None          # variable len
-    assert _regex_fast_path(s, "img.[0-9]{3}") is None    # regex meta
-    assert _regex_fast_path(s, "a_b[0-9]{3}") is None     # excluded char
-    assert _regex_fast_path(s, "[0-9]{0}") is None        # degenerate
-    assert _regex_fast_path(s, "v2-[0-9]{4}") is not None  # digit prefix
-    assert _regex_fast_path(s, "[0-9]{6}") is not None     # empty prefix
-
-
-def test_structural_regex_opt_in_identical_violations(spark):
-    """TableValidator(structural_regex=True) must emit exactly the
-    violations of the default rlike path on adversarial ids."""
-    from cerberus_cpp_spark.plans.engine import TableValidator
-
-    rows = [("img-123456789012",), ("i1mg-23456789012",),
-            ("img-12345678901",), ("zzz",), (None,),
-            ("img-123456789012x",), ("img-123456789012\n",)]
-    df = spark.createDataFrame(rows, "image_id string")
-    rules = {"image_id": {"type": "string", "nullable": True,
-                          "regex": "img-[0-9]{12}"}}
-    slow = TableValidator(rules, allow_unknown=True) \
-        .validate(df).violations("image_id").collect()
-    fast = TableValidator(rules, allow_unknown=True,
-                          structural_regex=True) \
-        .validate(df).violations("image_id").collect()
-    key = lambda r: (r["image_id"], r["path"], r["message"])  # noqa: E731
-    assert sorted(slow, key=key) == sorted(fast, key=key)
 
 
 def test_tune_nprobe_sf01_recall_pin(spark):
