@@ -877,15 +877,17 @@ def image_content_drift_frame(
     (``image_transform.image_quality_profile``), melt the metric
     columns, and compare EXACT per-metric quantile vectors in a
     single tagged aggregate — the image analogue of
-    ``exact_quantile_drift_frame`` (same rel-gap formula), catching
-    shifts no metadata column can see: a new crawl source going
-    blurry (Laplacian energy collapses), dark (luma drops), or
-    synthetic (distinct-color counts pile at the bottom).
+    ``exact_quantile_drift_frame`` (the same frame, grouped by
+    ``metric``), catching shifts no metadata column can see: a new
+    crawl source going blurry (Laplacian energy collapses), dark
+    (luma drops), or synthetic (distinct-color counts pile at the
+    bottom).
 
     Output: (metric, prob, q_a, q_b, rel_gap, drifted). Exact
     percentiles — right for oracle checking and small/medium scale;
-    at 100 TB use :func:`image_content_drift` (one t-digest pass per
-    snapshot, centroid-only shuffle)."""
+    at 100 TB use :func:`image_content_drift` (one t-digest pass
+    over both snapshots, centroid-only shuffle)."""
+    from .checks import _exact_drift_frame
     from .image_transform import image_quality_profile
 
     for m in metrics:
@@ -896,41 +898,9 @@ def image_content_drift_frame(
         len(metrics),
         ", ".join(f"'{m}', cast(`{m}` as double)" for m in metrics),
     )
-
-    def side(df: DataFrame, tag: int) -> DataFrame:
-        return (
-            image_quality_profile(df)
-            .where("status = 'ok'")
-            .select(F.expr(melt), F.lit(tag).alias("side"))
-        )
-
-    plit = F.array(*[F.lit(float(p)) for p in probs])
-    both = side(df_a, 0).unionByName(side(df_b, 1))
-    agg = both.groupBy("metric").agg(
-        F.percentile(F.when(F.col("side") == 0, F.col("v")), plit)
-        .alias("qa"),
-        F.percentile(F.when(F.col("side") == 1, F.col("v")), plit)
-        .alias("qb"),
-    )
-    gap = F.abs(F.col("q_a") - F.col("q_b")) / F.greatest(
-        F.abs(F.col("q_a")), F.abs(F.col("q_b")), F.lit(1e-12)
-    )
-    return (
-        agg.select(
-            "metric",
-            F.posexplode(F.arrays_zip(F.col("qa"), F.col("qb")))
-            .alias("i", "q"),
-        )
-        .select(
-            "metric",
-            F.element_at(plit, F.col("i") + 1).alias("prob"),
-            F.col("q.qa").alias("q_a"), F.col("q.qb").alias("q_b"),
-        )
-        .select(
-            "metric", "prob", "q_a", "q_b", gap.alias("rel_gap"),
-            (gap > rel_tolerance).alias("drifted"),
-        )
-    )
+    a, b = (image_quality_profile(df).where("status = 'ok'")
+            .select(F.expr(melt)) for df in (df_a, df_b))
+    return _exact_drift_frame(a, b, ["metric"], probs, rel_tolerance)
 
 
 def image_content_drift(
@@ -942,33 +912,20 @@ def image_content_drift(
     rel_tolerance: float = 0.1,
     compression: int = 100,
 ) -> dict:
-    """The 100 TB path for :func:`image_content_drift_frame`: ONE
-    decode+profile pass per snapshot feeding
-    ``checks.tdigests_of`` (all metrics in one scan, centroid-only
-    shuffle), quantile vectors compared driver-side. Returns
-    {metric: {"probs", "q_a", "q_b", "max_rel_gap", "drifted"}}."""
-    from . import checks
+    """The 100 TB path for :func:`image_content_drift_frame`: every
+    metric of both snapshots' decode+profile passes feeds ONE t-digest
+    scan of their side-tagged union (centroid-only shuffle), quantile
+    vectors compared driver-side. Returns {metric: {"probs", "q_a",
+    "q_b", "max_rel_gap", "drifted"}}."""
+    from .checks import _digest_drift_report, _tdigest_drift_pairs
     from .image_transform import image_quality_profile
 
-    out = {}
-    digs = []
-    for df in (df_a, df_b):
-        prof = image_quality_profile(df).where("status = 'ok'")
-        digs.append(checks.tdigests_of(
-            prof, list(metrics), compression=compression))
-    for m in metrics:
-        qa = [digs[0][m].quantile(p) for p in probs]
-        qb = [digs[1][m].quantile(p) for p in probs]
-        gaps = [
-            abs(x - y) / max(abs(x), abs(y), 1e-12)
-            for x, y in zip(qa, qb)
-        ]
-        out[m] = {
-            "probs": list(probs), "q_a": qa, "q_b": qb,
-            "max_rel_gap": max(gaps),
-            "drifted": max(gaps) > rel_tolerance,
-        }
-    return out
+    a, b = (image_quality_profile(df).where("status = 'ok'")
+            for df in (df_a, df_b))
+    pairs = _tdigest_drift_pairs(a, b, [F.col(m) for m in metrics],
+                                 int(compression))
+    return {m: _digest_drift_report(da, db, probs, rel_tolerance)
+            for m, (da, db) in zip(metrics, pairs)}
 
 
 def strip_image_metadata(df: DataFrame, *, id_col: str = "image_id",

@@ -35,23 +35,31 @@ def test_tdigest_pair_matches_two_single_digests(spark):
     assert np.array_equal(db.weights, rb.weights)
 
 
-def test_tdigest_drift_tagged_matches_two_frame_api(spark):
+def test_tdigest_drift_matches_two_single_digests(spark):
+    """tdigest_drift tags both snapshots into ONE scan; its quantiles
+    agree with two separate tdigest_of digests."""
     base = spark.range(0, 80_000, 1, 8).selectExpr(
         "id",
         "cast(pmod(id * 48271, 9973) as double) as v",
     )
-    two = checks.tdigest_drift(
-        base.where("id % 2 = 0"), base.where("id % 2 = 1"),
-        "v", compression=100)
-    one = checks.tdigest_drift_tagged(
-        base.selectExpr("cast(id % 2 as long) as side", "v"),
-        "side", "v", compression=100)
-    # same contract keys; quantiles close (inexact regime digests are
-    # partition-layout-dependent, so equality isn't required — only
-    # agreement within sketch accuracy)
-    assert one["drifted"] == two["drifted"]
-    for qa, qb in zip(one["quantiles_a"], two["quantiles_a"]):
-        assert qa == pytest.approx(qb, rel=0.02, abs=20.0)
+    a, b = base.where("id % 2 = 0"), base.where("id % 2 = 1")
+    one = checks.tdigest_drift(a, b, "v", compression=100)
+    da = checks.tdigest_of(a, "v", compression=100)
+    db = checks.tdigest_of(b, "v", compression=100)
+    # inexact regime digests are partition-layout-dependent, so
+    # equality isn't required — only agreement within sketch accuracy
+    for p, qa, qb in zip(one["probs"], one["quantiles_a"],
+                         one["quantiles_b"]):
+        assert qa == pytest.approx(da.quantile(p), rel=0.02, abs=20.0)
+        assert qb == pytest.approx(db.quantile(p), rel=0.02, abs=20.0)
+    # exact regime (31 heavy levels at compression 200): bit for bit
+    lv = base.selectExpr("id", "cast(pmod(id, 31) as double) as v")
+    a, b = lv.where("id % 2 = 0"), lv.where("id % 3 = 0")
+    one = checks.tdigest_drift(a, b, "v", compression=200)
+    da = checks.tdigest_of(a, "v", compression=200)
+    db = checks.tdigest_of(b, "v", compression=200)
+    assert one["quantiles_a"] == [da.quantile(p) for p in one["probs"]]
+    assert one["quantiles_b"] == [db.quantile(p) for p in one["probs"]]
 
 
 def test_tdigest_pair_deterministic(spark):

@@ -278,13 +278,16 @@ def test_suggest_robust_bounds_flags_outliers(spark) -> None:
 def test_tdigests_of_matches_single_column_digests(spark) -> None:
     """One melted scan for N columns == per-column digests, in the
     exact regime (≤ compression/4 distinct values → order-independent
-    and bit-exact)."""
+    and bit-exact). Both paths share one value policy: ±inf rows are
+    dropped, never poisoning the extreme quantiles."""
     from cerberus_cpp_spark.operators.checks import (
         tdigest_of,
         tdigests_of,
     )
 
+    inf = float("inf")
     rows = [(float(i % 7), float(i % 11)) for i in range(500)]
+    rows += [(inf, -inf), (-inf, inf)]
     df = spark.createDataFrame(rows, "a double, b double")
     many = tdigests_of(df, ["a", "b"])
     for c in ("a", "b"):

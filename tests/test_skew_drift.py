@@ -456,13 +456,23 @@ def test_embedding_dim_drift_tdigest_twin(spark) -> None:
         want[r["dim"]] = want.get(r["dim"], False) or r["drifted"]
     approx = checks.embedding_dim_drift(a, b, 4, rel_tolerance=0.1)
     assert {d: v["drifted"] for d, v in approx.items()} == want
+    # a vector shorter than ``dim`` contributes nothing to the missing
+    # dimensions instead of failing the job
+    short = spark.createDataFrame([(9999, [0.5, -0.5])], a.schema)
+    got = checks.embedding_dim_drift(
+        a.unionByName(short), b.unionByName(short), 3, rel_tolerance=0.1)
+    assert {d: v["drifted"] for d, v in got.items()} == {
+        d: want[d] for d in range(3)}
+    # a dimension with no data on either side reports NaN quantiles
+    alone = checks.embedding_dim_drift(short, short, 3)
+    assert all(math.isnan(q) for q in alone[2]["q_a"] + alone[2]["q_b"])
     with pytest.raises(ValueError, match="dim"):
         checks.embedding_dim_drift(a, b, 0)
 
 
 def test_snapshot_drift_report_embedding(spark) -> None:
     """Embedding columns fold into the unified report: per-dim drift
-    via ONE extra melted t-digest scan per snapshot, drifted dims
+    in the one tagged t-digest scan of both snapshots, drifted dims
     listed, schema-mismatched embedding columns skipped."""
     a = _vec_frame(spark).withColumn("x", F.col("id") % 10)
     b = _vec_frame(spark, scale=(2,)).withColumn("x", F.col("id") % 10)
@@ -528,3 +538,44 @@ def test_categorical_drift_report_high_cardinality_in_plan(spark) -> None:
     rep2 = checks.snapshot_drift_report(a, b, categorical=["c"])
     assert rep2["categorical"]["c"]["categories"] == 50_000
     assert rep2["categorical"]["c"]["l_inf"] > 0.0
+    # the snapshot report folds each column with the same verdict,
+    # psi included (the sums may differ in the last bit: the two
+    # plans add the per-category terms in different orders)
+    assert rep2["categorical"]["c"] == pytest.approx(
+        checks.categorical_drift_report(d), rel=1e-12)
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs that ``fn()`` runs, counted in its own job group."""
+    sc = spark.sparkContext
+    group = f"drift-jobs-{random.getrandbits(64):x}"
+    sc.setJobGroup(group, "drift job-count pin")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_drift_two_snapshots_one_scan_job_counts(spark) -> None:
+    """Two snapshots cost one tagged scan: tdigest_drift runs the jobs
+    of tdigest_pair on the tagged frame, and snapshot_drift_report
+    with numeric, categorical and embedding columns runs one
+    tdigests_of call plus one categorical fold — never a scan per
+    snapshot or per column kind."""
+    df = _vec_frame(spark).select(
+        "id", "embedding", (F.col("id") % 17).cast("double").alias("x"),
+        F.expr("cast(id % 3 as string)").alias("c"))
+    a, b = df.where("id % 2 = 0"), df.where("id % 2 = 1")
+    tagged = df.selectExpr("cast(id % 2 as long) as side", "x")
+    drift = _jobs(spark, lambda: checks.tdigest_drift(a, b, "x"))
+    pair = _jobs(spark, lambda: checks.tdigest_pair(tagged, "side", "x"))
+    report = _jobs(spark, lambda: checks.snapshot_drift_report(
+        a, b, numeric=["x"], categorical=["c"],
+        embedding={"embedding": 4}))
+    digests = _jobs(spark, lambda: checks.tdigests_of(a, ["x"]))
+    fold = _jobs(spark, lambda: checks.categorical_drift_report(
+        checks.categorical_drift(a, b, "c")))
+    # both pins in one comparison, so a failure shows both
+    assert (drift, report) == (pair, digests + fold)
