@@ -28,7 +28,7 @@ from __future__ import annotations
 
 import copy
 import re
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass, field as dc_field, replace
 from enum import IntEnum
 from typing import Any, Callable
 
@@ -62,6 +62,17 @@ def as_list(node: Any) -> list[Any]:
     if node is UNDEFINED or node is None:
         return []
     return [node]
+
+
+def _schema_form(rules: dict) -> str | None:
+    """How a rule map's dict-valued ``schema`` argument reads, by the
+    declared type: ``"list"`` → one rule map for every element,
+    ``"dict"`` → a field map, None → undecided until data arrives (the
+    reference's laissez-faire), so meta-normalization leaves it as-is."""
+    types = [str(t) for t in as_list(rules.get("type"))]
+    if "list" in types:
+        return "list"
+    return "dict" if "dict" in types else None
 
 
 def _truthy(arg: Any) -> bool:
@@ -107,6 +118,7 @@ class RuleCtx:
     field_schema: dict            # the enclosing field rule-map
     path: tuple[Any, ...]
     parent: Any                   # enclosing document mapping (or None)
+    policy: _Policy               # the policy in force for this field
 
     @property
     def value(self) -> Any:
@@ -158,38 +170,42 @@ class RuleCtx:
         return node
 
 
-@dataclass
-class _State:
-    """Per-validate() mutable state (errors + scoped policies)."""
+@dataclass(frozen=True)
+class _Policy:
+    """The three lexically scoped schema policies (``rules.hh:47-77,
+    406-436, 471-501``): a policy key on a field holds for that field's
+    whole subtree — nested schemas, ``items``, list elements, keys,
+    values and registered schemas alike."""
 
-    root: Any
-    errors: list[ValidationErrorItem] = dc_field(default_factory=list)
     allow_unknown: bool = False
     purge_unknown: bool = False
     require_all: bool = False
-    policy_stack: list[tuple[str, bool]] = dc_field(default_factory=list)
 
-    def push_policy(self, name: str, value: bool) -> None:
-        self.policy_stack.append((name, getattr(self, name)))
-        setattr(self, name, value)
+    def enter(self, rules: dict) -> "_Policy":
+        """The policy in force inside the field whose rule map is
+        ``rules``: its own policy keys override the enclosing ones."""
+        own = {k: _truthy(rules[k]) for k in _POLICY_KEYS if k in rules}
+        return replace(self, **own) if own else self
 
-    def pop_policy(self, name: str) -> None:
-        # pop the most recent entry for this policy name
-        for i in range(len(self.policy_stack) - 1, -1, -1):
-            if self.policy_stack[i][0] == name:
-                setattr(self, name, self.policy_stack[i][1])
-                del self.policy_stack[i]
-                return
+    @property
+    def rejects_unknown(self) -> bool:
+        """Unknown keys are violations: purge removes them before the
+        allow check sees them (``validator.hh:326-339``)."""
+        return not (self.allow_unknown or self.purge_unknown)
+
+
+_POLICY_KEYS = ("allow_unknown", "purge_unknown", "require_all")
+
+
+@dataclass
+class _State:
+    """Per-validate() mutable state."""
+
+    root: Any
+    errors: list[ValidationErrorItem] = dc_field(default_factory=list)
 
 
 RuleFn = Callable[[RuleCtx], None]
-
-
-@dataclass(frozen=True)
-class Rule:
-    name: str
-    priority: Priority
-    fn: RuleFn
 
 
 class Validator:
@@ -279,14 +295,15 @@ class Validator:
             )
             return False
         doc = copy.deepcopy(document)  # never mutate caller data
-        self._state = _State(
-            root=doc,
-            allow_unknown=self.allow_unknown,
-            purge_unknown=self.purge_unknown,
-            require_all=self.require_all,
-        )
-        self._validate_dict(doc, schema, ())
+        self._state = _State(root=doc)
+        self._validate_dict(doc, schema, (), self._policy)
         return not self._state.errors
+
+    @property
+    def _policy(self) -> _Policy:
+        """The root policy: the constructor's three flags."""
+        return _Policy(self.allow_unknown, self.purge_unknown,
+                       self.require_all)
 
     @property
     def errors(self) -> list[ValidationErrorItem]:
@@ -327,16 +344,12 @@ class Validator:
         return out
 
     def _normalize_nested(self, rules: dict) -> dict:
-        decl = rules.get("type")
-        types = [str(t) for t in as_list(decl)]
         if "schema" in rules and isinstance(rules["schema"], dict):
-            if "list" in types:
-                # list form: the arg is a single element rule-map
+            form = _schema_form(rules)
+            if form == "list":
                 rules["schema"] = self._meta_one(rules["schema"])
-            elif "dict" in types:
+            elif form == "dict":
                 rules["schema"] = self.normalized_schema(rules["schema"])
-            # no declared type: shape is ambiguous until data arrives —
-            # leave as-is (matches the reference's laissez-faire here)
         if "items" in rules and isinstance(rules["items"], list):
             rules["items"] = [
                 self._meta_one(s) if isinstance(s, dict) else s
@@ -357,11 +370,12 @@ class Validator:
 
     # -- recursive traversal (reference validateDict/validateItem) -----
     def _validate_dict(
-        self, doc: dict, schema: dict, path: tuple[Any, ...]
+        self, doc: dict, schema: dict, path: tuple[Any, ...],
+        policy: _Policy,
     ) -> None:
         """Reference ``validateDict`` (``validator.hh:302-344``):
         iterate schema fields, descend, apply rename moves, then purge
-        or flag unknown keys."""
+        or flag unknown keys by ``policy``."""
         st = self._state
         assert st is not None
         found: list[str] = []
@@ -369,17 +383,18 @@ class Validator:
             item = _Item(
                 value=doc.get(field_name, UNDEFINED), field=field_name
             )
-            self._validate_item(item, rules, path + (field_name,), doc)
+            self._validate_item(
+                item, rules, path + (field_name,), doc, policy)
             if item.field != field_name and field_name in doc:
                 del doc[field_name]  # rename move (validator.hh:316-320)
             if item.value is not UNDEFINED:
                 doc[item.field] = item.value
             found.append(item.field)
-        if st.purge_unknown:
+        if policy.purge_unknown:
             for k in list(doc.keys()):
                 if k not in found:
                     del doc[k]  # validator.hh:326-333
-        if not st.allow_unknown:
+        if not policy.allow_unknown:
             for k in doc.keys():
                 if k not in found:
                     st.errors.append(
@@ -395,18 +410,18 @@ class Validator:
         rules: dict,
         path: tuple[Any, ...],
         parent: Any,
+        policy: _Policy,
     ) -> None:
         """Reference ``validateItem`` (``validator.hh:261-290``): six
-        priority phases, schema-key order within a phase, require_all
-        injecting ``required: true`` at NORMALIZATION
-        (``validator.hh:273-275``)."""
+        priority phases, schema-key order within a phase. The field's
+        own policy keys scope over its subtree, and require_all injects
+        ``required: true`` (``validator.hh:273-275``)."""
         st = self._state
         assert st is not None
+        policy = policy.enter(rules)
+        if policy.require_all:
+            rules = {**rules, "required": True}
         for phase in _PHASES:
-            if phase == Priority.NORMALIZATION and st.require_all:
-                # persists into later phases — the reference mutates the
-                # schema node itself (validator.hh:273-275)
-                rules = {**rules, "required": True}
             for name, arg in rules.items():
                 fn = self._rules.get((phase, name))
                 if fn is not None:
@@ -419,6 +434,7 @@ class Validator:
                             field_schema=rules,
                             path=path,
                             parent=parent,
+                            policy=policy,
                         )
                     )
 
@@ -429,16 +445,6 @@ class Validator:
 # reference list for documentation purposes only (execution order is
 # phase-then-schema-key order, ``validator.hh:266-287``).
 # ---------------------------------------------------------------------------
-
-
-def _policy_pair(name: str):
-    def first(ctx: RuleCtx) -> None:
-        ctx.state.push_policy(name, _truthy(ctx.arg))
-
-    def last(ctx: RuleCtx) -> None:
-        ctx.state.pop_policy(name)
-
-    return first, last
 
 
 def _rule_allowed(ctx: RuleCtx) -> None:
@@ -536,7 +542,7 @@ def _rule_items(ctx: RuleCtx) -> None:
     for i, sub in enumerate(ctx.arg or []):
         elem = _Item(value=seq[i] if i < len(seq) else UNDEFINED)
         ctx.validator._validate_item(
-            elem, sub, ctx.path + (i,), ctx.parent
+            elem, sub, ctx.path + (i,), ctx.parent, ctx.policy
         )
         if i < len(seq) and elem.value is not UNDEFINED:
             seq[i] = elem.value
@@ -548,7 +554,8 @@ def _rule_keysrules(ctx: RuleCtx) -> None:
         return
     for key in ctx.value:
         ctx.validator._validate_item(
-            _Item(value=key), ctx.arg, ctx.path + (key,), ctx.value
+            _Item(value=key), ctx.arg, ctx.path + (key,), ctx.value,
+            ctx.policy,
         )
 
 
@@ -638,12 +645,12 @@ def _rule_schema(ctx: RuleCtx) -> None:
             return
         arg = ctx.validator.normalized_schema(arg)
     if isinstance(ctx.value, dict):
-        ctx.validator._validate_dict(ctx.value, arg, ctx.path)
+        ctx.validator._validate_dict(ctx.value, arg, ctx.path, ctx.policy)
     elif isinstance(ctx.value, list):
         for i in range(len(ctx.value)):
             elem = _Item(value=ctx.value[i])
             ctx.validator._validate_item(
-                elem, arg, ctx.path + (i,), ctx.parent
+                elem, arg, ctx.path + (i,), ctx.parent, ctx.policy
             )
             if elem.value is not UNDEFINED:
                 ctx.value[i] = elem.value
@@ -680,7 +687,7 @@ def _rule_valuesrules(ctx: RuleCtx) -> None:
     for key in list(ctx.value.keys()):
         elem = _Item(value=ctx.value[key])
         ctx.validator._validate_item(
-            elem, ctx.arg, ctx.path + (key,), ctx.value
+            elem, ctx.arg, ctx.path + (key,), ctx.value, ctx.policy
         )
         if elem.value is not UNDEFINED:
             ctx.value[key] = elem.value
@@ -696,16 +703,14 @@ def _register_builtin_rules(v: Validator) -> None:
     turns ``test/illformedschemas.yml`` cases into SchemaErrors.
     """
     P = Priority
-    au_first, au_last = _policy_pair("allow_unknown")
-    pu_first, pu_last = _policy_pair("purge_unknown")
-    ra_first, ra_last = _policy_pair("require_all")
     length_meta = {
         "type": "integer",
         "min": 0,
         "dependencies": {"type": ["list", "dict"]},
     }
-    v.register_rule("allow_unknown", {"type": "boolean"}, au_first, P.FIRST)
-    v.register_rule("allow_unknown", {}, au_last, P.LAST)
+    # policy keys act through _Policy.enter; their rules are no-ops
+    # that carry the meta-schema
+    v.register_rule("allow_unknown", {"type": "boolean"}, _rule_meta)
     v.register_rule("allowed", {"type": "list"}, _rule_allowed)
     v.register_rule(
         "contains", {"type": ["string", "list"]}, _rule_contains
@@ -729,12 +734,10 @@ def _register_builtin_rules(v: Validator) -> None:
     v.register_rule(
         "nullable", {"type": "boolean", "default": False}, _rule_nullable
     )
-    v.register_rule("purge_unknown", {"type": "boolean"}, pu_first, P.FIRST)
-    v.register_rule("purge_unknown", {}, pu_last, P.LAST)
+    v.register_rule("purge_unknown", {"type": "boolean"}, _rule_meta)
     v.register_rule("regex", {"type": "string"}, _rule_regex)
     v.register_rule("rename", {"type": "string"}, _rule_rename, P.POST_NORMALIZATION)
-    v.register_rule("require_all", {"type": "boolean"}, ra_first, P.FIRST)
-    v.register_rule("require_all", {}, ra_last, P.LAST)
+    v.register_rule("require_all", {"type": "boolean"}, _rule_meta)
     v.register_rule("required", {"type": "boolean"}, _rule_required)
     v.register_rule("schema", {}, _rule_schema)
     v.register_rule("type", {}, _rule_type)

@@ -24,6 +24,7 @@ Design:
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import time
 import uuid
@@ -218,10 +219,12 @@ def run_validation(
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     # the fingerprint covers the FULL rule tree (not just field
-    # names): any rule edit changes the lineage and forces
-    # re-validation of previously-committed partitions
+    # names) and the constructor's policy flags: any rule or policy
+    # edit changes the lineage and forces re-validation of
+    # previously-committed partitions
     lineage = json.dumps({
         "schema": validator.schema,
+        "policy": dataclasses.asdict(validator._policy),
         "source_schema": df.schema.simpleString(),
         "partition_col": partition_col,
     }, sort_keys=True, default=str)

@@ -29,7 +29,7 @@ the index, so per-element violation paths keep the reference's
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass, field as dc_field, replace
 from functools import reduce
 from typing import Any, Optional
 
@@ -37,6 +37,13 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..dynamic.interpreter import (
+    _PATH_TOKEN,
+    _POLICY_KEYS,
+    _Policy,
+    _truthy,
+    as_list,
+)
 from ..errors import SchemaError
 from ..functions.pytypes import _scalar_text, builtin_types
 from ..functions.sparktypes import (
@@ -54,22 +61,6 @@ _BUILTIN_TYPE_NAMES = frozenset(builtin_types())
 class CompileError(SchemaError):
     """A rule/shape combination the columnar compiler cannot express;
     the dynamic interpreter path still handles it."""
-
-
-def _as_list(v: Any) -> list:
-    if isinstance(v, list):
-        return list(v)
-    if v is None:
-        return []
-    return [v]
-
-
-def _truthy(arg: Any) -> bool:
-    if isinstance(arg, bool):
-        return arg
-    if isinstance(arg, str):
-        return arg in ("true", "True", "TRUE", "yes", "on")
-    return bool(arg)
 
 
 class ScalarViol:
@@ -130,8 +121,6 @@ class Scope:
 @dataclass
 class CompilerOpts:
     presence: str = "null"  # "null" | "defined"
-    allow_unknown: bool = False
-    purge_unknown: bool = False
     extra_cols: tuple[str, ...] = ()
     # engine-supplied registries
     schema_registry: dict = dc_field(default_factory=dict)
@@ -156,6 +145,8 @@ class FieldCtx:
     # injected nullable:false fires in every presence mode and
     # explicit nullable gates on definedness.
     elem: bool = False
+    # the ENCLOSING policy; compile_field enters the field's own keys
+    policy: _Policy = _Policy()
 
     def declared_type(self) -> str:
         t = self.rules.get("type", "string")
@@ -200,11 +191,6 @@ def _child_ref(parent: FieldRef, name: str, opts: CompilerOpts) -> Optional[Fiel
         )
         return FieldRef(v, parent.dtype.valueType, defined)
     return None
-
-
-import re as _re
-
-_PATH_TOKEN = _re.compile(r"([^.\[\]]+)|\[(\d+)\]")
 
 
 def _resolve(scope: Scope, path_str: str, opts: CompilerOpts) -> Optional[FieldRef]:
@@ -256,7 +242,6 @@ _ELEMENT_SAFE = {
 
 # dict-form rules an element mapping applies itself (_mapping_viols)
 _NESTED_RULES = ("schema", "keysrules", "valuesrules")
-_MAPPING_RULES = _NESTED_RULES + ("allow_unknown",)
 
 
 def _without(rules: dict, names: tuple) -> dict:
@@ -264,20 +249,22 @@ def _without(rules: dict, names: tuple) -> dict:
 
 
 def _elem_viols(
-    rules: dict, ref: FieldRef, path: Column, opts: CompilerOpts
+    rules: dict, ref: FieldRef, path: Column, opts: CompilerOpts,
+    policy: _Policy,
 ) -> list:
-    """``rules`` on one element ``ref``: the ``_ELEMENT_SAFE`` part of
-    the ``compile_field`` table, with element null semantics
-    (``FieldCtx.elem``)."""
+    """``rules`` on one element ``ref`` under the enclosing ``policy``:
+    the ``_ELEMENT_SAFE`` part of the ``compile_field`` table, with
+    element null semantics (``FieldCtx.elem``)."""
     for name in rules:
-        if name not in _ELEMENT_SAFE and not name.startswith("__"):
+        if (name not in _ELEMENT_SAFE and name not in _POLICY_KEYS
+                and not name.startswith("__")):
             raise CompileError(
                 f"rule {name!r} not supported on array/map elements by the"
                 " columnar compiler (use the dynamic interpreter path)"
             )
     viols, _, _ = compile_field(FieldCtx(
         opts, rules, ref.value, ref.dtype, ref.defined, path,
-        Scope({}, None), elem=True))
+        Scope({}, None), elem=True, policy=policy))
     return viols
 
 
@@ -292,13 +279,13 @@ def _array_rule_viols(ctx: FieldCtx, elem_rules: dict) -> list:
     def one(x: Column, i: Column) -> Column:
         ref = FieldRef(x, elem_dt, F.lit(True))
         path = F.concat(F.lit(ctx.path + "["), i.cast("string"), F.lit("]"))
-        viols = _elem_viols(_without(elem_rules, _MAPPING_RULES), ref,
-                            path, ctx.opts)
+        viols = _elem_viols(_without(elem_rules, _NESTED_RULES), ref,
+                            path, ctx.opts, ctx.policy)
         if isinstance(elem_dt, (T.StructType, T.MapType)):
             # nested rules skip null elements (the injected
             # nullable:false already fires on them)
             viols += _gate_viols(
-                _mapping_viols(elem_rules, ref, path, ctx.opts),
+                _mapping_viols(elem_rules, ref, path, ctx.opts, ctx.policy),
                 x.isNotNull())
         else:
             for r in _NESTED_RULES:
@@ -315,11 +302,13 @@ def _array_rule_viols(ctx: FieldCtx, elem_rules: dict) -> list:
 
 
 def _mapping_viols(
-    rules: dict, ref: FieldRef, path: Column, opts: CompilerOpts
+    rules: dict, ref: FieldRef, path: Column, opts: CompilerOpts,
+    policy: _Policy,
 ) -> list:
     """validateDict (``validator.hh:302-344``) over a non-null
-    struct/map element ``ref``: nested ``schema`` recursion,
-    keysrules/valuesrules and unknown keys."""
+    struct/map element ``ref`` under the enclosing ``policy``: nested
+    ``schema`` recursion, keysrules/valuesrules and unknown keys."""
+    policy = policy.enter(rules)
     viols: list = []
     nested = rules.get("schema")
     if nested is not None:
@@ -331,12 +320,11 @@ def _mapping_viols(
             is_mapping = isinstance(child.dtype, (T.StructType, T.MapType))
             # nested rules recurse below on a mapping child and no-op
             # on an absent one; on any other child they raise
-            skip = (_MAPPING_RULES if is_mapping or child.value is None
-                    else _NESTED_RULES)
-            viols += _elem_viols(_without(frules, skip), child, cpath, opts)
+            viols += _elem_viols(_without(frules, _NESTED_RULES), child,
+                                 cpath, opts, policy)
             if is_mapping:
                 viols += _gate_viols(
-                    _mapping_viols(frules, child, cpath, opts),
+                    _mapping_viols(frules, child, cpath, opts, policy),
                     child.defined & child.value.isNotNull())
             elif child.value is not None and any(
                     r in frules for r in _NESTED_RULES):
@@ -346,17 +334,17 @@ def _mapping_viols(
                     " dynamic interpreter path)")
     for which in ("keysrules", "valuesrules"):
         if which in rules:
-            viols += _kv_viols(which, rules[which], ref, path, opts)
+            viols += _kv_viols(which, rules[which], ref, path, opts, policy)
     # the unknown-key check belongs to the `schema` rule's
     # validateDict: keysrules alone puts no constraint on key NAMES
-    if nested is not None and not (
-            _truthy(rules.get("allow_unknown", False)) or opts.allow_unknown):
+    if nested is not None and policy.rejects_unknown:
         viols += _unknown_key_viols(nested, ref, path, opts)
     return viols
 
 
 def _kv_viols(
-    which: str, arg: dict, ref: FieldRef, path: Column, opts: CompilerOpts
+    which: str, arg: dict, ref: FieldRef, path: Column, opts: CompilerOpts,
+    policy: _Policy,
 ) -> list:
     """keysrules/valuesrules (``rules.hh:270-288, 614-632``): ``arg``
     on every key/value PRESENT in the mapping ``ref`` — known and
@@ -371,7 +359,8 @@ def _kv_viols(
             target = e["key"] if which == "keysrules" else e["value"]
             return assemble_violations(_elem_viols(
                 arg, FieldRef(target, dt, F.lit(True)),
-                F.concat(path, F.lit("."), e["key"].cast("string")), opts))
+                F.concat(path, F.lit("."), e["key"].cast("string")), opts,
+                policy))
 
         arr = F.flatten(F.transform(F.map_entries(ref.value), one))
         return [ArrayViol(F.coalesce(arr, F.array().cast(VIOL_ARRAY_T)))]
@@ -385,7 +374,7 @@ def _kv_viols(
                   else FieldRef(child.value, child.dtype, F.lit(True)))
         viols += _gate_viols(
             _elem_viols(arg, target, F.concat(path, F.lit(f".{fname}")),
-                        opts),
+                        opts, policy),
             child.defined)
     return viols
 
@@ -457,9 +446,14 @@ def compile_field(ctx: FieldCtx) -> tuple[list[Column], Column, Column]:
     Returns (violation columns, effective value expr, effective
     definedness) — the effective value has NORMALIZATION (default)
     applied so later rules validate the normalized value, mirroring
-    the reference's phase order (``validator.hh:266-287``).
+    the reference's phase order (``validator.hh:266-287``). The
+    field's own policy keys scope over its subtree, and require_all
+    injects ``required: true`` (``validator.hh:273-275``).
     """
-    rules = ctx.rules
+    policy = ctx.policy.enter(ctx.rules)
+    rules = {**ctx.rules, "required": True} if policy.require_all \
+        else ctx.rules
+    ctx = replace(ctx, rules=rules, policy=policy)
     opts = ctx.opts
     viols: list[Column] = []
     tname = ctx.declared_type()
@@ -474,8 +468,7 @@ def compile_field(ctx: FieldCtx) -> tuple[list[Column], Column, Column]:
         else:
             value = F.when(~defined, dlit).otherwise(value)
         defined = F.lit(True)
-        ctx = FieldCtx(opts, rules, value, ctx.dtype, defined,
-                       ctx.path, ctx.scope)
+        ctx = replace(ctx, value=value, defined=defined)
 
     path = ctx.path_lit()
 
@@ -527,7 +520,7 @@ def compile_field(ctx: FieldCtx) -> tuple[list[Column], Column, Column]:
                 viols.append(_viol(base, path,
                                    "value disallowed by allowed-rule"))
             else:
-                lits = [ctx.literal(v) for v in _as_list(arg)]
+                lits = [ctx.literal(v) for v in as_list(arg)]
                 viols.append(_viol(
                     base & ~F.coalesce(dec.isin(*lits), F.lit(False)),
                     path, "value disallowed by allowed-rule"))
@@ -535,7 +528,7 @@ def compile_field(ctx: FieldCtx) -> tuple[list[Column], Column, Column]:
             dec = ctx.decoded()
             if dec is None or ctx.value is None:
                 continue
-            for cand in _as_list(arg):
+            for cand in as_list(arg):
                 viols.append(_viol(
                     defined & ctx.value.isNotNull()
                     & F.coalesce(dec.eqNullSafe(ctx.literal(cand)),
@@ -572,7 +565,7 @@ def compile_field(ctx: FieldCtx) -> tuple[list[Column], Column, Column]:
             viols.append(_viol(_count_expr(ctx) > F.lit(int(arg)), path,
                                "maxlength-rule violated"))
         elif name == "contains":
-            needed = [str(_scalar_text(v)) for v in _as_list(arg)]
+            needed = [str(_scalar_text(v)) for v in as_list(arg)]
             needed_arr = F.array(*[F.lit(n) for n in needed])
             if ctx.value is not None and isinstance(ctx.dtype, T.ArrayType):
                 have = F.transform(ctx.value, lambda x: x.cast("string"))
@@ -586,7 +579,7 @@ def compile_field(ctx: FieldCtx) -> tuple[list[Column], Column, Column]:
         elif name == "type":
             if ctx.value is None or ctx.dtype is None:
                 continue  # undefined always → type skipped
-            names = [str(n) for n in _as_list(arg)]
+            names = [str(n) for n in as_list(arg)]
             base = defined & ctx.value.isNotNull()
             if isinstance(ctx.dtype, T.ArrayType):
                 if "list" not in names:
@@ -624,7 +617,7 @@ def compile_field(ctx: FieldCtx) -> tuple[list[Column], Column, Column]:
                     viols.append(_viol(
                         defined & ~ref.defined, path,
                         f"dependencies-rule violated: {dep} required"))
-                    strs = [str(_scalar_text(v)) for v in _as_list(pinned)]
+                    strs = [str(_scalar_text(v)) for v in as_list(pinned)]
                     dep_str = (decode_expr(ref.value, ref.dtype, "string")
                                if ref.value is not None and ref.dtype is not None
                                else None)
@@ -637,7 +630,7 @@ def compile_field(ctx: FieldCtx) -> tuple[list[Column], Column, Column]:
                         f"dependencies-rule violated: {dep} requires value"
                         f" out of [{opts_s}]"))
             else:
-                for dep in _as_list(arg):
+                for dep in as_list(arg):
                     ref = _resolve(ctx.scope, str(dep), opts)
                     cond = (defined & ~ref.defined) if ref is not None else defined
                     viols.append(_viol(
@@ -646,7 +639,7 @@ def compile_field(ctx: FieldCtx) -> tuple[list[Column], Column, Column]:
         elif name == "excludes":
             if ctx.value is None:
                 continue
-            for exc in _as_list(arg):
+            for exc in as_list(arg):
                 ref = _resolve(ctx.scope, str(exc), opts)
                 if ref is not None:
                     viols.append(_viol(
@@ -657,12 +650,13 @@ def compile_field(ctx: FieldCtx) -> tuple[list[Column], Column, Column]:
         elif name == "items":
             if ctx.value is not None and isinstance(ctx.dtype, T.ArrayType):
                 elem_dt = ctx.dtype.elementType
-                for i, sub in enumerate(_as_list(arg)):
+                for i, sub in enumerate(as_list(arg)):
                     ectx = FieldCtx(
                         opts, sub,
                         F.try_element_at(ctx.value, F.lit(i + 1)), elem_dt,
                         defined & (F.coalesce(F.size(ctx.value), F.lit(0)) > i),
-                        f"{ctx.path}[{i}]", ctx.scope, elem=True)
+                        f"{ctx.path}[{i}]", ctx.scope, elem=True,
+                        policy=policy)
                     v2, _, _ = compile_field(ectx)
                     # items no-ops on an undefined list (same skip
                     # semantics as the schema rule)
@@ -672,10 +666,9 @@ def compile_field(ctx: FieldCtx) -> tuple[list[Column], Column, Column]:
                     ctx.dtype, (T.StructType, T.MapType)):
                 viols.extend(_kv_viols(
                     name, arg, FieldRef(ctx.value, ctx.dtype, defined),
-                    path, opts))
-        elif name in ("meta", "rename", "default", "allow_unknown",
-                      "purge_unknown", "require_all"):
-            pass  # no-op / handled by normalization & engine preprocessing
+                    path, opts, policy))
+        elif name in ("meta", "rename", "default") or name in _POLICY_KEYS:
+            pass  # no-op / handled by normalization and the policy
         else:
             raise CompileError(
                 f"unknown rule {name!r} reached the compiler — schema was"
@@ -700,10 +693,7 @@ def _compile_schema_rule(ctx: FieldCtx, arg: Any, defined: Column) -> list[Colum
         # violation on the parent's definedness
         nested = _compile_mapping(
             arg, FieldRef(ctx.value, ctx.dtype, defined),
-            ctx.path, ctx.scope, opts,
-            allow_unknown=_truthy(ctx.rules.get("allow_unknown", False))
-            or opts.allow_unknown,
-        )
+            ctx.path, ctx.scope, opts, ctx.policy)
         return _gate_viols(nested, defined)
     return []
 
@@ -727,12 +717,11 @@ def _compile_mapping(
     path: str,
     parent_scope: Scope,
     opts: CompilerOpts,
-    *,
-    allow_unknown: bool,
+    policy: _Policy,
 ) -> list[Column]:
     """validateDict over a nested struct/map column
-    (``validator.hh:302-344``): per-field recursion + unknown-key
-    violations."""
+    (``validator.hh:302-344``) under the carrying field's ``policy``:
+    per-field recursion + unknown-key violations."""
     viols: list[Column] = []
     refs: dict[str, FieldRef] = {}
     for fname in schema:
@@ -744,10 +733,10 @@ def _compile_mapping(
     for fname, rules in schema.items():
         ref = refs[fname]
         fctx = FieldCtx(opts, rules, ref.value, ref.dtype, ref.defined,
-                        f"{path}.{fname}", scope)
+                        f"{path}.{fname}", scope, policy=policy)
         v2, _, _ = compile_field(fctx)
         viols.extend(v2)
-    if not allow_unknown:
+    if policy.rejects_unknown:
         viols.extend(_unknown_key_viols(schema, parent, F.lit(path), opts))
     return viols
 

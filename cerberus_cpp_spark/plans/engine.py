@@ -31,14 +31,18 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..dynamic.interpreter import Priority, Validator
-from ..errors import SchemaError
+from ..dynamic.interpreter import (
+    Priority,
+    Validator,
+    _Policy,
+    _schema_form,
+    _truthy,
+)
 from .compiler import (
     CompilerOpts,
     FieldCtx,
     FieldRef,
     Scope,
-    _truthy,
     _viol,
     assemble_violation_count,
     assemble_violations,
@@ -48,86 +52,40 @@ from .compiler import (
 BOOKKEEPING_COLS = ("__defined__",)
 
 
-def _inject_require_all(schema: dict, active: bool) -> dict:
-    """require_all semantics (``validator.hh:273-275`` + scoped rule
-    ``rules.hh:471-501``): while active, every field gets
-    ``required: true`` injected (overriding an explicit false); a
-    ``require_all`` key on a dict field toggles the flag for that
-    subtree (and the carrying field itself)."""
-    out: dict = {}
-    for fname, rules in schema.items():
-        rules = dict(rules)
-        # the carrying field's own FIRST-phase toggle fires before its
-        # NORMALIZATION injection, so a field with require_all: true is
-        # itself required even when the outer flag is off
-        local = (
-            _truthy(rules["require_all"])
-            if "require_all" in rules
-            else active
-        )
-        if local:
-            rules["required"] = True
-        sub = rules.get("schema")
-        if isinstance(sub, dict) and (
-            not sub
-            or (
-                all(isinstance(v, dict) for v in sub.values())
-                and not (set(sub) & _RULE_NAMES)
-            )
-        ):
-            rules["schema"] = _inject_require_all(sub, local)
-        out[fname] = rules
+def _mark_injected_nullable(raw: Any, rules: dict) -> dict:
+    """Tag a ``nullable: false`` the meta-schema injected into the rule
+    map ``rules`` (vs one the user wrote in ``raw``) so presence='null'
+    mode can keep it inert (SURVEY.md §7: the undefined/null collapse),
+    recursing wherever the meta-normalizer did."""
+    raw = raw if isinstance(raw, dict) else {}
+    out = dict(rules)
+    if "nullable" not in raw and not _truthy(out.get("nullable", False)):
+        out["__nullable_injected__"] = True
+    sub, form = out.get("schema"), _schema_form(out)
+    if isinstance(sub, dict) and form == "list":
+        out["schema"] = _mark_injected_nullable(raw.get("schema"), sub)
+    elif isinstance(sub, dict) and form == "dict":
+        out["schema"] = _mark_fields(raw.get("schema"), sub)
+    for key in ("keysrules", "valuesrules"):
+        if isinstance(out.get(key), dict):
+            out[key] = _mark_injected_nullable(raw.get(key), out[key])
+    if isinstance(out.get("items"), list):
+        raw_items = raw.get("items")
+        raw_items = raw_items if isinstance(raw_items, list) else []
+        out["items"] = [
+            _mark_injected_nullable(
+                raw_items[i] if i < len(raw_items) else None, s)
+            if isinstance(s, dict) else s
+            for i, s in enumerate(out["items"])
+        ]
     return out
 
 
-def _mark_injected_nullable(raw: dict, normalized: dict) -> dict:
-    """Tag ``nullable: false`` entries the meta-schema injected (vs
-    user-written) so presence='null' mode can keep them inert
-    (SURVEY.md §7: the undefined/null collapse)."""
-    out: dict = {}
-    for fname, rules in normalized.items():
-        rules = dict(rules)
-        raw_rules = raw.get(fname, {}) if isinstance(raw, dict) else {}
-        if "nullable" not in raw_rules and not _truthy(
-            rules.get("nullable", False)
-        ):
-            rules["__nullable_injected__"] = True
-        for key in ("schema", "keysrules", "valuesrules"):
-            sub = rules.get(key)
-            raw_sub = raw_rules.get(key) if isinstance(raw_rules, dict) else None
-            if isinstance(sub, dict):
-                if key == "schema" and sub and all(
-                    isinstance(v, dict) for v in sub.values()
-                ) and not (set(sub) & _RULE_NAMES):
-                    rules[key] = _mark_injected_nullable(
-                        raw_sub if isinstance(raw_sub, dict) else {}, sub
-                    )
-                else:
-                    rules[key] = _mark_injected_nullable(
-                        {"_": raw_sub if isinstance(raw_sub, dict) else {}},
-                        {"_": sub},
-                    )["_"]
-        if isinstance(rules.get("items"), list):
-            raw_items = raw_rules.get("items") or []
-            rules["items"] = [
-                _mark_injected_nullable(
-                    {"_": raw_items[i] if i < len(raw_items) else {}},
-                    {"_": s},
-                )["_"]
-                if isinstance(s, dict) else s
-                for i, s in enumerate(rules["items"])
-            ]
-        out[fname] = rules
-    return out
-
-
-_RULE_NAMES = {
-    "allow_unknown", "allowed", "contains", "default", "dependencies",
-    "empty", "excludes", "forbidden", "items", "keysrules", "meta",
-    "max", "min", "maxlength", "minlength", "nullable", "purge_unknown",
-    "regex", "rename", "require_all", "required", "schema", "type",
-    "valuesrules",
-}
+def _mark_fields(raw: Any, schema: dict) -> dict:
+    """:func:`_mark_injected_nullable` over every field of a field map."""
+    raw = raw if isinstance(raw, dict) else {}
+    return {f: _mark_injected_nullable(raw.get(f), r)
+            for f, r in schema.items()}
 
 
 class TableValidator:
@@ -152,10 +110,7 @@ class TableValidator:
         for name, s in (registry or {}).items():
             self._interp.register_schema(name, s)
         self.raw_schema = copy.deepcopy(schema)
-        self._require_all = require_all
         self._schema_cache: dict | None = None
-        self.allow_unknown = allow_unknown
-        self.purge_unknown = purge_unknown
         self.presence = presence
         self.extra_cols = tuple(extra_cols)
         self._column_rules: dict[str, Callable] = {}
@@ -177,19 +132,19 @@ class TableValidator:
         return cls(load_yaml_schema(source), **kwargs)
 
     @property
+    def _policy(self) -> _Policy:
+        return self._interp._policy
+
+    @property
     def schema(self) -> dict:
         """Meta-validated + normalized schema. Validation is LAZY (on
         first use, like the reference's validate-time check,
         ``validator.hh:159-179``) so custom rules/types registered
         after construction participate in meta-validation."""
         if self._schema_cache is None:
-            normalized = self._interp.normalized_schema(self.raw_schema)
-            # always walk: per-field require_all keys inject into
-            # their subtrees even when the global flag is off
-            normalized = _inject_require_all(normalized, self._require_all)
-            self._schema_cache = _mark_injected_nullable(
-                self.raw_schema, normalized
-            )
+            self._schema_cache = _mark_fields(
+                self.raw_schema,
+                self._interp.normalized_schema(self.raw_schema))
         return self._schema_cache
 
     @schema.setter
@@ -252,7 +207,7 @@ class TableValidator:
     def _normalized_registry(self) -> dict[str, dict]:
         if self._registry_normalized is None:
             self._registry_normalized = {
-                name: self._interp.normalized_schema(s)
+                name: _mark_fields(s, self._interp.normalized_schema(s))
                 for name, s in self._registry.items()
             }
         return self._registry_normalized
@@ -261,8 +216,6 @@ class TableValidator:
     def _opts(self) -> CompilerOpts:
         return CompilerOpts(
             presence=self.presence,
-            allow_unknown=self.allow_unknown,
-            purge_unknown=self.purge_unknown,
             extra_cols=self.extra_cols,
             schema_registry=self._normalized_registry(),
             column_rules=self._column_rules,
@@ -300,7 +253,7 @@ class TableValidator:
             ref = refs[fname]
             ctx = FieldCtx(
                 opts, rules, ref.value, ref.dtype, ref.defined,
-                f"^.{fname}", scope,
+                f"^.{fname}", scope, policy=self._policy,
             )
             fviols, eff_value, _ = compile_field(ctx)
             viols.extend(fviols)
@@ -314,13 +267,11 @@ class TableValidator:
             for f in df_schema.fields
             if f.name not in self.schema and f.name not in exempt
         ]
-        # purge removes unknown keys BEFORE the allow check sees them
-        # (validator.hh:326-339), so purge implies no unknown violations
-        if not self.allow_unknown and not self.purge_unknown:
+        if self._policy.rejects_unknown:
             for k in unknown:
                 viols.append(_viol(refs[k].defined, F.lit("^"),
                                    f"unknown field not permitted: {k}"))
-        keep_unknown = [] if self.purge_unknown else unknown
+        keep_unknown = [] if self._policy.purge_unknown else unknown
         for k in keep_unknown:
             norm_cols.append(F.col(k))
             norm_names.append(k)

@@ -23,6 +23,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..dynamic.interpreter import _schema_form
 from ..functions.pytypes import UNDEFINED, _scalar_text
 
 
@@ -31,12 +32,18 @@ def _rule_declared_type(rules: dict) -> str:
     return str(t[0]) if isinstance(t, list) and t else str(t)
 
 
-def _is_field_map(sub: dict) -> bool:
-    from ..plans.engine import _RULE_NAMES
-
-    return bool(sub) and all(
-        isinstance(v, dict) for v in sub.values()
-    ) and not (set(sub) & _RULE_NAMES)
+def _schema_arg(rules: dict, form: str, registry: dict | None) -> dict:
+    """``rules``' ``schema`` argument read as ``form`` — ``"list"``:
+    one rule map for every element, ``"dict"``: a field map — or
+    ``{}`` when it reads otherwise. The declared type decides
+    (``_schema_form``, as the interpreter's normalizer), else the data
+    shape; a registered schema is always a field map."""
+    sub = rules.get("schema")
+    if isinstance(sub, str):
+        sub = (registry or {}).get(sub) if form == "dict" else None
+    if not isinstance(sub, dict) or _schema_form(rules) not in (None, form):
+        return {}
+    return sub
 
 
 def _scalar_cell(v: Any) -> str | None:
@@ -73,18 +80,12 @@ def _field_type(
         # list form: `schema` is a RULE MAP for the elements — type
         # them recursively (list-of-dict → array<struct>, enabling the
         # columnar map-in-list-in-struct path)
-        elem_rules = rules.get("schema")
-        if isinstance(elem_rules, str) and registry:
-            elem_rules = registry.get(elem_rules)
-        if not isinstance(elem_rules, dict) or _is_field_map(elem_rules):
-            elem_rules = {}
+        elem_rules = _schema_arg(rules, "list", registry)
         elems = [x for v in values if isinstance(v, list) for x in v]
         return T.ArrayType(_field_type(elem_rules, elems, registry))
     if shape == "dict":
-        sub = rules.get("schema")
-        if isinstance(sub, str) and registry:
-            sub = registry.get(sub)
-        if isinstance(sub, dict) and _is_field_map(sub):
+        sub = _schema_arg(rules, "dict", registry)
+        if sub and all(isinstance(v, dict) for v in sub.values()):
             return _struct_type(sub, [
                 v for v in values if isinstance(v, dict)
             ], registry)
@@ -120,11 +121,7 @@ def _convert(value: Any, dtype: T.DataType, rules: dict,
     if isinstance(dtype, T.ArrayType):
         if not isinstance(value, list):
             return None
-        elem_rules = rules.get("schema")
-        if isinstance(elem_rules, str) and registry:
-            elem_rules = registry.get(elem_rules)
-        if not isinstance(elem_rules, dict) or _is_field_map(elem_rules):
-            elem_rules = {}
+        elem_rules = _schema_arg(rules, "list", registry)
         return [_convert(x, dtype.elementType, elem_rules, registry)
                 for x in value]
     if isinstance(dtype, T.MapType):
@@ -132,11 +129,8 @@ def _convert(value: Any, dtype: T.DataType, rules: dict,
             return {str(k): _scalar_cell(v) for k, v in value.items()}
         return None
     if isinstance(dtype, T.StructType):
-        sub = rules.get("schema")
-        if isinstance(sub, str) and registry:
-            sub = registry.get(sub)
-        sub = sub if isinstance(sub, dict) else {}
-        return _struct_row(value, dtype, sub, registry)
+        return _struct_row(value, dtype, _schema_arg(rules, "dict", registry),
+                           registry)
     return _scalar_cell(value)
 
 

@@ -119,6 +119,21 @@ def test_items_null_element_and_short_list(spark) -> None:
     _differential(spark, schema, docs)
 
 
+def test_items_default_keeps_element_null_semantics(spark) -> None:
+    """An ``items`` entry with ``default`` still reads a NULL element
+    as null, not absent, in presence='null': the injected nullable
+    fires as in the interpreter (the default only fills an index past
+    the end of the list)."""
+    schema = {"xs": {"type": "list", "items": [
+        {"type": "integer", "default": 5}]}}
+    docs = [{"xs": [None]}, {"xs": [3]}, {"xs": []}]
+    got = sorted(
+        (r["path"], r["message"]) for r in TableValidator(schema)
+        .validate(spark.createDataFrame(docs, "xs array<bigint>"))
+        .violations().collect())
+    assert got == [("^.xs[0]", "nullable-rule violated")]
+
+
 def test_registered_schema_in_list_elements(spark) -> None:
     """Registered-schema indirection for element rules."""
     schema = {"xs": {"type": "list", "schema": {

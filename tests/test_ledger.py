@@ -131,6 +131,22 @@ def test_lineage_change_revalidates(spark, table, tmp_path) -> None:
         "partitions_processed"] == 0
 
 
+@pytest.mark.parametrize(
+    "flag", ["require_all", "allow_unknown", "purge_unknown"])
+def test_policy_change_revalidates(spark, table, tmp_path, flag) -> None:
+    """The constructor's policy flags are part of the lineage: a resume
+    with one toggled must re-validate, not reuse the old verdicts."""
+    ledger = ValidationLedger(spark, str(tmp_path / "ledger"))
+    tv = TableValidator(IMAGE_TABLE_RULES, extra_cols=("part",))
+    assert run_validation(table, tv, "part", ledger)[
+        "partitions_processed"] == N_PARTS
+
+    tv2 = TableValidator(IMAGE_TABLE_RULES, extra_cols=("part",),
+                         **{flag: True})
+    assert run_validation(table, tv2, "part", ledger)[
+        "partitions_processed"] == N_PARTS
+
+
 def test_null_partition_values_handled(spark, tmp_path) -> None:
     """NULL partition values validate under the __NULL__ sentinel and
     resume like any other partition (no TypeError, no silent skip)."""

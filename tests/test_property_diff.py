@@ -165,10 +165,15 @@ def _rand_nested_doc(rng: random.Random) -> dict:
     return doc
 
 
+POLICY_KEYS = ("allow_unknown", "purge_unknown", "require_all")
+
+
 @pytest.mark.parametrize("seed", range(20))
 def test_nested_schema_matches_interpreter(seed: int, spark) -> None:
     """Nested dict fields: struct-column recursion in the columnar
-    engine must agree with the interpreter's recursive descent."""
+    engine must agree with the interpreter's recursive descent,
+    including the scope of policies set at the top level or on ``c``
+    and an unknown nested key ``z``."""
     rng = random.Random(7000 + seed)
     schema = {
         "a": {"type": "integer"},
@@ -178,8 +183,17 @@ def test_nested_schema_matches_interpreter(seed: int, spark) -> None:
         }},
     }
     docs = [_rand_nested_doc(rng) for _ in range(20)]
+    # a second stream, so the schema and documents above stay the same
+    prng = random.Random(9000 + seed)
+    flags = {k: True for k in POLICY_KEYS if prng.random() < 0.25}
+    for k in POLICY_KEYS:
+        if prng.random() < 0.25:
+            schema["c"][k] = prng.random() < 0.5
+    for d in docs:
+        if isinstance(d.get("c"), dict) and prng.random() < 0.3:
+            d["c"]["z"] = prng.choice([0, "a"])
 
-    interp = Validator()
+    interp = Validator(**flags)
     try:
         expected = [interp.validate(d, schema) for d in docs]
     except SchemaError:
@@ -194,7 +208,7 @@ def test_nested_schema_matches_interpreter(seed: int, spark) -> None:
 
     tv = TableValidator(
         schema, presence="defined", extra_cols=("doc_id", "expected"),
-        allow_unknown=True,
+        **flags,
     )
     got = {
         r["doc_id"]: r["valid"]
@@ -206,6 +220,7 @@ def test_nested_schema_matches_interpreter(seed: int, spark) -> None:
     ]
     assert not mismatches, (
         f"seed {seed}: first mismatch {mismatches[0]} schema={schema}"
+        f" flags={flags}"
     )
 
 
