@@ -11630,7 +11630,7 @@ SELECT o_orderkey, o_orderpriority FROM (
               FROM documents
             )
             SELECT doc_id, '^.words' AS path,
-                   'contains-rule violated' AS message
+                   'contains-rule violated: missing the' AS message
               FROM w WHERE NOT list_contains(words, 'the')
             UNION ALL
             SELECT doc_id,

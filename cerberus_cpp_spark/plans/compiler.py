@@ -22,9 +22,17 @@ Presence semantics (SURVEY.md §7 "undefined vs null collapse"):
   oddities like min failing on null while max passes
   (``rules.hh:316-336``).
 
-Element-wise rules inside arrays/maps compile to ``F.transform`` with
-the index, so per-element violation paths keep the reference's
-``^.field[i]`` grammar (``stack.hh:39-54``) without a posexplode.
+Nested rules take one descent at every depth, like the reference's
+validateItem/validateDict (``validator.hh:261-344``): every nested rule
+map compiles through :func:`compile_field`, every nested mapping
+through :func:`_compile_mapping`. List elements and map entries
+compile inside ``F.transform`` with the index or key, so per-element
+violation paths keep the reference's ``^.field[i]`` grammar
+(``stack.hh:39-54``) without a posexplode. Their ``FieldCtx`` has
+``scope=None``, the one marker for an element lambda: only the rules
+that need a scope or a user compiler (``dependencies``, ``excludes``,
+custom column rules) are refused there, and a non-scalar ``default`` on
+a field the element's struct lacks, which has no type to validate by.
 """
 
 from __future__ import annotations
@@ -135,15 +143,17 @@ class FieldCtx:
     value: Optional[Column]
     dtype: Optional[T.DataType]
     defined: Column
-    # a Column only for element contexts (_elem_viols), whose index or
-    # map key is known at run time alone
+    # a Column below an F.transform lambda, whose index or map key is
+    # known at run time alone (_join_path)
     path: str | Column
-    scope: Scope
+    # None marks an element lambda (_elem_viols) and every field below
+    # it: no mapping to resolve dependencies/excludes paths against
+    scope: Optional[Scope]
     # True when this ctx is a list ELEMENT (items rule), an element
     # under list-form schema / keysrules / valuesrules, or a field of
-    # such an element: null is then unambiguously explicit, so
-    # injected nullable:false fires in every presence mode and
-    # explicit nullable gates on definedness.
+    # such an element (scope None): null is then unambiguously
+    # explicit, so injected nullable:false fires in every presence
+    # mode and explicit nullable gates on definedness.
     elem: bool = False
     # the ENCLOSING policy; compile_field enters the field's own keys
     policy: _Policy = _Policy()
@@ -161,9 +171,6 @@ class FieldCtx:
     def literal(self, value) -> Column:
         return literal_with(self.opts.spark_types, value,
                             self.declared_type())
-
-    def path_lit(self) -> Column:
-        return self.path if isinstance(self.path, Column) else F.lit(self.path)
 
 
 def _child_ref(parent: FieldRef, name: str, opts: CompilerOpts) -> Optional[FieldRef]:
@@ -231,120 +238,54 @@ def _resolve(scope: Scope, path_str: str, opts: CompilerOpts) -> Optional[FieldR
 # ---------------------------------------------------------------------------
 # Element-level rules: one array element (an F.transform lambda
 # variable) or one key/value under keysrules/valuesrules, compiled by
-# compile_field's own rule table. Element paths are Columns: the index
-# or map key is only known at run time.
+# compile_field like any field, on a scope-less ctx. Element paths are
+# Columns: the index or map key is only known at run time.
 # ---------------------------------------------------------------------------
 
-_ELEMENT_SAFE = {
-    "type", "allowed", "forbidden", "min", "max", "regex", "nullable",
-    "meta", "required", "empty", "minlength", "maxlength",
-}
 
-# dict-form rules an element mapping applies itself (_mapping_viols)
-_NESTED_RULES = ("schema", "keysrules", "valuesrules")
+def _join_path(*parts: str | Column) -> str | Column:
+    """Extend a path: a ``str`` while every segment is known at compile
+    time, an ``F.concat`` Column once any segment is a Column."""
+    if all(isinstance(p, str) for p in parts):
+        return "".join(parts)
+    return F.concat(*[_path_col(p) for p in parts])
 
 
-def _without(rules: dict, names: tuple) -> dict:
-    return {k: v for k, v in rules.items() if k not in names}
+def _path_col(path: str | Column) -> Column:
+    return path if isinstance(path, Column) else F.lit(path)
 
 
 def _elem_viols(
-    rules: dict, ref: FieldRef, path: Column, opts: CompilerOpts,
+    rules: dict, ref: FieldRef, path: str | Column, opts: CompilerOpts,
     policy: _Policy,
 ) -> list:
-    """``rules`` on one element ``ref`` under the enclosing ``policy``:
-    the ``_ELEMENT_SAFE`` part of the ``compile_field`` table, with
-    element null semantics (``FieldCtx.elem``)."""
-    for name in rules:
-        if (name not in _ELEMENT_SAFE and name not in _POLICY_KEYS
-                and not name.startswith("__")):
-            raise CompileError(
-                f"rule {name!r} not supported on array/map elements by the"
-                " columnar compiler (use the dynamic interpreter path)"
-            )
+    """``rules`` on one element ``ref`` under the enclosing ``policy``,
+    with element null semantics (``FieldCtx.elem``) and no scope."""
     viols, _, _ = compile_field(FieldCtx(
-        opts, rules, ref.value, ref.dtype, ref.defined, path,
-        Scope({}, None), elem=True, policy=policy))
+        opts, rules, ref.value, ref.dtype, ref.defined, path, None,
+        elem=True, policy=policy))
     return viols
 
 
 def _array_rule_viols(ctx: FieldCtx, elem_rules: dict) -> list:
     """schema (list form): ``elem_rules`` on every element inside one
     F.transform, under the element's own ``path[i]``
-    (``stack.hh:39-54``), flattened into one array. Struct/map
-    elements also get dict-form nested ``schema`` and
-    keysrules/valuesrules (map-in-list-in-struct)."""
+    (``stack.hh:39-54``), flattened into one array."""
     elem_dt = ctx.dtype.elementType
 
     def one(x: Column, i: Column) -> Column:
-        ref = FieldRef(x, elem_dt, F.lit(True))
-        path = F.concat(F.lit(ctx.path + "["), i.cast("string"), F.lit("]"))
-        viols = _elem_viols(_without(elem_rules, _NESTED_RULES), ref,
-                            path, ctx.opts, ctx.policy)
-        if isinstance(elem_dt, (T.StructType, T.MapType)):
-            # nested rules skip null elements (the injected
-            # nullable:false already fires on them)
-            viols += _gate_viols(
-                _mapping_viols(elem_rules, ref, path, ctx.opts, ctx.policy),
-                x.isNotNull())
-        else:
-            for r in _NESTED_RULES:
-                if r in elem_rules:
-                    raise CompileError(
-                        f"`{r}` inside list elements requires struct/map"
-                        " elements in the columnar compiler (use the"
-                        " dynamic interpreter path for list-in-list"
-                        " nesting)")
-        return assemble_violations(viols)
+        return assemble_violations(_elem_viols(
+            elem_rules, FieldRef(x, elem_dt, F.lit(True)),
+            _join_path(ctx.path, "[", i.cast("string"), "]"), ctx.opts,
+            ctx.policy))
 
     arr = F.flatten(F.transform(ctx.value, one))
     return [ArrayViol(F.coalesce(arr, F.array().cast(VIOL_ARRAY_T)))]
 
 
-def _mapping_viols(
-    rules: dict, ref: FieldRef, path: Column, opts: CompilerOpts,
-    policy: _Policy,
-) -> list:
-    """validateDict (``validator.hh:302-344``) over a non-null
-    struct/map element ``ref`` under the enclosing ``policy``: nested
-    ``schema`` recursion, keysrules/valuesrules and unknown keys."""
-    policy = policy.enter(rules)
-    viols: list = []
-    nested = rules.get("schema")
-    if nested is not None:
-        nested = _registered_schema(nested, opts)
-        for fname, frules in nested.items():
-            child = (_child_ref(ref, fname, opts)
-                     or FieldRef(None, None, F.lit(False)))
-            cpath = F.concat(path, F.lit(f".{fname}"))
-            is_mapping = isinstance(child.dtype, (T.StructType, T.MapType))
-            # nested rules recurse below on a mapping child and no-op
-            # on an absent one; on any other child they raise
-            viols += _elem_viols(_without(frules, _NESTED_RULES), child,
-                                 cpath, opts, policy)
-            if is_mapping:
-                viols += _gate_viols(
-                    _mapping_viols(frules, child, cpath, opts, policy),
-                    child.defined & child.value.isNotNull())
-            elif child.value is not None and any(
-                    r in frules for r in _NESTED_RULES):
-                raise CompileError(
-                    "nested mapping rules under a non-mapping element"
-                    " field are not columnar-compilable (use the"
-                    " dynamic interpreter path)")
-    for which in ("keysrules", "valuesrules"):
-        if which in rules:
-            viols += _kv_viols(which, rules[which], ref, path, opts, policy)
-    # the unknown-key check belongs to the `schema` rule's
-    # validateDict: keysrules alone puts no constraint on key NAMES
-    if nested is not None and policy.rejects_unknown:
-        viols += _unknown_key_viols(nested, ref, path, opts)
-    return viols
-
-
 def _kv_viols(
-    which: str, arg: dict, ref: FieldRef, path: Column, opts: CompilerOpts,
-    policy: _Policy,
+    which: str, arg: dict, ref: FieldRef, path: str | Column,
+    opts: CompilerOpts, policy: _Policy,
 ) -> list:
     """keysrules/valuesrules (``rules.hh:270-288, 614-632``): ``arg``
     on every key/value PRESENT in the mapping ``ref`` — known and
@@ -359,7 +300,7 @@ def _kv_viols(
             target = e["key"] if which == "keysrules" else e["value"]
             return assemble_violations(_elem_viols(
                 arg, FieldRef(target, dt, F.lit(True)),
-                F.concat(path, F.lit("."), e["key"].cast("string")), opts,
+                _join_path(path, ".", e["key"].cast("string")), opts,
                 policy))
 
         arr = F.flatten(F.transform(F.map_entries(ref.value), one))
@@ -373,17 +314,18 @@ def _kv_viols(
                   if which == "keysrules"
                   else FieldRef(child.value, child.dtype, F.lit(True)))
         viols += _gate_viols(
-            _elem_viols(arg, target, F.concat(path, F.lit(f".{fname}")),
+            _elem_viols(arg, target, _join_path(path, f".{fname}"),
                         opts, policy),
             child.defined)
     return viols
 
 
 def _unknown_key_viols(
-    schema: dict, parent: FieldRef, path: Column, opts: CompilerOpts
+    schema: dict, parent: FieldRef, path: str | Column, opts: CompilerOpts
 ) -> list:
     """Keys of the struct/map ``parent`` that ``schema`` does not name
     (``validator.hh:334-339``), reported at the mapping's own path."""
+    path = _path_col(path)
     if isinstance(parent.dtype, T.StructType):
         return [
             _viol(_child_ref(parent, fname, opts).defined, path,
@@ -404,20 +346,18 @@ def _unknown_key_viols(
     return [ArrayViol(F.coalesce(arr, F.array().cast(VIOL_ARRAY_T)))]
 
 
-def _registered_schema(arg: Any, opts: CompilerOpts) -> Any:
-    """A ``schema`` rule argument, with a registered schema name
-    resolved (``validator.hh:408-415``)."""
-    if not isinstance(arg, str):
-        return arg
-    resolved = opts.schema_registry.get(arg)
-    if resolved is None:
-        raise CompileError(f"unknown registered schema: {arg}")
-    return resolved
-
-
 # ---------------------------------------------------------------------------
 # Field-level compilation
 # ---------------------------------------------------------------------------
+
+
+def _scalar_dtype(value: Any) -> Optional[T.DataType]:
+    """Spark type of a scalar schema constant; None for anything else."""
+    for py, dt in ((bool, T.BooleanType()), (int, T.LongType()),
+                   (float, T.DoubleType()), (str, T.StringType())):
+        if isinstance(value, py):
+            return dt
+    return None
 
 
 def _count_expr(ctx: FieldCtx) -> Column:
@@ -461,20 +401,38 @@ def compile_field(ctx: FieldCtx) -> tuple[list[Column], Column, Column]:
     # ---- NORMALIZATION phase: default (rules.hh:128-141) ----
     value, defined = ctx.value, ctx.defined
     if "default" in rules:
-        dlit = literal_with(opts.spark_types, rules["default"], tname)
+        raw = rules["default"]
+        dlit = literal_with(opts.spark_types, raw, tname)
         if value is None:
-            value, ctx.dtype = dlit, None  # column absent: constant default
-            # dtype left as declared; decode handled via literal
+            # column absent: the rules see a column holding the raw
+            # default, as the interpreter validates it (_rule_default);
+            # the normalized output is the typed literal
+            dt = _scalar_dtype(raw)
+            if dt is None and ctx.scope is None:
+                raise CompileError(
+                    "non-scalar `default` on an element field absent from"
+                    " its struct is not columnar-compilable (use the"
+                    " dynamic interpreter path)")
+            ctx = replace(ctx, value=dlit if dt is None
+                          else F.lit(raw).cast(dt), dtype=dt)
+            value = dlit
         else:
             value = F.when(~defined, dlit).otherwise(value)
+            ctx = replace(ctx, value=value)
         defined = F.lit(True)
-        ctx = replace(ctx, value=value, defined=defined)
+        ctx = replace(ctx, defined=defined)
 
-    path = ctx.path_lit()
+    path = _path_col(ctx.path)
 
     for name, arg in rules.items():
         if name.startswith("__"):
             continue
+        if ctx.scope is None and (name in ("dependencies", "excludes")
+                                  or name in opts.column_rules):
+            raise CompileError(
+                f"rule {name!r} not supported on array/map elements by the"
+                " columnar compiler (use the dynamic interpreter path)"
+            )
         if name in opts.column_rules:  # custom registered column rules
             for v in opts.column_rules[name](ctx, arg) or []:
                 # a custom rule may also return a raw
@@ -567,15 +525,21 @@ def compile_field(ctx: FieldCtx) -> tuple[list[Column], Column, Column]:
         elif name == "contains":
             needed = [str(_scalar_text(v)) for v in as_list(arg)]
             needed_arr = F.array(*[F.lit(n) for n in needed])
+            prefix = "contains-rule violated: missing "
             if ctx.value is not None and isinstance(ctx.dtype, T.ArrayType):
                 have = F.transform(ctx.value, lambda x: x.cast("string"))
                 ok = F.size(F.array_except(needed_arr, have)) == 0
-                viols.append(_viol(~F.coalesce(ok, F.lit(False)), path,
-                                   "contains-rule violated"))
+                # needed values absent from the list, in order with
+                # duplicates; a null list lacks them all
+                missing = F.filter(needed_arr, lambda n: ~F.coalesce(
+                    F.array_contains(have, n), F.lit(False)))
+                viols.append(_viol(
+                    ~F.coalesce(ok, F.lit(False)), path,
+                    F.concat(F.lit(prefix), F.array_join(missing, ", "))))
             else:
                 # reference iterates zero items → every needed missing
                 viols.append(_viol(F.lit(True), path,
-                                   "contains-rule violated"))
+                                   prefix + ", ".join(needed)))
         elif name == "type":
             if ctx.value is None or ctx.dtype is None:
                 continue  # undefined always → type skipped
@@ -655,7 +619,7 @@ def compile_field(ctx: FieldCtx) -> tuple[list[Column], Column, Column]:
                         opts, sub,
                         F.try_element_at(ctx.value, F.lit(i + 1)), elem_dt,
                         defined & (F.coalesce(F.size(ctx.value), F.lit(0)) > i),
-                        f"{ctx.path}[{i}]", ctx.scope, elem=True,
+                        _join_path(ctx.path, f"[{i}]"), ctx.scope, elem=True,
                         policy=policy)
                     v2, _, _ = compile_field(ectx)
                     # items no-ops on an undefined list (same skip
@@ -666,7 +630,7 @@ def compile_field(ctx: FieldCtx) -> tuple[list[Column], Column, Column]:
                     ctx.dtype, (T.StructType, T.MapType)):
                 viols.extend(_kv_viols(
                     name, arg, FieldRef(ctx.value, ctx.dtype, defined),
-                    path, opts, policy))
+                    ctx.path, opts, policy))
         elif name in ("meta", "rename", "default") or name in _POLICY_KEYS:
             pass  # no-op / handled by normalization and the policy
         else:
@@ -681,20 +645,23 @@ def _compile_schema_rule(ctx: FieldCtx, arg: Any, defined: Column) -> list[Colum
     into struct/map fields; list form applies one rule-map per element
     via F.transform."""
     opts = ctx.opts
-    arg = _registered_schema(arg, opts)
+    if isinstance(arg, str):  # a registered schema (validator.hh:408-415)
+        if arg not in opts.schema_registry:
+            raise CompileError(f"unknown registered schema: {arg}")
+        arg = opts.schema_registry[arg]
     if ctx.value is None or ctx.dtype is None:
         return []
     if isinstance(ctx.dtype, T.ArrayType):
         return _array_rule_viols(ctx, arg)
     if isinstance(ctx.dtype, (T.StructType, T.MapType)):
         # the schema rule NO-OPS when the carrying field is undefined
-        # (reference: rules skip undefined values; a missing dict must
-        # not fire its children's `required`) — gate every nested
-        # violation on the parent's definedness
+        # or null (reference: rules skip such values; a missing dict
+        # must not fire its children's `required`) — gate every nested
+        # violation on the parent being defined and non-null
         nested = _compile_mapping(
             arg, FieldRef(ctx.value, ctx.dtype, defined),
             ctx.path, ctx.scope, opts, ctx.policy)
-        return _gate_viols(nested, defined)
+        return _gate_viols(nested, defined & ctx.value.isNotNull())
     return []
 
 
@@ -714,14 +681,15 @@ def _gate_viols(viols: list, gate: Column) -> list:
 def _compile_mapping(
     schema: dict,
     parent: FieldRef,
-    path: str,
-    parent_scope: Scope,
+    path: str | Column,
+    parent_scope: Optional[Scope],
     opts: CompilerOpts,
     policy: _Policy,
 ) -> list[Column]:
-    """validateDict over a nested struct/map column
+    """validateDict over a nested struct/map value
     (``validator.hh:302-344``) under the carrying field's ``policy``:
-    per-field recursion + unknown-key violations."""
+    per-field recursion + unknown-key violations. Below an element
+    lambda (``parent_scope`` None) the fields are element fields."""
     viols: list[Column] = []
     refs: dict[str, FieldRef] = {}
     for fname in schema:
@@ -729,15 +697,17 @@ def _compile_mapping(
         if ref is None:
             ref = FieldRef(None, None, F.lit(False))
         refs[fname] = ref
-    scope = Scope(refs, parent_scope.root)
+    elem = parent_scope is None
+    scope = None if elem else Scope(refs, parent_scope.root)
     for fname, rules in schema.items():
         ref = refs[fname]
         fctx = FieldCtx(opts, rules, ref.value, ref.dtype, ref.defined,
-                        f"{path}.{fname}", scope, policy=policy)
+                        _join_path(path, f".{fname}"), scope, elem=elem,
+                        policy=policy)
         v2, _, _ = compile_field(fctx)
         viols.extend(v2)
     if policy.rejects_unknown:
-        viols.extend(_unknown_key_viols(schema, parent, F.lit(path), opts))
+        viols.extend(_unknown_key_viols(schema, parent, path, opts))
     return viols
 
 

@@ -8,7 +8,8 @@ Two builders:
    columns = schema ∪ document keys, scalars carried as their YAML
    scalar *text* (so the columnar YAML-decodability checks are real),
    nested dicts as structs with their own ``__defined__`` bookkeeping,
-   dynamic dicts as ``map<string,string>``.
+   dynamic dicts as ``map<string,string>`` — or as maps of the type a
+   container-typed ``valuesrules`` declares.
 2. :func:`image_caption_table` — the BASELINE.json input_hint table
    ``(image_id, bytes, w, h, fmt, caption, phash)`` with seeded,
    countable violations (FIXTURES.md §1) for production-mode tests and
@@ -89,6 +90,13 @@ def _field_type(
             return _struct_type(sub, [
                 v for v in values if isinstance(v, dict)
             ], registry)
+        # valuesrules declaring a container types the map values by it
+        # (map<string,struct…>); otherwise values are scalar text
+        vrules = rules.get("valuesrules")
+        if isinstance(vrules, dict) and _schema_form(vrules):
+            return T.MapType(T.StringType(), _field_type(vrules, [
+                x for v in values if isinstance(v, dict) for x in v.values()
+            ], registry))
         return T.MapType(T.StringType(), T.StringType())
     return T.StringType()
 
@@ -126,7 +134,9 @@ def _convert(value: Any, dtype: T.DataType, rules: dict,
                 for x in value]
     if isinstance(dtype, T.MapType):
         if isinstance(value, dict):
-            return {str(k): _scalar_cell(v) for k, v in value.items()}
+            return {str(k): _convert(v, dtype.valueType,
+                                     rules.get("valuesrules"), registry)
+                    for k, v in value.items()}
         return None
     if isinstance(dtype, T.StructType):
         return _struct_row(value, dtype, _schema_arg(rules, "dict", registry),

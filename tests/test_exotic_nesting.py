@@ -1,11 +1,15 @@
-"""Exotic nesting parity — map-in-list-in-struct and deeper: the
-columnar engine's element-level rules (``plans/compiler.py``
-``_array_rule_viols``/``_mapping_viols``/``_kv_viols``, which apply
-``compile_field``'s rule table to each element) must agree with the
-dynamic interpreter on verdicts AND violation (path, message) sets for
-list-of-dict documents (reference semantics: ``rules.hh:519-573``
-schema recursion, ``validator.hh:302-344`` validateDict,
-``rules.hh:270-288``/``614-632`` keysrules/valuesrules)."""
+"""Exotic nesting parity — map-in-list-in-struct, list-in-list and
+deeper: the columnar engine compiles every nested rule map through
+``compile_field`` and every nested mapping through
+``_compile_mapping`` (``plans/compiler.py``; list elements and map
+entries on a scope-less ``FieldCtx`` via ``_array_rule_viols`` and
+``_kv_viols``), whatever sits above it. It must agree with the dynamic
+interpreter on verdicts AND violation (path, message) sets (reference
+semantics: ``rules.hh:519-573`` schema recursion,
+``validator.hh:302-344`` validateDict, ``rules.hh:270-288``/``614-632``
+keysrules/valuesrules). Only ``dependencies``, ``excludes``, custom
+column rules and a non-scalar ``default`` on a field the element's
+struct lacks stay refused inside element lambdas."""
 
 from __future__ import annotations
 
@@ -13,6 +17,7 @@ import random
 
 import pytest
 
+from cerberus_cpp_spark.plans.compiler import CompileError
 from cerberus_cpp_spark.plans.engine import TableValidator
 from cerberus_cpp_spark.sources.fixtures import (
     HeterogeneousShape,
@@ -20,9 +25,10 @@ from cerberus_cpp_spark.sources.fixtures import (
 )
 
 
-def _differential(spark, schema: dict, docs: list[dict]) -> None:
+def _differential(spark, schema: dict, docs: list[dict],
+                  presence: str = "defined") -> None:
     tv = TableValidator(
-        schema, presence="defined", extra_cols=("doc_id", "expected"))
+        schema, presence=presence, extra_cols=("doc_id", "expected"))
     exp, exp_errs = [], []
     for d in docs:
         exp.append(tv._interp.validate(d, schema))
@@ -70,6 +76,114 @@ def test_map_in_list_in_struct(spark) -> None:
                       {"y": 0, "m": {}}]}},
     ]
     _differential(spark, schema, docs)
+
+
+def _list_of_dicts(fields: dict) -> dict:
+    return {"a": {"type": "list", "schema": {"type": "dict",
+                                             "schema": fields}}}
+
+
+# nested rule maps at any depth, each a (schema, documents) pair
+NESTING_CASES = {
+    # a null dict skips its schema rule: no required child fires
+    "null-dict-skips-schema": (
+        {"a": {"type": "dict", "nullable": True, "schema": {
+            "b": {"type": "integer", "required": True}}}},
+        [{"a": None}, {"a": {}}, {}]),
+    "list-in-list": (
+        {"a": {"type": "list", "schema": {"type": "list", "schema": {
+            "type": "integer", "min": 0}}}},
+        [{"a": [[1, -1], [2]]}]),
+    "items-in-list": (
+        {"a": {"type": "list", "schema": {"type": "list", "items": [
+            {"type": "integer"}, {"type": "string"}]}}},
+        [{"a": [[1, "x"]]}]),
+    "map-of-struct": (
+        {"m": {"type": "dict", "valuesrules": {"type": "dict", "schema": {
+            "v": {"type": "integer", "min": 0, "required": True}}}}},
+        [{"m": {"p": {"v": 1}, "q": {"v": -1}, "r": {}}}]),
+    "default-in-list-element": (
+        _list_of_dicts({"k": {"type": "string", "default": "z",
+                              "allowed": ["z", "q"]}}),
+        [{"a": [{}, {"k": "q"}, {"k": "w"}]}]),
+    "rename-in-list-element": (
+        _list_of_dicts({"k": {"type": "integer", "rename": "kk"}}),
+        [{"a": [{"k": 1}]}]),
+    "contains-in-list": (
+        {"a": {"type": "list", "schema": {"type": "list",
+                                          "contains": ["x"]}}},
+        [{"a": [["x", "y"], ["y"], []]}]),
+    # the message names the missing values, every one on undefined
+    "contains-message": (
+        {"a": {"type": "list", "contains": ["x", "y"]}},
+        [{"a": ["x"]}, {"a": ["y", "z"]}, {}]),
+}
+
+
+@pytest.mark.parametrize("presence,name", [
+    *[("defined", n) for n in NESTING_CASES],
+    ("null", "list-in-list"),
+    ("null", "items-in-list"),
+])
+def test_nested_rules_any_depth(presence: str, name: str, spark) -> None:
+    """Every nested rule map compiles through ``compile_field`` and
+    matches the interpreter, whatever sits above it."""
+    schema, docs = NESTING_CASES[name]
+    _differential(spark, schema, docs, presence)
+
+
+def test_dependencies_in_list_element_still_raise(spark) -> None:
+    """``dependencies`` needs a scope to resolve its path against;
+    element lambdas have none, so the compiler refuses it there."""
+    schema = _list_of_dicts({"k": {"type": "integer", "dependencies": "j"},
+                             "j": {"type": "integer"}})
+    df = spark.createDataFrame([], "a array<struct<k: bigint, j: bigint>>")
+    with pytest.raises(CompileError, match=(
+            r"^rule 'dependencies' not supported on array/map elements by"
+            r" the columnar compiler \(use the dynamic interpreter"
+            r" path\)$")):
+        TableValidator(schema).compile(df.schema)
+
+
+# fields whose `default` must validate like the interpreter's when the
+# frame has no column (or struct field) for them: k and n pass, t fails
+_ABSENT_DEFAULTS = {
+    "k": {"type": "string", "default": "z", "allowed": ["z", "q"]},
+    "n": {"type": "integer", "default": 5, "min": 3, "max": 9},
+    "s": {"type": "string", "default": "ab", "regex": "[a-z]+"},
+    "t": {"type": "integer", "default": 1, "min": 3},
+    "j": {"type": "integer"},
+}
+
+
+@pytest.mark.parametrize("schema,ddl,row,doc", [
+    (_ABSENT_DEFAULTS, "j bigint", (1,), {"j": 1}),
+    (_list_of_dicts(_ABSENT_DEFAULTS), "a array<struct<j: bigint>>",
+     ([{"j": 1}, {"j": 2}],), {"a": [{"j": 1}, {"j": 2}]}),
+], ids=["top-level", "list-element"])
+def test_default_on_field_absent_from_frame(schema, ddl, row, doc,
+                                            spark) -> None:
+    """A field with a ``default`` but no column in the frame validates
+    the default itself, at the top level and in a list element's struct
+    (``golden_frame`` always adds every schema field, so this builds
+    the frame by hand)."""
+    tv = TableValidator(schema, presence="null")
+    tv._interp.validate(doc, schema)
+    exp = sorted((e.path, e.message) for e in tv._interp.errors)
+    assert exp, "the interpreter reports the failing default"
+    [got] = tv.validate(spark.createDataFrame([row], ddl)).annotated.collect()
+    assert sorted((x["path"], x["message"])
+                  for x in got["violations"]) == exp
+
+
+def test_list_default_on_absent_element_field_raises(spark) -> None:
+    """A list ``default`` has no Spark type to validate by when the
+    element struct lacks its field, so the compiler refuses it."""
+    schema = _list_of_dicts({"k": {"type": "list", "default": ["x"]},
+                             "j": {"type": "integer"}})
+    df = spark.createDataFrame([], "a array<struct<j: bigint>>")
+    with pytest.raises(CompileError, match="non-scalar `default`"):
+        TableValidator(schema).compile(df.schema)
 
 
 def test_list_of_dicts_two_deep(spark) -> None:
@@ -176,10 +290,34 @@ def _rand_elem_doc(rng: random.Random) -> dict:
     return elem
 
 
+def _extend_nesting(rng: random.Random, schema: dict, docs: list) -> None:
+    """Add a list-of-lists field ``ll`` beside ``xs`` and a ``default``
+    field ``k`` to the ``xs`` element dicts, drawn from ``rng`` alone."""
+    c = schema["c"]["schema"]
+    c["ll"] = {"type": "list", "schema": {"type": "list", "schema": {
+        "type": "integer", "min": rng.choice([0, 3])}}}
+    c["xs"]["schema"]["schema"]["k"] = {
+        "type": "string", "default": "z", "allowed": ["z", "q"]}
+    for doc in docs:
+        if "c" not in doc:
+            continue
+        if rng.random() < 0.6:
+            doc["c"]["ll"] = [
+                (None if rng.random() < 0.1 else
+                 [rng.choice([-1, 0, 2, 5]) for _ in range(rng.randint(0, 3))])
+                for _ in range(rng.randint(0, 3))
+            ]
+        for elem in doc["c"].get("xs", []):
+            if elem is not None and rng.random() < 0.5:
+                elem["k"] = rng.choice(["z", "q", "w"])
+
+
 @pytest.mark.parametrize("seed", range(12))
 def test_property_map_in_list_in_struct(seed: int, spark) -> None:
-    """Random documents through the headline nested shape: verdict and
-    (path, message) sets must match the interpreter exactly."""
+    """Random documents through the headline nested shape, plus a
+    list-of-lists field and an element-dict ``default`` from a second
+    seeded stream: verdict and (path, message) sets must match the
+    interpreter exactly."""
     rng = random.Random(4200 + seed)
     schema = {"c": {"type": "dict", "schema": {
         "xs": {"type": "list", "schema": {
@@ -210,6 +348,7 @@ def test_property_map_in_list_in_struct(seed: int, spark) -> None:
                 c["tag"] = rng.choice(["t1", "t2"])
             doc["c"] = c
         docs.append(doc)
+    _extend_nesting(random.Random(8800 + seed), schema, docs)
     try:
         _differential(spark, schema, docs)
     except HeterogeneousShape:
