@@ -8066,8 +8066,8 @@ FROM per_row GROUP BY p
 
 
 def q_windowed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hourly event-time rollup (batch twin of the streaming windowed
-    verdict): per-window row count, null-value count, value sum."""
+    """Hourly event-time rollup: per-window row count, null-value
+    count, value sum."""
     ev = _t(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour").start.alias("window_start"))

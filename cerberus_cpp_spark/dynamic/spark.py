@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.shipping import PKG_PARENT
+from ..plans.engine import explode_violations
 from .interpreter import Validator
 
 VIOL_FIELDS = T.ArrayType(T.StructType([
@@ -183,12 +184,6 @@ def json_violations(
     (same output shape as ``TableValidationResult.violations``)."""
     if id_cols is None:
         id_cols = tuple(c for c in df.columns if c != doc_col)
-    ann = validate_json(df, schema, doc_col=doc_col,
-                        id_cols=id_cols, **kw)
-    v = F.explode(F.col("violations")).alias("v")
-    return (
-        ann.where(F.col("n_violations") > 0)
-        .select(*id_cols, v)
-        .select(*id_cols, F.col("v.path").alias("path"),
-                F.col("v.message").alias("message"))
-    )
+    return explode_violations(
+        validate_json(df, schema, doc_col=doc_col, id_cols=id_cols, **kw),
+        id_cols)

@@ -15,13 +15,3 @@ import os
 PKG_PARENT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
-
-
-def ensure_importable(pkg_parent: str = PKG_PARENT) -> None:
-    """Idempotent: make ``cerberus_cpp_spark`` importable on a worker."""
-    import importlib.util
-    import sys
-
-    if importlib.util.find_spec("cerberus_cpp_spark") is None \
-            and pkg_parent not in sys.path:
-        sys.path.insert(0, pkg_parent)

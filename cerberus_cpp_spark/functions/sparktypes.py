@@ -42,10 +42,6 @@ _FRACTIONAL = (T.FloatType, T.DoubleType, T.DecimalType)
 _SCALARS = _INTEGRAL + _FRACTIONAL + (T.StringType, T.BooleanType)
 
 
-def is_container(dtype: T.DataType) -> bool:
-    return isinstance(dtype, (T.ArrayType, T.MapType, T.StructType))
-
-
 def decode_expr(
     col: Column, dtype: T.DataType, target: str
 ) -> Optional[Column]:

@@ -678,23 +678,6 @@ def heavy_hitters(
     return _verify_candidates(df, key, cand, total, min_share, min_count)
 
 
-def recommend_salt_buckets(
-    hitters: DataFrame, target_parallelism: int
-) -> int:
-    """Turn a ``heavy_hitters`` result into the phase-1 salt fan-out
-    for ``duplicate_keys(salt_buckets=...)``: enough buckets that the
-    hottest key's per-reducer load matches an average reducer's
-    (share x parallelism), clamped to [1, target_parallelism]. The
-    input is already reduced (<= a handful of hot keys), so the
-    1-row aggregate collect is bounded."""
-    import math
-
-    row = hitters.agg(F.max("share").alias("s")).collect()[0]
-    share = row["s"] or 0.0
-    return max(1, min(int(target_parallelism),
-                      int(math.ceil(share * target_parallelism))))
-
-
 # ---------------------------------------------------------------------------
 # Categorical distribution drift (frequency histograms across snapshots)
 # ---------------------------------------------------------------------------
@@ -854,82 +837,6 @@ def schema_drift(a: DataFrame, b: DataFrame) -> dict:
             if ta[k] != tb[k]
         },
     }
-
-
-def snapshot_drift_report(
-    a: DataFrame,
-    b: DataFrame,
-    *,
-    categorical: list[str] | None = None,
-    numeric: list[str] | None = None,
-    embedding: dict[str, int] | None = None,
-    probs=(0.1, 0.25, 0.5, 0.75, 0.9),
-    rel_tolerance: float = 0.05,
-    l_inf_tolerance: float = 0.05,
-    compression: int = 200,
-) -> dict:
-    """The unified two-snapshot comparison (north_star:
-    "distribution-drift detection via t-digest quantile sketches
-    compared across snapshots"): schema delta (driver-side, free) +
-    t-digest quantile drift for ALL numeric columns and every
-    dimension of ALL embedding columns (``embedding`` maps column →
-    declared width; the :func:`embedding_dim_drift` semantics,
-    batched) from ONE scan of the two snapshots' side-tagged union +
-    frequency drift for ALL categorical columns (ONE melted tagged
-    scan via ``categorical_drift_multi``, folded per column with the
-    ``categorical_drift_report`` verdict, PSI included). With all
-    three kinds that is five Spark jobs under AQE (two for the digest
-    scan, three for the categorical fold), independent of column
-    counts. Columns that changed type or exist on one side only are
-    reported under ``schema`` and skipped, not crashed on.
-
-    Returns ``{"schema": ..., "numeric": {col: quantile report},
-    "categorical": {col: histogram report}, "embedding": {col:
-    per-dim summary}, "drifted": bool}``."""
-    sd = schema_drift(a, b)
-    one_sided = set(sd["added"]) | set(sd["removed"])
-    skip = one_sided | set(sd["changed"])
-    num = [c for c in numeric or [] if c not in skip]
-    emb = {c: int(d) for c, d in (embedding or {}).items() if c not in skip}
-    exprs = [F.col(c) for c in num] + [
-        e for c, d in emb.items() for e in _embedding_drift_dims(c, d)]
-    pairs = iter(_tdigest_drift_pairs(a, b, exprs, int(compression))
-                 if exprs else [])
-    report: dict = {"schema": sd, "numeric": {
-        c: _digest_drift_report(*next(pairs), probs, rel_tolerance, c)
-        for c in num}, "categorical": {}, "embedding": {}}
-    cats = [c for c in categorical or [] if c not in one_sided]
-    if cats:
-        report["categorical"] = dict(zip(cats, _categorical_drift_fold(
-            categorical_drift_multi(a, b, cats), ("col_name",),
-            [(c,) for c in cats], l_inf_tolerance)))
-    for c, d in emb.items():
-        dims = [next(pairs) for _ in range(d)]
-        # a dimension whose digest stays EMPTY while the column has
-        # data is a declared-vs-observed width mismatch, surfaced under
-        # the schema section instead of silently reporting "no drift"
-        # for phantom dimensions (ADVICE r4)
-        empty = [i for i, (da, db) in enumerate(dims)
-                 if da.total == 0 or db.total == 0]
-        if empty and any(da.total or db.total for da, db in dims):
-            sd.setdefault("embedding_width", {})[c] = {
-                "declared": d, "empty_dims": empty}
-        reps = {i: _digest_drift_report(da, db, probs, rel_tolerance)
-                for i, (da, db) in enumerate(dims) if i not in empty}
-        drifted = [i for i, r in reps.items() if r["drifted"]]
-        report["embedding"][c] = {
-            "dims": d, "drifted_dims": drifted,
-            "max_rel_gap": max((r["max_rel_gap"] for r in reps.values()),
-                               default=0.0),
-            "drifted": bool(drifted),
-        }
-    report["drifted"] = bool(
-        sd["added"] or sd["removed"] or sd["changed"]
-        or sd.get("embedding_width")
-        or any(r["drifted"] for k in ("numeric", "categorical", "embedding")
-               for r in report[k].values())
-    )
-    return report
 
 
 def snapshot_row_diff(

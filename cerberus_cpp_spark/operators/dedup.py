@@ -66,32 +66,6 @@ def exact_duplicates(
     )
 
 
-def exact_duplicate_rows(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    *, broadcast_groups: bool = False,
-) -> DataFrame:
-    """Rows that would be dropped by exact dedup (id != keep_id of
-    their group).
-
-    The dup-group set is joined back WITHOUT a forced broadcast hint:
-    its size is data-dependent (at crawl-scale dup rates, 30-50% of a
-    10^9-doc corpus, it is multi-GB), so a hard ``F.broadcast`` would
-    bypass ``autoBroadcastJoinThreshold`` and OOM executors. AQE
-    converts the join to broadcast-hash at runtime whenever the group
-    set's ACTUAL materialized size is under the adaptive threshold —
-    the size guard for free. ``broadcast_groups=True`` is the explicit
-    escape hatch when the caller KNOWS the set is tiny (mirrors
-    ``checks.referential_violations(broadcast_dim=)``)."""
-    groups = exact_duplicates(df, id_col, text_col)
-    if broadcast_groups:
-        groups = F.broadcast(groups)
-    fp = df.select(F.col(id_col), fingerprint_md5(text_col))
-    joined = fp.join(groups, on="fingerprint", how="inner")
-    return joined.where(F.col(id_col) != F.col("keep_id")).select(
-        id_col, "fingerprint", "keep_id"
-    )
-
-
 def doc_shingles(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     k: int = 3, hash_fn: str = "portable", fanout: bool = True,
@@ -414,18 +388,6 @@ def simhash(
         term = F.when(F.col(f"s_{b}") > 0, F.lit(1 << b)).otherwise(0)
         sig = term if sig is None else sig + term
     return agg.select(F.col(id_col), sig.cast("long").alias("simhash"))
-
-
-def simhash_near_pairs(
-    sig_df: DataFrame, id_col: str = "doc_id", max_hamming: int = 2,
-) -> DataFrame:
-    """Pairs within Hamming distance ``max_hamming`` of their 16-bit
-    SimHash: the general multi-index join over 4 nibble blocks —
-    complete for distance ≤ 3 by the pigeonhole."""
-    return hamming_near_pairs(
-        sig_df, "simhash", id_col=id_col, max_hamming=max_hamming,
-        n_blocks=4, block_bits=4,
-    )
 
 
 def _hamming_widths(n_blocks: int, block_bits: int | None) -> list[int]:
@@ -789,34 +751,6 @@ def image_decontamination(
         .withColumn("n_eval_matches",
                     F.coalesce(F.col("n_eval_matches"), F.lit(0)))
     )
-
-
-def banding_for_threshold(
-    threshold: float, num_hashes: int = MINHASH_K,
-) -> tuple[int, int]:
-    """(band_rows, n_bands) whose LSH S-curve midpoint sits closest
-    to the target Jaccard threshold. With b bands of r rows the
-    collision probability is 1-(1-J^r)^b; its steepest point is at
-    J ≈ (1/b)^(1/r), so pick the divisor r of ``num_hashes``
-    minimizing |midpoint - threshold|. Candidate recall/cost then
-    follows the standard trade: lower thresholds want fewer rows per
-    band (more permissive collisions), higher thresholds more.
-
-    Opt-in: ``near_duplicates``' default stays the fixed 8×2 banding
-    (the contract oracle replays it byte-for-byte); pass the result
-    as ``band_rows=`` when tuning for a different threshold."""
-    if not 0.0 < threshold < 1.0:
-        raise ValueError("threshold must be in (0, 1)")
-    best = None
-    for r in (1, 2, 4, 8, 16):
-        if r > num_hashes or num_hashes % r:
-            continue
-        b = num_hashes // r
-        midpoint = (1.0 / b) ** (1.0 / r)
-        gap = abs(midpoint - threshold)
-        if best is None or gap < best[0]:
-            best = (gap, r, b)
-    return best[1], best[2]
 
 
 def _cc_local(sym: DataFrame) -> DataFrame:

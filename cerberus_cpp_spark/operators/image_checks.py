@@ -39,70 +39,6 @@ from pyspark.sql import types as T
 
 from ..functions.shipping import PKG_PARENT
 
-DECODE_SCHEMA = (
-    "image_id string, decode_ok boolean, sniffed_fmt string, "
-    "dec_w int, dec_h int, message string"
-)
-
-
-def decode_probe(df: DataFrame, *, id_col: str = "image_id",
-                 bytes_col: str = "bytes") -> DataFrame:
-    """Decode every payload; emit (image_id, decode_ok, sniffed_fmt,
-    dec_w, dec_h, message). Narrow Arrow-batched stage, no shuffle;
-    only ``id_col`` + ``bytes_col`` are read (column pruning)."""
-    src = df.select(F.col(id_col).alias("image_id"), F.col(bytes_col))
-
-    pkg_parent = PKG_PARENT
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import sys
-
-        if pkg_parent not in sys.path:
-            sys.path.insert(0, pkg_parent)
-        from cerberus_cpp_spark.sources.imagegen import (
-            UnsupportedCodecError,
-            decode_image,
-            sniff_format,
-        )
-
-        for pdf in batches:
-            out = {"image_id": pdf["image_id"], "decode_ok": [],
-                   "sniffed_fmt": [], "dec_w": [], "dec_h": [],
-                   "message": []}
-            for blob in pdf[bytes_col]:
-                if blob is None:
-                    out["decode_ok"].append(False)
-                    out["sniffed_fmt"].append(None)
-                    out["dec_w"].append(None)
-                    out["dec_h"].append(None)
-                    out["message"].append("no payload")
-                    continue
-                try:
-                    fmt, px = decode_image(bytes(blob))
-                    out["decode_ok"].append(True)
-                    out["sniffed_fmt"].append(fmt)
-                    out["dec_h"].append(px.shape[0])
-                    out["dec_w"].append(px.shape[1])
-                    out["message"].append(None)
-                except UnsupportedCodecError as e:
-                    # recognized container, codec outside the in-repo
-                    # decoders — distinct from corruption
-                    out["decode_ok"].append(False)
-                    out["sniffed_fmt"].append(sniff_format(bytes(blob)))
-                    out["dec_w"].append(None)
-                    out["dec_h"].append(None)
-                    out["message"].append(
-                        f"decode_unsupported: {str(e)[:180]}")
-                except Exception as e:  # corrupt / unknown stream
-                    out["decode_ok"].append(False)
-                    out["sniffed_fmt"].append(None)
-                    out["dec_w"].append(None)
-                    out["dec_h"].append(None)
-                    out["message"].append(str(e)[:200])
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(probe, schema=DECODE_SCHEMA)
-
 
 def metadata_consistency_violations(
     df: DataFrame,
@@ -616,76 +552,6 @@ def pixel_phash(df: DataFrame, *, id_col: str = "image_id",
 
     return src.mapInPandas(
         work, schema="image_id string, phash long")
-
-
-METADATA_FIELDS_SCHEMA = (
-    "image_id string, meta_fmt string, orientation int, exif_w int, "
-    "exif_h int, description string, datetime string, has_icc boolean, "
-    "has_xmp boolean, n_text int, comment string, meta_ok boolean, "
-    "message string"
-)
-
-
-def image_metadata_fields(df: DataFrame, *, id_col: str = "image_id",
-                          bytes_col: str = "bytes") -> DataFrame:
-    """Container-metadata extraction (EXIF / textual chunks) as a
-    narrow Arrow pass — NO pixel decode, same µs/row tier as
-    ``image_header_info`` (``sources.imagemeta``: the EXIF block is
-    a TIFF-structured stream parsed with the interop-pinned IFD
-    walker). Unreadable metadata never kills the job: the row gets
-    ``meta_ok=false`` plus the parse message."""
-    src = df.select(F.col(id_col).alias("image_id"), bytes_col)
-    pkg_parent = PKG_PARENT
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import sys
-
-        if pkg_parent not in sys.path:
-            sys.path.insert(0, pkg_parent)
-        from cerberus_cpp_spark.sources.imagemeta import image_metadata
-
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "image_id", "meta_fmt", "orientation", "exif_w",
-                "exif_h", "description", "datetime", "has_icc",
-                "has_xmp", "n_text", "comment", "meta_ok", "message")}
-            for rid, blob in zip(pdf["image_id"], pdf[bytes_col]):
-                rows["image_id"].append(rid)
-                try:
-                    if blob is None:
-                        raise ValueError("no payload")
-                    m = image_metadata(bytes(blob))
-                except ValueError as e:
-                    for k in ("meta_fmt", "orientation", "exif_w",
-                              "exif_h", "description", "datetime",
-                              "comment"):
-                        rows[k].append(None)
-                    rows["has_icc"].append(False)
-                    rows["has_xmp"].append(False)
-                    rows["n_text"].append(0)
-                    rows["meta_ok"].append(False)
-                    rows["message"].append(
-                        f"unreadable metadata: {str(e)[:120]}")
-                    continue
-                ex = m["exif"] or {}
-                rows["meta_fmt"].append(m["fmt"])
-                rows["orientation"].append(ex.get("orientation"))
-                rows["exif_w"].append(ex.get("pixel_x"))
-                rows["exif_h"].append(ex.get("pixel_y"))
-                rows["description"].append(ex.get("description"))
-                rows["datetime"].append(ex.get("datetime"))
-                rows["has_icc"].append(bool(m["has_icc"]))
-                rows["has_xmp"].append(bool(m["has_xmp"]))
-                rows["n_text"].append(len(m["text"]))
-                rows["comment"].append(m["comment"])
-                rows["meta_ok"].append(True)
-                rows["message"].append(None)
-            out = pd.DataFrame(rows)
-            for c in ("orientation", "exif_w", "exif_h", "n_text"):
-                out[c] = out[c].astype("Int32")
-            yield out
-
-    return src.mapInPandas(probe, schema=METADATA_FIELDS_SCHEMA)
 
 
 def exif_consistency_violations(

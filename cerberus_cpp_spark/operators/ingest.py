@@ -1,13 +1,13 @@
-"""Malformed-tolerant text-format ingest: Spark's NATIVE JSON/CSV
-parsers in PERMISSIVE mode with a corrupt-record column — the
-engineering answer to crawled JSONL/CSV is to let the JVM parser
+"""Malformed-tolerant JSONL ingest: Spark's NATIVE JSON parser in
+PERMISSIVE mode with a corrupt-record column — the engineering
+answer to crawled JSONL is to let the JVM parser
 (whole-stage codegen, splittable input) do the work and make the
 failure routing explicit, not to hand-roll a Python parser.
 
-Built as ``spark.read.text`` + ``from_json``/``from_csv`` rather
-than the raw ``spark.read.json`` reader DELIBERATELY: the raw
-reader forbids queries whose referenced source columns reduce to
-the corrupt column alone (upstream
+Built as ``spark.read.text`` + ``from_json`` rather than the raw
+``spark.read.json`` reader DELIBERATELY: the raw reader forbids
+queries whose referenced source columns reduce to the corrupt column
+alone (upstream
 UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN — which is
 exactly what ``quarantine.count()`` or any ok-filtered aggregate
 compiles to), while the from_json form derives every column from
@@ -64,39 +64,3 @@ def jsonl_ingest(
         F.from_json("value", f"{schema_ddl}, {CORRUPT_COL} string",
                     _OPTS).alias("j")).select("j.*")
     return _verdict(parsed)
-
-
-def csv_ingest(
-    spark: SparkSession,
-    path: str,
-    schema_ddl: str,
-    *,
-    sep: str = ",",
-) -> DataFrame:
-    """The CSV twin of :func:`jsonl_ingest` (same verdict
-    contract). Headerless contract: strip the header upstream or
-    filter its verdict row; from_csv has no header notion."""
-    if CORRUPT_COL in schema_ddl:
-        raise ValueError(
-            f"schema_ddl must not declare {CORRUPT_COL}; it is "
-            f"added by csv_ingest")
-    opts = dict(_OPTS, sep=sep)
-    parsed = spark.read.text(path).select(
-        F.from_csv("value", f"{schema_ddl}, {CORRUPT_COL} string",
-                   opts).alias("j")).select("j.*")
-    return _verdict(parsed)
-
-
-def ingest_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(clean, quarantine): two filtered branches of one ingest
-    frame — clean rows without the verdict columns, quarantine rows
-    carrying the raw line for triage. The same quarantine contract
-    as curate_split; both branches support arbitrary aggregates
-    (see module docstring for why the raw-reader form would not)."""
-    if "ok" not in df.columns or "corrupt_raw" not in df.columns:
-        raise ValueError(
-            "ingest_split expects a jsonl_ingest/csv_ingest frame "
-            "(ok + corrupt_raw columns)")
-    clean = df.where(F.col("ok")).drop("ok", "corrupt_raw")
-    quarantine = df.where(~F.col("ok"))
-    return clean, quarantine

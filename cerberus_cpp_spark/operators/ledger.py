@@ -256,16 +256,8 @@ def run_validation(
         part_str = _part_key(partition_col)
         slice_df = df.where(pred)
         res = validator.validate(slice_df)
-        verdicts = (
-            res.annotated.groupBy(part_str.alias("partition_value"))
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.sum("n_violations").alias("violations"),
-                F.sum((~F.col("valid")).cast("long")).alias("invalid_rows"),
-                (F.sum("n_violations") == 0).alias("passed"),
-            )
-            .collect()
-        )
+        verdicts = res.partition_verdicts(
+            part_str.alias("partition_value")).collect()
         wall = time.perf_counter() - t0
         now = time.time()
         got = {r["partition_value"]: r for r in verdicts}

@@ -1,5 +1,5 @@
-"""Multimodal column operators: image feature-extraction / resize,
-audio/video frame-sampling plumbing.
+"""Multimodal column operators: image resize, audio/video
+frame-sampling plumbing.
 
 Spark-side design is identical for every modality: an opaque
 ``binary`` column + typed metadata columns, processed ONLY inside
@@ -38,67 +38,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.shipping import PKG_PARENT
-
-
-def image_features(df: DataFrame, *, id_col: str = "image_id",
-                   bytes_col: str = "bytes") -> DataFrame:
-    """Per-image features from decoded pixels: per-channel means,
-    luma mean/std, byte entropy of the payload. One Arrow stage.
-    Output: (image_id, mean_r, mean_g, mean_b, luma_mean, luma_std,
-    byte_entropy) — NULLs when the payload cannot be decoded."""
-    src = df.select(F.col(id_col).alias("image_id"), F.col(bytes_col))
-    pkg_parent = PKG_PARENT
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import sys
-
-        if pkg_parent not in sys.path:
-            sys.path.insert(0, pkg_parent)
-        import numpy as np
-
-        from cerberus_cpp_spark.sources.imagegen import decode_image
-
-        for pdf in batches:
-            out = {k: [] for k in (
-                "image_id", "mean_r", "mean_g", "mean_b",
-                "luma_mean", "luma_std", "byte_entropy")}
-            out["image_id"] = pdf["image_id"]
-            for blob in pdf[bytes_col]:
-                if blob is None:
-                    for k in list(out)[1:]:
-                        out[k].append(None)
-                    continue
-                raw = np.frombuffer(bytes(blob), dtype=np.uint8)
-                hist = np.bincount(raw, minlength=256)
-                p = hist[hist > 0] / len(raw)
-                entropy = float(-(p * np.log2(p)).sum())
-                try:
-                    _, px = decode_image(bytes(blob))
-                except Exception:
-                    out["mean_r"].append(None)
-                    out["mean_g"].append(None)
-                    out["mean_b"].append(None)
-                    out["luma_mean"].append(None)
-                    out["luma_std"].append(None)
-                    out["byte_entropy"].append(entropy)
-                    continue
-                fx = px.astype(np.float64)
-                luma = (0.299 * fx[..., 0] + 0.587 * fx[..., 1]
-                        + 0.114 * fx[..., 2])
-                out["mean_r"].append(float(fx[..., 0].mean()))
-                out["mean_g"].append(float(fx[..., 1].mean()))
-                out["mean_b"].append(float(fx[..., 2].mean()))
-                out["luma_mean"].append(float(luma.mean()))
-                out["luma_std"].append(float(luma.std()))
-                out["byte_entropy"].append(entropy)
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(
-        feats,
-        schema="image_id string, mean_r double, mean_g double,"
-               " mean_b double, luma_mean double, luma_std double,"
-               " byte_entropy double",
-    )
 
 
 def resize_images(df: DataFrame, *, width: int, height: int,

@@ -1881,53 +1881,6 @@ def ivf_pq_topk_distributed(
         code_col=code_col, list_col=list_col)
 
 
-def tune_rescore_n(
-    codes: DataFrame,
-    codebooks: np.ndarray,
-    sample_queries: DataFrame,
-    corpus: DataFrame,
-    *,
-    target_recall: float = 0.9,
-    k: int = 5,
-    start: int = 16,
-    max_rescore: int = 4096,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    code_col: str = "code",
-) -> tuple[int, float]:
-    """Pick the smallest ``rescore_n`` whose measured recall@k on a
-    held-out query sample meets ``target_recall``; returns
-    ``(rescore_n, measured_recall)`` — the PQ twin of
-    :func:`tune_nprobe`. Ground truth = exact :func:`cosine_topk`
-    over ``corpus``, so recall is measured, not modeled; candidate
-    counts double per level and the search stops at ``max_rescore``
-    (unlike nprobe, ADC has no lossless terminal — quantization can
-    rank a true neighbor below rescore_n at ANY budget — so the cap
-    returns the best measured level with its honest recall)."""
-    if not 0.0 < target_recall <= 1.0:
-        raise ValueError("target_recall must be in (0, 1]")
-    truth = {
-        (r["query_id"], r["neighbor_id"])
-        for r in cosine_topk(corpus, sample_queries, k,
-                             id_col=id_col, vec_col=vec_col).collect()
-    }
-    if not truth:
-        return max(start, k), 1.0
-    n = max(int(start), k)
-    while True:
-        got = {
-            (r["query_id"], r["neighbor_id"])
-            for r in pq_topk(codes, codebooks, sample_queries, k,
-                             corpus=corpus, rescore_n=n,
-                             id_col=id_col, vec_col=vec_col,
-                             code_col=code_col).collect()
-        }
-        recall = len(got & truth) / len(truth)
-        if recall >= target_recall or n >= max_rescore:
-            return n, recall
-        n = min(n * 2, max_rescore)
-
-
 def tune_nprobe(
     assigned: DataFrame,
     centroids: np.ndarray,

@@ -564,23 +564,6 @@ def bloom_sketch(
     )
 
 
-def bloom_merge(*sketches: DataFrame,
-                by: tuple[str, ...] = ()) -> DataFrame:
-    """OR filters built with identical (m_bits, k, seed): union the
-    position tables and dedupe — exactly the filter of the
-    concatenated inputs (pinned in tests). Sketches carrying columns
-    not named in ``by`` are rejected (cross-group OR would silently
-    raise the false-positive rate of every group)."""
-    if not sketches:
-        raise ValueError("need at least one sketch")
-    for sk in sketches:
-        _check_sketch_columns(sk, by, ("pos",), "bloom_merge")
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.distinct()
-
-
 def bloom_contains(
     sketch: DataFrame,
     probes: DataFrame,

@@ -322,25 +322,6 @@ def mixture_sample(
     )
 
 
-def kfold_assign(
-    df: DataFrame, key: str, k: int, seed: int = 0,
-    fold_col: str = "fold",
-) -> DataFrame:
-    """Deterministic fold id in [0, k) for cross-validation.
-
-    Same md5 machinery, but reduced directly from the 48-bit hex
-    value (bias k/2^48 instead of k/10^6) — still one narrow JVM
-    projection and still exactly replayable in SQL
-    (``CAST(concat('0x', substr(md5(..),1,12)) AS BIGINT) % k``).
-    """
-    if k < 2:
-        raise ValueError("k must be >= 2")
-    col = F.col(key)
-    h = F.md5(F.concat_ws(":", col.cast("string"), F.lit(str(seed))))
-    raw = F.conv(F.substring(h, 1, _HEX_CHARS), 16, 10).cast("bigint")
-    return df.withColumn(fold_col, (raw % F.lit(k)).cast("int"))
-
-
 def cluster_safe_splits(
     docs: DataFrame,
     clusters: DataFrame,

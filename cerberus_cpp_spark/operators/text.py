@@ -188,12 +188,6 @@ def shingles(col: str = "text", k: int = 3) -> Column:
     ).alias("shingles")
 
 
-def shingle_hash(shingle_sql: str) -> Column:
-    """Portable integer hash of one shingle (rolling hash); argument
-    is a SQL expression string naming the shingle column."""
-    return F.expr(rolling_hash_sql(shingle_sql))
-
-
 def rolling_hash_sql(expr: str) -> str:
     """Spark-SQL text of the portable rolling hash — reused by the
     dedup operators and (with tiny syntax tweaks) the DuckDB oracle."""
@@ -594,7 +588,6 @@ def curate_documents(
     pii_kinds: tuple = ("email", "ipv4", "ssn", "phone"),
     dedup: bool = True,
     full_rows: bool = False,
-    keep_fingerprint: bool = False,
 ) -> DataFrame:
     """The curation verdict pass an LLM corpus actually ships
     through: every text filter this module provides, composed into
@@ -626,10 +619,7 @@ def curate_documents(
     top_line_share, n_pii). ``full_rows=True`` carries EVERY source
     column through (same single projection — no join back), the
     shape :func:`curate_split` needs; verdict column names must not
-    collide with source columns in that mode. ``keep_fingerprint``
-    appends the md5 fingerprint column — the handle the streaming
-    twin (``streaming.curate.curate_documents_stream``) groups its
-    duplicate state on."""
+    collide with source columns in that mode."""
     from pyspark.sql.window import Window
 
     verdict_cols = ("reasons", "keep", "n_tokens", "quality_score",
@@ -686,14 +676,12 @@ def curate_documents(
         when(F.col("__rk") > 1, "duplicate"),
     )
     head = list(df.columns) if full_rows else [id_col]
-    tail = ["fingerprint"] if keep_fingerprint else []
     return base.select(
         *head,
         reasons.alias("reasons"),
         (reasons == "").alias("keep"),
         "n_tokens", "quality_score", "lang_guess",
         "dup_line_ratio", "top_line_share", "n_pii",
-        *tail,
     )
 
 
@@ -752,23 +740,6 @@ def token_budget(
             F.col("n_bpe_tokens").cast("double") / F.col("n_docs"),
         )
     )
-
-
-def dedup_lines_within(col: str = "text") -> Column:
-    """Column expression removing REPEATED LINES WITHIN one document
-    (keep the first occurrence, preserve order) — the per-document
-    half of C4/Dolma line dedup, e.g. a nav menu repeated between
-    page sections. Pure JVM higher-order functions over the split
-    array (``filter`` + ``array_position`` = first index of the
-    value), zero shuffle, zero Python; NULL text stays NULL. The
-    oracle twin is a DuckDB ``list_filter``/``list_position``
-    comprehension — both engines define position as the FIRST match,
-    so the kept set is identical by construction."""
-    arr = f"split({col}, '\\n')"
-    return F.expr(
-        f"array_join(filter({arr}, (x, i) -> "
-        f"array_position({arr}, x) = i + 1), '\\n')"
-    ).alias("text")
 
 
 def dedup_lines(

@@ -129,7 +129,6 @@ class Scope:
 @dataclass
 class CompilerOpts:
     presence: str = "null"  # "null" | "defined"
-    extra_cols: tuple[str, ...] = ()
     # engine-supplied registries
     schema_registry: dict = dc_field(default_factory=dict)
     column_rules: dict = dc_field(default_factory=dict)

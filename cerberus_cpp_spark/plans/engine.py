@@ -147,10 +147,6 @@ class TableValidator:
                 self._interp.normalized_schema(self.raw_schema))
         return self._schema_cache
 
-    @schema.setter
-    def schema(self, value: dict) -> None:
-        self._schema_cache = value
-
     # -- extension API (parity with registerRule/registerType,
     #    validator.hh:56-95, but compiling to Columns) ----------------
     def register_column_rule(
@@ -216,7 +212,6 @@ class TableValidator:
     def _opts(self) -> CompilerOpts:
         return CompilerOpts(
             presence=self.presence,
-            extra_cols=self.extra_cols,
             schema_registry=self._normalized_registry(),
             column_rules=self._column_rules,
             spark_types=self._spark_types,
@@ -310,6 +305,20 @@ class CompiledPlan:
     normalized_names: list[str]
 
 
+def explode_violations(annotated: DataFrame,
+                       id_cols: tuple[str, ...]) -> DataFrame:
+    """One row ``(id…, path, message)`` per violation of a frame
+    carrying the ``violations`` array and ``n_violations`` — shared by
+    the columnar engine and the schemaless interpreter path."""
+    v = F.explode(F.col("violations")).alias("v")
+    return (
+        annotated.where(F.col("n_violations") > 0)
+        .select(*id_cols, v)
+        .select(*id_cols, F.col("v.path").alias("path"),
+                F.col("v.message").alias("message"))
+    )
+
+
 @dataclass
 class TableValidationResult:
     validator: TableValidator
@@ -328,14 +337,7 @@ class TableValidationResult:
         projection and re-evaluates the expression once per rule
         branch (measured 12× / 2.8× slower on a JSON-parsed map —
         BENCH.md §14)."""
-        ids = [F.col(c) for c in id_cols]
-        v = F.explode(F.col("violations")).alias("v")
-        return (
-            self.annotated.where(F.col("n_violations") > 0)
-            .select(*ids, v)
-            .select(*id_cols, F.col("v.path").alias("path"),
-                    F.col("v.message").alias("message"))
-        )
+        return explode_violations(self.annotated, id_cols)
 
     @property
     def normalized(self) -> DataFrame:
@@ -362,7 +364,7 @@ class TableValidationResult:
             "invalid_rows": int(row["invalid_rows"] or 0),
         }
 
-    def partition_verdicts(self, *partition_cols: str) -> DataFrame:
+    def partition_verdicts(self, *partition_cols: str | Column) -> DataFrame:
         """Per-partition pass/fail + metrics (north-rule ledger unit):
         one partial+final hash agg, no row data movement beyond the
         tiny aggregate."""

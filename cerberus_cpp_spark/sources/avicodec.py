@@ -21,8 +21,6 @@ import numpy as np
 
 from .jpegcodec import decode_jpeg, encode_jpeg
 
-AVI_MAGIC = b"RIFF"
-
 
 def _chunk(tag: bytes, payload: bytes) -> bytes:
     pad = b"\x00" if len(payload) & 1 else b""

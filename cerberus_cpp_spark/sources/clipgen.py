@@ -18,8 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.shipping import PKG_PARENT
 
-AUDIO_RATE = 16000
-
 # Per-clip parameters are pure id arithmetic, INLINED in the worker
 # closures below (a captured module-level helper would be pickled by
 # module reference and break workers without the repo on PYTHONPATH)

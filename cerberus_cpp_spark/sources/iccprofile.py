@@ -27,8 +27,6 @@ from __future__ import annotations
 import struct
 
 ACSP = b"acsp"
-CLASS_SIGS = {"scnr", "mntr", "prtr", "link", "spac", "abst",
-              "nmcl"}
 INTENTS = {0: "perceptual", 1: "relative", 2: "saturation",
            3: "absolute"}
 

@@ -72,7 +72,6 @@ from .webpcodec import (  # noqa: F401 — UnsupportedCodecError re-exported
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 JPEG_MAGIC = b"\xFF\xD8\xFF"
-STUB_MAGICS: dict[str, bytes] = {}  # webp is real now; none left
 JPEG_QUALITY = 98  # keeps the worst synth-gradient PSNR >= 43 dB
 
 

@@ -59,8 +59,6 @@ GPS_TAG_LON_REF = 3
 GPS_TAG_LON = 4
 GPS_TAG_ALT = 6
 
-_ASCII_TAGS = {TAG_DESCRIPTION, TAG_SOFTWARE, TAG_DATETIME}
-
 _EXIF_PREAMBLE = b"Exif\x00\x00"
 _XMP_PREAMBLE = b"http://ns.adobe.com/xap/1.0/\x00"
 _ICC_PREAMBLE = b"ICC_PROFILE\x00"
@@ -283,10 +281,6 @@ def parse_exif(blob: bytes) -> dict:
         "pixel_x": first(TAG_PIXEL_X),
         "pixel_y": first(TAG_PIXEL_Y),
     }
-
-
-_EMPTY = {"description": None, "orientation": None, "software": None,
-          "datetime": None, "pixel_x": None, "pixel_y": None}
 
 
 _GPS_TYPE_SIZES = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8}

@@ -157,10 +157,10 @@ def _canonical_codes(bits: list[int], values: list[int]):
     return enc, dec
 
 
-_DC_LUMA_ENC, _DC_LUMA_DEC = _canonical_codes(*DC_LUMA)
-_DC_CHROMA_ENC, _DC_CHROMA_DEC = _canonical_codes(*DC_CHROMA)
-_AC_LUMA_ENC, _AC_LUMA_DEC = _canonical_codes(*AC_LUMA)
-_AC_CHROMA_ENC, _AC_CHROMA_DEC = _canonical_codes(*AC_CHROMA)
+_DC_LUMA_ENC = _canonical_codes(*DC_LUMA)[0]
+_DC_CHROMA_ENC = _canonical_codes(*DC_CHROMA)[0]
+_AC_LUMA_ENC = _canonical_codes(*AC_LUMA)[0]
+_AC_CHROMA_ENC = _canonical_codes(*AC_CHROMA)[0]
 
 
 # -- color transforms (JFIF / BT.601 full range) ----------------------------

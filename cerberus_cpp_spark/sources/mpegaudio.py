@@ -183,10 +183,6 @@ def audit_mpeg_audio(data: bytes) -> dict:
     return out
 
 
-_BIDX = {v: i + 1 for k, tbl in _BITRATES.items()
-         for i, v in enumerate(tbl) if k == (True, 3)}
-
-
 def build_frame(*, bitrate_kbps: int, sample_rate: int,
                 padding: bool = False, mono: bool = False) -> bytes:
     """Spec-valid MPEG1 Layer III frame with a zeroed payload —

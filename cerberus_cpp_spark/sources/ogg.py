@@ -31,7 +31,6 @@ import struct
 _CAPTURE = b"OggS"
 
 #: header-type flag bits (RFC 3533 §6)
-FLAG_CONTINUED = 0x01
 FLAG_BOS = 0x02
 FLAG_EOS = 0x04
 

@@ -19,8 +19,6 @@ import struct
 
 import numpy as np
 
-WAV_MAGIC = b"RIFF"
-
 
 def encode_wav(samples: np.ndarray, sample_rate: int = 16000) -> bytes:
     """(n,) or (n, channels) int16 PCM -> WAV bytes."""

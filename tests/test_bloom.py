@@ -1,6 +1,6 @@
-"""operators/sketch.py Bloom filter: no false negatives, merge ==
-whole-corpus filter, grouped builds == per-group builds, bounded
-false positives at the designed rate, and the column guards."""
+"""operators/sketch.py Bloom filter: no false negatives, grouped
+builds == per-group builds, bounded false positives at the designed
+rate, and the column guards."""
 
 from __future__ import annotations
 
@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 from cerberus_cpp_spark.operators.sketch import (
     bloom_contains,
-    bloom_merge,
     bloom_sketch,
 )
 
@@ -59,25 +58,6 @@ def test_no_false_negatives_property(spark, keys) -> None:
     assert all(r.might_contain for r in got)
 
 
-def test_merge_equals_whole_corpus(spark) -> None:
-    a = [f"a-{i}" for i in range(30)]
-    b = [f"b-{i}" for i in range(30)]
-    merged = bloom_merge(
-        bloom_sketch(_df(spark, a), "k", m_bits=256, k=3),
-        bloom_sketch(_df(spark, b), "k", m_bits=256, k=3),
-    )
-    whole = bloom_sketch(_df(spark, a + b), "k", m_bits=256, k=3)
-    assert sorted(r.pos for r in merged.collect()) == \
-        sorted(r.pos for r in whole.collect())
-
-
-def test_merge_idempotent_under_duplication(spark) -> None:
-    a = [f"x-{i}" for i in range(20)]
-    one = bloom_sketch(_df(spark, a), "k", m_bits=128, k=3)
-    assert sorted(r.pos for r in bloom_merge(one, one).collect()) \
-        == sorted(r.pos for r in one.collect())
-
-
 def test_grouped_build_equals_per_group(spark) -> None:
     rows = [("g1", f"u{i}") for i in range(20)] + \
            [("g2", f"v{i}") for i in range(25)]
@@ -111,8 +91,6 @@ def test_guards(spark) -> None:
     grouped = bloom_sketch(
         _df(spark, [("g1", "a")], group=True), "k", by=("g",))
     # grouped sketch passed ungrouped → rejected
-    with pytest.raises(ValueError, match="columns"):
-        bloom_merge(grouped)
     with pytest.raises(ValueError, match="columns"):
         bloom_contains(grouped, df, "k")
     # probe frame lacking the group column → rejected

@@ -1,4 +1,4 @@
-"""Binary-column (image) checks: decode probe, metadata consistency,
+"""Binary-column (image) checks: metadata consistency,
 PSNR fidelity vs the deterministic reference pixels (input_hint)."""
 
 from __future__ import annotations
@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from cerberus_cpp_spark.operators.image_checks import (
-    decode_probe,
     fidelity_check,
     metadata_consistency_violations,
 )
@@ -21,18 +20,6 @@ def with_bytes(spark):
     return image_caption_frame(
         spark, 600, partitions=4, with_bytes=True
     ).cache()
-
-
-def test_decode_probe(spark, with_bytes) -> None:
-    rows = {r["image_id"]: r for r in decode_probe(with_bytes).collect()}
-    assert len(rows) == 600
-    ok = [r for r in rows.values() if r["decode_ok"]]
-    # only the seeded 'heif' row (i=200) has no payload; the NULL
-    # image_id row (i=500) still decodes
-    assert len(ok) == 599
-    r7 = rows["img-000000000007"]
-    assert r7["sniffed_fmt"] == "png" and r7["dec_w"] == 8 + 7 % 9 \
-        and r7["dec_h"] == 8 + 7 % 7
 
 
 def test_fidelity(spark, with_bytes) -> None:
@@ -257,14 +244,6 @@ def test_tiered_check_plan(spark, with_bytes) -> None:
     assert "Exchange" not in plan
 
 
-def test_decode_stage_is_narrow(spark, with_bytes) -> None:
-    plan = (
-        decode_probe(with_bytes)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan
-
-
 def test_pixel_phash_groups_and_distinctness(spark):
     """Pixel-derived pHash (imagegen.phash64 over decoded payloads):
     identical bytes hash identically; the 250 noise seeds used by
@@ -387,12 +366,6 @@ def test_lossy_vp8_routes_to_decode_unsupported(spark) -> None:
             assert r["caption_ok"] is True  # caption is untouched
         else:
             assert r["verdict"] != "decode_unsupported", img_id
-
-    probe = {r["image_id"]: r for r in decode_probe(df).collect()}
-    for img_id in planted:
-        r = probe[img_id]
-        assert r["decode_ok"] is False and r["sniffed_fmt"] == "webp"
-        assert r["message"].startswith("decode_unsupported:")
 
     # metadata family: distinct message prefix (not "undecodable"),
     # in both the standalone and the fused single-decode stage

@@ -191,23 +191,6 @@ def _meta_frame(spark, n=80):
     return df.mapInPandas(gen, schema="image_id string, bytes binary")
 
 
-def test_image_metadata_fields_operator(spark):
-    from cerberus_cpp_spark.operators.image_checks import (
-        image_metadata_fields,
-    )
-
-    rows = {r["image_id"]: r
-            for r in image_metadata_fields(_meta_frame(spark)).collect()}
-    assert len(rows) == 80
-    r2 = rows["img-0002"]
-    assert r2["meta_fmt"] == "jpeg" and r2["orientation"] == 1
-    assert r2["exif_w"] == 8 + 2 % 9 and r2["meta_ok"]
-    r1 = rows["img-0001"]
-    assert r1["meta_fmt"] == "png" and r1["n_text"] == 1
-    r9 = rows["img-0009"]
-    assert not r9["meta_ok"] and "no payload" in r9["message"]
-
-
 def test_exif_consistency_operator(spark):
     from cerberus_cpp_spark.operators.image_checks import (
         exif_consistency_violations,

@@ -1,17 +1,13 @@
 """Malformed-tolerant ingest (operators/ingest.py): the pinned
-PERMISSIVE semantics, the verdict/quarantine contract, guards, and
-plan shape (native reader, no Python stage)."""
+PERMISSIVE semantics, the verdict contract, guards, and plan shape
+(native reader, no Python stage)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from cerberus_cpp_spark.operators.ingest import (
-    csv_ingest,
-    ingest_split,
-    jsonl_ingest,
-)
+from cerberus_cpp_spark.operators.ingest import jsonl_ingest
 
 
 @pytest.fixture()
@@ -51,31 +47,14 @@ def test_jsonl_semantics(spark, jsonl) -> None:
 
 def test_split_and_guards(spark, jsonl) -> None:
     df = jsonl_ingest(spark, jsonl, "doc_id long, v long")
-    clean, quar = ingest_split(df)
+    clean, quar = df.where(F.col("ok")), df.where(~F.col("ok"))
     # both branches support bare aggregates — the from_json design
     # avoids the raw reader's corrupt-only-column restriction
     assert clean.count() == 3 and quar.count() == 3
-    assert "ok" not in clean.columns
     assert set(quar.toPandas()["ok"]) == {False}
     with pytest.raises(ValueError, match="_corrupt_record"):
         jsonl_ingest(spark, jsonl,
                      "doc_id long, _corrupt_record string")
-    with pytest.raises(ValueError, match="ingest_split expects"):
-        ingest_split(clean)
-
-
-def test_csv_semantics(spark, tmp_path) -> None:
-    p = tmp_path / "d.csv"
-    p.write_text("1,3\n2,notanumber\n5,\n6,18\n")
-    rows = csv_ingest(spark, str(p), "doc_id long, v long") \
-        .collect()
-    ok = {r["doc_id"]: r for r in rows if r["ok"]}
-    bad = [r for r in rows if not r["ok"]]
-    assert ok[1]["v"] == 3 and ok[6]["v"] == 18
-    assert ok[5]["v"] is None           # empty cell = NULL, clean
-    assert len(bad) == 1
-    assert bad[0]["corrupt_raw"] == "2,notanumber"
-    assert bad[0]["doc_id"] == 2        # salvaged sibling
 
 
 def test_plan_native_reader(spark, jsonl) -> None:

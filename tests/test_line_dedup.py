@@ -1,5 +1,5 @@
-"""Corpus-level / per-document line dedup and HTML stripping
-(operators/text.py dedup_lines / dedup_lines_within / strip_html):
+"""Corpus-level line dedup and HTML stripping
+(operators/text.py dedup_lines / strip_html):
 C4-recipe semantics, DuckDB twin parity, plan shape, and edge
 routing."""
 
@@ -13,7 +13,6 @@ from cerberus_cpp_spark.operators.text import (
     HTML_ENTITIES,
     HTML_STRIP_STEPS,
     dedup_lines,
-    dedup_lines_within,
     strip_html,
 )
 
@@ -128,28 +127,6 @@ def test_corpus_dedup_plan_shape(spark, tmp_path) -> None:
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "partial_count" in plan or "partial_min" in plan
-
-
-def test_within_doc_dedup(spark) -> None:
-    df = spark.createDataFrame(
-        [(1, "a\nb\na\nc\nb\na"), (2, None), (3, "x")],
-        "doc_id long, text string",
-    )
-    got = {
-        r["doc_id"]: r["text"]
-        for r in df.select("doc_id",
-                           dedup_lines_within("text")).collect()
-    }
-    assert got[1] == "a\nb\nc"
-    assert got[2] is None
-    assert got[3] == "x"
-    # DuckDB twin: list comprehension with first-position filter
-    want = duckdb.sql("""
-        SELECT array_to_string(
-          list_filter(l, (x, i) -> list_position(l, x) = i), ',')
-        FROM (SELECT string_split('a,b,a,c,b,a', ',') AS l)
-    """).fetchone()[0]
-    assert want == "a,b,c"
 
 
 def test_strip_html_basic(spark) -> None:

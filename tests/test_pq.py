@@ -205,21 +205,6 @@ def test_ivf_pq_probe_prunes_scan(spark, emb, books) -> None:
     assert all(n <= max(sizes.values()) for n in per_q.values())
 
 
-def test_tune_rescore_n(spark, emb, books) -> None:
-    codes = SIM.pq_encode(emb, books)
-    qs = emb.where("vec_id < 10")
-    n, recall = SIM.tune_rescore_n(
-        codes, books, qs, emb, target_recall=0.5, k=5, start=8)
-    assert recall >= 0.5 and n >= 8
-    # unreachable target: terminates at the cap with honest recall
-    n2, r2 = SIM.tune_rescore_n(
-        codes, books, qs, emb, target_recall=1.0, k=5,
-        start=8, max_rescore=16)
-    assert n2 == 16 and 0.0 <= r2 <= 1.0
-    with pytest.raises(ValueError, match="target_recall"):
-        SIM.tune_rescore_n(codes, books, qs, emb, target_recall=1.5)
-
-
 def test_pq_string_ids(spark, emb, books) -> None:
     """Code frames keep the caller's id dtype end-to-end."""
     semb = emb.select(

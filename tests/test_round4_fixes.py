@@ -1,7 +1,7 @@
 """Round-4 fixes: the r3 VERDICT scale-killers and ADVICE lows.
 
-- dedup's two forced broadcasts (dup-group set, LSH candidate ids)
-  are now AQE-decided with explicit opt-in hints;
+- dedup's forced broadcast of the LSH candidate ids is now
+  AQE-decided with an explicit opt-in hint;
 - connected components releases each round's checkpoint blocks
   (DataFrame.unpersist is a no-op for localCheckpoint storage);
 - fanout_gate self-guards on derived frames via logical-plan
@@ -36,25 +36,6 @@ def _optimized(df) -> str:
 def docs(spark):
     rows = [(i, f"doc body {i % 7} common words here") for i in range(40)]
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_exact_duplicate_rows_no_forced_broadcast(spark, docs) -> None:
-    """Default plan carries NO broadcast hint — the dup-group set is
-    data-dependent (multi-GB at crawl dup rates), so strategy choice
-    belongs to AQE's runtime size check, not a hard-coded hint."""
-    plan = _optimized(DD.exact_duplicate_rows(docs))
-    assert "strategy=broadcast" not in plan, plan
-
-
-def test_exact_duplicate_rows_escape_hatch(spark, docs) -> None:
-    hinted = DD.exact_duplicate_rows(docs, broadcast_groups=True)
-    assert "strategy=broadcast" in _optimized(hinted)
-    # hint must not change results
-    plain = DD.exact_duplicate_rows(docs)
-    key = lambda r: r["doc_id"]  # noqa: E731
-    assert sorted(plain.collect(), key=key) == \
-        sorted(hinted.collect(), key=key)
-    assert plain.count() > 0  # the fixture actually has dup groups
 
 
 def test_near_duplicates_no_forced_candidate_broadcast(spark, docs) -> None:

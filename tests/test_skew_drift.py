@@ -123,16 +123,6 @@ def test_mg_pass_is_narrow(spark) -> None:
     assert "Exchange" not in plan
 
 
-def test_recommend_salt_buckets(spark) -> None:
-    rows = [(1,)] * 50 + [(i,) for i in range(100, 150)]
-    df = spark.createDataFrame(rows, "k long").repartition(4)
-    hh = checks.heavy_hitters(df, "k", min_share=0.2)
-    # hottest share 0.5 → ceil(0.5 * 32) = 16 buckets
-    assert checks.recommend_salt_buckets(hh, 32) == 16
-    empty = checks.heavy_hitters(df, "k", min_share=0.9)
-    assert checks.recommend_salt_buckets(empty, 32) == 1
-
-
 def _manual_drift(rows_a, rows_b):
     ca, cb = _exact_counts(rows_a), _exact_counts(rows_b)
     ta, tb = sum(ca.values()), sum(cb.values())
@@ -366,41 +356,6 @@ def test_schema_drift(spark) -> None:
     }
 
 
-def test_snapshot_drift_report(spark) -> None:
-    df = spark.range(0, 4000, 1, 8).select(
-        F.col("id"),
-        # numeric column whose odd-snapshot distribution is shifted
-        F.expr("cast(pmod(id, 40) + IF(id % 2 = 1, 20, 0) as double)")
-        .alias("v"),
-        F.expr("element_at(array('p','q'), cast(id % 2 as int) + 1)")
-        .alias("c"),
-    )
-    a, b = df.where("id % 2 = 0"), df.where("id % 2 = 1")
-    rep = checks.snapshot_drift_report(
-        a, b, categorical=["c"], numeric=["v"])
-    assert rep["schema"] == {"added": [], "removed": [], "changed": {}}
-    assert rep["numeric"]["v"]["drifted"] is True  # +20 shift
-    # category 'p' only in a, 'q' only in b → maximal drift
-    assert rep["categorical"]["c"]["l_inf"] == 1.0
-    assert rep["drifted"] is True
-    # identical snapshots → clean
-    rep0 = checks.snapshot_drift_report(
-        a, a, categorical=["c"], numeric=["v"])
-    assert rep0["drifted"] is False
-    assert rep0["numeric"]["v"]["max_rel_gap"] == 0.0
-
-
-def test_snapshot_drift_report_skips_schema_mismatch(spark) -> None:
-    a = spark.range(100).select(
-        F.col("id"), F.col("id").cast("double").alias("v"))
-    b = spark.range(100).select(
-        F.col("id"), F.col("id").cast("string").alias("v"))
-    rep = checks.snapshot_drift_report(a, b, numeric=["v"])
-    # type change is reported, the numeric compare is skipped not crashed
-    assert rep["schema"]["changed"] == {"v": ("double", "string")}
-    assert rep["numeric"] == {} and rep["drifted"] is True
-
-
 def _vec_frame(spark, scale: tuple = (), n: int = 200):
     """n deterministic 4-dim vectors; dims in ``scale`` multiplied."""
     rows = []
@@ -466,58 +421,14 @@ def test_embedding_dim_drift_tdigest_twin(spark) -> None:
     # a dimension with no data on either side reports NaN quantiles
     alone = checks.embedding_dim_drift(short, short, 3)
     assert all(math.isnan(q) for q in alone[2]["q_a"] + alone[2]["q_b"])
-    with pytest.raises(ValueError, match="dim"):
-        checks.embedding_dim_drift(a, b, 0)
-
-
-def test_snapshot_drift_report_embedding(spark) -> None:
-    """Embedding columns fold into the unified report: per-dim drift
-    in the one tagged t-digest scan of both snapshots, drifted dims
-    listed, schema-mismatched embedding columns skipped."""
-    a = _vec_frame(spark).withColumn("x", F.col("id") % 10)
-    b = _vec_frame(spark, scale=(2,)).withColumn("x", F.col("id") % 10)
-    rep = checks.snapshot_drift_report(
-        a, b, numeric=["x"], embedding={"embedding": 4},
-        rel_tolerance=0.1)
-    er = rep["embedding"]["embedding"]
-    assert er["dims"] == 4
-    assert er["drifted_dims"] == [2]
-    assert er["drifted"] and rep["drifted"]
-    assert not rep["numeric"]["x"]["drifted"]
-    # identical snapshots: nothing drifts
-    rep2 = checks.snapshot_drift_report(
-        a, a, embedding={"embedding": 4})
-    assert not rep2["drifted"]
-    assert rep2["embedding"]["embedding"]["drifted_dims"] == []
-    # type-changed embedding column is skipped, reported in schema
-    c = a.withColumn("embedding", F.lit("oops"))
-    rep3 = checks.snapshot_drift_report(a, c, embedding={"embedding": 4})
-    assert "embedding" not in rep3["embedding"]
-    assert rep3["schema"]["changed"] and rep3["drifted"]
+    # null vectors are skipped: every dimension still has data
+    an = a.withColumn("embedding", F.when(
+        F.col("id") % 5 != 0, F.col("embedding")))
+    nulls = checks.embedding_dim_drift(an, an, 4)
+    assert not any(v["drifted"] for v in nulls.values())
+    assert all(math.isfinite(q) for v in nulls.values() for q in v["q_a"])
     with pytest.raises(ValueError, match=">= 1"):
-        checks.snapshot_drift_report(a, b, embedding={"embedding": 0})
-
-
-def test_snapshot_drift_report_embedding_width_mismatch(spark) -> None:
-    """ADVICE r4: an over-declared embedding width must surface under
-    the schema section (phantom dimensions), never report 'no drift';
-    null vectors are ignored rather than poisoning digests."""
-    a = _vec_frame(spark)  # actual width 4
-    b = _vec_frame(spark, scale=(2,))
-    rep = checks.snapshot_drift_report(a, b, embedding={"embedding": 6})
-    wm = rep["schema"]["embedding_width"]["embedding"]
-    assert wm["declared"] == 6 and wm["empty_dims"] == [4, 5]
-    assert rep["drifted"] is True
-    # real dims still compared: dim 2 drifts exactly as before
-    assert rep["embedding"]["embedding"]["drifted_dims"] == [2]
-    # null vectors tolerated
-    an = a.withColumn(
-        "embedding",
-        F.when(F.col("id") % 5 == 0, F.lit(None)).otherwise(
-            F.col("embedding")))
-    rep2 = checks.snapshot_drift_report(an, an, embedding={"embedding": 4})
-    assert "embedding_width" not in rep2["schema"]
-    assert not rep2["drifted"]
+        checks.embedding_dim_drift(a, b, 0)
 
 
 def test_categorical_drift_report_high_cardinality_in_plan(spark) -> None:
@@ -532,17 +443,6 @@ def test_categorical_drift_report_high_cardinality_in_plan(spark) -> None:
     # every category lives on exactly one side: gap = 1/25000 each
     assert abs(rep["l_inf"] - 1 / 25_000) < 1e-12
     assert abs(rep["tvd"] - 1.0) < 1e-9 and rep["drifted"] is True
-    # snapshot report over the same id-like column: one row per column
-    a = df.where("id % 2 = 0")
-    b = df.where("id % 2 = 1")
-    rep2 = checks.snapshot_drift_report(a, b, categorical=["c"])
-    assert rep2["categorical"]["c"]["categories"] == 50_000
-    assert rep2["categorical"]["c"]["l_inf"] > 0.0
-    # the snapshot report folds each column with the same verdict,
-    # psi included (the sums may differ in the last bit: the two
-    # plans add the per-category terms in different orders)
-    assert rep2["categorical"]["c"] == pytest.approx(
-        checks.categorical_drift_report(d), rel=1e-12)
 
 
 def _jobs(spark, fn) -> int:
@@ -560,22 +460,16 @@ def _jobs(spark, fn) -> int:
 
 def test_drift_two_snapshots_one_scan_job_counts(spark) -> None:
     """Two snapshots cost one tagged scan: tdigest_drift runs the jobs
-    of tdigest_pair on the tagged frame, and snapshot_drift_report
-    with numeric, categorical and embedding columns runs one
-    tdigests_of call plus one categorical fold — never a scan per
-    snapshot or per column kind."""
+    of tdigest_pair on the tagged frame, and embedding_dim_drift over
+    every dimension runs the jobs of one tdigests_of call — never a
+    scan per snapshot or per dimension."""
     df = _vec_frame(spark).select(
-        "id", "embedding", (F.col("id") % 17).cast("double").alias("x"),
-        F.expr("cast(id % 3 as string)").alias("c"))
+        "id", "embedding", (F.col("id") % 17).cast("double").alias("x"))
     a, b = df.where("id % 2 = 0"), df.where("id % 2 = 1")
     tagged = df.selectExpr("cast(id % 2 as long) as side", "x")
     drift = _jobs(spark, lambda: checks.tdigest_drift(a, b, "x"))
     pair = _jobs(spark, lambda: checks.tdigest_pair(tagged, "side", "x"))
-    report = _jobs(spark, lambda: checks.snapshot_drift_report(
-        a, b, numeric=["x"], categorical=["c"],
-        embedding={"embedding": 4}))
+    emb = _jobs(spark, lambda: checks.embedding_dim_drift(a, b, 4))
     digests = _jobs(spark, lambda: checks.tdigests_of(a, ["x"]))
-    fold = _jobs(spark, lambda: checks.categorical_drift_report(
-        checks.categorical_drift(a, b, "c")))
     # both pins in one comparison, so a failure shows both
-    assert (drift, report) == (pair, digests + fold)
+    assert (drift, emb) == (pair, digests)

@@ -220,35 +220,6 @@ def test_cluster_safe_splits(spark) -> None:
         assert rows[d] == (d, plain[d])
 
 
-# ---------------------------------------------------------------------------
-# k-fold
-# ---------------------------------------------------------------------------
-
-def test_kfold_matches_duckdb_and_balances(spark) -> None:
-    df = _keys(spark, 5000)
-    got = {
-        r["k"]: r["fold"]
-        for r in sp.kfold_assign(df, "k", 5, seed=3).collect()
-    }
-    con = duckdb.connect()
-    want = dict(
-        con.sql(
-            """
-            SELECT k, CAST(CAST(concat('0x', substr(
-                     md5(concat_ws(':', CAST(k AS VARCHAR), '3')),
-                     1, 12)) AS BIGINT) % 5 AS INT) AS fold
-            FROM range(5000) t(k)
-            """
-        ).fetchall()
-    )
-    assert got == want
-    counts = [list(got.values()).count(f) for f in range(5)]
-    assert sum(counts) == 5000
-    assert all(abs(c - 1000) < 120 for c in counts)  # ~3 sigma
-    with pytest.raises(ValueError):
-        sp.kfold_assign(df, "k", 1)
-
-
 def test_stratified_exact_sample_oversized_stratum_guard(spark) -> None:
     """Round-4 verdict #5: a stratum past max_stratum_rows fails with
     the observed size instead of silently single-task-sorting it."""

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from cerberus_cpp_spark.plans.engine import TableValidator
 from cerberus_cpp_spark.sources.distgen import image_caption_frame
 from cerberus_cpp_spark.sources.fixtures import IMAGE_TABLE_RULES
-from cerberus_cpp_spark.streaming.validate import run_to_memory
 
 N = 2000
 
@@ -29,7 +28,8 @@ def test_stream_equals_batch(spark, stream_dir) -> None:
     expected = tv.validate(batch).counts()
 
     stream = spark.readStream.schema(batch.schema).parquet(stream_dir)
-    q = run_to_memory(stream, tv, query_name="val_stream")
+    q = (tv.validate(stream).annotated.writeStream.format("memory")
+         .queryName("val_stream").trigger(availableNow=True).start())
     q.awaitTermination(120)
     got = spark.sql(
         "SELECT count(*) AS rows, sum(n_violations) AS violations,"
@@ -39,44 +39,6 @@ def test_stream_equals_batch(spark, stream_dir) -> None:
     assert got["rows"] == expected["rows"] == N
     assert got["violations"] == expected["violations"]
     assert got["invalid_rows"] == expected["invalid_rows"]
-
-
-def test_windowed_verdicts_with_watermark(spark, stream_dir) -> None:
-    batch = spark.read.parquet(stream_dir)
-    # synthesize an event-time column: one hour per 500 rows
-    ts = F.expr(
-        "timestamp('2026-01-01 00:00:00') + make_interval(0, 0, 0, 0,"
-        " cast(substring(image_id, 5) as long) div 500, 0, 0)"
-    )
-    src_dir = stream_dir + "_ts"
-    batch.withColumn("ts", ts).write.mode("overwrite").parquet(src_dir)
-    tsb = spark.read.parquet(src_dir)
-
-    tv = TableValidator(IMAGE_TABLE_RULES, extra_cols=("ts",))
-    stream = spark.readStream.schema(tsb.schema).parquet(src_dir)
-    q = run_to_memory(
-        stream, tv, query_name="val_windowed", windowed=True,
-        ts_col="ts", window="1 hour", watermark="2 hours",
-    )
-    q.awaitTermination(120)
-    rows = spark.sql(
-        "SELECT * FROM val_windowed ORDER BY window_start"
-    ).collect()
-    # NULL-image_id rows (kind-5 seeds) fall outside any window —
-    # their ts is NULL; remaining 1996 rows span 4 windows of ~499
-    assert len(rows) == 4
-    assert sum(r["rows"] for r in rows) >= N - 4
-    assert all(not r["passed"] for r in rows)  # each window has seeds
-    # violations per window match the batch computation
-    ann = tv.validate(tsb).annotated
-    exp = {
-        r["ws"]: r["v"]
-        for r in ann.where(F.col("ts").isNotNull())
-        .groupBy(F.window("ts", "1 hour").start.alias("ws"))
-        .agg(F.sum("n_violations").alias("v")).collect()
-    }
-    got = {r["window_start"]: r["violations"] for r in rows}
-    assert got == exp
 
 
 def test_stream_media_decode_equals_batch(spark, tmp_path_factory) -> None:
@@ -145,9 +107,6 @@ def test_quarantine_stream_matches_batch(spark, tmp_path):
     """Streaming quarantine split == batch quarantine split on the
     same data (clean side normalized, quarantined side original +
     metrics)."""
-    from cerberus_cpp_spark.plans.engine import TableValidator
-    from cerberus_cpp_spark.streaming.validate import quarantine_stream
-
     rows = [(1, 5, "a"), (2, -2, "b"), (3, 60, None), (4, 9, "d")]
     df = spark.createDataFrame(rows, "id long, v long, s string")
     src = str(tmp_path / "qsrc")
@@ -158,7 +117,7 @@ def test_quarantine_stream_matches_batch(spark, tmp_path):
     tv = TableValidator(rules, allow_unknown=True)
 
     stream = spark.readStream.schema(df.schema).parquet(src)
-    clean_s, quar_s = quarantine_stream(stream, tv)
+    clean_s, quar_s = tv.validate(stream).quarantine()
     q1 = (clean_s.writeStream.format("memory").queryName("q_clean")
           .outputMode("append").trigger(availableNow=True).start())
     q2 = (quar_s.writeStream.format("memory").queryName("q_quar")

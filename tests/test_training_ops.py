@@ -59,8 +59,6 @@ def test_exact_duplicates(spark, docs) -> None:
     groups = DD.exact_duplicates(docs).collect()
     assert len(groups) == 1
     assert groups[0]["cnt"] == 2 and groups[0]["keep_id"] == 0
-    drop = DD.exact_duplicate_rows(docs).collect()
-    assert [(r["doc_id"], r["keep_id"]) for r in drop] == [(1, 0)]
 
 
 def test_jaccard_pairs_complete(spark, docs) -> None:
@@ -105,7 +103,9 @@ def test_simhash_near_pairs(spark, docs) -> None:
     # identical docs → identical signature
     assert vals[0] == vals[1]
     pairs = {(r["id_a"], r["id_b"]): r["hamming"]
-             for r in DD.simhash_near_pairs(sig, max_hamming=3).collect()}
+             for r in DD.hamming_near_pairs(
+                 sig, "simhash", max_hamming=3, n_blocks=4,
+                 block_bits=4).collect()}
     assert pairs[(0, 1)] == 0
     assert (0, 2) in pairs
 
@@ -227,26 +227,6 @@ def test_ivf_deterministic_and_guarded(spark, emb) -> None:
     assert r1 == r2
     with pytest.raises(ValueError, match="smaller than"):
         SIM.ivf_index(emb.limit(4), n_lists=8, seed=1)
-
-
-def test_banding_for_threshold() -> None:
-    from cerberus_cpp_spark.operators.dedup import banding_for_threshold
-
-    # midpoints with 16 hashes: r=1→0.0625, r=2→0.354, r=4→0.707,
-    # r=8→0.917, r=16→1.0 → thresholds snap to the nearest curve
-    assert banding_for_threshold(0.10) == (1, 16)
-    assert banding_for_threshold(0.35) == (2, 8)
-    assert banding_for_threshold(0.5) == (2, 8)
-    assert banding_for_threshold(0.7) == (4, 4)
-    assert banding_for_threshold(0.9) == (8, 2)
-    with pytest.raises(ValueError):
-        banding_for_threshold(1.5)
-    # the selected curve is steep AROUND the target: ~coin-flip
-    # collision at the threshold (the midpoint), near-zero well below
-    r, b = banding_for_threshold(0.9)
-    p_sel = 1 - (1 - 0.9 ** r) ** b
-    p_below = 1 - (1 - 0.6 ** r) ** b
-    assert p_sel > 0.4 and p_below < 0.1
 
 
 def test_redact_pii(spark) -> None:
