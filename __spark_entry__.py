@@ -434,7 +434,7 @@ def q_near_dups_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACTLY: signatures → band keys → candidate pairs → verified
     Jaccard ≥ 0.5. max_bucket=None here because the contract data has
     no pathological buckets (the cap's semantics have their own unit
-    tests; oversized_lsh_buckets surfaces what a cap would drop)."""
+    tests)."""
     return _dd.near_duplicates(
         _t(spark, sf_dir, "documents"), threshold=0.5, max_bucket=None
     )
@@ -3647,7 +3647,7 @@ def _crawl_to_corpus_sql() -> str:
     for ent, ch in HTML_ENTITIES:
         ch_sql = ch.replace("'", "''")
         expr = f"replace({expr}, '{ent}', '{ch_sql}')"
-    expr = f"trim(regexp_replace({expr}, '\s+', ' ', 'g'))"
+    expr = f"trim(regexp_replace({expr}, '\\s+', ' ', 'g'))"
     return f"""
 WITH ids AS (SELECT range AS id FROM range({CRAWL_N})),
 k3 AS (SELECT unnest(range(3)) AS k),
@@ -7356,7 +7356,7 @@ _TDIGEST_PROBS = (0.1, 0.25, 0.5, 0.75, 0.9)
 def q_tdigest_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot drift via DISTRIBUTED t-digest sketches (north_star
     verbatim: "t-digest quantile sketches compared across
-    snapshots"; functions/tdigest.py, checks.tdigest_of). The metric
+    snapshots"; functions/tdigest.py, checks.tdigest_pair). The metric
     column is clamped-floor(value) — 31 near-uniform levels each
     carrying ~3% of total weight, 6x above the exact-regime bar
     (every level weight > W/compression; see the tdigest module
@@ -7371,7 +7371,7 @@ def q_tdigest_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).alias("vb")
     # SINGLE PASS (round-2 verdict item): both snapshots live in the
     # same events table, so tag each row with its side and build both
-    # digests' partials in one scan instead of two tdigest_of jobs
+    # digests' partials in one scan instead of one job per snapshot
     da, db = checks.tdigest_pair(
         ev.select(F.expr("event_id % 2").alias("side"), vb),
         "side", "vb", compression=200)
@@ -7457,7 +7457,7 @@ WHERE c.cnt >= ceil(0.01 * t.total)
 def q_cat_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Categorical frequency drift between two event snapshots
     (even/odd ids) over event_type, in ONE scan (the tagged-union
-    trick tdigest_drift uses, applied to frequency histograms): one
+    trick tdigest_pair uses, applied to frequency histograms): one
     hash aggregate builds both histograms, then transcendental-free
     drift terms (abs share gap + chi-square contribution) that an
     exact SQL oracle replays bit-for-bit. The categorical complement
@@ -7763,9 +7763,9 @@ FROM g
 def q_snapshot_row_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROW-level delta between two snapshots of the orders table —
     the finest face of the north_star's cross-snapshot comparison
-    (schema_drift = column level, tdigest/categorical = distribution
-    level, this = per-key rows): one full-outer sort-merge join on
-    the key, null-safe JVM comparisons, emitting (key, status,
+    (tdigest/categorical = distribution level, this = per-key
+    rows): one full-outer sort-merge join on the key, null-safe JVM
+    comparisons, emitting (key, status,
     changed_cols). Snapshot old drops key%89==7 rows (→ 'added'),
     snapshot new drops key%97==3 (→ 'removed'), mutates
     o_orderstatus on key%31==5 and o_totalprice on key%13==0, and

@@ -238,6 +238,7 @@ class Validator:
         self._rules: dict[tuple[Priority, str], RuleFn] = {}
         self.schema_schema: dict[str, dict] = {}
         self._state: _State | None = None
+        self._meta: Validator | None = None  # built by _meta_one
         _register_builtin_rules(self)
 
     @classmethod
@@ -328,19 +329,13 @@ class Validator:
         """
         if not isinstance(schema, dict):
             raise SchemaError(f"schema must be a mapping, got {type(schema)}")
-        inner = Validator(self.schema_schema, validate_schema=False)
-        inner.types = self.types
-        inner.schema_registry = self.schema_registry
         out: dict[str, dict] = {}
         for field_name, rules in schema.items():
             if not isinstance(rules, dict):
                 raise SchemaError(
                     f"rules for field {field_name!r} must be a mapping"
                 )
-            if not inner.validate(rules):
-                raise SchemaError(inner.errors)
-            normalized = inner.get_document()
-            out[field_name] = self._normalize_nested(normalized)
+            out[field_name] = self._meta_one(rules)
         return out
 
     def _normalize_nested(self, rules: dict) -> dict:
@@ -361,7 +356,12 @@ class Validator:
         return rules
 
     def _meta_one(self, rule_map: dict) -> dict:
-        inner = Validator(self.schema_schema, validate_schema=False)
+        """Meta-validate one rule map against the schema-of-schemas
+        with one inner validator, reused for every rule map, then
+        normalize the rule maps nested in it."""
+        if self._meta is None:
+            self._meta = Validator(self.schema_schema, validate_schema=False)
+        inner = self._meta
         inner.types = self.types
         inner.schema_registry = self.schema_registry
         if not inner.validate(rule_map):
@@ -636,14 +636,16 @@ def _rule_required(ctx: RuleCtx) -> None:
 def _rule_schema(ctx: RuleCtx) -> None:
     """``rules.hh:519-573``: dict doc → recurse field-map; list doc →
     apply one rule-map to every element; scalar arg → registered
-    schema lookup (``validator.hh:408-415``)."""
+    schema lookup (``validator.hh:408-415``), meta-validated like the
+    top-level schema: only under ``validate_schema``."""
     arg = ctx.arg
     if isinstance(arg, str):
         arg = ctx.validator.schema_registry.get(arg)
         if arg is None:
             ctx.raise_error(f"unknown registered schema: {ctx.arg}")
             return
-        arg = ctx.validator.normalized_schema(arg)
+        if ctx.validator.validate_schema:
+            arg = ctx.validator.normalized_schema(arg)
     if isinstance(ctx.value, dict):
         ctx.validator._validate_dict(ctx.value, arg, ctx.path, ctx.policy)
     elif isinstance(ctx.value, list):

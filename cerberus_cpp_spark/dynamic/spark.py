@@ -22,7 +22,7 @@ Scale design:
   accident: there is no columnar representation of a value whose type
   varies per row, so this is the sanctioned ``mapInPandas`` escape
   hatch (the columnar engine remains the hot path for statically
-  typed columns and raises ``HeterogeneousShape`` to route here).
+  typed columns; a field whose shape varies per row belongs here).
 - Output is the columnar engine's violations schema
   (``array<struct<path,message>>`` + allocation-free ``n_violations``
   + ``valid``), so ledgers, partition verdicts and windowed rollups
@@ -53,6 +53,9 @@ VIOL_FIELDS = T.ArrayType(T.StructType([
 #: violation emitted when the payload cannot be parsed as JSON —
 #: mirrors the interpreter's top-level "document is not a mapping"
 NOT_JSON_MSG = "document is not valid JSON"
+#: violation emitted when parsing or validating the payload exhausts
+#: the interpreter's recursion limit: one hostile row, not a failed job
+TOO_DEEP_MSG = "document nested too deeply"
 
 
 def validate_json(
@@ -133,24 +136,31 @@ def validate_json(
         for name, s in norm_registry.items():
             v.register_schema(name, s)
 
+        def parse(raw):
+            """(document, None), or (None, the one violation message)."""
+            if raw is None:
+                return None, None
+            try:
+                return json.loads(raw), None
+            except RecursionError:
+                return None, TOO_DEEP_MSG
+            except (ValueError, TypeError):
+                return None, NOT_JSON_MSG
+
         for pdf in batches:
             viols, counts, valids, norms = [], [], [], []
             for raw in pdf[doc_col]:
-                if raw is None:
-                    doc, parse_ok = None, True
-                else:
+                doc, msg = parse(raw)
+                if msg is None:
                     try:
-                        doc = json.loads(raw)
-                        parse_ok = True
-                    except (ValueError, TypeError):
-                        doc, parse_ok = None, False
-                if not parse_ok:
-                    errs = [("^", NOT_JSON_MSG)]
-                    norm_doc = None
-                else:
-                    v.validate(doc)
+                        v.validate(doc)
+                    except RecursionError:
+                        msg = TOO_DEEP_MSG
+                if msg is None:
                     errs = [(e.path, e.message) for e in v.errors]
                     norm_doc = v.get_document()
+                else:
+                    errs = [("^", msg)]
                 viols.append(errs)
                 counts.append(len(errs))
                 valids.append(not errs)
@@ -158,7 +168,7 @@ def validate_json(
                     norms.append(
                         json.dumps(norm_doc, sort_keys=True,
                                    separators=(",", ":"))
-                        if parse_ok else None
+                        if msg is None else None
                     )
             data = {c: pdf[c] for c in id_list}
             data["violations"] = viols

@@ -227,8 +227,8 @@ def referential_chain(
 
 # ---------------------------------------------------------------------------
 # Quantile drift. Every two-snapshot comparison is ONE scan of the
-# side-tagged union of the snapshots; the t-digest core, the exact
-# percentile frame and the gap report below are shared by all of them.
+# side-tagged union of the snapshots; the t-digest core and the exact
+# percentile frame below are shared by all of them.
 # ---------------------------------------------------------------------------
 
 _DRIFT_PROBS = (0.01, 0.05, 0.25, 0.5, 0.75, 0.95, 0.99)
@@ -328,38 +328,6 @@ def _tdigest_sides(src: DataFrame, sides: int, comp: int) -> dict:
     return out
 
 
-def _tdigest_drift_pairs(a: DataFrame, b: DataFrame, exprs: list,
-                         comp: int) -> list:
-    """``(digest_a, digest_b)`` of every expression, from ONE scan of
-    the two snapshots' tagged union."""
-    d = _tdigest_sides(_drift_sides(a, b, exprs), 2 * len(exprs), comp)
-    return [(d[2 * k], d[2 * k + 1]) for k in range(len(exprs))]
-
-
-def _drift_report(qa: list, qb: list, probs, rel_tolerance: float,
-                  col: str | None = None) -> dict:
-    """The one quantile comparison: per probe the relative gap
-    |a − b| / max(|a|, |b|, ε), drift = the largest gap above
-    ``rel_tolerance``. With ``col`` it is the ``quantile_drift``
-    report; without, the per-dimension/per-metric report of the
-    embedding and image families."""
-    gap = max((abs(x - y) / max(abs(x), abs(y), 1e-12)
-               for x, y in zip(qa, qb)), default=0.0)
-    ka, kb = ("q_a", "q_b") if col is None else ("quantiles_a",
-                                                  "quantiles_b")
-    head = {} if col is None else {"column": col}
-    return {**head, "probs": list(probs), ka: qa, kb: qb,
-            "max_rel_gap": gap, "drifted": gap > rel_tolerance}
-
-
-def _digest_drift_report(da, db, probs, rel_tolerance: float,
-                         col: str | None = None) -> dict:
-    """:func:`_drift_report` of two digests' interpolated quantiles."""
-    return _drift_report([da.quantile(p) for p in probs],
-                         [db.quantile(p) for p in probs],
-                         probs, rel_tolerance, col)
-
-
 def _exact_drift_frame(a: DataFrame, b: DataFrame, by: list, probs,
                        rel_tolerance: float) -> DataFrame:
     """The one EXACT tagged-percentile frame: ``a`` and ``b`` are the
@@ -397,7 +365,7 @@ def exact_quantile_drift_frame(
     """Drift as a DataFrame plan (no driver collect): EXACT
     percentiles of both snapshots from one aggregate over their
     tagged union (small/medium scale or oracle checking; the sketch
-    paths `quantile_drift`/`tdigest_drift` are the 100TB route).
+    paths `quantile_drift`/`tdigest_pair` are the 100TB route).
     Output: (prob, q_a, q_b, rel_gap, drifted)."""
     def v(df: DataFrame) -> DataFrame:
         return df.select(F.col(col).cast("double").alias("v"))
@@ -426,17 +394,13 @@ def quantile_drift(
                             probs, 10000).alias(f"q{s}")
         for s in (0, 1)
     ]).collect()[0]
-    return _drift_report(list(row["q0"] or []), list(row["q1"] or []),
-                         probs, rel_tolerance, col)
-
-
-def tdigest_of(df: DataFrame, col: str, *, compression: int = 100):
-    """Distributed t-digest of one column (see :func:`_tdigest_sides`
-    for the shape, the merge order and the value policy: NULL, NaN and
-    ±inf are dropped). Returns a ``TDigest`` (driver-side handle,
-    O(compression))."""
-    src = df.select(F.lit(0).alias("side"), F.col(col).alias("v"))
-    return _tdigest_sides(src, 1, int(compression))[0]
+    qa, qb = list(row["q0"] or []), list(row["q1"] or [])
+    # per probe the relative gap |a − b| / max(|a|, |b|, ε)
+    gap = max((abs(x - y) / max(abs(x), abs(y), 1e-12)
+               for x, y in zip(qa, qb)), default=0.0)
+    return {"column": col, "probs": probs, "quantiles_a": qa,
+            "quantiles_b": qb, "max_rel_gap": gap,
+            "drifted": gap > rel_tolerance}
 
 
 def tdigests_of(df: DataFrame, cols: list[str], *,
@@ -444,7 +408,7 @@ def tdigests_of(df: DataFrame, cols: list[str], *,
     """t-digests for MANY columns in ONE scan: the columns melt into
     (side=column-index, v) rows via ``posexplode`` (narrow — no
     shuffle of values; each Arrow batch folds into per-side partial
-    digests exactly like :func:`tdigest_of`). The suggestion
+    digests exactly like :func:`tdigest_pair`). The suggestion
     engine's 100 TB quantile path (``plans/suggest.py``): one job
     regardless of column count, shuffle payload = n_partitions ×
     n_cols × ~2·compression doubles.
@@ -468,26 +432,6 @@ def tdigest_pair(df: DataFrame, side_col: str, col: str, *,
     src = df.select(F.col(side_col).alias("side"), F.col(col).alias("v"))
     d = _tdigest_sides(src, 2, int(compression))
     return d[0], d[1]
-
-
-def tdigest_drift(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    col: str,
-    probs: Sequence[float] | None = None,
-    *,
-    compression: int = 100,
-    rel_tolerance: float = 0.1,
-) -> dict:
-    """Snapshot drift via t-digest sketches (north_star verbatim):
-    both snapshots' digests from ONE scan of their side-tagged union
-    (the job count of :func:`tdigest_pair`), interpolated quantile
-    vectors compared driver-side. Same output contract as
-    ``quantile_drift``."""
-    [(da, db)] = _tdigest_drift_pairs(df_a, df_b, [F.col(col)],
-                                      int(compression))
-    return _digest_drift_report(da, db, list(probs or _DRIFT_PROBS),
-                                rel_tolerance, col)
 
 
 # ---------------------------------------------------------------------------
@@ -683,23 +627,22 @@ def heavy_hitters(
 # ---------------------------------------------------------------------------
 
 
-def _categorical_drift_counts(tagged: DataFrame, by: tuple = ()) -> DataFrame:
-    """The one counts aggregate: ``tagged`` holds ``(*by, category,
-    side)`` rows of both snapshots (side 0 = A, 1 = B); NULL
-    categories are dropped and ONE hash aggregate builds every
-    histogram (map-side partials bound the shuffle at |categories|
-    rows per task). Totals come from a window over ``by`` (empty =
-    global — safe ONLY because the counts are already reduced to
-    |categories| rows), then shares and the transcendental-free drift
-    terms (abs gap + chi-square contribution
+def _categorical_drift_counts(tagged: DataFrame) -> DataFrame:
+    """The one counts aggregate: ``tagged`` holds ``(category, side)``
+    rows of both snapshots (side 0 = A, 1 = B); NULL categories are
+    dropped and ONE hash aggregate builds both histograms (map-side
+    partials bound the shuffle at |categories| rows per task). Totals
+    come from a global window (safe ONLY because the counts are
+    already reduced to |categories| rows), then shares and the
+    transcendental-free drift terms (abs gap + chi-square contribution
     ``(share_a-share_b)^2/(share_a+share_b)``), so an exact SQL oracle
     replays every double bit-for-bit (no log/exp, whose libm results
     differ across engines)."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(*by)
+    w = Window.partitionBy()
     counts = tagged.where(F.col("category").isNotNull()).groupBy(
-        *by, "category").agg(*[
+        "category").agg(*[
             F.sum(F.when(F.col("side") == s, 1).otherwise(0)).alias(n)
             for s, n in enumerate(("cnt_a", "cnt_b"))])
     shares = counts.select(
@@ -726,8 +669,8 @@ def categorical_drift_tagged(
     (null-rate is ``column_stats``' job).
 
     Returns per-category ``(category, cnt_a, cnt_b, share_a,
-    share_b, abs_gap, chi2_term)``; fold with
-    ``categorical_drift_report`` for the scalar verdict."""
+    share_b, abs_gap, chi2_term)``: the L-inf verdict is the max
+    ``abs_gap``, the total variation distance half its sum."""
     return _categorical_drift_counts(
         df.select(F.col(col).alias("category"), side.alias("side")))
 
@@ -741,104 +684,6 @@ def categorical_drift(a: DataFrame, b: DataFrame, col: str) -> DataFrame:
     return _categorical_drift_counts(tag(a, 0).unionByName(tag(b, 1)))
 
 
-def _categorical_drift_fold(drift: DataFrame, by: tuple, keys: list,
-                            l_inf_tolerance: float,
-                            psi_floor: float = 1e-6) -> list:
-    """The one per-column fold of a categorical drift frame, IN-PLAN
-    in ONE aggregate grouped by ``by``: the driver receives one row
-    per group, never per category. Returns one verdict per entry of
-    ``keys`` (tuples of ``by`` values; a key with no categories gets
-    the all-zero verdict)."""
-    pa = F.greatest(F.col("share_a"), F.lit(psi_floor))
-    pb = F.greatest(F.col("share_b"), F.lit(psi_floor))
-    rows = {tuple(r[c] for c in by): r.asDict() for r in drift.groupBy(
-        *by).agg(
-        F.max("abs_gap").alias("l_inf"),
-        F.sum("abs_gap").alias("sum_gap"),
-        F.sum("chi2_term").alias("chi2"),
-        F.count(F.lit(1)).alias("categories"),
-        F.sum((pa - pb) * F.log(pa / pb)).alias("psi"),
-    ).collect()}
-    out = []
-    for r in (rows.get(k, {}) for k in keys):
-        l_inf = r.get("l_inf") or 0.0
-        out.append({
-            "l_inf": l_inf,
-            "tvd": (r.get("sum_gap") or 0.0) / 2.0,
-            "chi2": r.get("chi2") or 0.0,
-            "psi": r.get("psi") or 0.0,
-            "categories": r.get("categories") or 0,
-            "drifted": l_inf > l_inf_tolerance,
-        })
-    return out
-
-
-def categorical_drift_report(
-    drift: DataFrame, *, l_inf_tolerance: float = 0.05,
-    psi_floor: float = 1e-6,
-) -> dict:
-    """Fold a ``categorical_drift`` frame to the scalar verdict: L-inf
-    (max per-category share gap), total variation distance
-    (0.5 * sum |gap|), the chi-square statistic, and PSI (population
-    stability index, the ML-monitoring standard: Σ (p_a - p_b) ·
-    ln(p_a / p_b), shares floored at ``psi_floor`` so one-sided
-    categories contribute a large-but-finite term instead of ∞).
-    PSI lives here, in the report fold, rather than in the
-    oracle-matched frame — its log() would break the bit-exact SQL
-    replay. Every fold (max, sums, count, PSI terms) happens IN-PLAN
-    in ONE aggregate job returning a single row, so the driver never
-    receives per-category rows — an id-like column with 10^9 distinct
-    categories costs a shuffle of partial aggregates, not an
-    unbounded driver collect (round-4 verdict #4)."""
-    return _categorical_drift_fold(drift, (), [()], l_inf_tolerance,
-                                   psi_floor)[0]
-
-
-def categorical_drift_multi(
-    a: DataFrame, b: DataFrame, cols: list[str]
-) -> DataFrame:
-    """Frequency drift for MANY categorical columns in ONE tagged
-    scan of each snapshot: ``stack()`` melts every row into
-    (col_name, category) pairs JVM-side (categories cast to string —
-    one melted column must hold every source type), one hash
-    aggregate builds all histograms, and per-column shares come from
-    a window partitioned by col_name over the already-reduced frame.
-    One job regardless of column count — the ``tdigests_of`` design
-    applied to histograms. Returns the per-column analogue of
-    :func:`categorical_drift` with a leading ``col_name`` column."""
-    if not cols:
-        raise ValueError("cols must be non-empty")
-    melt = "stack({}, {}) as (col_name, category)".format(
-        len(cols),
-        ", ".join(f"'{c}', cast(`{c}` as string)" for c in cols),
-    )
-
-    def tag(df: DataFrame, s: int) -> DataFrame:
-        return df.select(F.expr(melt), F.lit(s).alias("side"))
-
-    return _categorical_drift_counts(tag(a, 0).unionByName(tag(b, 1)),
-                                     ("col_name",))
-
-
-def schema_drift(a: DataFrame, b: DataFrame) -> dict:
-    """Schema delta between two snapshots (driver-side, no job):
-    columns added/removed and columns whose Spark type changed —
-    the cheapest drift check and the one that should run FIRST (a
-    type change invalidates the numeric/categorical comparisons
-    below it)."""
-    ta = {f.name: f.dataType.simpleString() for f in a.schema.fields}
-    tb = {f.name: f.dataType.simpleString() for f in b.schema.fields}
-    return {
-        "added": sorted(set(tb) - set(ta)),
-        "removed": sorted(set(ta) - set(tb)),
-        "changed": {
-            k: (ta[k], tb[k])
-            for k in sorted(set(ta) & set(tb))
-            if ta[k] != tb[k]
-        },
-    }
-
-
 def snapshot_row_diff(
     old: DataFrame,
     new: DataFrame,
@@ -849,8 +694,8 @@ def snapshot_row_diff(
 ) -> DataFrame:
     """Row-level delta between two snapshots of a keyed table — the
     finest-grained face of the north_star's "compared across
-    snapshots" family (schema_drift = column level, tdigest/
-    categorical drift = distribution level, this = row level).
+    snapshots" family (tdigest/categorical drift = distribution
+    level, this = row level).
 
     ONE full-outer sort-merge join on the key columns (both sides
     shuffle-partitioned on the same key, so the join co-locates; AQE
@@ -864,8 +709,8 @@ def snapshot_row_diff(
     the filter happens before any further stage).
 
     ``compare_cols`` defaults to every shared non-key column whose
-    type matches on both sides (type-changed columns belong to
-    ``schema_drift``, not a value diff). Comparison is null-safe
+    type matches on both sides (a type change is a schema delta, not
+    a value diff). Comparison is null-safe
     (NULL == NULL is "unchanged"), exact for atomics and structural
     for arrays/structs/maps via Spark's ``<=>``.
     """
@@ -975,8 +820,7 @@ def cross_modal_conflicts(
     caption stamped onto many images (boilerplate/alt-text spam).
 
     ONE scan for every pair: ``stack()`` melts each row into
-    (kind, key, other) triples JVM-side (the
-    ``categorical_drift_multi`` design), one hash aggregate computes
+    (kind, key, other) triples JVM-side, one hash aggregate computes
     ``n_rows`` + exact ``n_distinct_other`` per (kind, key), and the
     ``min_distinct`` filter runs on the already-reduced frame.
     Returns (kind, key, n_rows, n_distinct_other), kind =
@@ -1013,16 +857,6 @@ def cross_modal_conflicts(
     )
 
 
-def _embedding_drift_dims(col: str, dim: int) -> list:
-    """Component ``i`` of every vector of ``col`` for ``i < dim``,
-    through ``try_element_at``: a short (or over-declared) vector
-    yields NULL — never an ANSI error failing the job — and the
-    digest core drops it, as it drops null vectors."""
-    if dim < 1:
-        raise ValueError(f"embedding dim for {col!r} must be >= 1")
-    return [F.try_element_at(F.col(col), F.lit(i + 1)) for i in range(dim)]
-
-
 def embedding_dim_drift_frame(
     df_a: DataFrame,
     df_b: DataFrame,
@@ -1043,8 +877,9 @@ def embedding_dim_drift_frame(
     Output: (dim, prob, q_a, q_b, rel_gap, drifted) with 0-based
     dims. ONE scan of the tagged union of both snapshots, values
     shuffled once into the per-dim aggregate. Exact percentiles —
-    right for oracle checking and small/medium scale; at 100 TB use
-    :func:`embedding_dim_drift` (t-digest, centroid-only shuffle)."""
+    right for oracle checking and small/medium scale; at 100 TB
+    project the dimensions to columns and digest them with
+    :func:`tdigests_of` (centroid-only shuffle)."""
     def melt(df: DataFrame) -> DataFrame:
         return df.where(F.col(vec_col).isNotNull()).select(
             F.posexplode(F.expr(
@@ -1053,33 +888,6 @@ def embedding_dim_drift_frame(
 
     return _exact_drift_frame(melt(df_a), melt(df_b), ["dim"], probs,
                               rel_tolerance)
-
-
-def embedding_dim_drift(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    dim: int,
-    *,
-    vec_col: str = "embedding",
-    probs: tuple = (0.1, 0.25, 0.5, 0.75, 0.9),
-    rel_tolerance: float = 0.1,
-    compression: int = 100,
-) -> dict:
-    """The 100 TB path for :func:`embedding_dim_drift_frame`: the
-    ``dim`` vector components project to columns (``try_element_at``:
-    a vector shorter than ``dim`` contributes nothing to the missing
-    dimensions instead of failing the job) and ALL of them, on both
-    snapshots, feed ONE t-digest scan of the tagged union (shuffle
-    payload = n_partitions × 2·dim × ~2·compression doubles — never
-    the values). ``dim`` is the caller-known embedding width (no peek
-    job); a dimension with no data on one side reports NaN quantiles.
-    Returns {dim_index: {"probs", "q_a", "q_b", "max_rel_gap",
-    "drifted"}}."""
-    pairs = _tdigest_drift_pairs(df_a, df_b,
-                                 _embedding_drift_dims(vec_col, dim),
-                                 int(compression))
-    return {i: _digest_drift_report(da, db, probs, rel_tolerance)
-            for i, (da, db) in enumerate(pairs)}
 
 
 def missing_time_buckets(
@@ -1204,10 +1012,9 @@ def volume_anomalies(
     series shows it.
 
     Per (``group_col``?, bucket): ``robust_z = |cnt − median| /
-    (1.4826 · MAD)`` over that group's bucket counts — the same
-    median/MAD score as ``ledger.partition_anomalies`` (immune to
-    the outliers it hunts; ``MAD = 0`` degrades to flagging any
-    deviation from the median). Buckets with zero events are the
+    (1.4826 · MAD)`` over that group's bucket counts — a median/MAD
+    score, immune to the outliers it hunts (``MAD = 0`` degrades to
+    flagging any deviation from the median). Buckets with zero events are the
     GAP check's job and are absent here by construction.
 
     Scale shape: ONE count aggregate over the source (map-side

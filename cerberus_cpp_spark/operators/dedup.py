@@ -168,7 +168,7 @@ def lsh_candidate_pairs(
     """Distinct candidate pairs (id_a < id_b) sharing at least one
     LSH band. Single self-equi-join on (band, bkey); AQE handles
     residual bucket skew. ``max_bucket`` drops pathological buckets
-    (surfaced by ``oversized_lsh_buckets`` — never silently)."""
+    with every candidate pair they hold; ``None`` keeps them all."""
     banded = _banded_keys(signatures, id_col, band_rows)
     if max_bucket is not None:
         # anti-join against the OVERSIZED set (tiny by construction —
@@ -192,20 +192,6 @@ def lsh_candidate_pairs(
         .select(F.col(f"a.{id_col}").alias("id_a"),
                 F.col(f"c.{id_col}").alias("id_b"))
         .distinct()
-    )
-
-
-def oversized_lsh_buckets(
-    signatures: DataFrame, id_col: str = "doc_id",
-    band_rows: int = LSH_BAND_ROWS, max_bucket: int = 1000,
-) -> DataFrame:
-    """The buckets a ``max_bucket`` cap would drop — surfaced so caps
-    are never silent (band, bkey, bsz)."""
-    return (
-        _banded_keys(signatures, id_col, band_rows)
-        .groupBy("band", "bkey")
-        .agg(F.count(F.lit(1)).alias("bsz"))
-        .where(F.col("bsz") > max_bucket)
     )
 
 
@@ -471,9 +457,9 @@ def hamming_near_pairs(
     crawl scale. Residual hot buckets (low-entropy hash regions —
     all-dark thumbnails: measured 75% of rows in ONE bucket → one
     straggler task owning billions of compares) are capped with
-    ``max_bucket`` (dropped buckets are surfaced by
-    ``oversized_hamming_buckets``, never silent — the same contract
-    as the MinHash LSH path); AQE skew-join splits the rest.
+    ``max_bucket`` (a dropped bucket loses every pair whose only
+    agreeing block it was — the same contract as the MinHash LSH
+    path); AQE skew-join splits the rest.
     """
     if combo < 1 or max_hamming > n_blocks - combo:
         raise ValueError(
@@ -516,22 +502,6 @@ def hamming_near_pairs(
     )
 
 
-def oversized_hamming_buckets(
-    df: DataFrame, hash_col: str, *, id_col: str = "doc_id",
-    n_blocks: int = 4, block_bits: int | None = 16, combo: int = 1,
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """The (block, bkey, bsz) buckets a ``max_bucket`` cap would drop
-    from ``hamming_near_pairs`` — surfaced so caps are never silent."""
-    return (
-        _hamming_blocked(df, hash_col, id_col, n_blocks, block_bits,
-                         combo)
-        .groupBy("block", "bkey")
-        .agg(F.count(F.lit(1)).alias("bsz"))
-        .where(F.col("bsz") > max_bucket)
-    )
-
-
 def cross_lsh_candidate_pairs(
     left_sigs: DataFrame, right_sigs: DataFrame, *,
     left_id: str = "doc_id", right_id: str = "doc_id",
@@ -545,8 +515,8 @@ def cross_lsh_candidate_pairs(
     against itself would redo yesterday's work. No ``<`` ordering, no
     self-exclusion: the namespaces are independent. Same single
     equi-join shape on (band, bkey); ``max_bucket`` caps each side's
-    buckets independently (anti-join against the tiny oversized set —
-    surface with :func:`oversized_lsh_buckets` per side)."""
+    buckets independently (anti-join against the tiny oversized
+    set)."""
     sides = []
     for sigs, id_col in ((left_sigs, left_id), (right_sigs, right_id)):
         banded = _banded_keys(sigs, id_col, band_rows)
@@ -667,8 +637,7 @@ def cross_hamming_pairs(
     shuffled on (block, bkey), the Hamming verify dies in codegen
     before the distinct shuffles anything. ``max_bucket`` caps each
     side's buckets independently (anti-join against the tiny oversized
-    set — surface them with :func:`oversized_hamming_buckets` per
-    side; a dropped bucket loses only pairs whose sole agreeing block
+    set; a dropped bucket loses only pairs whose sole agreeing block
     was that bucket, same documented contract as the self-join)."""
     if combo < 1 or max_hamming > n_blocks - combo:
         raise ValueError(
@@ -919,19 +888,6 @@ def near_duplicate_clusters(
         F.col("label").alias("cluster_id"),
         F.col("label").alias("keep_id"),
     )
-
-
-def near_duplicate_groups(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    k: int = 3, threshold: float = 0.7,
-    max_bucket: int | None = 10_000, hash_fn: str = "portable",
-    max_iter: int = 25,
-) -> DataFrame:
-    """End-to-end near-dup grouping: LSH pipeline (``near_duplicates``)
-    → connected components → ``(doc_id, cluster_id, keep_id)``."""
-    pairs = near_duplicates(df, id_col, text_col, k, threshold,
-                            max_bucket, hash_fn)
-    return near_duplicate_clusters(pairs, max_iter=max_iter)
 
 
 # ---------------------------------------------------------------

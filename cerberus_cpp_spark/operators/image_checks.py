@@ -750,9 +750,8 @@ def image_content_drift_frame(
     bottom).
 
     Output: (metric, prob, q_a, q_b, rel_gap, drifted). Exact
-    percentiles — right for oracle checking and small/medium scale;
-    at 100 TB use :func:`image_content_drift` (one t-digest pass
-    over both snapshots, centroid-only shuffle)."""
+    percentiles — right for oracle checking and small/medium
+    scale."""
     from .checks import _exact_drift_frame
     from .image_transform import image_quality_profile
 
@@ -767,31 +766,6 @@ def image_content_drift_frame(
     a, b = (image_quality_profile(df).where("status = 'ok'")
             .select(F.expr(melt)) for df in (df_a, df_b))
     return _exact_drift_frame(a, b, ["metric"], probs, rel_tolerance)
-
-
-def image_content_drift(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    *,
-    metrics: tuple = ("lap_abs_sum", "luma1000_sum"),
-    probs: tuple = (0.1, 0.25, 0.5, 0.75, 0.9),
-    rel_tolerance: float = 0.1,
-    compression: int = 100,
-) -> dict:
-    """The 100 TB path for :func:`image_content_drift_frame`: every
-    metric of both snapshots' decode+profile passes feeds ONE t-digest
-    scan of their side-tagged union (centroid-only shuffle), quantile
-    vectors compared driver-side. Returns {metric: {"probs", "q_a",
-    "q_b", "max_rel_gap", "drifted"}}."""
-    from .checks import _digest_drift_report, _tdigest_drift_pairs
-    from .image_transform import image_quality_profile
-
-    a, b = (image_quality_profile(df).where("status = 'ok'")
-            for df in (df_a, df_b))
-    pairs = _tdigest_drift_pairs(a, b, [F.col(m) for m in metrics],
-                                 int(compression))
-    return {m: _digest_drift_report(da, db, probs, rel_tolerance)
-            for m, (da, db) in zip(metrics, pairs)}
 
 
 def strip_image_metadata(df: DataFrame, *, id_col: str = "image_id",

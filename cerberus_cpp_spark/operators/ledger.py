@@ -182,9 +182,9 @@ def pending_partitions(
 ) -> list[str]:
     """Distinct partition values minus the ledger's completed set
     (for this ``lineage``, when given). Partition-list scale; safe to
-    collect driver-side. Pass ``known_partitions`` (e.g. from
-    ``sources.catalog.list_partitions`` — Iceberg metadata table or
-    hive directory names) to skip the discovery scan entirely."""
+    collect driver-side. Pass ``known_partitions`` (e.g. from an
+    Iceberg ``<table>.partitions`` metadata table or hive directory
+    names) to skip the discovery scan entirely."""
     if known_partitions is not None:
         spark = df.sparkSession
         parts = spark.createDataFrame(
@@ -291,60 +291,3 @@ def run_validation(
         # each is recorded done/rows=0 in the ledger AND listed here
         "empty_partitions": empty_partitions,
     }
-
-
-def partition_anomalies(
-    ledger_rows: DataFrame,
-    *,
-    metric: str = "invalid_rows",
-    z: float = 3.5,
-) -> DataFrame:
-    """Outlier partitions by ROBUST z-score of the per-partition
-    violation rate — the check that turns the ledger's per-partition
-    metrics (north_rule: "per-partition lineage + metrics") into a
-    verdict: a partition whose invalid rate sits far from its peers
-    usually means a bad upstream shard/day, not random noise.
-
-    ``rate = metric / rows`` per partition, then
-    ``robust_z = |rate - median| / (1.4826 * MAD)`` (median absolute
-    deviation — immune to the outliers it is hunting, unlike a
-    mean/stddev z-score where one rotten partition inflates sigma and
-    hides itself). ``MAD = 0`` (most partitions identical) degrades
-    to flagging ANY partition whose rate differs from the median.
-
-    The input is the (tiny) ledger table — one row per committed
-    partition — so the two percentile aggregates and the 1-row
-    cross-join are bounded regardless of table size; rows with
-    ``rows = 0`` are skipped (no rate to judge)."""
-    rated = ledger_rows.where(F.col("rows") > 0).withColumn(
-        "rate", F.col(metric) / F.col("rows")
-    )
-    med = rated.agg(
-        F.expr("percentile(rate, 0.5)").alias("med")
-    )
-    with_med = rated.crossJoin(med)
-    stats = with_med.agg(
-        F.expr("percentile(abs(rate - med), 0.5)").alias("mad"),
-        F.first("med").alias("med"),
-    )
-    scored = rated.crossJoin(stats).withColumn(
-        "robust_z",
-        F.when(
-            F.col("mad") > 0,
-            F.abs(F.col("rate") - F.col("med"))
-            / (F.lit(1.4826) * F.col("mad")),
-        ),
-    )
-    flagged = scored.where(
-        F.when(F.col("mad") > 0, F.col("robust_z") > F.lit(float(z)))
-        .otherwise(F.col("rate") != F.col("med"))
-    )
-    return flagged.select(
-        "partition_value",
-        "rows",
-        F.col(metric).alias("metric_value"),
-        "rate",
-        "med",
-        "mad",
-        "robust_z",
-    )

@@ -14,9 +14,9 @@
   only. Approximate (recall measured in tests vs the exact baseline).
 - :func:`embedding_near_duplicates` — near-dup pairs by cosine ≥
   threshold among bucket-colliding pairs.
-- :func:`ivf_index` / :func:`ivf_topk` / :func:`tune_nprobe` — IVF
-  coarse quantizer: bounded driver-side k-means training, one narrow
-  assignment pass, probe-list search, measured-recall autotune.
+- :func:`ivf_index` / :func:`ivf_topk` — IVF coarse quantizer:
+  bounded driver-side k-means training, one narrow assignment pass,
+  probe-list search.
 - :func:`pq_train` / :func:`pq_encode` / :func:`pq_topk` — product
   quantization: vectors compressed to m uint8 codes (32× at the
   defaults), ADC lookup-table scan over the code column only, exact
@@ -1112,9 +1112,9 @@ def pq_encode(
     drifts away from the training sample, quantization error climbs
     and ADC ranking quality decays silently — monitor pq_err
     quantiles on fresh batches against the training-time baseline
-    (``checks.tdigest_of``/``tdigests_of``) and retrain when they
-    drift, the index-maintenance twin of
-    ``checks.embedding_dim_drift`` (which watches the INPUT side).
+    (``checks.tdigests_of``) and retrain when they drift, the
+    index-maintenance twin of ``checks.embedding_dim_drift_frame``
+    (which watches the INPUT side).
 
     ``centroids`` switches to RESIDUAL encoding (pair with
     ``pq_train(centroids=...)``): each vector's residual from its
@@ -1879,56 +1879,6 @@ def ivf_pq_topk_distributed(
         rescore_n=rescore_n, queries_per_block=queries_per_block,
         residual=residual, id_col=id_col, vec_col=vec_col,
         code_col=code_col, list_col=list_col)
-
-
-def tune_nprobe(
-    assigned: DataFrame,
-    centroids: np.ndarray,
-    sample_queries: DataFrame,
-    *,
-    target_recall: float = 0.9,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[int, float]:
-    """Pick the smallest ``nprobe`` whose measured recall@k on a
-    held-out query sample meets ``target_recall``; returns
-    ``(nprobe, measured_recall)``.
-
-    Ground truth = exact ``cosine_topk`` over the SAME corpus (the
-    ``assigned`` frame minus its ``list_id`` column), so recall is
-    measured, not modeled. Probe levels double (1, 2, 4, …, n_lists);
-    ``nprobe = n_lists`` scans every list and is exact (the lossless
-    pin in tests), so the search always terminates at recall 1.0.
-    Cost: one bounded job per probed level over the sample queries —
-    run this on a few hundred held-out queries, then reuse the tuned
-    nprobe for the full query load.
-    """
-    if not 0.0 < target_recall <= 1.0:
-        raise ValueError("target_recall must be in (0, 1]")
-    n_lists = len(centroids)
-    truth = {
-        (r["query_id"], r["neighbor_id"])
-        for r in cosine_topk(
-            assigned.drop("list_id"), sample_queries, k,
-            id_col=id_col, vec_col=vec_col,
-        ).collect()
-    }
-    if not truth:
-        return 1, 1.0
-    nprobe = 1
-    while True:
-        got = {
-            (r["query_id"], r["neighbor_id"])
-            for r in ivf_topk(
-                assigned, centroids, sample_queries, k,
-                nprobe=nprobe, id_col=id_col, vec_col=vec_col,
-            ).collect()
-        }
-        recall = len(got & truth) / len(truth)
-        if recall >= target_recall or nprobe >= n_lists:
-            return nprobe, recall
-        nprobe = min(nprobe * 2, n_lists)
 
 
 def embedding_decontamination(

@@ -90,7 +90,7 @@ def cms_sketch(
     are already sketch-shaped — the Exchange ships at most
     ``depth * width`` partial cells per task, never O(rows). Two
     sketches with equal (width, depth, seed) merge by unioning and
-    summing ``cnt`` per (d, cell) — see :func:`cms_merge`."""
+    summing ``cnt`` per (d, cell)."""
     _check_params(width, depth)
     col = F.col(key)
     cells = F.array(*[
@@ -106,29 +106,6 @@ def cms_sketch(
         .groupBy(*by, F.col("p.d").alias("d"),
                  F.col("p.cell").alias("cell"))
         .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def cms_merge(*sketches: DataFrame,
-              by: tuple[str, ...] = ()) -> DataFrame:
-    """Merge sketches built with identical (width, depth, seed):
-    union the cell tables and sum counts per (d, cell) — per group
-    when ``by`` names the grouping columns the sketches were built
-    with. The result is EXACTLY the sketch of the concatenated
-    inputs; to COLLAPSE a grouped sketch into one corpus sketch,
-    select (d, cell, cnt) first and merge without ``by``. Sketches
-    carrying columns not named in ``by`` are rejected (summing
-    across unnamed groups would silently double-count)."""
-    if not sketches:
-        raise ValueError("need at least one sketch")
-    for sk in sketches:
-        _check_sketch_columns(sk, by, ("d", "cell", "cnt"),
-                              "cms_merge")
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy(*by, "d", "cell").agg(
-        F.sum("cnt").alias("cnt")
     )
 
 
@@ -233,7 +210,7 @@ def hll_sketch(
     GROUP whatever the input size; NULL keys skipped. ``by`` adds
     grouping dimensions (an event-time bucket, a partition id) so
     one scan yields the per-bucket sketches a monitoring loop rolls
-    up with :func:`hll_merge` — which accepts the same ``by``. One
+    up by a per-register max over the union. One
     partially-aggregated scan: the Exchange ships at most
     ``groups * m`` (reg, max-rho) partials per task."""
     _hll_check_m(m)
@@ -254,23 +231,6 @@ def hll_sketch(
         .groupBy(*by, "reg")
         .agg(F.max("rho").alias("rho"))
     )
-
-
-def hll_merge(*sketches: DataFrame,
-              by: tuple[str, ...] = ()) -> DataFrame:
-    """Merge register tables built with equal (m, seed): per-register
-    max — exactly the sketch of the concatenated inputs. Pass the
-    same ``by`` to merge per group; call WITHOUT ``by`` on a
-    ``by``-built sketch to collapse the groups into one corpus-wide
-    sketch (select reg/rho first)."""
-    if not sketches:
-        raise ValueError("need at least one sketch")
-    for sk in sketches:
-        _check_sketch_columns(sk, by, ("reg", "rho"), "hll_merge")
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy(*by, "reg").agg(F.max("rho").alias("rho"))
 
 
 def hll_estimate(

@@ -122,24 +122,9 @@ def quality_score(col: str = "text") -> Column:
     ).alias("quality_score")
 
 
-def lang_scores(col: str = "text") -> list[Column]:
-    """Per-language stopword hit-rate + arg-max language with a fixed
-    tie-break (declaration order). Heuristic lang-id per the brief."""
-    out = []
-    for lang, words in LANG_STOPWORDS.items():
-        stops = ", ".join(f"'{w}'" for w in words)
-        out.append(
-            F.expr(
-                f"size(filter(regexp_extract_all(lower({col}),"
-                f" '{TOKEN_RE}', 0), t -> t IN ({stops})))"
-            ).alias(f"hits_{lang}")
-        )
-    return out
-
-
 def lang_guess(col: str = "text") -> Column:
-    """argmax over lang_scores with first-wins tie-break; 'und' when
-    all scores are zero."""
+    """argmax over the per-language stopword counts with first-wins
+    tie-break; 'und' when all counts are zero."""
     langs = list(LANG_STOPWORDS)
     expr = F.lit("und")
     best = F.lit(0)
@@ -617,9 +602,9 @@ def curate_documents(
     Output: id, keep, reasons, and the underlying signals for audit
     (n_tokens, quality_score, lang_guess, dup_line_ratio,
     top_line_share, n_pii). ``full_rows=True`` carries EVERY source
-    column through (same single projection — no join back), the
-    shape :func:`curate_split` needs; verdict column names must not
-    collide with source columns in that mode."""
+    column through (same single projection — no join back), so the
+    kept and dropped rows split on ``keep`` alone; verdict column
+    names must not collide with source columns in that mode."""
     from pyspark.sql.window import Window
 
     verdict_cols = ("reasons", "keep", "n_tokens", "quality_score",
@@ -683,23 +668,6 @@ def curate_documents(
         "n_tokens", "quality_score", "lang_guess",
         "dup_line_ratio", "top_line_share", "n_pii",
     )
-
-
-def curate_split(
-    df: DataFrame,
-    **kwargs,
-) -> tuple[DataFrame, DataFrame]:
-    """Quarantine split for corpora — the documents analogue of
-    ``TableValidationResult.quarantine()``: ``(kept, dropped)`` as
-    two filtered branches of ONE :func:`curate_documents` pass over
-    FULL rows. ``kept`` carries the original columns only (ready to
-    write as the training corpus); ``dropped`` keeps the verdict
-    columns (``reasons`` + audit signals) for triage. Keyword
-    arguments pass through to :func:`curate_documents`."""
-    verdicts = curate_documents(df, full_rows=True, **kwargs)
-    kept = verdicts.where(F.col("keep")).select(*df.columns)
-    dropped = verdicts.where(~F.col("keep"))
-    return kept, dropped
 
 
 def token_budget(
@@ -1061,7 +1029,7 @@ def linear_quality_score(
     ``weights`` is a ``(term, weight:long)`` vocabulary frame; a
     term listed twice would silently double-count, so the join side
     carries an in-plan ``assert_true`` that every term is unique
-    (the same loud-guard contract as ``curate_split``). Scale
+    (a loud failure, never a silent double count). Scale
     shape: one narrow codegen projection builds the term arrays, the
     explode is O(tokens), the vocabulary join is AQE-planned (a
     real-world vocab is ~10^5 rows — AQE broadcasts it on its own;

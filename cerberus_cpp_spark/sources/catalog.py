@@ -1,41 +1,25 @@
 """Table-source abstraction: Iceberg-first with a parquet fallback.
 
 The north_rule targets "Iceberg tables ... checkpointing
-per-Iceberg-partition lineage" with "distribution-drift detection ...
-compared across snapshots". This container ships no Iceberg runtime
-jar, so every Iceberg code path here is exercised only when an
-Iceberg catalog is configured on the session
-(``spark.sql.catalog.<name>`` + ``iceberg-spark-runtime`` on the
-classpath); the parquet branch implements the same three operations
-over hive-layout directories and is what the test suite pins. Nothing
-below imports Iceberg classes directly — everything goes through
-Spark SQL, so the module imports cleanly either way.
+per-Iceberg-partition lineage". This container ships no Iceberg
+runtime jar, so the Iceberg branch is exercised only when an Iceberg
+catalog is configured on the session (``spark.sql.catalog.<name>`` +
+``iceberg-spark-runtime`` on the classpath); the parquet branch is
+what the test suite pins. Nothing below imports Iceberg classes
+directly — everything goes through Spark SQL, so the module imports
+cleanly either way.
 
-Three operations per source (consumed by the ledger/pipeline):
-
-- :func:`load` — the table as a DataFrame, optionally AS OF a
-  snapshot (Iceberg time travel / a plain path per parquet snapshot).
-- :func:`list_partitions` — partition values WITHOUT scanning data:
-  Iceberg's ``<table>.partitions`` metadata table, or hive
-  ``key=value`` directory names listed through the Hadoop FileSystem.
-  Feeds ``ledger.pending_partitions(known_partitions=...)`` so resume
-  planning costs metadata, not a table scan.
-- :func:`list_snapshots` — Iceberg ``<table>.snapshots``; a parquet
-  path has no snapshot log (callers pass explicit per-snapshot paths
-  to :func:`snapshot_drift` instead).
+:func:`load` returns the table as a DataFrame, optionally AS OF a
+snapshot (Iceberg time travel / a plain path per parquet snapshot).
 """
 
 from __future__ import annotations
 
 import re
 from dataclasses import dataclass
-from typing import Optional, Sequence
-from urllib.parse import unquote
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from ..operators.ledger import NULL_PARTITION
 
 
 @dataclass(frozen=True)
@@ -72,110 +56,3 @@ def load(spark: SparkSession, ref: str | TableRef) -> DataFrame:
             reader = reader.option("snapshot-id", r.snapshot)
         return reader.table(r.location)
     return spark.read.parquet(r.location)
-
-
-def _hive_partition_values(
-    spark: SparkSession, path: str, partition_col: str
-) -> Optional[list[str]]:
-    """Partition values from ``<col>=<value>`` directory names via the
-    Hadoop FileSystem — pure metadata, zero data files opened. None
-    when the directory is not hive-partitioned on that column."""
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    conf = jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(conf)
-    if not fs.exists(hpath):
-        return None
-    prefix = f"{partition_col}="
-    out = []
-    for status in fs.listStatus(hpath):
-        if not status.isDirectory():
-            continue
-        name = status.getPath().getName()
-        if not name.startswith(prefix):
-            return None  # mixed/non-hive layout: fall back to a scan
-        raw = name[len(prefix):]
-        # directory names are hive-escaped (%3A for ':', etc.) and
-        # NULL is a sentinel directory; the ledger matches partition
-        # values against the COLUMN's string cast, so both must be
-        # decoded here or its IN-list predicate silently matches
-        # nothing and records empty 'done' verdicts
-        if raw == "__HIVE_DEFAULT_PARTITION__":
-            out.append(NULL_PARTITION)
-        else:
-            out.append(unquote(raw))
-    return sorted(out) if out else None
-
-
-def list_partitions(
-    spark: SparkSession, ref: str | TableRef, partition_col: str
-) -> list[str]:
-    """Distinct partition values, cheapest-available route:
-    Iceberg metadata table > hive directory listing > distinct scan
-    (the last is logged nowhere silent — it is the same cost the
-    ledger would pay anyway)."""
-    r = parse_ref(ref)
-    if r.kind == "iceberg":
-        rows = spark.sql(
-            f"SELECT partition.{partition_col} AS p "
-            f"FROM {r.location}.partitions"
-        ).collect()
-        return sorted({
-            NULL_PARTITION if x["p"] is None else str(x["p"])
-            for x in rows
-        })
-    vals = _hive_partition_values(spark, r.location, partition_col)
-    if vals is not None:
-        return vals
-    rows = (
-        load(spark, r)
-        .select(F.col(partition_col).cast("string").alias("p"))
-        .distinct()
-        .collect()
-    )
-    # NULL partitions map to the ledger's sentinel (dropping them
-    # would leave those rows unvalidated forever on the resume path)
-    return sorted(
-        NULL_PARTITION if x["p"] is None else str(x["p"]) for x in rows
-    )
-
-
-def list_snapshots(spark: SparkSession, ref: str | TableRef) -> list[dict]:
-    """Iceberg snapshot log (id + commit time), newest last. Parquet
-    paths carry no snapshot history — raises with guidance."""
-    r = parse_ref(ref)
-    if r.kind != "iceberg":
-        raise ValueError(
-            "snapshot listing requires an iceberg: ref; for parquet"
-            " sources pass one path per snapshot to snapshot_drift()")
-    rows = spark.sql(
-        f"SELECT snapshot_id, committed_at FROM {r.location}.snapshots"
-        " ORDER BY committed_at"
-    ).collect()
-    return [
-        {"snapshot_id": str(x["snapshot_id"]),
-         "committed_at": str(x["committed_at"])}
-        for x in rows
-    ]
-
-
-def snapshot_drift(
-    spark: SparkSession,
-    ref_old: str | TableRef,
-    ref_new: str | TableRef,
-    col: str,
-    *,
-    probs: Sequence[float] | None = None,
-    rel_tolerance: float = 0.1,
-) -> dict:
-    """Distribution drift between two snapshots of the same logical
-    table (north_star: quantile sketches compared across snapshots):
-    one fixed-size sketch per side (single reduce each), tiny driver
-    compare — never a join between the snapshots."""
-    from ..operators.checks import quantile_drift
-
-    a = load(spark, ref_old)
-    b = load(spark, ref_new)
-    return quantile_drift(a, b, col, probs=probs,
-                          rel_tolerance=rel_tolerance)

@@ -1,7 +1,7 @@
-"""Table-source abstraction (sources/catalog.py): parquet branch is
-fully exercised; Iceberg paths need a configured catalog + runtime
-jar (absent in this container) and are pinned at the parse/ref level
-plus a clear-failure test."""
+"""Table-source abstraction (sources/catalog.py): the parquet branch
+is fully exercised; the Iceberg branch needs a configured catalog +
+runtime jar and is pinned at the parse/ref level. The ledger's
+``known_partitions`` path is pinned on hive-partitioned tables."""
 
 from __future__ import annotations
 
@@ -40,57 +40,22 @@ def hive_table(spark, tmp_path):
     return path
 
 
-def test_list_partitions_from_directory_names(spark, hive_table) -> None:
-    vals = catalog.list_partitions(spark, hive_table, "day")
-    assert vals == ["0", "1", "2", "3"]
-
-
-def test_list_partitions_falls_back_to_scan(spark, tmp_path) -> None:
-    """Non-hive layout (plain files): same answer via distinct scan."""
-    path = str(tmp_path / "flat")
-    spark.range(0, 40).selectExpr(
-        "id", "cast(id % 4 as string) AS day").write.parquet(path)
-    vals = catalog.list_partitions(spark, path, "day")
-    assert vals == ["0", "1", "2", "3"]
-
-
 def test_load_parquet_ref(spark, hive_table) -> None:
     df = catalog.load(spark, f"parquet:{hive_table}")
     assert df.count() == 40
     assert "day" in df.columns
 
 
-def test_list_snapshots_requires_iceberg() -> None:
-    with pytest.raises(ValueError, match="iceberg"):
-        catalog.list_snapshots(None, "parquet:/tmp/x")
-
-
-def test_snapshot_drift_between_paths(spark, tmp_path) -> None:
-    """Two parquet 'snapshots' of one logical table: the value
-    distribution shifts, drift detection sees it; identical snapshots
-    do not drift."""
-    a = str(tmp_path / "snap_a")
-    b = str(tmp_path / "snap_b")
-    spark.range(0, 2000).selectExpr("id", "id % 100 AS v") \
-        .write.parquet(a)
-    spark.range(0, 2000).selectExpr("id", "(id % 100) * 3 AS v") \
-        .write.parquet(b)
-    d = catalog.snapshot_drift(spark, a, b, "v")
-    assert d["drifted"] is True
-    same = catalog.snapshot_drift(spark, a, a, "v")
-    assert same["drifted"] is False
-
-
 def test_pending_partitions_from_catalog_metadata(
     spark, hive_table, tmp_path
 ) -> None:
-    """known_partitions (directory-name listing) replaces the
+    """known_partitions (the hive directory names) replaces the
     discovery scan and composes with ledger resume."""
     ledger = ValidationLedger(spark, str(tmp_path / "ledger"))
     df = catalog.load(spark, hive_table)
     tv = TableValidator({"id": {"type": "integer", "required": True}},
                         allow_unknown=True)
-    known = catalog.list_partitions(spark, hive_table, "day")
+    known = ["0", "1", "2", "3"]
     summary = run_validation(
         df, tv, "day", ledger, known_partitions=known,
         partitions_per_commit=2,
@@ -105,11 +70,13 @@ def test_pending_partitions_from_catalog_metadata(
     assert summary2["partitions_total"] == 0
 
 
-def test_list_partitions_unescapes_and_maps_null(spark, tmp_path) -> None:
-    """Hive-escaped directory names (%3A for ':') and the NULL
-    sentinel directory must decode to the COLUMN's string values /
-    the ledger's NULL_PARTITION — otherwise run_validation's IN-list
-    matches nothing and records empty 'done' verdicts (review
+def test_known_partitions_match_escaped_and_null_values(
+    spark, tmp_path
+) -> None:
+    """Known partitions given as the COLUMN's string values (':' where
+    the hive directory name escapes it as %3A) and the ledger's
+    NULL_PARTITION match their rows — otherwise run_validation's
+    IN-list matches nothing and records empty 'done' verdicts (review
     finding)."""
     from cerberus_cpp_spark.operators.ledger import NULL_PARTITION
 
@@ -117,8 +84,7 @@ def test_list_partitions_unescapes_and_maps_null(spark, tmp_path) -> None:
     df = spark.createDataFrame(
         [(1, "a"), (2, None), (3, "b:c")], "id int, day string")
     df.write.partitionBy("day").mode("overwrite").parquet(path)
-    vals = catalog.list_partitions(spark, path, "day")
-    assert vals == sorted([NULL_PARTITION, "a", "b:c"])
+    vals = sorted([NULL_PARTITION, "a", "b:c"])
 
     # end-to-end: every row validated, no silently-empty partitions
     ledger = ValidationLedger(spark, str(tmp_path / "led"))
@@ -134,13 +100,3 @@ def test_list_partitions_unescapes_and_maps_null(spark, tmp_path) -> None:
     assert done[NULL_PARTITION]["rows"] == 1
     assert done["b:c"]["rows"] == 1 and done["a"]["rows"] == 1
 
-
-def test_scan_fallback_includes_null_partition(spark, tmp_path) -> None:
-    from cerberus_cpp_spark.operators.ledger import NULL_PARTITION
-
-    path = str(tmp_path / "flatnull")
-    spark.createDataFrame(
-        [(1, "x"), (2, None)], "id int, day string"
-    ).write.parquet(path)
-    vals = catalog.list_partitions(spark, path, "day")
-    assert vals == sorted([NULL_PARTITION, "x"])

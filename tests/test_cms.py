@@ -1,8 +1,8 @@
 """Count-min sketch (operators/sketch.py): never-underestimate
 guarantee vs exact counts over hypothesis inputs, exact-recovery
-when width beats cardinality, merge == whole-corpus sketch, NULL
-routing, parameter guards, and the partial-aggregation plan pin
-(the sketch Exchange ships cells, not rows)."""
+when width beats cardinality, NULL routing, parameter guards, and
+the partial-aggregation plan pin (the sketch Exchange ships cells,
+not rows)."""
 
 from __future__ import annotations
 
@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from cerberus_cpp_spark.operators.sketch import (
     cms_estimate,
-    cms_merge,
     cms_sketch,
 )
 
@@ -54,21 +53,6 @@ def test_exact_when_width_dominates(spark) -> None:
     values = ["a"] * 5 + ["b"] * 2 + ["c"]
     est = _est(spark, values, width=1024, depth=4)
     assert est == {"a": 5, "b": 2, "c": 1}
-
-
-def test_merge_equals_whole(spark) -> None:
-    a = spark.createDataFrame(
-        [(f"k{i % 5}",) for i in range(40)], "k string")
-    b = spark.createDataFrame(
-        [(f"k{i % 3}",) for i in range(25)], "k string")
-    kw = dict(width=16, depth=3, seed=7)
-    merged = cms_merge(cms_sketch(a, "k", **kw),
-                       cms_sketch(b, "k", **kw))
-    whole = cms_sketch(a.unionByName(b), "k", **kw)
-    assert sorted(map(tuple, merged.collect())) == \
-        sorted(map(tuple, whole.collect()))
-    with pytest.raises(ValueError, match="at least one"):
-        cms_merge()
 
 
 def test_param_guards(spark) -> None:
@@ -110,7 +94,6 @@ def test_sketch_plan_partial_aggregates(spark) -> None:
 
 from cerberus_cpp_spark.operators.sketch import (  # noqa: E402
     hll_estimate,
-    hll_merge,
     hll_sketch,
 )
 
@@ -130,16 +113,9 @@ def test_hll_accuracy_and_bounds(spark) -> None:
     assert est["denom"] > 0
 
 
-def test_hll_merge_equals_whole_and_dedup_invariance(spark) -> None:
+def test_hll_dedup_invariance(spark) -> None:
     a = spark.range(0, 5_000).select(
         F.concat(F.lit("k"), F.col("id")).alias("k"))
-    b = spark.range(3_000, 8_000).select(
-        F.concat(F.lit("k"), F.col("id")).alias("k"))
-    merged = hll_merge(hll_sketch(a, "k", m=64),
-                       hll_sketch(b, "k", m=64))
-    whole = hll_sketch(a.unionByName(b), "k", m=64)
-    assert sorted(map(tuple, merged.collect())) == \
-        sorted(map(tuple, whole.collect()))
     # duplicates cannot move the sketch: rho is a pure function of
     # the value and registers take max
     dup = a.unionByName(a).unionByName(a)
@@ -278,18 +254,12 @@ def test_stream_sketches_equal_batch(spark, tmp_path) -> None:
 
 
 def test_grouped_sketches(spark) -> None:
-    """by= grouping: one scan yields per-group sketches; collapsing
-    the groups with hll_merge equals the ungrouped sketch; grouped
+    """by= grouping: one scan yields per-group sketches; grouped
     estimates carry the group column."""
     df = spark.createDataFrame(
         [(i % 3, f"k{i % 40}") for i in range(200)],
         "g int, k string")
     gsk = hll_sketch(df, "k", m=32, by=("g",))
-    # collapsing groups == the ungrouped corpus sketch
-    collapsed = hll_merge(gsk.select("reg", "rho"))
-    whole = hll_sketch(df, "k", m=32)
-    assert sorted(map(tuple, collapsed.collect())) == \
-        sorted(map(tuple, whole.collect()))
     est = hll_estimate(gsk, m=32, by=("g",)).collect()
     assert {r["g"] for r in est} == {0, 1, 2}
     assert all(r["n_set"] + r["n_zero"] == 32 for r in est)
@@ -310,7 +280,7 @@ def test_grouped_sketch_guards_and_grouped_estimates(spark) -> None:
     """A grouped sketch passed WITHOUT by= is rejected (the min over
     per-group counts would silently UNDERESTIMATE, breaking the CMS
     one-sided guarantee); with by= the per-group estimates hold the
-    guarantee per group; cms_merge with by= merges per group."""
+    guarantee per group."""
     df = spark.createDataFrame(
         [("a" if i % 2 else "b", "k") for i in range(20)],
         "g string, k string")
@@ -319,15 +289,11 @@ def test_grouped_sketch_guards_and_grouped_estimates(spark) -> None:
     with pytest.raises(ValueError, match="sketch columns"):
         cms_estimate(gsk, keys, "k", width=8, depth=2)
     with pytest.raises(ValueError, match="sketch columns"):
-        cms_merge(gsk)
-    with pytest.raises(ValueError, match="sketch columns"):
         hll_estimate(hll_sketch(df, "k", m=16, by=("g",)), m=16)
     est = {r["g"]: r["est"]
            for r in cms_estimate(gsk, keys, "k", width=8, depth=2,
                                  by=("g",)).collect()}
     assert est == {"a": 10, "b": 10}
-    merged = cms_merge(gsk, gsk, by=("g",)).collect()
-    assert all(r["cnt"] == 20 for r in merged)
 
 
 def test_kmv_set_ops(spark) -> None:

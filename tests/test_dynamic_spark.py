@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from cerberus_cpp_spark.dynamic.interpreter import Validator
 from cerberus_cpp_spark.dynamic.spark import (
     NOT_JSON_MSG,
+    TOO_DEEP_MSG,
     json_violations,
     validate_json,
 )
@@ -112,6 +113,52 @@ def test_invalid_json_and_non_mapping(spark) -> None:
     assert got[1]["violations"][0]["message"] == "document is not a mapping"
     assert got[2]["violations"][0]["message"] == "document is not a mapping"
     assert got[3]["valid"] and got[3]["violations"] == []
+
+
+def test_deeply_nested_document_is_one_violation_row(spark) -> None:
+    """A document nested past the recursion limit — unparsable (5,000
+    open brackets) or parsable but 500 dicts deep — is one violation
+    row at ``^``, never a failed job."""
+    deep = '{"a": ' * 500 + "1" + "}" * 500
+    df = spark.createDataFrame(
+        [(0, '{"a": 1}'), (1, "[" * 5000), (2, deep)],
+        "doc_id int, doc string",
+    )
+    got = {r["doc_id"]: r for r in validate_json(
+        df, {"a": {"type": "integer"}}, include_normalized=True
+    ).collect()}
+    assert len(got) == 3
+    assert got[0]["valid"] and got[0]["normalized"] == '{"a":1}'
+    for i in (1, 2):
+        assert not got[i]["valid"] and got[i]["n_violations"] == 1
+        assert got[i]["violations"] == [("^", TOO_DEEP_MSG)]
+        assert got[i]["normalized"] is None
+
+
+def test_unchecked_validator_uses_registered_schema_as_given(
+    monkeypatch,
+) -> None:
+    """validate_schema=False (the worker Validator of validate_json,
+    whose registry is normalized once on the driver) uses a
+    registered schema as given: no meta-validation per document."""
+    img = {"w": {"type": "integer"}, "h": {"type": "integer"},
+           "fmt": {"type": "string"}}
+    driver = Validator()
+    schema = driver.normalized_schema(
+        {"id": {"type": "integer"}, "image": {"schema": "img"}})
+    calls = []
+    real = Validator.normalized_schema
+    monkeypatch.setattr(Validator, "normalized_schema",
+                        lambda self, s: calls.append(s) or real(self, s))
+    v = Validator(schema, validate_schema=False)
+    v.register_schema("img", driver.normalized_schema(img))
+    calls.clear()
+    for doc in ({"id": 1, "image": {"w": 2, "h": 3, "fmt": "png"}},
+                {"id": 2, "image": {"w": "x"}}):
+        v.validate(doc)
+    assert calls == []
+    assert [(e.path, e.message) for e in v.errors] == [
+        ("^.image.w", "type-rule violated: expected integer")]
 
 
 def test_normalized_output_and_exploded_violations(spark) -> None:

@@ -1,6 +1,6 @@
 """Round-3 regression pins: single-pass t-digest drift, shared
-fan-out gate, count-free IVF sizing, nprobe autotune, and the two
-decode-hygiene ADVICE findings (zero-dim phash, per-clip AVI skip)."""
+fan-out gate, count-free IVF sizing, and the two decode-hygiene
+ADVICE findings (zero-dim phash, per-clip AVI skip)."""
 
 from __future__ import annotations
 
@@ -19,16 +19,32 @@ from cerberus_cpp_spark.operators.text import text_profile
 # ---------------------------------------------------------------------------
 
 
+def _digest(df, col, compression):
+    """The single-column digest: one side of ``tdigests_of``."""
+    return checks.tdigests_of(df, [col], compression=compression)[col]
+
+
+_PROBS = (0.01, 0.05, 0.25, 0.5, 0.75, 0.95, 0.99)
+
+
+def _tagged_pair(a, b, compression):
+    """Both snapshots' digests from one scan of their tagged union."""
+    tagged = a.selectExpr("0 as side", "v").unionByName(
+        b.selectExpr("1 as side", "v"))
+    return checks.tdigest_pair(tagged, "side", "v",
+                               compression=compression)
+
+
 def test_tdigest_pair_matches_two_single_digests(spark):
-    """tdigest_pair (ONE scan) must equal two tdigest_of jobs in the
-    exact regime, where results are order-independent."""
+    """tdigest_pair (ONE scan) must equal two single-column digests in
+    the exact regime, where results are order-independent."""
     df = spark.range(0, 60_000, 1, 8).selectExpr(
         "cast(id % 2 as long) as side",
         "cast(pmod(id, 31) as double) as v",
     )
     da, db = checks.tdigest_pair(df, "side", "v", compression=200)
-    ra = checks.tdigest_of(df.where("side = 0"), "v", compression=200)
-    rb = checks.tdigest_of(df.where("side = 1"), "v", compression=200)
+    ra = _digest(df.where("side = 0"), "v", 200)
+    rb = _digest(df.where("side = 1"), "v", 200)
     assert np.array_equal(da.means, ra.means)
     assert np.array_equal(da.weights, ra.weights)
     assert np.array_equal(db.means, rb.means)
@@ -36,30 +52,32 @@ def test_tdigest_pair_matches_two_single_digests(spark):
 
 
 def test_tdigest_drift_matches_two_single_digests(spark):
-    """tdigest_drift tags both snapshots into ONE scan; its quantiles
-    agree with two separate tdigest_of digests."""
+    """Drift of two separate snapshots tags them into ONE scan
+    (tdigest_pair over their side-tagged union); its quantiles agree
+    with two separate single-column digests."""
     base = spark.range(0, 80_000, 1, 8).selectExpr(
         "id",
         "cast(pmod(id * 48271, 9973) as double) as v",
     )
     a, b = base.where("id % 2 = 0"), base.where("id % 2 = 1")
-    one = checks.tdigest_drift(a, b, "v", compression=100)
-    da = checks.tdigest_of(a, "v", compression=100)
-    db = checks.tdigest_of(b, "v", compression=100)
+    ta, tb = _tagged_pair(a, b, 100)
+    da, db = _digest(a, "v", 100), _digest(b, "v", 100)
     # inexact regime digests are partition-layout-dependent, so
     # equality isn't required — only agreement within sketch accuracy
-    for p, qa, qb in zip(one["probs"], one["quantiles_a"],
-                         one["quantiles_b"]):
-        assert qa == pytest.approx(da.quantile(p), rel=0.02, abs=20.0)
-        assert qb == pytest.approx(db.quantile(p), rel=0.02, abs=20.0)
+    for p in _PROBS:
+        assert ta.quantile(p) == pytest.approx(da.quantile(p), rel=0.02,
+                                               abs=20.0)
+        assert tb.quantile(p) == pytest.approx(db.quantile(p), rel=0.02,
+                                               abs=20.0)
     # exact regime (31 heavy levels at compression 200): bit for bit
     lv = base.selectExpr("id", "cast(pmod(id, 31) as double) as v")
     a, b = lv.where("id % 2 = 0"), lv.where("id % 3 = 0")
-    one = checks.tdigest_drift(a, b, "v", compression=200)
-    da = checks.tdigest_of(a, "v", compression=200)
-    db = checks.tdigest_of(b, "v", compression=200)
-    assert one["quantiles_a"] == [da.quantile(p) for p in one["probs"]]
-    assert one["quantiles_b"] == [db.quantile(p) for p in one["probs"]]
+    ta, tb = _tagged_pair(a, b, 200)
+    da, db = _digest(a, "v", 200), _digest(b, "v", 200)
+    assert [ta.quantile(p) for p in _PROBS] == \
+        [da.quantile(p) for p in _PROBS]
+    assert [tb.quantile(p) for p in _PROBS] == \
+        [db.quantile(p) for p in _PROBS]
 
 
 def test_tdigest_pair_deterministic(spark):
@@ -147,21 +165,6 @@ def test_ivf_default_sizing_deterministic_without_count(spark):
     _, c1 = SIM.ivf_index(src, n_lists=8, seed=11)
     _, c2 = SIM.ivf_index(src, n_lists=8, seed=11)
     assert np.array_equal(c1, c2)
-
-
-def test_tune_nprobe_meets_target(spark):
-    emb = _clustered_embeddings(spark)
-    assigned, cents = SIM.ivf_index(emb, n_lists=8, seed=11)
-    assigned = assigned.localCheckpoint(eager=False)
-    qs = emb.where("vec_id < 24")
-    nprobe, recall = SIM.tune_nprobe(
-        assigned, cents, qs, target_recall=0.95, k=3)
-    assert recall >= 0.95
-    assert 1 <= nprobe <= 8
-    # full-probe is exact, so a 1.0 target always terminates
-    np_all, r_all = SIM.tune_nprobe(
-        assigned, cents, qs, target_recall=1.0, k=3)
-    assert r_all == 1.0
 
 
 # ---------------------------------------------------------------------------
@@ -285,40 +288,6 @@ def test_clusters_empty_pairs(spark):
 
     out = near_duplicate_clusters(_pairs_df(spark, []))
     assert out.collect() == []
-
-
-def test_near_duplicate_groups_end_to_end(spark):
-    """LSH pipeline → components: three exact-style variants of one
-    doc form one cluster with the min id as survivor."""
-    from cerberus_cpp_spark.operators.dedup import near_duplicate_groups
-
-    base = ("alpha beta gamma delta epsilon zeta eta theta iota "
-            "kappa lambda mu nu xi omicron pi rho sigma tau")
-    rows = [(1, base), (2, base + " upsilon"), (3, base + " phi chi"),
-            (50, "entirely different words about spark shuffles and "
-                 "partitions in a distributed engine context")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = near_duplicate_groups(df, threshold=0.5, max_bucket=None)
-    got = {r["doc_id"]: r["keep_id"] for r in out.collect()}
-    assert got == {1: 1, 2: 1, 3: 1}
-
-
-def test_tune_nprobe_sf01_recall_pin(spark):
-    """VERDICT done-criterion: recall-vs-target pin at sf0.1 on the
-    real embeddings table (2000 x 64)."""
-    import os
-
-    path = "/root/testdata/sf0.1/embeddings.parquet"
-    if not os.path.exists(path):
-        pytest.skip("sf0.1 testdata not present")
-    emb = spark.read.parquet(path)
-    assigned, cents = SIM.ivf_index(emb, n_lists=16, seed=11)
-    assigned = assigned.localCheckpoint(eager=False)
-    qs = emb.where("vec_id < 32")
-    nprobe, recall = SIM.tune_nprobe(
-        assigned, cents, qs, target_recall=0.9, k=5)
-    assert recall >= 0.9
-    assert 1 <= nprobe <= 16
 
 
 # ---------------------------------------------------------------------------

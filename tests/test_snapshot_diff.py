@@ -54,8 +54,9 @@ def test_multi_column_key(spark) -> None:
 
 
 def test_default_compare_cols_skip_type_changed(spark) -> None:
-    """A column whose type changed between snapshots belongs to
-    schema_drift; the default inference must skip it, not crash."""
+    """A column whose type changed between snapshots is a schema
+    delta, not a value diff; the default inference must skip it, not
+    crash."""
     old = spark.createDataFrame([(1, 5, "a")], "k int, t int, s string")
     new = spark.createDataFrame([(1, "5", "b")],
                                 "k int, t string, s string")

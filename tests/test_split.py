@@ -1,7 +1,7 @@
 """Deterministic split/sample operators: md5-bucket arithmetic parity
-with DuckDB, layout-invariance, weight accuracy, stratified exact and
-hash paths, cluster-safe assignment, and plan shape (narrow paths add
-zero Exchanges)."""
+with DuckDB, layout-invariance, weight accuracy, the stratified exact
+path, cluster-safe assignment, and plan shape (narrow paths add zero
+Exchanges)."""
 
 from __future__ import annotations
 
@@ -117,8 +117,6 @@ def test_assign_single_split_and_errors(spark) -> None:
         sp._thresholds({})
     with pytest.raises(ValueError):
         sp._thresholds({"a": -1.0, "b": 2.0})
-    with pytest.raises(ValueError):
-        sp.hash_sample(df, "k", 1.5)
 
 
 def test_assign_no_exchange(spark, tmp_path) -> None:
@@ -129,10 +127,7 @@ def test_assign_no_exchange(spark, tmp_path) -> None:
     df = spark.read.parquet(p)
     for out in (
         sp.assign_splits(df, "k", {"a": 0.5, "b": 0.5}),
-        sp.hash_sample(df, "k", 0.25),
-        sp.stratified_hash_sample(
-            df.withColumn("s", F.col("k") % 3), "s", {0: 0.5}, "k"
-        ),
+        sp.weighted_hash_sample(df, F.lit(0.25), "k"),
     ):
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan
@@ -141,35 +136,6 @@ def test_assign_no_exchange(spark, tmp_path) -> None:
 # ---------------------------------------------------------------------------
 # sampling
 # ---------------------------------------------------------------------------
-
-def test_hash_sample_fraction_and_stability(spark) -> None:
-    df = _keys(spark, 20000)
-    kept = sp.hash_sample(df, "k", 0.2, seed=5)
-    n = kept.count()
-    assert abs(n / 20000 - 0.2) < 0.01
-    # monotone: a smaller fraction is a subset of a larger one
-    small = {r["k"] for r in sp.hash_sample(df, "k", 0.1, seed=5).collect()}
-    big = {r["k"] for r in kept.collect()}
-    assert small <= big
-
-
-def test_stratified_hash_sample(spark) -> None:
-    df = _keys(spark, 9000).withColumn("s", (F.col("k") % 3).cast("int"))
-    out = sp.stratified_hash_sample(
-        df, "s", {0: 0.5, 1: 0.1}, "k", seed=2
-    )
-    counts = {
-        r["s"]: r["count"] for r in out.groupBy("s").count().collect()
-    }
-    assert abs(counts[0] / 3000 - 0.5) < 0.05
-    assert abs(counts[1] / 3000 - 0.1) < 0.03
-    assert 2 not in counts  # default_fraction=0 drops unlisted strata
-    # keep unlisted strata fully when asked
-    full = sp.stratified_hash_sample(
-        df, "s", {0: 0.5}, "k", default_fraction=1.0
-    )
-    assert full.where("s = 2").count() == 3000
-
 
 def test_stratified_exact_sample(spark) -> None:
     df = _keys(spark, 3000).withColumn("s", (F.col("k") % 4).cast("int"))

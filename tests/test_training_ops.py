@@ -435,11 +435,11 @@ def test_redact_pii_property_no_residual_matches(spark) -> None:
     check()
 
 
-def test_curate_split(spark) -> None:
-    from cerberus_cpp_spark.operators.text import (
-        curate_documents,
-        curate_split,
-    )
+def test_curate_documents_full_rows(spark) -> None:
+    """full_rows=True carries the source columns through and agrees
+    with the id-only verdict frame; a verdict column name colliding
+    with a source column is refused."""
+    from cerberus_cpp_spark.operators.text import curate_documents
 
     long_en = ("the quick brown fox is one of the fine animals that "
                "live in a forest and the story goes on and on with "
@@ -447,27 +447,20 @@ def test_curate_split(spark) -> None:
     df = spark.createDataFrame(
         [(0, long_en, "m0"), (1, "tiny", "m1"), (100, long_en, "m2")],
         "doc_id long, text string, meta string")
-    kept, dropped = curate_split(df)
-    assert kept.columns == ["doc_id", "text", "meta"]
-    assert [r["doc_id"] for r in kept.collect()] == [0]
-    dr = {r["doc_id"]: r for r in dropped.collect()}
-    assert set(dr) == {1, 100}
-    # dropped keeps source columns AND the verdict for triage
-    assert dr[100]["meta"] == "m2"
-    assert dr[100]["reasons"] == "duplicate"
-    # row conservation across the split
-    assert kept.count() + dropped.count() == df.count()
     # full_rows collision guard
     bad = df.withColumnRenamed("meta", "reasons")
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="collide"):
+    with pytest.raises(ValueError, match="collide"):
         curate_documents(bad, full_rows=True)
     # full_rows verdicts agree with the id-only frame
     slim = {r["doc_id"]: (r["keep"], r["reasons"])
             for r in curate_documents(df).collect()}
-    full = {r["doc_id"]: (r["keep"], r["reasons"])
+    full = {r["doc_id"]: (r["keep"], r["reasons"], r["meta"])
             for r in curate_documents(df, full_rows=True).collect()}
-    assert slim == full
+    assert {k: v[:2] for k, v in full.items()} == slim
+    assert slim[0][0] and not slim[1][0]
+    assert slim[100] == (False, "duplicate")
+    # source columns ride along with the verdict for triage
+    assert full[100][2] == "m2"
 
 
 # ---------------------------------------------------------------------------
