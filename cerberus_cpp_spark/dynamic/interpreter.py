@@ -195,6 +195,9 @@ class _Policy:
 
 
 _POLICY_KEYS = ("allow_unknown", "purge_unknown", "require_all")
+#: bookkeeping key on a rule map whose ``nullable: false`` the
+#: meta-schema injected (see :meth:`Validator.normalized_schema`)
+_INJECTED = "__nullable_injected__"
 
 
 @dataclass
@@ -239,6 +242,9 @@ class Validator:
         self.schema_schema: dict[str, dict] = {}
         self._state: _State | None = None
         self._meta: Validator | None = None  # built by _meta_one
+        # the constructor schema (key None) and registered schemas,
+        # normalized on first use; every register_* call empties it
+        self._normalized: dict[str | None, dict] = {}
         _register_builtin_rules(self)
 
     @classmethod
@@ -269,25 +275,22 @@ class Validator:
         self._rules[(priority, name)] = fn
         if name not in self.schema_schema or meta_schema:
             self.schema_schema[name] = meta_schema
+        self._normalized.clear()
 
     def register_type(self, adapter: TypeAdapter) -> None:
         self.types[adapter.name] = adapter
+        self._normalized.clear()
 
     def register_schema(self, name: str, schema: dict) -> None:
         self.schema_registry[name] = schema
+        self._normalized.clear()
 
     # -- public validation entry points --------------------------------
     def validate(self, document: Any, schema: dict | str | None = None) -> bool:
-        if schema is None:
-            schema = self.schema
-        if isinstance(schema, str):
-            if schema not in self.schema_registry:
-                raise SchemaError(f"unknown registered schema: {schema}")
-            schema = self.schema_registry[schema]
-        if schema is None:
-            raise SchemaError("no schema given")
-        if self.validate_schema:
-            schema = self.normalized_schema(schema)
+        if schema is None or isinstance(schema, str):
+            schema = self._stored(schema)
+        elif self.validate_schema:
+            schema = self.normalized_schema(schema)  # a per-call schema
         if not isinstance(document, dict):
             # top-level documents are always mappings (doc/index.rst:88)
             self._state = _State(root=document)
@@ -315,6 +318,26 @@ class Validator:
         return self._state.root if self._state else None
 
     # -- schema meta-validation ----------------------------------------
+    def _stored(self, name: str | None) -> dict:
+        """The constructor schema (``name`` None) or the registered
+        schema ``name``: under ``validate_schema`` normalized on first
+        use and kept until the next ``register_*`` call."""
+        raw = self.schema if name is None else self.schema_registry.get(name)
+        if raw is None:
+            raise SchemaError("no schema given" if name is None
+                              else f"unknown registered schema: {name}")
+        if not self.validate_schema:
+            return raw
+        if name not in self._normalized:
+            self._normalized[name] = self.normalized_schema(raw)
+        return self._normalized[name]
+
+    def normalized_schemas(self) -> tuple[dict, dict[str, dict]]:
+        """The constructor schema and every registered schema, as
+        :meth:`normalized_schema` returns them, each normalized once."""
+        return self._stored(None), {
+            name: self._stored(name) for name in self.schema_registry}
+
     def normalized_schema(self, schema: dict) -> dict:
         """Meta-validate + normalize a user schema; raise SchemaError.
 
@@ -326,6 +349,15 @@ class Validator:
         ``schema``/``items``/``keysrules``/``valuesrules`` arguments
         (the reference silently skips nested meta-validation — an
         unpinned gap we close; divergence documented in SURVEY.md §5).
+
+        A ``nullable: false`` the meta-schema injected (the user's rule
+        map has no ``nullable``) is tagged ``__nullable_injected__:
+        True``, so ``presence="null"`` compiles it inert (SURVEY.md §7:
+        the undefined/null collapse); rules ignore the tag. The result
+        is a fixed point: normalizing it again keeps every tag and
+        returns an equal tree. ``validate`` normalizes the constructor
+        schema and each registered schema once (:meth:`_stored`); a
+        schema passed to ``validate`` is normalized on every call.
         """
         if not isinstance(schema, dict):
             raise SchemaError(f"schema must be a mapping, got {type(schema)}")
@@ -358,15 +390,22 @@ class Validator:
     def _meta_one(self, rule_map: dict) -> dict:
         """Meta-validate one rule map against the schema-of-schemas
         with one inner validator, reused for every rule map, then
-        normalize the rule maps nested in it."""
+        normalize the rule maps nested in it and tag an injected
+        ``nullable``."""
         if self._meta is None:
             self._meta = Validator(self.schema_schema, validate_schema=False)
         inner = self._meta
         inner.types = self.types
         inner.schema_registry = self.schema_registry
-        if not inner.validate(rule_map):
+        if not inner.validate(
+                {k: v for k, v in rule_map.items() if k != _INJECTED}):
             raise SchemaError(inner.errors)
-        return self._normalize_nested(inner.get_document())
+        out = self._normalize_nested(inner.get_document())
+        if rule_map.get(_INJECTED) or (
+                "nullable" not in rule_map
+                and not _truthy(out.get("nullable"))):
+            out[_INJECTED] = True
+        return out
 
     # -- recursive traversal (reference validateDict/validateItem) -----
     def _validate_dict(
@@ -637,15 +676,13 @@ def _rule_schema(ctx: RuleCtx) -> None:
     """``rules.hh:519-573``: dict doc → recurse field-map; list doc →
     apply one rule-map to every element; scalar arg → registered
     schema lookup (``validator.hh:408-415``), meta-validated like the
-    top-level schema: only under ``validate_schema``."""
+    top-level schema: once, and only under ``validate_schema``."""
     arg = ctx.arg
     if isinstance(arg, str):
-        arg = ctx.validator.schema_registry.get(arg)
-        if arg is None:
-            ctx.raise_error(f"unknown registered schema: {ctx.arg}")
+        if arg not in ctx.validator.schema_registry:
+            ctx.raise_error(f"unknown registered schema: {arg}")
             return
-        if ctx.validator.validate_schema:
-            arg = ctx.validator.normalized_schema(arg)
+        arg = ctx.validator._stored(arg)
     if isinstance(ctx.value, dict):
         ctx.validator._validate_dict(ctx.value, arg, ctx.path, ctx.policy)
     elif isinstance(ctx.value, list):
@@ -742,5 +779,5 @@ def _register_builtin_rules(v: Validator) -> None:
     v.register_rule("require_all", {"type": "boolean"}, _rule_meta)
     v.register_rule("required", {"type": "boolean"}, _rule_required)
     v.register_rule("schema", {}, _rule_schema)
-    v.register_rule("type", {}, _rule_type)
+    v.register_rule("type", {}, _rule_type, P.TYPECHECKING)
     v.register_rule("valuesrules", {"type": "dict"}, _rule_valuesrules)

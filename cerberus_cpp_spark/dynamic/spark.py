@@ -11,9 +11,11 @@ column, so heterogeneous documents validate distributed.
 
 Scale design:
 
-- The schema is meta-validated + normalized ONCE on the driver
-  (``SchemaError`` raised before anything ships); workers receive the
-  normalized rule tree and run with ``validate_schema=False``.
+- The schema and the registry are meta-validated + normalized ONCE
+  on the driver, by the driver ``Validator``'s
+  ``normalized_schemas()`` (``SchemaError`` raised before anything
+  ships); workers receive those normalized trees and run with
+  ``validate_schema=False``.
 - ONE ``Validator`` per worker task, reused across every document in
   its partition (rule/type registries built once, not per row).
 - The stage is a narrow projection — no shuffle, embarrassingly
@@ -84,18 +86,14 @@ def validate_json(
     custom rules/types there; it must be picklable)."""
     # driver-side meta-validation: fail fast, ship the NORMALIZED tree
     driver_v = Validator(
-        allow_unknown=allow_unknown, purge_unknown=purge_unknown,
+        schema, allow_unknown=allow_unknown, purge_unknown=purge_unknown,
         require_all=require_all,
     )
     if configure is not None:
         configure(driver_v)
     for name, s in (registry or {}).items():
         driver_v.register_schema(name, s)
-    norm_schema = driver_v.normalized_schema(schema)
-    norm_registry = {
-        name: driver_v.normalized_schema(s)
-        for name, s in (registry or {}).items()
-    }
+    norm_schema, norm_registry = driver_v.normalized_schemas()
 
     if id_cols is None:
         id_cols = tuple(c for c in df.columns if c != doc_col)

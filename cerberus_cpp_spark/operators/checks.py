@@ -234,19 +234,6 @@ def referential_chain(
 _DRIFT_PROBS = (0.01, 0.05, 0.25, 0.5, 0.75, 0.95, 0.99)
 
 
-def _drift_sides(a: DataFrame, b: DataFrame, exprs: list) -> DataFrame:
-    """``(side, v)`` rows of both snapshots in one frame: expression
-    ``k`` of ``a`` is side ``2k``, of ``b`` side ``2k + 1``. The melt
-    (``posexplode``) is narrow, so two snapshots over any number of
-    columns cost one read of each, in one scan."""
-    def melt(df: DataFrame, tag: int) -> DataFrame:
-        return df.select(F.posexplode(F.array(
-            *[e.cast("double") for e in exprs])).alias("k", "v")
-        ).select((F.col("k") * 2 + tag).alias("side"), "v")
-
-    return melt(a, 0).unionByName(melt(b, 1))
-
-
 def _tdigest_sides(src: DataFrame, sides: int, comp: int) -> dict:
     """THE distributed t-digest (functions/tdigest.py — the sketch the
     north_star names for snapshot drift): ``src`` is ``(side, v)``;
@@ -385,11 +372,14 @@ def quantile_drift(
     """Compare quantile vectors of two snapshots; drift = max relative
     gap across probed quantiles (t-digest-style snapshot comparison
     per north_star). Both fixed-size ``percentile_approx`` sketches
-    (KLL family) come from ONE aggregate over the tagged union — one
-    tiny reduce, never moving row data — and the two tiny vectors are
-    compared driver-side."""
+    (KLL family) come from ONE aggregate over the union of both
+    snapshots, tagged ``side`` 0 and 1 — one tiny reduce, never moving
+    row data — and the two tiny vectors are compared driver-side."""
     probs = list(probs or _DRIFT_PROBS)
-    row = _drift_sides(df_a, df_b, [F.col(col)]).agg(*[
+    v = F.col(col).cast("double").alias("v")
+    both = df_a.select(F.lit(0).alias("side"), v).unionByName(
+        df_b.select(F.lit(1).alias("side"), v))
+    row = both.agg(*[
         F.percentile_approx(F.when(F.col("side") == s, F.col("v")),
                             probs, 10000).alias(f"q{s}")
         for s in (0, 1)

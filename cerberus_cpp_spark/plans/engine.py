@@ -1,9 +1,7 @@
 """TableValidator — the public Spark-facing API of the engine.
 
-One object owns: schema meta-validation (driver-side, via the dynamic
-interpreter — reference ``validator.hh:159-175``), the columnar
-compilation, and the result surfaces the reference exposes per
-document re-expressed per table:
+One object owns the columnar compilation and the result surfaces the
+reference exposes per document, re-expressed per table:
 
 - ``validate(df)`` → :class:`TableValidationResult` with
   ``annotated`` (input + violations array + per-row verdict — the
@@ -13,6 +11,12 @@ document re-expressed per table:
   reference's ``getDocument()``, ``validator.hh:200-203``), and
   ``partition_verdicts()`` (per-partition pass/fail aggregation for
   the north-rule ledger).
+
+Schema meta-validation and normalization (reference
+``validator.hh:159-175``) belong to the dynamic interpreter alone: the
+compiler reads the rule tree and the registry a ``Validator``
+normalized, ``nullable`` tags included, and the engine keeps no schema
+state of its own.
 
 Scale notes: the validation pass is a single narrow projection — no
 shuffle, embarrassingly parallel, AQE-friendly. ``is_valid()`` uses a
@@ -31,13 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..dynamic.interpreter import (
-    Priority,
-    Validator,
-    _Policy,
-    _schema_form,
-    _truthy,
-)
+from ..dynamic.interpreter import Priority, Validator, _Policy
 from .compiler import (
     CompilerOpts,
     FieldCtx,
@@ -52,44 +50,13 @@ from .compiler import (
 BOOKKEEPING_COLS = ("__defined__",)
 
 
-def _mark_injected_nullable(raw: Any, rules: dict) -> dict:
-    """Tag a ``nullable: false`` the meta-schema injected into the rule
-    map ``rules`` (vs one the user wrote in ``raw``) so presence='null'
-    mode can keep it inert (SURVEY.md §7: the undefined/null collapse),
-    recursing wherever the meta-normalizer did."""
-    raw = raw if isinstance(raw, dict) else {}
-    out = dict(rules)
-    if "nullable" not in raw and not _truthy(out.get("nullable", False)):
-        out["__nullable_injected__"] = True
-    sub, form = out.get("schema"), _schema_form(out)
-    if isinstance(sub, dict) and form == "list":
-        out["schema"] = _mark_injected_nullable(raw.get("schema"), sub)
-    elif isinstance(sub, dict) and form == "dict":
-        out["schema"] = _mark_fields(raw.get("schema"), sub)
-    for key in ("keysrules", "valuesrules"):
-        if isinstance(out.get(key), dict):
-            out[key] = _mark_injected_nullable(raw.get(key), out[key])
-    if isinstance(out.get("items"), list):
-        raw_items = raw.get("items")
-        raw_items = raw_items if isinstance(raw_items, list) else []
-        out["items"] = [
-            _mark_injected_nullable(
-                raw_items[i] if i < len(raw_items) else None, s)
-            if isinstance(s, dict) else s
-            for i, s in enumerate(out["items"])
-        ]
-    return out
-
-
-def _mark_fields(raw: Any, schema: dict) -> dict:
-    """:func:`_mark_injected_nullable` over every field of a field map."""
-    raw = raw if isinstance(raw, dict) else {}
-    return {f: _mark_injected_nullable(raw.get(f), r)
-            for f, r in schema.items()}
-
-
 class TableValidator:
-    """Validate DataFrames against a cerberus-style schema."""
+    """Validate DataFrames against a cerberus-style schema.
+
+    The schema, the registry and the policy flags live in one
+    interpreter ``Validator`` (a deep copy of ``schema``); ``schema``
+    and the compiler's registry are that validator's normalized trees,
+    and custom rules and types register on it too."""
 
     def __init__(
         self,
@@ -103,20 +70,17 @@ class TableValidator:
         registry: dict[str, dict] | None = None,
     ) -> None:
         self._interp = Validator(
+            copy.deepcopy(schema),
             allow_unknown=allow_unknown,
             purge_unknown=purge_unknown,
             require_all=require_all,
         )
         for name, s in (registry or {}).items():
             self._interp.register_schema(name, s)
-        self.raw_schema = copy.deepcopy(schema)
-        self._schema_cache: dict | None = None
         self.presence = presence
         self.extra_cols = tuple(extra_cols)
         self._column_rules: dict[str, Callable] = {}
         self._spark_types: dict[str, Callable] = {}
-        self._registry = dict(registry or {})
-        self._registry_normalized: dict[str, dict] | None = None
 
     @classmethod
     def from_yaml(cls, source: str, **kwargs) -> "TableValidator":
@@ -137,15 +101,12 @@ class TableValidator:
 
     @property
     def schema(self) -> dict:
-        """Meta-validated + normalized schema. Validation is LAZY (on
-        first use, like the reference's validate-time check,
+        """The schema as the interpreter meta-validated + normalized
+        it (:meth:`Validator.normalized_schema`). Validation is LAZY
+        (on first use, like the reference's validate-time check,
         ``validator.hh:159-179``) so custom rules/types registered
         after construction participate in meta-validation."""
-        if self._schema_cache is None:
-            self._schema_cache = _mark_fields(
-                self.raw_schema,
-                self._interp.normalized_schema(self.raw_schema))
-        return self._schema_cache
+        return self._interp.normalized_schemas()[0]
 
     # -- extension API (parity with registerRule/registerType,
     #    validator.hh:56-95, but compiling to Columns) ----------------
@@ -161,7 +122,6 @@ class TableValidator:
         self._interp.register_rule(
             name, meta_schema, interpreter_fn or (lambda ctx: None), priority
         )
-        self._schema_cache = None  # re-meta-validate with the new rule
 
     def register_spark_type(
         self,
@@ -198,21 +158,12 @@ class TableValidator:
             from ..functions.pytypes import TypeAdapter
 
             self._interp.register_type(TypeAdapter(name, py_decode))
-        self._schema_cache = None
-
-    def _normalized_registry(self) -> dict[str, dict]:
-        if self._registry_normalized is None:
-            self._registry_normalized = {
-                name: _mark_fields(s, self._interp.normalized_schema(s))
-                for name, s in self._registry.items()
-            }
-        return self._registry_normalized
 
     # -- compilation ---------------------------------------------------
     def _opts(self) -> CompilerOpts:
         return CompilerOpts(
             presence=self.presence,
-            schema_registry=self._normalized_registry(),
+            schema_registry=self._interp.normalized_schemas()[1],
             column_rules=self._column_rules,
             spark_types=self._spark_types,
         )

@@ -1,11 +1,8 @@
-"""Table-source abstraction (sources/catalog.py): the parquet branch
-is fully exercised; the Iceberg branch needs a configured catalog +
-runtime jar and is pinned at the parse/ref level. The ledger's
-``known_partitions`` path is pinned on hive-partitioned tables."""
+"""The ledger's ``known_partitions`` path on hive-partitioned parquet
+tables: partition values taken from catalog metadata replace the
+discovery scan."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 
@@ -14,20 +11,6 @@ from cerberus_cpp_spark.operators.ledger import (
     run_validation,
 )
 from cerberus_cpp_spark.plans.engine import TableValidator
-from cerberus_cpp_spark.sources import catalog
-
-
-def test_parse_ref_forms() -> None:
-    r = catalog.parse_ref("iceberg:main.db.images@123456")
-    assert (r.kind, r.location, r.snapshot) == \
-        ("iceberg", "main.db.images", "123456")
-    r2 = catalog.parse_ref("iceberg:main.db.images")
-    assert (r2.kind, r2.snapshot) == ("iceberg", None)
-    r3 = catalog.parse_ref("parquet:/tmp/x")
-    assert (r3.kind, r3.location) == ("parquet", "/tmp/x")
-    r4 = catalog.parse_ref("/tmp/bare/path")
-    assert (r4.kind, r4.location) == ("parquet", "/tmp/bare/path")
-    assert catalog.parse_ref(r4) is r4
 
 
 @pytest.fixture()
@@ -40,19 +23,13 @@ def hive_table(spark, tmp_path):
     return path
 
 
-def test_load_parquet_ref(spark, hive_table) -> None:
-    df = catalog.load(spark, f"parquet:{hive_table}")
-    assert df.count() == 40
-    assert "day" in df.columns
-
-
 def test_pending_partitions_from_catalog_metadata(
     spark, hive_table, tmp_path
 ) -> None:
     """known_partitions (the hive directory names) replaces the
     discovery scan and composes with ledger resume."""
     ledger = ValidationLedger(spark, str(tmp_path / "ledger"))
-    df = catalog.load(spark, hive_table)
+    df = spark.read.parquet(hive_table)
     tv = TableValidator({"id": {"type": "integer", "required": True}},
                         allow_unknown=True)
     known = ["0", "1", "2", "3"]

@@ -1,0 +1,121 @@
+"""The one schema front-end: ``Validator`` meta-validates and
+normalizes a schema, tags a ``nullable: false`` the meta-schema
+injected, and keeps the result; ``TableValidator`` and
+``validate_json`` read it. The pinned trees and plan hashes are the
+ones the engine produced before the front-end moved into the
+interpreter: the normalized tree feeds ``ledger.run_validation``'s
+lineage, so any drift re-validates every committed partition."""
+
+from __future__ import annotations
+
+import hashlib
+
+from cerberus_cpp_spark.dynamic.interpreter import Validator
+from cerberus_cpp_spark.plans.engine import TableValidator
+from cerberus_cpp_spark.sources.fixtures import (
+    IMAGE_TABLE_RULES,
+    image_caption_table,
+)
+
+#: every nesting form the normalizer descends into, plus one it does
+#: not (``loose``: a dict ``schema`` with no ``type`` stays as written)
+FORMS = {
+    "tags": {"type": "list", "schema": {"type": "string"}},
+    "image": {"type": "dict", "schema": {
+        "w": {"type": "integer", "nullable": True},
+        "h": {"type": "integer", "nullable": False}}},
+    "pair": {"type": "list", "items": [
+        {"type": "integer"}, {"type": "string", "nullable": True}]},
+    "counts": {"type": "dict", "keysrules": {"type": "string"},
+               "valuesrules": {"type": "integer", "min": 0}},
+    "thumb": {"type": "dict", "schema": "img"},
+    "loose": {"schema": {"x": {"type": "integer"}}},
+    "note": {"nullable": True},
+    "caption": {"type": "string", "nullable": False},
+}
+REGISTRY = {"img": {"w": {"type": "integer"},
+                    "fmt": {"type": "string", "nullable": True}}}
+
+_TAG = {"nullable": False, "__nullable_injected__": True}
+
+FORMS_NORMALIZED = {
+    "tags": {"type": "list", "schema": {"type": "string", **_TAG},
+             **_TAG},
+    "image": {"type": "dict",
+              "schema": {"w": {"type": "integer", "nullable": True},
+                         "h": {"type": "integer", "nullable": False}},
+              **_TAG},
+    "pair": {"type": "list",
+             "items": [{"type": "integer", **_TAG},
+                       {"type": "string", "nullable": True}],
+             **_TAG},
+    "counts": {"type": "dict",
+               "keysrules": {"type": "string", **_TAG},
+               "valuesrules": {"type": "integer", "min": 0, **_TAG},
+               **_TAG},
+    "thumb": {"type": "dict", "schema": "img", **_TAG},
+    "loose": {"schema": {"x": {"type": "integer"}}, **_TAG},
+    "note": {"nullable": True},
+    "caption": {"type": "string", "nullable": False},
+}
+REGISTRY_NORMALIZED = {"img": {"w": {"type": "integer", **_TAG},
+                               "fmt": {"type": "string", "nullable": True}}}
+
+
+def test_normalized_tree_pinned_across_nesting_forms() -> None:
+    tv = TableValidator(FORMS, registry=REGISTRY)
+    # repr pins the key order too: the ledger lineage is JSON of it
+    assert repr(tv.schema) == repr(FORMS_NORMALIZED)
+    v = Validator(FORMS)
+    v.register_schema("img", REGISTRY["img"])
+    schema, registry = v.normalized_schemas()
+    assert repr(schema) == repr(FORMS_NORMALIZED)
+    assert repr(registry) == repr(REGISTRY_NORMALIZED)
+
+
+def test_normalized_schema_is_a_fixed_point() -> None:
+    v = Validator()
+    for s in (FORMS, REGISTRY["img"], IMAGE_TABLE_RULES):
+        once = v.normalized_schema(s)
+        assert v.normalized_schema(once) == once
+    # the engine's tree is a valid schema for the interpreter
+    tree = TableValidator(IMAGE_TABLE_RULES).schema
+    doc = {"image_id": "img-000000000001", "w": 3, "h": 4, "fmt": "png",
+           "caption": "a cat", "phash": 7}
+    assert Validator(tree).validate(doc)
+    assert not Validator(tree).validate({**doc, "w": -1})
+
+
+def test_stored_schemas_normalize_once(monkeypatch) -> None:
+    calls = []
+    real = Validator.normalized_schema
+    monkeypatch.setattr(Validator, "normalized_schema",
+                        lambda self, s: calls.append(s) or real(self, s))
+    v = Validator({"id": {"type": "integer"}, "image": {"schema": "img"}})
+    v.register_schema("img", {"w": {"type": "integer", "min": 0},
+                              "fmt": {"type": "string"}})
+    for i in range(3000):
+        assert v.validate({"id": i, "image": {"w": i + 1, "fmt": "png"}})
+    assert len(calls) == 2  # the constructor schema and "img", once each
+    # a registration invalidates the stored trees
+    v.register_type(v.types["integer"])
+    v.validate({"id": 1, "image": {"w": 1}})
+    assert len(calls) == 4
+    # a schema passed per call is normalized per call
+    for _ in range(3):
+        v.validate({"x": 1}, {"x": {"type": "integer"}})
+    assert len(calls) == 7
+
+
+def test_image_table_plan_pinned(spark) -> None:
+    """The compiled plan of the benchmark's table schema. A change
+    that alters the plan on purpose updates these prefixes."""
+    tv = TableValidator(IMAGE_TABLE_RULES, extra_cols=("id",))
+    plan = tv.compile(image_caption_table(spark, 50).schema)
+
+    def sha(text: str) -> str:
+        return hashlib.sha1(text.encode()).hexdigest()[:8]
+
+    assert sha(str(plan.violation_count)) == "ee29ed4b"
+    assert sha(str(plan.violations)) == "233b051b"
+    assert sha(repr(tv.schema)) == "c538ddda"

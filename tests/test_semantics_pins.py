@@ -136,6 +136,19 @@ def test_error_paths_follow_reference_grammar() -> None:
     assert [e.path for e in v.errors] == ["^.xs[1]"]
 
 
+@pytest.mark.parametrize("schema", [
+    {"a": {"type": "integer", "min": 5}},
+    {"a": {"min": 5, "type": "integer"}},
+], ids=["type-first", "min-first"])
+def test_type_runs_after_validation_phase(schema) -> None:
+    # rules.hh:610 registers type at TYPECHECKING, after VALIDATION:
+    # min reports before type whatever the schema key order.
+    v = Validator(schema)
+    assert not v.validate({"a": "abc"})
+    assert [e.message for e in v.errors] == [
+        "min-rule violated", "type-rule violated: expected integer"]
+
+
 def test_require_all_overrides_explicit_required_false() -> None:
     # validator.hh:273-275 injects unconditionally at NORMALIZATION.
     v = Validator({"a": {"type": "string", "required": False}},
