@@ -20,6 +20,17 @@ checks, string-equality ``contains``/``dependencies``, full-match
 ``regex``, lexically scoped policies, six priority phases, error
 accumulation without short-circuit, ``^``-anchored dependency paths.
 
+Dispatch is specialized once per rule map, not once per document: the
+first item a rule map validates builds its rule program, the ``(fn,
+arg)`` steps of the six phases in order (:class:`_Program`), and every
+later item runs those steps with one :class:`RuleCtx`. The programs of
+the stored schemas (the constructor schema, the registered schemas and,
+on the meta-validator, the schema-of-schemas) live until the next
+``register_*`` call; a schema passed to ``validate`` gets programs that
+go when the call returns. A program reads its rule map once, so a
+stored rule map edited in place after its first use keeps its old
+program.
+
 Documents are plain Python trees (``yaml.safe_load`` output); the
 ``UNDEFINED`` sentinel distinguishes an absent key from explicit null.
 """
@@ -97,7 +108,7 @@ def format_path(parts: tuple[Any, ...]) -> str:
 _PATH_TOKEN = re.compile(r"([^.\[\]]+)|\[(\d+)\]")
 
 
-@dataclass
+@dataclass(slots=True)
 class _Item:
     """Mutable holder for one (value, field-name) pair during the
     phases — lets normalization rules (default/rename) write back."""
@@ -106,10 +117,12 @@ class _Item:
     field: str | None = None
 
 
-@dataclass
+@dataclass(slots=True)
 class RuleCtx:
     """What a rule implementation sees — the Python analogue of the
-    reference's ``ValidationRuleInterface`` (``validator.hh:225-470``)."""
+    reference's ``ValidationRuleInterface`` (``validator.hh:225-470``).
+    One context serves every rule of a field: the rule program swaps
+    ``arg`` before each step."""
 
     validator: "Validator"
     state: "_State"
@@ -211,6 +224,42 @@ class _State:
 RuleFn = Callable[[RuleCtx], None]
 
 
+class _Program:
+    """One rule map, dispatched once: its ``(fn, arg)`` steps in phase
+    order, schema-key order within a phase (``validator.hh:266-287``),
+    plus the variant with ``required: true`` injected for a
+    ``require_all`` scope (``validator.hh:273-275``). A key that names
+    no rule (``__nullable_injected__``, say) gets no step. The program
+    holds its rule map, so the map's ``id`` keys it uniquely."""
+
+    __slots__ = ("rules", "scoped", "steps", "all_rules", "all_steps")
+
+    def __init__(self, registered: dict, rules: dict) -> None:
+        self.rules = rules
+        #: the map has its own policy keys (:meth:`_Policy.enter`)
+        self.scoped = any(k in rules for k in _POLICY_KEYS)
+        self.steps = _steps(registered, rules)
+        self.all_rules = {**rules, "required": True}
+        self.all_steps = _steps(registered, self.all_rules)
+
+
+def _steps(registered: dict, rules: dict) -> list[tuple[RuleFn, Any]]:
+    """The six-phase scan, done once per rule map; a ``regex``
+    argument is compiled here, where an ill-formed one raises."""
+    steps = []
+    for phase in _PHASES:
+        for name, arg in rules.items():
+            fn = registered.get((phase, name))
+            if fn is not None:
+                steps.append((fn, _compile_regex(arg)
+                              if fn is _rule_regex else arg))
+    return steps
+
+
+def _compile_regex(arg: Any) -> re.Pattern:
+    return re.compile(str(arg))
+
+
 class Validator:
     """Public API mirroring the reference's ``Validator``
     (``validator.hh:22-212``): construct with an optional schema,
@@ -245,6 +294,11 @@ class Validator:
         # the constructor schema (key None) and registered schemas,
         # normalized on first use; every register_* call empties it
         self._normalized: dict[str | None, dict] = {}
+        # id(rule map) → _Program for the stored schemas; register_*
+        # empties it. _live is the store the running validate() fills:
+        # this one, or a per-call one for a schema passed to validate
+        self._programs: dict[int, _Program] = {}
+        self._live = self._programs
         _register_builtin_rules(self)
 
     @classmethod
@@ -275,33 +329,52 @@ class Validator:
         self._rules[(priority, name)] = fn
         if name not in self.schema_schema or meta_schema:
             self.schema_schema[name] = meta_schema
-        self._normalized.clear()
+        self._reset()
 
     def register_type(self, adapter: TypeAdapter) -> None:
         self.types[adapter.name] = adapter
-        self._normalized.clear()
+        self._reset()
 
     def register_schema(self, name: str, schema: dict) -> None:
         self.schema_registry[name] = schema
+        self._reset()
+
+    def _reset(self) -> None:
+        """Forget the normalized schemas and their rule programs."""
         self._normalized.clear()
+        self._programs.clear()
 
     # -- public validation entry points --------------------------------
     def validate(self, document: Any, schema: dict | str | None = None) -> bool:
+        if isinstance(document, dict):
+            document = copy.deepcopy(document)  # never mutate caller data
+        return self._validate_owned(document, schema)
+
+    def _validate_owned(
+        self, document: Any, schema: dict | str | None = None,
+    ) -> bool:
+        """:meth:`validate` on a document the caller hands over: the
+        normalization rules write into it. A stored schema keeps its
+        rule programs; a schema passed here gets programs that go when
+        the call returns."""
         if schema is None or isinstance(schema, str):
             schema = self._stored(schema)
-        elif self.validate_schema:
-            schema = self.normalized_schema(schema)  # a per-call schema
-        if not isinstance(document, dict):
-            # top-level documents are always mappings (doc/index.rst:88)
+        else:
+            if self.validate_schema:
+                schema = self.normalized_schema(schema)
+            self._live = {}
+        try:
             self._state = _State(root=document)
-            self._state.errors.append(
-                ValidationErrorItem("^", "document is not a mapping")
-            )
-            return False
-        doc = copy.deepcopy(document)  # never mutate caller data
-        self._state = _State(root=doc)
-        self._validate_dict(doc, schema, (), self._policy)
-        return not self._state.errors
+            if not isinstance(document, dict):
+                # top-level documents are always mappings (doc/index.rst:88)
+                self._state.errors.append(
+                    ValidationErrorItem("^", "document is not a mapping")
+                )
+                return False
+            self._validate_dict(document, schema, (), self._policy)
+            return not self._state.errors
+        finally:
+            self._live = self._programs
 
     @property
     def _policy(self) -> _Policy:
@@ -358,6 +431,9 @@ class Validator:
         returns an equal tree. ``validate`` normalizes the constructor
         schema and each registered schema once (:meth:`_stored`); a
         schema passed to ``validate`` is normalized on every call.
+
+        A ``regex`` that does not compile is refused here: at
+        validation time it would raise on every string value.
         """
         if not isinstance(schema, dict):
             raise SchemaError(f"schema must be a mapping, got {type(schema)}")
@@ -390,8 +466,8 @@ class Validator:
     def _meta_one(self, rule_map: dict) -> dict:
         """Meta-validate one rule map against the schema-of-schemas
         with one inner validator, reused for every rule map, then
-        normalize the rule maps nested in it and tag an injected
-        ``nullable``."""
+        normalize the rule maps nested in it, refuse a ``regex`` that
+        does not compile and tag an injected ``nullable``."""
         if self._meta is None:
             self._meta = Validator(self.schema_schema, validate_schema=False)
         inner = self._meta
@@ -401,6 +477,12 @@ class Validator:
                 {k: v for k, v in rule_map.items() if k != _INJECTED}):
             raise SchemaError(inner.errors)
         out = self._normalize_nested(inner.get_document())
+        if "regex" in out:
+            try:
+                _compile_regex(out["regex"])
+            except re.error as e:
+                raise SchemaError([ValidationErrorItem(
+                    "^.regex", f"regex does not compile: {e}")]) from None
         if rule_map.get(_INJECTED) or (
                 "nullable" not in rule_map
                 and not _truthy(out.get("nullable"))):
@@ -451,31 +533,28 @@ class Validator:
         parent: Any,
         policy: _Policy,
     ) -> None:
-        """Reference ``validateItem`` (``validator.hh:261-290``): six
-        priority phases, schema-key order within a phase. The field's
-        own policy keys scope over its subtree, and require_all injects
-        ``required: true`` (``validator.hh:273-275``)."""
-        st = self._state
-        assert st is not None
-        policy = policy.enter(rules)
+        """Reference ``validateItem`` (``validator.hh:261-290``): run
+        the rule program of ``rules`` (six priority phases, schema-key
+        order within a phase). The field's own policy keys scope over
+        its subtree, and require_all selects the program variant with
+        ``required: true`` injected (``validator.hh:273-275``)."""
+        prog = self._live.get(id(rules)) or self._program(rules)
+        if prog.scoped:
+            policy = policy.enter(rules)
         if policy.require_all:
-            rules = {**rules, "required": True}
-        for phase in _PHASES:
-            for name, arg in rules.items():
-                fn = self._rules.get((phase, name))
-                if fn is not None:
-                    fn(
-                        RuleCtx(
-                            validator=self,
-                            state=st,
-                            item=item,
-                            arg=arg,
-                            field_schema=rules,
-                            path=path,
-                            parent=parent,
-                            policy=policy,
-                        )
-                    )
+            rules, steps = prog.all_rules, prog.all_steps
+        else:
+            steps = prog.steps
+        ctx = RuleCtx(self, self._state, item, None, rules, path, parent,
+                      policy)
+        for fn, arg in steps:
+            ctx.arg = arg
+            fn(ctx)
+
+    def _program(self, rules: dict) -> _Program:
+        """The rule program of ``rules``, built on first use."""
+        prog = self._live[id(rules)] = _Program(self._rules, rules)
+        return prog
 
 
 # ---------------------------------------------------------------------------
@@ -655,7 +734,8 @@ def _rule_regex(ctx: RuleCtx) -> None:
     if ctx.value is UNDEFINED or ctx.value is None:
         return
     text = _scalar_text(ctx.value)
-    if text is None or not re.fullmatch(str(ctx.arg), text):
+    # the rule program compiled the argument (_steps)
+    if text is None or not ctx.arg.fullmatch(text):
         ctx.raise_error("regex-rule violated")
 
 

@@ -17,7 +17,11 @@ Scale design:
   ships); workers receive those normalized trees and run with
   ``validate_schema=False``.
 - ONE ``Validator`` per worker task, reused across every document in
-  its partition (rule/type registries built once, not per row).
+  its partition: rule/type registries and the rule program of each
+  rule map (its steps in phase order) are built once, not per row.
+- The worker hands each freshly parsed document to the interpreter
+  (``Validator._validate_owned``), so normalization writes into it in
+  place instead of into a deep copy.
 - The stage is a narrow projection — no shuffle, embarrassingly
   parallel over input partitions; batches arrive via Arrow.
 - Per-document Python is the *fidelity contract* here, not an
@@ -55,9 +59,15 @@ VIOL_FIELDS = T.ArrayType(T.StructType([
 #: violation emitted when the payload cannot be parsed as JSON —
 #: mirrors the interpreter's top-level "document is not a mapping"
 NOT_JSON_MSG = "document is not valid JSON"
-#: violation emitted when parsing or validating the payload exhausts
-#: the interpreter's recursion limit: one hostile row, not a failed job
+#: violation emitted when the payload nests containers deeper than
+#: MAX_DEPTH, or parsing or validating it exhausts the interpreter's
+#: recursion limit: one hostile row, not a failed job
 TOO_DEEP_MSG = "document nested too deeply"
+#: deepest container nesting a payload may have. The worker validates
+#: the parsed document in place and serializes it back, and both walks
+#: recurse once or more per level; this bound keeps them well inside
+#: Python's default recursion limit of 1,000 frames.
+MAX_DEPTH = 400
 
 
 def validate_json(
@@ -134,16 +144,33 @@ def validate_json(
         for name, s in norm_registry.items():
             v.register_schema(name, s)
 
+        def too_deep(doc) -> bool:
+            """Containers nest deeper than MAX_DEPTH; walked level by
+            level, without recursion."""
+            level = [doc] if isinstance(doc, (dict, list)) else []
+            for _ in range(MAX_DEPTH):
+                level = [c for node in level
+                         for c in (node.values() if isinstance(node, dict)
+                                   else node)
+                         if isinstance(c, (dict, list))]
+                if not level:
+                    return False
+            return True
+
         def parse(raw):
             """(document, None), or (None, the one violation message)."""
             if raw is None:
                 return None, None
             try:
-                return json.loads(raw), None
+                doc = json.loads(raw)
             except RecursionError:
                 return None, TOO_DEEP_MSG
             except (ValueError, TypeError):
                 return None, NOT_JSON_MSG
+            # nesting d deep takes 2·d brackets: short rows skip the walk
+            if len(raw) > 2 * MAX_DEPTH and too_deep(doc):
+                return None, TOO_DEEP_MSG
+            return doc, None
 
         for pdf in batches:
             viols, counts, valids, norms = [], [], [], []
@@ -151,7 +178,7 @@ def validate_json(
                 doc, msg = parse(raw)
                 if msg is None:
                     try:
-                        v.validate(doc)
+                        v._validate_owned(doc)  # json.loads made it fresh
                     except RecursionError:
                         msg = TOO_DEEP_MSG
                 if msg is None:

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from cerberus_cpp_spark.dynamic.interpreter import Validator
 from cerberus_cpp_spark.dynamic.spark import (
+    MAX_DEPTH,
     NOT_JSON_MSG,
     TOO_DEEP_MSG,
     json_violations,
@@ -133,6 +134,29 @@ def test_deeply_nested_document_is_one_violation_row(spark) -> None:
         assert not got[i]["valid"] and got[i]["n_violations"] == 1
         assert got[i]["violations"] == [("^", TOO_DEEP_MSG)]
         assert got[i]["normalized"] is None
+
+
+def test_nesting_bound_is_exact(spark) -> None:
+    """A document MAX_DEPTH containers deep is validated in place; one
+    level more is one violation row at ``^``. A long but shallow
+    document is validated as usual."""
+    def nested(depth: int) -> str:
+        return '{"a": ' * depth + "1" + "}" * depth
+
+    long_flat = json.dumps({"a": 1, "b": "x" * (4 * MAX_DEPTH)})
+    df = spark.createDataFrame(
+        [(0, nested(MAX_DEPTH)), (1, nested(MAX_DEPTH + 1)), (2, long_flat)],
+        "doc_id int, doc string",
+    )
+    got = {r["doc_id"]: r for r in validate_json(
+        df, {"a": {"type": "integer"}, "b": {"type": "string"}},
+        include_normalized=True).collect()}
+    assert got[0]["violations"] == [
+        ("^.a", "type-rule violated: expected integer")]
+    assert got[0]["normalized"] == nested(MAX_DEPTH).replace(" ", "")
+    assert got[1]["violations"] == [("^", TOO_DEEP_MSG)]
+    assert got[2]["valid"] and json.loads(got[2]["normalized"]) == \
+        json.loads(long_flat)
 
 
 def test_unchecked_validator_uses_registered_schema_as_given(

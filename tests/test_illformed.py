@@ -63,3 +63,20 @@ def test_nested_illformed_schema_raises() -> None:
                 }
             },
         )
+
+
+@pytest.mark.parametrize("schema", [
+    {"a": {"type": "string", "regex": "("}},
+    {"a": {"type": "list", "schema": {"type": "string", "regex": "[a-"}}},
+    {"a": {"type": "dict", "keysrules": {"type": "string", "regex": "*x"}}},
+])
+def test_uncompilable_regex_raises(schema: dict) -> None:
+    """An uncompilable ``regex`` is a schema fault, refused on the driver
+    by the interpreter and the columnar engine alike: at validation time
+    it would raise on every string value, failing every row."""
+    from cerberus_cpp_spark.plans.engine import TableValidator
+
+    with pytest.raises(SchemaError, match="regex does not compile"):
+        Validator(schema).validate({"a": "x"})
+    with pytest.raises(SchemaError, match="regex does not compile"):
+        TableValidator(schema).schema
