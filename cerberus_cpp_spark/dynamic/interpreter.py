@@ -107,6 +107,29 @@ def format_path(parts: tuple[Any, ...]) -> str:
 
 _PATH_TOKEN = re.compile(r"([^.\[\]]+)|\[(\d+)\]")
 
+#: the one violation of a document that nests containers deeper than
+#: MAX_DEPTH, or whose JSON parse exhausts the recursion limit
+#: (``validate_json``): a hostile document, not a ``RecursionError``
+TOO_DEEP_MSG = "document nested too deeply"
+#: deepest container nesting a document may have. Copying, validating
+#: and serializing a document each recurse once or more per level; this
+#: bound keeps them well inside Python's default recursion limit of
+#: 1,000 frames.
+MAX_DEPTH = 400
+
+
+def too_deep(doc: Any) -> bool:
+    """Containers nest deeper than MAX_DEPTH; walked level by level,
+    without recursion."""
+    level = [doc] if isinstance(doc, (dict, list)) else []
+    for _ in range(MAX_DEPTH):
+        level = [c for node in level
+                 for c in (node.values() if isinstance(node, dict) else node)
+                 if isinstance(c, (dict, list))]
+        if not level:
+            return False
+    return True
+
 
 @dataclass(slots=True)
 class _Item:
@@ -244,20 +267,25 @@ class _Program:
 
 
 def _steps(registered: dict, rules: dict) -> list[tuple[RuleFn, Any]]:
-    """The six-phase scan, done once per rule map; a ``regex``
-    argument is compiled here, where an ill-formed one raises."""
+    """The six-phase scan, done once per rule map; a rule listed in
+    :data:`_PREPARED` gets its argument prepared here, once (an
+    ill-formed ``regex`` raises here)."""
     steps = []
     for phase in _PHASES:
         for name, arg in rules.items():
             fn = registered.get((phase, name))
             if fn is not None:
-                steps.append((fn, _compile_regex(arg)
-                              if fn is _rule_regex else arg))
+                prepare = _PREPARED.get(fn)
+                steps.append((fn, arg if prepare is None else prepare(arg)))
     return steps
 
 
 def _compile_regex(arg: Any) -> re.Pattern:
     return re.compile(str(arg))
+
+
+def _type_names(arg: Any) -> tuple[str, ...]:
+    return tuple(str(t) for t in as_list(arg))
 
 
 class Validator:
@@ -346,6 +374,10 @@ class Validator:
 
     # -- public validation entry points --------------------------------
     def validate(self, document: Any, schema: dict | str | None = None) -> bool:
+        if too_deep(document):  # checked before the copy recurses
+            self._state = _State(root=None, errors=[
+                ValidationErrorItem("^", TOO_DEEP_MSG)])
+            return False
         if isinstance(document, dict):
             document = copy.deepcopy(document)  # never mutate caller data
         return self._validate_owned(document, schema)
@@ -782,7 +814,7 @@ def _rule_type(ctx: RuleCtx) -> None:
     runs after ordinary validation."""
     if ctx.value is UNDEFINED or ctx.value is None:
         return
-    names = [str(t) for t in as_list(ctx.arg)]
+    names = ctx.arg  # the rule program's tuple of names (_steps)
     if isinstance(ctx.value, list):
         ok = "list" in names
     elif isinstance(ctx.value, dict):
@@ -810,6 +842,14 @@ def _rule_valuesrules(ctx: RuleCtx) -> None:
         )
         if elem.value is not UNDEFINED:
             ctx.value[key] = elem.value
+
+
+#: rule fn → how its program step prepares the schema argument, once
+#: per rule map instead of once per value
+_PREPARED: dict[RuleFn, Callable[[Any], Any]] = {
+    _rule_regex: _compile_regex,
+    _rule_type: _type_names,
+}
 
 
 def _register_builtin_rules(v: Validator) -> None:

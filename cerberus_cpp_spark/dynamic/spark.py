@@ -49,7 +49,7 @@ from pyspark.sql import types as T
 
 from ..functions.shipping import PKG_PARENT
 from ..plans.engine import explode_violations
-from .interpreter import Validator
+from .interpreter import MAX_DEPTH, TOO_DEEP_MSG, Validator
 
 VIOL_FIELDS = T.ArrayType(T.StructType([
     T.StructField("path", T.StringType(), False),
@@ -59,15 +59,6 @@ VIOL_FIELDS = T.ArrayType(T.StructType([
 #: violation emitted when the payload cannot be parsed as JSON —
 #: mirrors the interpreter's top-level "document is not a mapping"
 NOT_JSON_MSG = "document is not valid JSON"
-#: violation emitted when the payload nests containers deeper than
-#: MAX_DEPTH, or parsing or validating it exhausts the interpreter's
-#: recursion limit: one hostile row, not a failed job
-TOO_DEEP_MSG = "document nested too deeply"
-#: deepest container nesting a payload may have. The worker validates
-#: the parsed document in place and serializes it back, and both walks
-#: recurse once or more per level; this bound keeps them well inside
-#: Python's default recursion limit of 1,000 frames.
-MAX_DEPTH = 400
 
 
 def validate_json(
@@ -130,7 +121,10 @@ def validate_json(
 
         import pandas as pd
 
-        from cerberus_cpp_spark.dynamic.interpreter import Validator
+        from cerberus_cpp_spark.dynamic.interpreter import (
+            Validator,
+            too_deep,
+        )
 
         v = Validator(
             norm_schema,
@@ -143,19 +137,6 @@ def validate_json(
             configure(v)
         for name, s in norm_registry.items():
             v.register_schema(name, s)
-
-        def too_deep(doc) -> bool:
-            """Containers nest deeper than MAX_DEPTH; walked level by
-            level, without recursion."""
-            level = [doc] if isinstance(doc, (dict, list)) else []
-            for _ in range(MAX_DEPTH):
-                level = [c for node in level
-                         for c in (node.values() if isinstance(node, dict)
-                                   else node)
-                         if isinstance(c, (dict, list))]
-                if not level:
-                    return False
-            return True
 
         def parse(raw):
             """(document, None), or (None, the one violation message)."""

@@ -22,17 +22,19 @@ Presence semantics (SURVEY.md §7 "undefined vs null collapse"):
   oddities like min failing on null while max passes
   (``rules.hh:316-336``).
 
-Nested rules take one descent at every depth, like the reference's
-validateItem/validateDict (``validator.hh:261-344``): every nested rule
-map compiles through :func:`compile_field`, every nested mapping
-through :func:`_compile_mapping`. List elements and map entries
-compile inside ``F.transform`` with the index or key, so per-element
-violation paths keep the reference's ``^.field[i]`` grammar
-(``stack.hh:39-54``) without a posexplode. Their ``FieldCtx`` has
-``scope=None``, the one marker for an element lambda: only the rules
-that need a scope or a user compiler (``dependencies``, ``excludes``,
-custom column rules) are refused there, and a non-scalar ``default`` on
-a field the element's struct lacks, which has no type to validate by.
+Rules take one descent at every depth, like the reference's
+validateItem/validateDict (``validator.hh:261-344``): every rule map
+compiles through :func:`compile_field`, and every mapping — the frame
+row and each nested struct or map — through :func:`_compile_mapping`.
+A mapping's :class:`Scope` is the mapping as normalized so far, the
+document ``dependencies``/``excludes`` paths resolve against
+(``stack.hh:146-172``). List elements and map entries compile inside
+``F.transform`` with the index or key, so per-element violation paths
+keep the reference's ``^.field[i]`` grammar (``stack.hh:39-54``)
+without a posexplode; a ``Column`` path marks a ctx below an element.
+Only two things are refused there: custom column rules (a pandas UDF
+cannot run inside a lambda) and a non-scalar ``default`` on a field
+the element's struct lacks, which has no type to validate by.
 """
 
 from __future__ import annotations
@@ -115,15 +117,38 @@ class FieldRef:
     defined: Column
 
 
-class Scope:
-    """One mapping level — resolution context for the ``dependencies``
-    / ``excludes`` path language (``stack.hh:146-172``): non-anchored
-    paths resolve against the enclosing mapping, ``^`` against the
-    document root, dotted segments descend."""
+class _Row:
+    """The frame row as a mapping value: its keys are its columns."""
 
-    def __init__(self, fields: dict[str, FieldRef], root: "Scope | None"):
-        self.fields = fields
+    def __getitem__(self, name: str) -> Column:
+        return F.col(name)
+
+
+_ROW = _Row()
+
+
+def row_ref(df_schema: T.StructType) -> FieldRef:
+    """The frame row as the root mapping, always defined."""
+    return FieldRef(_ROW, df_schema, F.lit(True))
+
+
+class Scope:
+    """One mapping as normalized so far, as ``_validate_dict`` sees its
+    document: the resolution context of the ``dependencies`` /
+    ``excludes`` path language (``stack.hh:146-172``). Every key the
+    mapping holds resolves; a compiled field's entry is its effective
+    ref, and a renamed field's old name is undefined (None).
+    Non-anchored paths resolve here, ``^`` against ``root``."""
+
+    def __init__(self, mapping: FieldRef, root: "Scope | None"):
+        self.mapping = mapping
+        self.entries: dict[str, Optional[FieldRef]] = {}
         self.root = root if root is not None else self
+
+    def get(self, name: str, opts: "CompilerOpts") -> Optional[FieldRef]:
+        if name in self.entries:
+            return self.entries[name]
+        return _child_ref(self.mapping, name, opts)
 
 
 @dataclass
@@ -142,15 +167,18 @@ class FieldCtx:
     value: Optional[Column]
     dtype: Optional[T.DataType]
     defined: Column
-    # a Column below an F.transform lambda, whose index or map key is
-    # known at run time alone (_join_path)
+    # a Column below an element under list-form schema, keysrules or
+    # valuesrules (_elem_viols): inside an F.transform lambda the index
+    # or map key is known at run time alone (_join_path). A Column path
+    # is the compile-time marker of such a ctx.
     path: str | Column
-    # None marks an element lambda (_elem_viols) and every field below
-    # it: no mapping to resolve dependencies/excludes paths against
-    scope: Optional[Scope]
+    # the mapping dependencies/excludes paths resolve against: the
+    # field's own mapping; for a list element, the list's enclosing
+    # mapping; for a key or value, the mapping itself
+    scope: Scope
     # True when this ctx is a list ELEMENT (items rule), an element
     # under list-form schema / keysrules / valuesrules, or a field of
-    # such an element (scope None): null is then unambiguously
+    # such an element (a Column path): null is then unambiguously
     # explicit, so injected nullable:false fires in every presence
     # mode and explicit nullable gates on definedness.
     elem: bool = False
@@ -173,22 +201,25 @@ class FieldCtx:
 
 
 def _child_ref(parent: FieldRef, name: str, opts: CompilerOpts) -> Optional[FieldRef]:
-    """Descend one mapping level below a struct/map-typed field."""
+    """Descend one mapping level below a struct/map-typed field, or
+    from the frame row to a column; None when the key is absent."""
     if parent.value is None or parent.dtype is None:
         return None
     if isinstance(parent.dtype, T.StructType):
         names = parent.dtype.fieldNames()
-        if name not in names:
+        if name not in names or name == "__defined__":
             return None
         v = parent.value[name]
         dt = parent.dtype[name].dataType
         if opts.presence == "defined" and "__defined__" in names:
-            defined = parent.defined & F.coalesce(
+            defined = F.coalesce(
                 F.array_contains(parent.value["__defined__"], name),
                 F.lit(False),
             )
         else:
-            defined = parent.defined & v.isNotNull()
+            defined = v.isNotNull()
+        if parent.value is not _ROW:
+            defined = parent.defined & defined
         return FieldRef(v, dt, defined)
     if isinstance(parent.dtype, T.MapType):
         v = F.try_element_at(parent.value, F.lit(name))
@@ -223,22 +254,18 @@ def _resolve(scope: Scope, path_str: str, opts: CompilerOpts) -> Optional[FieldR
                 & (F.coalesce(F.size(ref.value), F.lit(0)) > i),
             )
             continue
+        ref = start.get(key, opts) if ref is None else _child_ref(ref, key, opts)
         if ref is None:
-            ref = start.fields.get(key)
-            if ref is None:
-                return None
-        else:
-            ref = _child_ref(ref, key, opts)
-            if ref is None:
-                return None
+            return None
     return ref
 
 
 # ---------------------------------------------------------------------------
 # Element-level rules: one array element (an F.transform lambda
 # variable) or one key/value under keysrules/valuesrules, compiled by
-# compile_field like any field, on a scope-less ctx. Element paths are
-# Columns: the index or map key is only known at run time.
+# compile_field like any field. Element paths are Columns, as the index
+# or map key may be known at run time only: a Column path is the marker
+# of a ctx below an element.
 # ---------------------------------------------------------------------------
 
 
@@ -254,83 +281,84 @@ def _path_col(path: str | Column) -> Column:
     return path if isinstance(path, Column) else F.lit(path)
 
 
-def _elem_viols(
-    rules: dict, ref: FieldRef, path: str | Column, opts: CompilerOpts,
-    policy: _Policy,
-) -> list:
-    """``rules`` on one element ``ref`` under the enclosing ``policy``,
-    with element null semantics (``FieldCtx.elem``) and no scope."""
-    viols, _, _ = compile_field(FieldCtx(
-        opts, rules, ref.value, ref.dtype, ref.defined, path, None,
-        elem=True, policy=policy))
+def _elem_viols(ctx: FieldCtx, rules: dict, ref: FieldRef,
+                path: Column, scope: Scope) -> list:
+    """``rules`` on one element ``ref`` below the field ``ctx``, with
+    element null semantics (``FieldCtx.elem``), resolving paths in
+    ``scope``."""
+    viols, _ = compile_field(FieldCtx(
+        ctx.opts, rules, ref.value, ref.dtype, ref.defined, path, scope,
+        elem=True, policy=ctx.policy))
     return viols
 
 
 def _array_rule_viols(ctx: FieldCtx, elem_rules: dict) -> list:
     """schema (list form): ``elem_rules`` on every element inside one
     F.transform, under the element's own ``path[i]``
-    (``stack.hh:39-54``), flattened into one array."""
+    (``stack.hh:39-54``), flattened into one array. Element paths
+    resolve against the list's enclosing mapping, as in ``_rule_schema``."""
     elem_dt = ctx.dtype.elementType
 
     def one(x: Column, i: Column) -> Column:
         return assemble_violations(_elem_viols(
-            elem_rules, FieldRef(x, elem_dt, F.lit(True)),
-            _join_path(ctx.path, "[", i.cast("string"), "]"), ctx.opts,
-            ctx.policy))
+            ctx, elem_rules, FieldRef(x, elem_dt, F.lit(True)),
+            _join_path(ctx.path, "[", i.cast("string"), "]"), ctx.scope))
 
     arr = F.flatten(F.transform(ctx.value, one))
     return [ArrayViol(F.coalesce(arr, F.array().cast(VIOL_ARRAY_T)))]
 
 
-def _kv_viols(
-    which: str, arg: dict, ref: FieldRef, path: str | Column,
-    opts: CompilerOpts, policy: _Policy,
-) -> list:
+def _kv_viols(ctx: FieldCtx, which: str, arg: dict, defined: Column) -> list:
     """keysrules/valuesrules (``rules.hh:270-288, 614-632``): ``arg``
-    on every key/value PRESENT in the mapping ``ref`` — known and
-    unknown keys alike — at ``path.<key>``. A struct's key names are
-    compile-time constants (a dict-form ``schema`` alongside types the
-    value as a struct), so its checks stay scalar; a map's entries
-    are iterated in one F.transform."""
+    on every key/value PRESENT in the field's mapping — known and
+    unknown keys alike — at ``path.<key>``, resolving paths against
+    that mapping. A struct's key names are compile-time constants (a
+    dict-form ``schema`` alongside types the value as a struct), so its
+    checks stay scalar; a map's entries are iterated in one
+    F.transform."""
+    ref = FieldRef(ctx.value, ctx.dtype, defined)
+    scope = Scope(ref, ctx.scope.root)
     if isinstance(ref.dtype, T.MapType):
         dt = ref.dtype.keyType if which == "keysrules" else ref.dtype.valueType
 
         def one(e: Column) -> Column:
             target = e["key"] if which == "keysrules" else e["value"]
             return assemble_violations(_elem_viols(
-                arg, FieldRef(target, dt, F.lit(True)),
-                _join_path(path, ".", e["key"].cast("string")), opts,
-                policy))
+                ctx, arg, FieldRef(target, dt, F.lit(True)),
+                _join_path(ctx.path, ".", e["key"].cast("string")), scope))
 
         arr = F.flatten(F.transform(F.map_entries(ref.value), one))
         return [ArrayViol(F.coalesce(arr, F.array().cast(VIOL_ARRAY_T)))]
     viols: list = []
     for fname in ref.dtype.fieldNames():
-        if fname == "__defined__":
+        child = _child_ref(ref, fname, opts=ctx.opts)
+        if child is None:  # __defined__
             continue
-        child = _child_ref(ref, fname, opts)
         target = (FieldRef(F.lit(fname), T.StringType(), F.lit(True))
                   if which == "keysrules"
                   else FieldRef(child.value, child.dtype, F.lit(True)))
-        viols += _gate_viols(
-            _elem_viols(arg, target, _join_path(path, f".{fname}"),
-                        opts, policy),
-            child.defined)
+        # a Column like a map entry's path: the marker of an element
+        path = _join_path(_path_col(ctx.path), f".{fname}")
+        viols += _gate_viols(_elem_viols(ctx, arg, target, path, scope),
+                             child.defined)
     return viols
 
 
 def _unknown_key_viols(
-    schema: dict, parent: FieldRef, path: str | Column, opts: CompilerOpts
+    schema: dict, parent: FieldRef, path: str | Column, opts: CompilerOpts,
+    exempt: frozenset[str],
 ) -> list:
     """Keys of the struct/map ``parent`` that ``schema`` does not name
-    (``validator.hh:334-339``), reported at the mapping's own path."""
+    and ``exempt`` does not list (``validator.hh:334-339``), reported at
+    the mapping's own path."""
     path = _path_col(path)
     if isinstance(parent.dtype, T.StructType):
         return [
             _viol(_child_ref(parent, fname, opts).defined, path,
                   f"unknown field not permitted: {fname}")
             for fname in parent.dtype.fieldNames()
-            if fname not in schema and fname != "__defined__"
+            if fname not in schema and fname not in exempt
+            and fname != "__defined__"
         ]
     known = (F.array(*[F.lit(str(k)) for k in schema]) if schema
              else F.array().cast("array<string>"))
@@ -379,15 +407,15 @@ def _count_expr(ctx: FieldCtx) -> Column:
     return F.lit(0)
 
 
-def compile_field(ctx: FieldCtx) -> tuple[list[Column], Column, Column]:
+def compile_field(ctx: FieldCtx) -> tuple[list, FieldRef]:
     """Compile one field's rule-map.
 
-    Returns (violation columns, effective value expr, effective
-    definedness) — the effective value has NORMALIZATION (default)
-    applied so later rules validate the normalized value, mirroring
-    the reference's phase order (``validator.hh:266-287``). The
-    field's own policy keys scope over its subtree, and require_all
-    injects ``required: true`` (``validator.hh:273-275``).
+    Returns the violations and the field's effective ref: its value
+    with NORMALIZATION (default) applied, so later rules validate the
+    normalized value, mirroring the reference's phase order
+    (``validator.hh:266-287``). The field's own policy keys scope over
+    its subtree, and require_all injects ``required: true``
+    (``validator.hh:273-275``).
     """
     policy = ctx.policy.enter(ctx.rules)
     rules = {**ctx.rules, "required": True} if policy.require_all \
@@ -407,7 +435,7 @@ def compile_field(ctx: FieldCtx) -> tuple[list[Column], Column, Column]:
             # default, as the interpreter validates it (_rule_default);
             # the normalized output is the typed literal
             dt = _scalar_dtype(raw)
-            if dt is None and ctx.scope is None:
+            if dt is None and isinstance(ctx.path, Column):
                 raise CompileError(
                     "non-scalar `default` on an element field absent from"
                     " its struct is not columnar-compilable (use the"
@@ -426,13 +454,12 @@ def compile_field(ctx: FieldCtx) -> tuple[list[Column], Column, Column]:
     for name, arg in rules.items():
         if name.startswith("__"):
             continue
-        if ctx.scope is None and (name in ("dependencies", "excludes")
-                                  or name in opts.column_rules):
-            raise CompileError(
-                f"rule {name!r} not supported on array/map elements by the"
-                " columnar compiler (use the dynamic interpreter path)"
-            )
         if name in opts.column_rules:  # custom registered column rules
+            if isinstance(ctx.path, Column):
+                raise CompileError(
+                    f"rule {name!r} not supported on array/map elements by"
+                    " the columnar compiler (use the dynamic interpreter"
+                    " path)")
             for v in opts.column_rules[name](ctx, arg) or []:
                 # a custom rule may also return a raw
                 # struct<path,message>-or-null Column: it violates
@@ -620,23 +647,21 @@ def compile_field(ctx: FieldCtx) -> tuple[list[Column], Column, Column]:
                         defined & (F.coalesce(F.size(ctx.value), F.lit(0)) > i),
                         _join_path(ctx.path, f"[{i}]"), ctx.scope, elem=True,
                         policy=policy)
-                    v2, _, _ = compile_field(ectx)
+                    v2, _ = compile_field(ectx)
                     # items no-ops on an undefined list (same skip
                     # semantics as the schema rule)
                     viols.extend(_gate_viols(v2, defined))
         elif name in ("keysrules", "valuesrules"):
             if ctx.value is not None and isinstance(
                     ctx.dtype, (T.StructType, T.MapType)):
-                viols.extend(_kv_viols(
-                    name, arg, FieldRef(ctx.value, ctx.dtype, defined),
-                    ctx.path, opts, policy))
+                viols.extend(_kv_viols(ctx, name, arg, defined))
         elif name in ("meta", "rename", "default") or name in _POLICY_KEYS:
             pass  # no-op / handled by normalization and the policy
         else:
             raise CompileError(
                 f"unknown rule {name!r} reached the compiler — schema was"
                 " not meta-validated")
-    return viols, value, defined
+    return viols, FieldRef(value, ctx.dtype, defined)
 
 
 def _compile_schema_rule(ctx: FieldCtx, arg: Any, defined: Column) -> list[Column]:
@@ -657,9 +682,9 @@ def _compile_schema_rule(ctx: FieldCtx, arg: Any, defined: Column) -> list[Colum
         # or null (reference: rules skip such values; a missing dict
         # must not fire its children's `required`) — gate every nested
         # violation on the parent being defined and non-null
-        nested = _compile_mapping(
-            arg, FieldRef(ctx.value, ctx.dtype, defined),
-            ctx.path, ctx.scope, opts, ctx.policy)
+        nested, _ = _compile_mapping(
+            arg, FieldRef(ctx.value, ctx.dtype, defined), ctx.path,
+            ctx.scope.root, opts, ctx.policy, isinstance(ctx.path, Column))
         return _gate_viols(nested, defined & ctx.value.isNotNull())
     return []
 
@@ -681,33 +706,37 @@ def _compile_mapping(
     schema: dict,
     parent: FieldRef,
     path: str | Column,
-    parent_scope: Optional[Scope],
+    root: Optional[Scope],
     opts: CompilerOpts,
     policy: _Policy,
-) -> list[Column]:
-    """validateDict over a nested struct/map value
-    (``validator.hh:302-344``) under the carrying field's ``policy``:
-    per-field recursion + unknown-key violations. Below an element
-    lambda (``parent_scope`` None) the fields are element fields."""
-    viols: list[Column] = []
-    refs: dict[str, FieldRef] = {}
-    for fname in schema:
-        ref = _child_ref(parent, fname, opts)
-        if ref is None:
-            ref = FieldRef(None, None, F.lit(False))
-        refs[fname] = ref
-    elem = parent_scope is None
-    scope = None if elem else Scope(refs, parent_scope.root)
+    elem: bool = False,
+    exempt: frozenset[str] = frozenset(),
+) -> tuple[list, list[tuple[str, FieldRef]]]:
+    """validateDict (``validator.hh:302-344``) over the mapping
+    ``parent`` — the frame row (:func:`row_ref`, ``root`` None) or a
+    nested struct/map value — under the carrying field's ``policy``.
+    Each schema field compiles against the mapping as normalized so far
+    (:class:`Scope`); then keys neither ``schema`` nor ``exempt`` names
+    are violations. ``elem`` is the fields' ``FieldCtx.elem``. Returns
+    the violations and, in schema order, each field's name after
+    ``rename`` with its effective ref."""
+    scope = Scope(parent, root)
+    viols: list = []
+    fields: list[tuple[str, FieldRef]] = []
     for fname, rules in schema.items():
-        ref = refs[fname]
-        fctx = FieldCtx(opts, rules, ref.value, ref.dtype, ref.defined,
-                        _join_path(path, f".{fname}"), scope, elem=elem,
-                        policy=policy)
-        v2, _, _ = compile_field(fctx)
+        ref = scope.get(fname, opts) or FieldRef(None, None, F.lit(False))
+        v2, eff = compile_field(FieldCtx(
+            opts, rules, ref.value, ref.dtype, ref.defined,
+            _join_path(path, f".{fname}"), scope, elem=elem, policy=policy))
         viols.extend(v2)
+        out_name = str(rules.get("rename", fname))
+        if out_name != fname:
+            scope.entries[fname] = None  # a rename moves the entry
+        scope.entries[out_name] = eff
+        fields.append((out_name, eff))
     if policy.rejects_unknown:
-        viols.extend(_unknown_key_viols(schema, parent, path, opts))
-    return viols
+        viols.extend(_unknown_key_viols(schema, parent, path, opts, exempt))
+    return viols, fields
 
 
 def assemble_violations(viols: list) -> Column:

@@ -39,12 +39,10 @@ from ..dynamic.interpreter import Priority, Validator, _Policy
 from .compiler import (
     CompilerOpts,
     FieldCtx,
-    FieldRef,
-    Scope,
-    _viol,
+    _compile_mapping,
     assemble_violation_count,
     assemble_violations,
-    compile_field,
+    row_ref,
 )
 
 BOOKKEEPING_COLS = ("__defined__",)
@@ -169,67 +167,27 @@ class TableValidator:
         )
 
     def compile(self, df_schema: T.StructType) -> "CompiledPlan":
-        opts = self._opts()
+        """The row compiles like every nested mapping (validateDict,
+        ``validator.hh:302-344``); ``normalized`` is the extra columns,
+        each schema field's effective value under its renamed name,
+        then the unknown columns the policy keeps."""
         # extra_cols are exempt from the unknown-key check only — a
         # schema rule for such a column still validates it
-        exempt = set(self.extra_cols) | set(BOOKKEEPING_COLS)
-        refs: dict[str, FieldRef] = {}
-        for f in df_schema.fields:
-            if f.name in BOOKKEEPING_COLS:
-                continue
-            col = F.col(f.name)
-            if self.presence == "defined":
-                defined = F.coalesce(
-                    F.array_contains(F.col("__defined__"), f.name),
-                    F.lit(False),
-                )
-            else:
-                defined = col.isNotNull()
-            refs[f.name] = FieldRef(col, f.dataType, defined)
-        # schema fields absent from the DataFrame: statically undefined
-        for fname in self.schema:
-            if fname not in refs:
-                refs[fname] = FieldRef(None, None, F.lit(False))
-        scope = Scope(refs, None)
-
-        viols: list = []
-        norm_cols: list[Column] = []
-        norm_names: list[str] = []
-        for fname, rules in self.schema.items():
-            ref = refs[fname]
-            ctx = FieldCtx(
-                opts, rules, ref.value, ref.dtype, ref.defined,
-                f"^.{fname}", scope, policy=self._policy,
-            )
-            fviols, eff_value, _ = compile_field(ctx)
-            viols.extend(fviols)
-            out_name = str(rules.get("rename", fname))
-            if eff_value is not None:
-                norm_cols.append(eff_value.alias(out_name))
-                norm_names.append(out_name)
-        # unknown top-level columns (validator.hh:326-339)
-        unknown = [
-            f.name
-            for f in df_schema.fields
-            if f.name not in self.schema and f.name not in exempt
-        ]
-        if self._policy.rejects_unknown:
-            for k in unknown:
-                viols.append(_viol(refs[k].defined, F.lit("^"),
-                                   f"unknown field not permitted: {k}"))
-        keep_unknown = [] if self._policy.purge_unknown else unknown
-        for k in keep_unknown:
-            norm_cols.append(F.col(k))
-            norm_names.append(k)
-        for k in self.extra_cols:
-            if k in df_schema.fieldNames():
-                norm_cols.insert(0, F.col(k))
-                norm_names.insert(0, k)
+        exempt = frozenset(self.extra_cols) | frozenset(BOOKKEEPING_COLS)
+        viols, fields = _compile_mapping(
+            self.schema, row_ref(df_schema), "^", None, self._opts(),
+            self._policy, exempt=exempt)
+        norm_cols = [F.col(k) for k in reversed(self.extra_cols)
+                     if k in df_schema.fieldNames()]
+        norm_cols += [ref.value.alias(name) for name, ref in fields
+                      if ref.value is not None]
+        if not self._policy.purge_unknown:
+            norm_cols += [F.col(k) for k in df_schema.fieldNames()
+                          if k not in self.schema and k not in exempt]
         return CompiledPlan(
             violations=assemble_violations(viols),
             violation_count=assemble_violation_count(viols),
             normalized_cols=norm_cols,
-            normalized_names=norm_names,
         )
 
     # -- execution -----------------------------------------------------
@@ -253,7 +211,6 @@ class CompiledPlan:
     violations: Column
     violation_count: Column
     normalized_cols: list[Column]
-    normalized_names: list[str]
 
 
 def explode_violations(annotated: DataFrame,

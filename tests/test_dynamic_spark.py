@@ -9,10 +9,8 @@ same engine, different execution substrate)."""
 from __future__ import annotations
 
 import json
-import os
 
 import pytest
-import yaml
 
 from pyspark.sql import functions as F
 
@@ -26,13 +24,10 @@ from cerberus_cpp_spark.dynamic.spark import (
 )
 from cerberus_cpp_spark.errors import SchemaError
 
-REF_CORPUS = "/root/reference/test/testdata.yml"
+from tests.conftest import reference_corpus
 
-if os.path.exists(REF_CORPUS):
-    with open(REF_CORPUS) as f:
-        CASES: dict = yaml.safe_load(f)
-else:  # pragma: no cover
-    CASES = {}
+GOLDEN = reference_corpus("testdata.yml")
+CASES = GOLDEN.cases
 
 
 def _jsonable(doc) -> bool:
@@ -43,10 +38,8 @@ def _jsonable(doc) -> bool:
         return False
 
 
-@pytest.mark.parametrize("name", sorted(CASES) or ["<missing>"])
+@pytest.mark.parametrize("name", GOLDEN.params())
 def test_golden_distributed(name: str, spark) -> None:
-    if not CASES:
-        pytest.skip("reference corpus not available")
     spec = CASES[name]
     docs = [(d, True) for d in spec.get("success") or []] + [
         (d, False) for d in spec.get("failure") or []
@@ -157,6 +150,23 @@ def test_nesting_bound_is_exact(spark) -> None:
     assert got[1]["violations"] == [("^", TOO_DEEP_MSG)]
     assert got[2]["valid"] and json.loads(got[2]["normalized"]) == \
         json.loads(long_flat)
+
+
+@pytest.mark.parametrize("depth", [1, MAX_DEPTH, MAX_DEPTH + 1, 600])
+def test_driver_validate_bounds_nesting(depth: int) -> None:
+    """Driver-side ``Validator.validate`` shares the worker's bound: a
+    document deeper than MAX_DEPTH is the one violation at ``^``, found
+    before the deep copy recurses; one MAX_DEPTH deep validates."""
+    doc: object = 1
+    for _ in range(depth):
+        doc = {"a": doc}
+    v = Validator({"a": {"type": "integer"}})
+    v.validate(doc)
+    want = ([("^", TOO_DEEP_MSG)] if depth > MAX_DEPTH
+            else [] if depth == 1
+            else [("^.a", "type-rule violated: expected integer")])
+    assert [(e.path, e.message) for e in v.errors] == want
+    assert (v.get_document() is None) == (depth > MAX_DEPTH)
 
 
 def test_unchecked_validator_uses_registered_schema_as_given(

@@ -2,14 +2,15 @@
 deeper: the columnar engine compiles every nested rule map through
 ``compile_field`` and every nested mapping through
 ``_compile_mapping`` (``plans/compiler.py``; list elements and map
-entries on a scope-less ``FieldCtx`` via ``_array_rule_viols`` and
-``_kv_viols``), whatever sits above it. It must agree with the dynamic
-interpreter on verdicts AND violation (path, message) sets (reference
-semantics: ``rules.hh:519-573`` schema recursion,
-``validator.hh:302-344`` validateDict, ``rules.hh:270-288``/``614-632``
-keysrules/valuesrules). Only ``dependencies``, ``excludes``, custom
-column rules and a non-scalar ``default`` on a field the element's
-struct lacks stay refused inside element lambdas."""
+entries via ``_array_rule_viols`` and ``_kv_viols``), whatever sits
+above it. It must agree with the dynamic interpreter on verdicts AND
+violation (path, message) sets (reference semantics:
+``rules.hh:519-573`` schema recursion, ``validator.hh:302-344``
+validateDict, ``rules.hh:270-288``/``614-632`` keysrules/valuesrules).
+``dependencies`` and ``excludes`` compile there too, resolving paths
+the way the interpreter does. Only custom column rules and a
+non-scalar ``default`` on a field the element's struct lacks stay
+refused inside element lambdas."""
 
 from __future__ import annotations
 
@@ -132,17 +133,15 @@ def test_nested_rules_any_depth(presence: str, name: str, spark) -> None:
     _differential(spark, schema, docs, presence)
 
 
-def test_dependencies_in_list_element_still_raise(spark) -> None:
-    """``dependencies`` needs a scope to resolve its path against;
-    element lambdas have none, so the compiler refuses it there."""
+@pytest.mark.parametrize("presence", ["defined", "null"])
+def test_dependencies_in_list_element_match_interpreter(
+        presence: str, spark) -> None:
+    """``dependencies`` in a list element's struct resolves against the
+    element, the way the interpreter's ``_validate_dict`` sees it."""
     schema = _list_of_dicts({"k": {"type": "integer", "dependencies": "j"},
                              "j": {"type": "integer"}})
-    df = spark.createDataFrame([], "a array<struct<k: bigint, j: bigint>>")
-    with pytest.raises(CompileError, match=(
-            r"^rule 'dependencies' not supported on array/map elements by"
-            r" the columnar compiler \(use the dynamic interpreter"
-            r" path\)$")):
-        TableValidator(schema).compile(df.schema)
+    docs = [{"a": [{"k": 1, "j": 2}, {"k": 1}, {"j": 1}]}, {"a": []}, {}]
+    _differential(spark, schema, docs, presence)
 
 
 # fields whose `default` must validate like the interpreter's when the

@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cerberus_cpp_spark.errors import SchemaError
-from cerberus_cpp_spark.plans.compiler import _viol
+from cerberus_cpp_spark.plans.compiler import CompileError, _viol
 from cerberus_cpp_spark.plans.engine import TableValidator
 
 
@@ -40,6 +40,23 @@ def test_unregistered_custom_rule_still_raises(spark) -> None:
     df = spark.createDataFrame([(1,)], ["n"])
     with pytest.raises(SchemaError):
         tv.validate(df)
+
+
+@pytest.mark.parametrize("rules,ddl", [
+    ({"type": "list", "schema": {"type": "integer", "odd": True}},
+     "n array<bigint>"),
+    ({"type": "dict", "valuesrules": {"type": "integer", "odd": True}},
+     "n map<string, bigint>"),
+], ids=["list-element", "map-value"])
+def test_custom_rule_inside_element_lambda_raises(rules, ddl, spark) -> None:
+    """A custom column rule may build a pandas UDF, which cannot run
+    inside the ``F.transform`` lambda of a list element or map entry:
+    the compiler refuses it there."""
+    tv = TableValidator({"n": rules})
+    tv.register_column_rule("odd", {"type": "boolean"}, lambda ctx, arg: [])
+    df = spark.createDataFrame([], ddl)
+    with pytest.raises(CompileError, match="rule 'odd' not supported"):
+        tv.compile(df.schema)
 
 
 def test_custom_rule_via_pandas_udf(spark) -> None:

@@ -10,10 +10,7 @@ explicit, not silent.
 
 from __future__ import annotations
 
-import os
-
 import pytest
-import yaml
 
 from pyspark.sql import functions as F
 
@@ -23,22 +20,17 @@ from cerberus_cpp_spark.sources.fixtures import (
     golden_frame,
 )
 
-REF_CORPUS = "/root/reference/test/testdata.yml"
+from tests.conftest import reference_corpus
 
-if os.path.exists(REF_CORPUS):
-    with open(REF_CORPUS) as f:
-        CASES: dict = yaml.safe_load(f)
-else:  # pragma: no cover
-    CASES = {}
+GOLDEN = reference_corpus("testdata.yml")
+CASES = GOLDEN.cases
 
 # fields mixing dict+scalar shapes in one column — dynamic path only
 DYNAMIC_ONLY = {"type-simple"}
 
 
-@pytest.mark.parametrize("name", sorted(CASES) or ["<missing>"])
+@pytest.mark.parametrize("name", GOLDEN.params())
 def test_golden_columnar(name: str, spark) -> None:
-    if not CASES:
-        pytest.skip("reference corpus not available")
     spec = CASES[name]
     docs = [(d, True) for d in spec.get("success") or []] + [
         (d, False) for d in spec.get("failure") or []

@@ -3,27 +3,20 @@
 Mirrors the reference harness ``test/testcerberus.cc:15-44``: for each
 named case in ``test/testdata.yml`` wire the policy flags + registry,
 then assert the boolean verdict for every success/failure document.
-The corpus is loaded directly from the read-only reference checkout
-(not copied); if it is absent the suite falls back to skipping with an
-explicit reason so the rest of the tests stand alone.
+The corpus is read from a reference checkout (``tests/conftest.py``,
+not copied); if it is absent the suite is skipped with a reason that
+names the missing file, so the rest of the tests stand alone.
 """
 
 from __future__ import annotations
 
-import os
-
 import pytest
-import yaml
 
 from cerberus_cpp_spark.dynamic.interpreter import Validator
+from tests.conftest import reference_corpus
 
-REF_CORPUS = "/root/reference/test/testdata.yml"
-
-if os.path.exists(REF_CORPUS):
-    with open(REF_CORPUS) as f:
-        CASES: dict = yaml.safe_load(f)
-else:  # pragma: no cover
-    CASES = {}
+GOLDEN = reference_corpus("testdata.yml")
+CASES = GOLDEN.cases
 
 
 def _make_validator(spec: dict) -> Validator:
@@ -37,10 +30,8 @@ def _make_validator(spec: dict) -> Validator:
     return v
 
 
-@pytest.mark.parametrize("name", sorted(CASES) or ["<missing corpus>"])
+@pytest.mark.parametrize("name", GOLDEN.params())
 def test_golden_case(name: str) -> None:
-    if not CASES:
-        pytest.skip("reference corpus not available")
     spec = CASES[name]
     v = _make_validator(spec)
     for doc in spec.get("success") or []:
@@ -51,8 +42,7 @@ def test_golden_case(name: str) -> None:
         assert not ok, f"{name}: expected FAIL for {doc!r}"
 
 
+@GOLDEN.skip
 def test_corpus_is_complete() -> None:
     """All 40 named reference cases must be present and exercised."""
-    if not CASES:
-        pytest.skip("reference corpus not available")
     assert len(CASES) == 40

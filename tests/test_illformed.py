@@ -7,30 +7,20 @@ Reference: ``test/testcerberus.cc:46-55`` over
 
 from __future__ import annotations
 
-import os
-
 import pytest
-import yaml
 
 from cerberus_cpp_spark.dynamic.interpreter import Validator
 from cerberus_cpp_spark.errors import SchemaError
+from tests.conftest import reference_corpus
 
-REF = "/root/reference/test/illformedschemas.yml"
-
-if os.path.exists(REF):
-    with open(REF) as f:
-        CASES: dict = yaml.safe_load(f)
-else:  # pragma: no cover
-    CASES = {}
+ILLFORMED = reference_corpus("illformedschemas.yml")
 
 
-@pytest.mark.parametrize("name", sorted(CASES) or ["<missing>"])
+@pytest.mark.parametrize("name", ILLFORMED.params())
 def test_illformed_schema_raises(name: str) -> None:
-    if not CASES:
-        pytest.skip("reference corpus not available")
     v = Validator()
     with pytest.raises(SchemaError):
-        v.validate({}, CASES[name])
+        v.validate({}, ILLFORMED.cases[name])
 
 
 def test_unknown_rule_raises() -> None:

@@ -10,29 +10,24 @@ ordered ``(path, message)`` list and the same normalized document.
 from __future__ import annotations
 
 import copy
-import os
 import random
-import re
 
 import pytest
-import yaml
 
 from cerberus_cpp_spark.dynamic.interpreter import (
     Priority,
+    _PREPARED,
     RuleCtx,
     Validator,
     _rule_regex,
+    _rule_type,
 )
 from perfbench.workloads import JSON_SCHEMA
 from tests.test_policy_scope import CASES as POLICY_CASES
 
-REF_CORPUS = "/root/reference/test/testdata.yml"
+from tests.conftest import reference_corpus
 
-if os.path.exists(REF_CORPUS):
-    with open(REF_CORPUS) as f:
-        GOLDEN: dict = yaml.safe_load(f)
-else:  # pragma: no cover
-    GOLDEN = {}
+GOLDEN = reference_corpus("testdata.yml")
 
 
 class ScanValidator(Validator):
@@ -47,8 +42,8 @@ class ScanValidator(Validator):
                 fn = self._rules.get((phase, name))
                 if fn is None:
                     continue
-                if fn is _rule_regex:
-                    arg = re.compile(str(arg))
+                if fn in _PREPARED:
+                    arg = _PREPARED[fn](arg)
                 fn(RuleCtx(self, self._state, item, arg, rules, path,
                            parent, policy))
 
@@ -58,11 +53,9 @@ def _run(v: Validator, doc, schema=None) -> tuple:
     return ok, [(e.path, e.message) for e in v.errors], v.get_document()
 
 
-@pytest.mark.parametrize("name", sorted(GOLDEN) or ["<missing corpus>"])
+@pytest.mark.parametrize("name", GOLDEN.params())
 def test_golden_cases_dispatch_alike(name: str) -> None:
-    if not GOLDEN:
-        pytest.skip("reference corpus not available")
-    spec = GOLDEN[name]
+    spec = GOLDEN.cases[name]
     flags = {k: bool(spec.get(k, False)) for k in
              ("allow_unknown", "purge_unknown", "require_all")}
     pair = (Validator(**flags), ScanValidator(**flags))
@@ -175,7 +168,7 @@ def test_program_steps_pin_dispatch_cost() -> None:
     assert prog.steps == [
         (v._rules[(P.VALIDATION, "nullable")], False),
         (v._rules[(P.VALIDATION, "meta")], meta),
-        (v._rules[(P.TYPECHECKING, "type")], "integer"),
+        (v._rules[(P.TYPECHECKING, "type")], ("integer",)),
     ]
     assert [fn for fn, _ in prog.all_steps] == [
         v._rules[(P.VALIDATION, "nullable")],
@@ -189,6 +182,17 @@ def test_regex_step_holds_compiled_pattern() -> None:
     v = Validator()
     (fn, arg), = v._program({"regex": "[a-z]+"}).steps
     assert fn is _rule_regex and arg.pattern == "[a-z]+"
+
+
+def test_type_step_holds_parsed_names() -> None:
+    """The ``type`` step holds its names once, as a tuple of strings;
+    the violation message still joins them as written."""
+    v = Validator()
+    (fn, arg), = v._program({"type": ["integer", 7]}).steps
+    assert fn is _rule_type and arg == ("integer", "7")
+    assert not v.validate({"a": "x"}, {"a": {"type": ["integer", "float"]}})
+    assert [(e.path, e.message) for e in v.errors] == [
+        ("^.a", "type-rule violated: expected integer/float")]
 
 
 @pytest.mark.parametrize("validate_schema", [True, False])
