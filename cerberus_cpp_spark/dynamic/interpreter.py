@@ -45,10 +45,11 @@ from typing import Any, Callable
 
 from ..errors import SchemaError, ValidationErrorItem
 from ..functions.pytypes import (
+    BOOL_TEXT,
     UNDEFINED,
     TypeAdapter,
-    _scalar_text,
     builtin_types,
+    scalar_text,
 )
 
 
@@ -90,7 +91,7 @@ def _truthy(arg: Any) -> bool:
     if isinstance(arg, bool):
         return arg
     if isinstance(arg, str):
-        return arg in ("true", "True", "TRUE", "yes", "on")
+        return BOOL_TEXT.get(arg, False)
     return bool(arg)
 
 
@@ -612,7 +613,7 @@ def _rule_contains(ctx: RuleCtx) -> None:
     """``rules.hh:102-126`` — string equality, ALL listed values
     required; an undefined/non-list document leaves every needed value
     missing (reference iterates zero items → error)."""
-    needed = [str(_scalar_text(x)) for x in as_list(ctx.arg)]
+    needed = [str(scalar_text(x)) for x in as_list(ctx.arg)]
     items = ctx.value if isinstance(ctx.value, list) else []
     t = ctx.get_type("string")
     for item in items:
@@ -765,7 +766,7 @@ def _rule_regex(ctx: RuleCtx) -> None:
     """``rules.hh:438-452`` — FULL match (``std::regex_match``)."""
     if ctx.value is UNDEFINED or ctx.value is None:
         return
-    text = _scalar_text(ctx.value)
+    text = scalar_text(ctx.value)
     # the rule program compiled the argument (_steps)
     if text is None or not ctx.arg.fullmatch(text):
         ctx.raise_error("regex-rule violated")

@@ -57,8 +57,12 @@ VIOL_FIELDS = T.ArrayType(T.StructType([
 ]))
 
 #: violation emitted when the payload cannot be parsed as JSON —
-#: mirrors the interpreter's top-level "document is not a mapping"
+#: mirrors the interpreter's top-level "document is not a mapping".
+#: ``NaN``, ``Infinity`` and ``-Infinity`` are not JSON (RFC 8259 §6)
 NOT_JSON_MSG = "document is not valid JSON"
+#: the one violation of a document whose validation raised: a custom
+#: rule or type that fails on one document fails only that row
+RAISED_MSG = "validation raised {}"
 
 
 def validate_json(
@@ -138,12 +142,15 @@ def validate_json(
         for name, s in norm_registry.items():
             v.register_schema(name, s)
 
+        def not_json(constant):
+            raise ValueError(f"{constant} is not JSON")
+
         def parse(raw):
             """(document, None), or (None, the one violation message)."""
             if raw is None:
                 return None, None
             try:
-                doc = json.loads(raw)
+                doc = json.loads(raw, parse_constant=not_json)
             except RecursionError:
                 return None, TOO_DEEP_MSG
             except (ValueError, TypeError):
@@ -157,25 +164,25 @@ def validate_json(
             viols, counts, valids, norms = [], [], [], []
             for raw in pdf[doc_col]:
                 doc, msg = parse(raw)
+                norm = None
                 if msg is None:
                     try:
                         v._validate_owned(doc)  # json.loads made it fresh
+                        errs = [(e.path, e.message) for e in v.errors]
+                        if include_normalized:
+                            norm = json.dumps(v.get_document(),
+                                              sort_keys=True,
+                                              separators=(",", ":"))
                     except RecursionError:
                         msg = TOO_DEEP_MSG
-                if msg is None:
-                    errs = [(e.path, e.message) for e in v.errors]
-                    norm_doc = v.get_document()
-                else:
+                    except Exception as e:  # noqa: BLE001 — one row only
+                        msg = RAISED_MSG.format(type(e).__name__)
+                if msg is not None:
                     errs = [("^", msg)]
                 viols.append(errs)
                 counts.append(len(errs))
                 valids.append(not errs)
-                if include_normalized:
-                    norms.append(
-                        json.dumps(norm_doc, sort_keys=True,
-                                   separators=(",", ":"))
-                        if msg is None else None
-                    )
+                norms.append(norm)
             data = {c: pdf[c] for c in id_list}
             data["violations"] = viols
             data["n_violations"] = counts

@@ -1,15 +1,20 @@
-"""Scalar type registry — pure-Python side (dynamic interpreter).
+"""The scalar table: what a builtin type decodes, defined once for
+both engines.
 
-Re-expresses the reference's type system (``/root/reference/include/
-cerberus-cpp/types.hh:16-72``): each named type exposes exactly three
-operations — ``is_convertible`` (= would a YAML decode of the scalar
-succeed), ``equality`` and ``less`` — and ``type:`` checks test
-*decodability*, not runtime type identity (``rules.hh:575-612``).
-
-The convertibility matrix below is derived from yaml-cpp decode
-behavior as pinned by the reference tests (``test/testdata.yml:505-527``):
-``42`` decodes as integer AND float, ``true`` does NOT decode as
-integer, ``abc`` fails numerics, and any scalar decodes as string.
+The reference's ``type`` rule means "a YAML decode of this scalar to
+the named type would succeed", and ``equality``/``less`` compare the
+decoded values (``types.hh:16-72``, SURVEY.md §1.2.3): ``42`` decodes
+as integer AND float, ``true`` not as integer, ``abc`` fails numerics,
+any scalar decodes as string (``test/testdata.yml:505-527``), and
+``integer`` is a C++ ``long long``. This module holds the lexical
+forms, the int64 range, :data:`MATRIX` (value family × target: the
+decode ALWAYS succeeds, NEVER does, or must PARSE the text) and
+:func:`scalar_text`. The interpreter reads it through
+:func:`builtin_types`, the columnar engine through
+``functions/sparktypes.py``. Where the reference is silent the forms
+keep the interpreter's answers: whitespace around a number is allowed,
+hex and octal need a lowercase ``0x``/``0o``, a decimal integer with a
+leading ``0`` must be all zeros, and boolean text matches exactly.
 
 Values in the dynamic interpreter are plain Python objects as produced
 by ``yaml.safe_load`` (int / float / bool / str / None / list / dict)
@@ -45,25 +50,116 @@ class _Undefined:
 UNDEFINED = _Undefined()
 
 
-# YAML 1.1-ish scalar lexical forms (what yaml-cpp's decode accepts).
-_INT_RE = re.compile(r"[-+]?(0x[0-9a-fA-F]+|0o?[0-7]+|[0-9]+)")
-_FLOAT_RE = re.compile(
-    r"[-+]?(\.[0-9]+|[0-9]+(\.[0-9]*)?)([eE][-+]?[0-9]+)?"
-    r"|[-+]?\.(inf|Inf|INF)|\.(nan|NaN|NAN)"
-)
-_BOOL_TRUE = {"true", "True", "TRUE", "yes", "Yes", "YES", "on", "On", "ON"}
-_BOOL_FALSE = {"false", "False", "FALSE", "no", "No", "NO", "off", "Off", "OFF"}
+#: whitespace a number's text may carry around it: the characters
+#: Python's ``str.isspace`` accepts, as a class both regex engines read
+_WS = (r"[\t\n\x0b\x0c\r\x1c-\x1f \x85\xa0\u1680\u2000-\u200a"
+       r"\u2028\u2029\u202f\u205f\u3000]*")
+#: integer text; groups: sign, hex digits, octal digits, decimal digits
+#: (hex and octal without their leading zeros)
+INT_TEXT = (_WS + r"([-+]?)(?:0x0*([0-9a-fA-F]+)|0o0*([0-7]+)"
+            r"|(0+|[1-9][0-9]*))" + _WS)
+#: float/number text; groups: the number, ``.inf`` with its sign, ``.nan``
+FLOAT_TEXT = (_WS + r"(?:([-+]?(?:\.[0-9]+|[0-9]+(?:\.[0-9]*)?)"
+              r"(?:[eE][-+]?[0-9]+)?)|([-+]?\.(?:inf|Inf|INF))"
+              r"|(\.(?:nan|NaN|NAN)))" + _WS)
+#: boolean text → its value
+BOOL_TEXT = {
+    **dict.fromkeys(("true", "True", "TRUE", "yes", "Yes", "YES",
+                     "on", "On", "ON"), True),
+    **dict.fromkeys(("false", "False", "FALSE", "no", "No", "NO",
+                     "off", "Off", "OFF"), False),
+}
+#: the range of ``integer``: a C++ ``long long``
+INT64 = (-(1 << 63), (1 << 63) - 1)
+#: the decimal exponents a float's text writes in fixed notation
+#: (``0.0001``, ``1e-05``; ``1000000000000000.0``, ``1e+16``)
+FIXED_EXPONENTS = range(-4, 16)
+
+INTEGRAL, FRACTIONAL, BOOLEAN, TEXT = (
+    "integral", "fractional", "boolean", "text")
+ALWAYS, NEVER, PARSE = "always", "never", "parse"
+#: target → value family → how the decode goes; a value of no family
+#: (null, a container) never decodes
+MATRIX = {
+    "integer": {INTEGRAL: ALWAYS, FRACTIONAL: NEVER, BOOLEAN: NEVER,
+                TEXT: PARSE},
+    "float": {INTEGRAL: ALWAYS, FRACTIONAL: ALWAYS, BOOLEAN: NEVER,
+              TEXT: PARSE},
+    "boolean": {INTEGRAL: NEVER, FRACTIONAL: NEVER, BOOLEAN: ALWAYS,
+                TEXT: PARSE},
+    "string": dict.fromkeys((INTEGRAL, FRACTIONAL, BOOLEAN, TEXT), ALWAYS),
+}
+MATRIX["number"] = MATRIX["float"]
+
+_FAMILY = {int: INTEGRAL, float: FRACTIONAL, bool: BOOLEAN, str: TEXT}
 
 
-def _scalar_text(value: Any) -> str | None:
-    """The YAML scalar text of a Python value (None for containers)."""
-    if value is UNDEFINED or value is None:
-        return None
+def scalar_text(value: Any) -> str | None:
+    """The text of a scalar (None for null, undefined and containers):
+    a boolean writes ``true``/``false``, a float its shortest digits
+    that read back as the same double, laid out by
+    :data:`FIXED_EXPONENTS` — Python's ``repr``, also ``inf``/``nan``."""
     if isinstance(value, bool):
         return "true" if value else "false"
     if isinstance(value, (int, float, str)):
         return str(value)
     return None
+
+
+_INT_RE = re.compile(INT_TEXT)
+_FLOAT_RE = re.compile(FLOAT_TEXT)
+
+
+def _parse_integer(text: str) -> int | None:
+    m = _INT_RE.fullmatch(text)
+    if m is None:
+        return None
+    sign, hexa, octal, dec = m.groups()
+    n = int(hexa, 16) if hexa else int(octal, 8) if octal else int(dec)
+    n = -n if sign == "-" else n
+    return n if INT64[0] <= n <= INT64[1] else None
+
+
+def _parse_float(text: str) -> float | None:
+    m = _FLOAT_RE.fullmatch(text)  # a number, a signed .inf or .nan
+    return None if m is None else float(
+        m[1] or (m[2] or "nan").replace(".", ""))
+
+
+#: target → the decode of a value its cell says ALWAYS decodes
+_CONVERT = {"integer": int, "float": float, "number": float,
+            "boolean": bool, "string": scalar_text}
+#: target → the parse of text, None when the text does not decode
+_PARSE = {"integer": _parse_integer, "float": _parse_float,
+          "number": _parse_float, "boolean": BOOL_TEXT.get}
+
+
+def _decoder(target: str) -> Callable[[Any], Any]:
+    """The decode of the builtin ``target``: the decoded value, or
+    ``ValueError`` where the YAML decode fails (yaml-cpp
+    ``convert<T>::decode`` returning false, ``types.hh:35-39``)."""
+    cells, convert = MATRIX[target], _CONVERT[target]
+    parse = _PARSE.get(target)
+    lo, hi = INT64
+
+    def decode(value: Any) -> Any:
+        # the family by Python type; an int beyond int64 is text: all a
+        # YAML decode sees of it is its digits
+        fam = _FAMILY.get(type(value))
+        if fam is INTEGRAL and not lo <= value <= hi:
+            fam = TEXT
+        cell = cells.get(fam, NEVER)
+        if cell is ALWAYS:
+            return convert(value)
+        out = parse(scalar_text(value)) if cell is PARSE else None
+        if out is None:
+            raise ValueError(f"not {target}-decodable: {value!r}")
+        return out
+    return decode
+
+
+#: builtin target → its decode
+DECODE = {target: _decoder(target) for target in MATRIX}
 
 
 @dataclass(frozen=True)
@@ -98,50 +194,7 @@ class TypeAdapter:
             return False
 
 
-def _decode_integer(value: Any) -> int:
-    if isinstance(value, bool):  # yaml: bool scalar does not decode as int
-        raise ValueError("boolean is not integer-decodable")
-    if isinstance(value, int):
-        return value
-    if isinstance(value, str) and _INT_RE.fullmatch(value.strip()):
-        return int(value.strip(), 0)
-    raise ValueError(f"not integer-decodable: {value!r}")
-
-
-def _decode_float(value: Any) -> float:
-    if isinstance(value, bool):
-        raise ValueError("boolean is not float-decodable")
-    if isinstance(value, (int, float)):
-        return float(value)
-    if isinstance(value, str) and _FLOAT_RE.fullmatch(value.strip()):
-        return float(value.strip().replace(".inf", "inf").replace(".nan", "nan"))
-    raise ValueError(f"not float-decodable: {value!r}")
-
-
-def _decode_boolean(value: Any) -> bool:
-    if isinstance(value, bool):
-        return value
-    if isinstance(value, str):
-        if value in _BOOL_TRUE:
-            return True
-        if value in _BOOL_FALSE:
-            return False
-    raise ValueError(f"not boolean-decodable: {value!r}")
-
-
-def _decode_string(value: Any) -> str:
-    text = _scalar_text(value)
-    if text is None:
-        raise ValueError(f"not string-decodable: {value!r}")
-    return text
-
-
 def builtin_types() -> dict[str, TypeAdapter]:
-    """The five builtin scalar types (reference ``types.hh:64-72``)."""
-    return {
-        "integer": TypeAdapter("integer", _decode_integer),
-        "float": TypeAdapter("float", _decode_float),
-        "number": TypeAdapter("number", _decode_float),
-        "boolean": TypeAdapter("boolean", _decode_boolean),
-        "string": TypeAdapter("string", _decode_string),
-    }
+    """The five builtin scalar types (reference ``types.hh:64-72``):
+    :data:`MATRIX` decides, and only text reaches a parser."""
+    return {t: TypeAdapter(t, DECODE[t]) for t in MATRIX}

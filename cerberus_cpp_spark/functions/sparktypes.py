@@ -1,17 +1,20 @@
-"""Spark-side scalar type system: the YAML-convertibility matrix as
-Column expressions.
+"""The scalar table (``functions/pytypes.py``) as Column expressions.
 
-The reference's ``type`` rule means "a YAML decode of this scalar to
-the named type would succeed" (``types.hh:31-58``), which is NOT
-Spark's ``cast``: Spark happily casts ``"3.14"`` → long (truncates)
-and boolean → int, YAML decode does neither. So each (source Spark
-dtype, target type name) pair gets an explicit decode expression that
-yields NULL exactly when the YAML decode would fail; convertibility is
-``decode IS NOT NULL``. Statically-impossible pairs return None so
-the compiler can fold the predicate to a constant.
+A YAML decode is NOT Spark's ``cast``: Spark casts ``"3.14"`` → long
+and boolean → int, a YAML decode does neither (``types.hh:31-58``). A
+column's family comes from its dtype, and the table's cell for
+(family, target) gives the expression: ALWAYS is the column itself or
+a widening, NEVER returns None so the compiler folds the rule, PARSE
+reads the text with the table's lexical forms. No expression here can
+fail a job under ANSI mode: a decode over data is a ``try_cast``, hex
+and octal digits reach ``conv`` only when they fit 64 bits, and
+``.inf``/``.nan`` are a ``when`` ahead of the cast. A fractional
+value's text is the interpreter's, Python's ``repr``: Spark's own cast
+writes ``1.0E-5`` for ``1e-05`` and, through JDK 17's
+``Double.toString``, sometimes a digit too many.
 
-All expressions here are built-in ``pyspark.sql.functions`` — they
-stay inside whole-stage codegen; no Python UDFs on this path.
+All expressions are built-in ``pyspark.sql.functions`` — they stay
+inside whole-stage codegen; no Python UDFs on this path.
 """
 
 from __future__ import annotations
@@ -23,59 +26,127 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .pytypes import builtin_types
-
-# Anchored lexical forms of YAML scalars (same families as pytypes;
-# the Spark path restricts integers to decimal text — hex/octal YAML
-# ints are not expressible via Spark cast and are vanishingly rare in
-# tabular data; the dynamic interpreter still accepts them).
-INT_TEXT = r"^[-+]?[0-9]+$"
-FLOAT_TEXT = (
-    r"^([-+]?(\.[0-9]+|[0-9]+(\.[0-9]*)?)([eE][-+]?[0-9]+)?"
-    r"|[-+]?\.(inf|Inf|INF)|\.(nan|NaN|NAN))$"
+from .pytypes import (
+    ALWAYS,
+    BOOL_TEXT,
+    BOOLEAN,
+    DECODE,
+    FIXED_EXPONENTS,
+    FLOAT_TEXT,
+    FRACTIONAL,
+    INT_TEXT,
+    INTEGRAL,
+    MATRIX,
+    NEVER,
+    PARSE,
+    TEXT,
 )
-BOOL_TRUE_TEXT = ["true", "True", "TRUE", "yes", "Yes", "YES", "on", "On", "ON"]
-BOOL_FALSE_TEXT = ["false", "False", "FALSE", "no", "No", "NO", "off", "Off", "OFF"]
 
-_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-_FRACTIONAL = (T.FloatType, T.DoubleType, T.DecimalType)
-_SCALARS = _INTEGRAL + _FRACTIONAL + (T.StringType, T.BooleanType)
+_FAMILIES = (
+    ((T.ByteType, T.ShortType, T.IntegerType, T.LongType), INTEGRAL),
+    ((T.FloatType, T.DoubleType, T.DecimalType), FRACTIONAL),
+    ((T.BooleanType,), BOOLEAN),
+    ((T.StringType,), TEXT),
+)
+#: the largest digit strings ``conv`` reads without overflow, by base
+_U64 = {16: f"{(1 << 64) - 1:x}", 8: f"{(1 << 64) - 1:o}"}
+
+
+def _cell(dtype: T.DataType, target: str) -> tuple[str, str | None]:
+    """The table's cell for a column of ``dtype``, with the column's
+    family: NEVER for a dtype of no family and for a target the table
+    does not hold."""
+    for types, fam in _FAMILIES:
+        if isinstance(dtype, types):
+            return MATRIX.get(target, {}).get(fam, NEVER), fam
+    return NEVER, None
+
+
+def _groups(text: Column, form: str, n: int) -> list[Column]:
+    """The ``n`` groups of a full match of ``form``; all ``""`` when
+    ``text`` does not match."""
+    return [F.regexp_extract(text, f"\\A(?:{form})\\z", i)
+            for i in range(1, n + 1)]
+
+
+def _conv(digits: Column, base: int) -> Column:
+    """``digits`` in ``base`` as decimal text; NULL past 64 bits, where
+    ANSI ``conv`` raises."""
+    top, n = _U64[base], F.length(digits)
+    fits = (n < len(top)) | ((n == len(top)) & (F.lower(digits) <= top))
+    return F.when(fits, F.conv(digits, base, 10))
+
+
+def _parse_integer(text: Column) -> Column:
+    sign, hexa, octal, dec = _groups(text, INT_TEXT, 4)
+    digits = (F.when(hexa != "", _conv(hexa, 16))
+              .when(octal != "", _conv(octal, 8)).otherwise(dec))
+    return F.concat(sign, digits).try_cast("long")  # NULL past int64
+
+
+def _parse_float(text: Column) -> Column:
+    num, inf, nan = _groups(text, FLOAT_TEXT, 3)
+    return (F.when(inf != "", F.when(inf.startswith("-"), float("-inf"))
+                   .otherwise(float("inf")))
+            .when(nan != "", float("nan"))
+            .otherwise(num.try_cast("double")))
+
+
+def _parse_boolean(text: Column) -> Column:
+    return (F.when(text.isin([t for t, b in BOOL_TEXT.items() if b]), True)
+            .when(text.isin([t for t, b in BOOL_TEXT.items() if not b]),
+                  False))
+
+
+_PARSE = {"integer": _parse_integer, "float": _parse_float,
+          "number": _parse_float, "boolean": _parse_boolean}
+
+
+def _float_text(x: Column) -> Column:
+    """A double written as the interpreter writes a float: the fewest
+    decimals ``k`` whose ``%.{k}e`` text reads back as ``x``, laid out
+    by :data:`FIXED_EXPONENTS`."""
+    k = F.coalesce(*[
+        F.when(F.format_string(f"%.{d}e", x).try_cast("double") == x, d)
+        for d in range(17)])
+    sci = F.printf(F.concat(F.lit("%."), k, F.lit("e")), x)
+    e = F.regexp_extract(sci, "e([-+][0-9]+)$", 1).try_cast("int")
+    fixed = F.printf(
+        F.concat(F.lit("%."), F.greatest(k - e, F.lit(1)), F.lit("f")), x)
+    lo, hi = FIXED_EXPONENTS.start, FIXED_EXPONENTS.stop
+    return (F.when(F.isnan(x), "nan")
+            .when(x == float("inf"), "inf").when(x == float("-inf"), "-inf")
+            .when((e >= lo) & (e < hi), fixed).otherwise(sci))
 
 
 def decode_expr(
     col: Column, dtype: T.DataType, target: str
 ) -> Optional[Column]:
-    """Decoded value of ``col`` as ``target``, NULL when the YAML
-    decode would fail; None when statically never convertible."""
-    if target == "integer":
-        if isinstance(dtype, _INTEGRAL):
-            return col.cast("long")
-        if isinstance(dtype, T.StringType):
-            return F.when(col.rlike(INT_TEXT), col.cast("long"))
-        return None  # boolean / fractional text never decodes as int
-    if target in ("float", "number"):
-        if isinstance(dtype, _INTEGRAL + _FRACTIONAL):
-            return col.cast("double")
-        if isinstance(dtype, T.StringType):
-            return F.when(col.rlike(FLOAT_TEXT), col.cast("double"))
-        return None
-    if target == "boolean":
-        if isinstance(dtype, T.BooleanType):
-            return col
-        if isinstance(dtype, T.StringType):
-            return (
-                F.when(col.isin(BOOL_TRUE_TEXT), F.lit(True))
-                .when(col.isin(BOOL_FALSE_TEXT), F.lit(False))
-            )
+    """Decoded value of ``col`` as ``target`` for comparisons, NULL
+    where the YAML decode fails; None when it never succeeds. A NaN
+    decodes to NULL: the interpreter's NaN is neither less than nor
+    equal to anything, Spark's is the largest double and equals
+    itself."""
+    cell, fam = _cell(dtype, target)
+    if cell is NEVER:
         return None
     if target == "string":
-        if isinstance(dtype, T.StringType):
-            return col
-        if isinstance(dtype, _SCALARS):
-            return col.cast("string")
-        return None
-    # unknown / custom target type: no builtin decode
-    return None
+        if fam is FRACTIONAL:
+            return _float_text(col.try_cast("double"))
+        return col if fam is TEXT else col.try_cast("string")
+    floats = MATRIX[target] is MATRIX["float"]
+    if cell is PARSE:
+        out = _PARSE[target](col)
+    else:  # integral as integer, boolean as boolean: the column itself
+        out = col.try_cast("double") if floats else col
+    return F.when(~F.isnan(out), out) if floats else out
+
+
+def text_expr(col: Optional[Column], dtype: T.DataType) -> Column:
+    """``col``'s text as the interpreter writes it (``scalar_text``);
+    NULL where there is none: no value, or a container."""
+    text = None if col is None else decode_expr(col, dtype, "string")
+    return F.lit(None).try_cast("string") if text is None else text
 
 
 def convertible_expr(
@@ -83,20 +154,10 @@ def convertible_expr(
 ) -> Column:
     """Boolean Column: would a YAML decode of ``col`` to ``target``
     succeed? (NULL/undefined inputs are the caller's concern.)"""
-    static_ok = {
-        "integer": _INTEGRAL,
-        "float": _INTEGRAL + _FRACTIONAL,
-        "number": _INTEGRAL + _FRACTIONAL,
-        "boolean": (T.BooleanType,),
-        "string": _SCALARS,
-    }
-    families = static_ok.get(target)
-    if families is not None and isinstance(dtype, families):
-        return F.lit(True)  # folded by Catalyst
-    dec = decode_expr(col, dtype, target)
-    if dec is None:
-        return F.lit(False)
-    return dec.isNotNull()
+    cell, _ = _cell(dtype, target)
+    if cell is PARSE:
+        return _PARSE[target](col).isNotNull()
+    return F.lit(cell is ALWAYS)  # folded by Catalyst
 
 
 @dataclass(frozen=True)
@@ -126,32 +187,12 @@ class SparkTypeAdapter:
     literal: Callable[[Any], Column] | None = None
 
 
-def decode_with(
-    spark_types: dict, col: Column, dtype: T.DataType, target: str
-) -> Optional[Column]:
-    """``decode_expr`` extended with the custom-type registry."""
-    ad = spark_types.get(target)
-    if ad is not None and ad.decode is not None:
-        return ad.decode(col, dtype)
-    return decode_expr(col, dtype, target)
-
-
-def literal_with(spark_types: dict, value, target: str) -> Column:
-    """``typed_literal`` extended with the custom-type registry."""
-    ad = spark_types.get(target)
-    if ad is not None and ad.literal is not None:
-        return ad.literal(value)
-    return typed_literal(value, target)
-
-
-def typed_literal(value, target: str) -> Column:
-    """Schema-side literal decoded driver-side with the SAME python
-    matrix the dynamic interpreter uses — keeps both paths agreeing
-    on e.g. ``min: "100"`` in a YAML schema."""
-    adapter = builtin_types().get(target)
-    if adapter is not None:
-        try:
-            return F.lit(adapter.decode(value))
-        except (ValueError, TypeError):
-            pass
-    return F.lit(value)
+def typed_literal(value, target: str) -> Optional[Column]:
+    """A schema literal decoded driver-side by the interpreter's table;
+    None where it does not decode (or ``target`` is no builtin type).
+    The interpreter's ``less``/``equality`` with such a literal are
+    False, so the compiler folds its comparisons to that constant."""
+    try:
+        return F.lit(DECODE[target](value))
+    except (ValueError, KeyError):
+        return None

@@ -55,17 +55,15 @@ from ..dynamic.interpreter import (
     as_list,
 )
 from ..errors import SchemaError
-from ..functions.pytypes import _scalar_text, builtin_types
+from ..functions.pytypes import scalar_text
 from ..functions.sparktypes import (
     convertible_expr,
     decode_expr,
-    decode_with,
-    literal_with,
+    text_expr,
+    typed_literal,
 )
 
 VIOL_ARRAY_T = "array<struct<path:string,message:string>>"
-
-_BUILTIN_TYPE_NAMES = frozenset(builtin_types())
 
 
 class CompileError(SchemaError):
@@ -189,15 +187,24 @@ class FieldCtx:
         t = self.rules.get("type", "string")
         return str(t[0]) if isinstance(t, list) and t else str(t)
 
-    def decoded(self, target: str | None = None) -> Optional[Column]:
+    def decoded(self) -> Optional[Column]:
+        """The value decoded as the declared type, a registered custom
+        type's ``decode`` first."""
         if self.value is None or self.dtype is None:
             return None
-        return decode_with(self.opts.spark_types, self.value, self.dtype,
-                           target or self.declared_type())
+        ad = self.opts.spark_types.get(self.declared_type())
+        if ad is not None and ad.decode is not None:
+            return ad.decode(self.value, self.dtype)
+        return decode_expr(self.value, self.dtype, self.declared_type())
 
-    def literal(self, value) -> Column:
-        return literal_with(self.opts.spark_types, value,
-                            self.declared_type())
+    def literal(self, value) -> Optional[Column]:
+        """``value`` decoded as the declared type, a registered custom
+        type's ``literal`` first; None when it does not decode, so no
+        value is less than or equal to it."""
+        ad = self.opts.spark_types.get(self.declared_type())
+        if ad is not None and ad.literal is not None:
+            return ad.literal(value)
+        return typed_literal(value, self.declared_type())
 
 
 def _child_ref(parent: FieldRef, name: str, opts: CompilerOpts) -> Optional[FieldRef]:
@@ -345,22 +352,20 @@ def _kv_viols(ctx: FieldCtx, which: str, arg: dict, defined: Column) -> list:
 
 
 def _unknown_key_viols(
-    schema: dict, parent: FieldRef, path: str | Column, opts: CompilerOpts,
-    exempt: frozenset[str],
+    known: frozenset[str], parent: FieldRef, path: str | Column,
+    opts: CompilerOpts,
 ) -> list:
-    """Keys of the struct/map ``parent`` that ``schema`` does not name
-    and ``exempt`` does not list (``validator.hh:334-339``), reported at
-    the mapping's own path."""
+    """Keys of the struct/map ``parent`` outside ``known``
+    (``validator.hh:334-339``), reported at the mapping's own path."""
     path = _path_col(path)
     if isinstance(parent.dtype, T.StructType):
         return [
             _viol(_child_ref(parent, fname, opts).defined, path,
                   f"unknown field not permitted: {fname}")
             for fname in parent.dtype.fieldNames()
-            if fname not in schema and fname not in exempt
-            and fname != "__defined__"
+            if fname not in known and fname != "__defined__"
         ]
-    known = (F.array(*[F.lit(str(k)) for k in schema]) if schema
+    known = (F.array(*[F.lit(k) for k in sorted(map(str, known))]) if known
              else F.array().cast("array<string>"))
     arr = F.transform(
         F.map_keys(parent.value),
@@ -423,13 +428,14 @@ def compile_field(ctx: FieldCtx) -> tuple[list, FieldRef]:
     ctx = replace(ctx, rules=rules, policy=policy)
     opts = ctx.opts
     viols: list[Column] = []
-    tname = ctx.declared_type()
 
     # ---- NORMALIZATION phase: default (rules.hh:128-141) ----
     value, defined = ctx.value, ctx.defined
     if "default" in rules:
         raw = rules["default"]
-        dlit = literal_with(opts.spark_types, raw, tname)
+        dlit = ctx.literal(raw)
+        if dlit is None:  # normalized as written, as the interpreter does
+            dlit = F.lit(raw)
         if value is None:
             # column absent: the rules see a column holding the raw
             # default, as the interpreter validates it (_rule_default);
@@ -482,29 +488,28 @@ def compile_field(ctx: FieldCtx) -> tuple[list, FieldRef]:
                             else ctx.value.isNull())
                     viols.append(_viol(cond, path, "nullable-rule violated"))
         elif name == "min":
-            dec = ctx.decoded()
-            cond = (defined & ~F.coalesce(dec > ctx.literal(arg),
-                                          F.lit(False))
-                    if dec is not None else defined)
+            dec, lit = ctx.decoded(), ctx.literal(arg)
+            cond = (defined & ~F.coalesce(dec > lit, F.lit(False))
+                    if dec is not None and lit is not None else defined)
             viols.append(_viol(cond, path, "min-rule violated"))
         elif name == "max":
-            dec = ctx.decoded()
-            if dec is not None:
+            dec, lit = ctx.decoded(), ctx.literal(arg)
+            if dec is not None and lit is not None:
                 viols.append(_viol(
-                    defined & F.coalesce(dec >= ctx.literal(arg),
-                                         F.lit(False)),
+                    defined & F.coalesce(dec >= lit, F.lit(False)),
                     path, "max-rule violated"))
         elif name == "allowed":
             dec = ctx.decoded()
             if ctx.value is None:
                 continue
             base = defined & ctx.value.isNotNull()
-            if dec is None or isinstance(ctx.dtype,
-                                         (T.ArrayType, T.MapType, T.StructType)):
+            lits = [lit for lit in map(ctx.literal, as_list(arg))
+                    if lit is not None]
+            if dec is None or not lits or isinstance(
+                    ctx.dtype, (T.ArrayType, T.MapType, T.StructType)):
                 viols.append(_viol(base, path,
                                    "value disallowed by allowed-rule"))
             else:
-                lits = [ctx.literal(v) for v in as_list(arg)]
                 viols.append(_viol(
                     base & ~F.coalesce(dec.isin(*lits), F.lit(False)),
                     path, "value disallowed by allowed-rule"))
@@ -513,28 +518,25 @@ def compile_field(ctx: FieldCtx) -> tuple[list, FieldRef]:
             if dec is None or ctx.value is None:
                 continue
             for cand in as_list(arg):
-                viols.append(_viol(
-                    defined & ctx.value.isNotNull()
-                    & F.coalesce(dec.eqNullSafe(ctx.literal(cand)),
-                                 F.lit(False)),
-                    path, f"forbidden-rule violated: {cand}"))
+                lit = ctx.literal(cand)
+                if lit is not None:
+                    viols.append(_viol(
+                        defined & ctx.value.isNotNull()
+                        & F.coalesce(dec.eqNullSafe(lit), F.lit(False)),
+                        path, f"forbidden-rule violated: {cand}"))
         elif name == "regex":
             if ctx.value is None:
                 continue
-            sdec = decode_expr(ctx.value, ctx.dtype, "string") \
-                if ctx.dtype is not None else None
             # full match (rules.hh:448); \A..\z so a trailing newline
             # can't sneak past Java's line-terminator-tolerant $ —
             # keeps rlike, the interpreter twin (re.fullmatch), and the
             # C++ reference in agreement
             pattern = f"\\A(?:{arg})\\z"
-            base = defined & ctx.value.isNotNull()
-            if sdec is None:
-                viols.append(_viol(base, path, "regex-rule violated"))
-            else:
-                viols.append(_viol(
-                    base & ~F.coalesce(sdec.rlike(pattern), F.lit(False)),
-                    path, "regex-rule violated"))
+            text = text_expr(ctx.value, ctx.dtype)
+            viols.append(_viol(
+                defined & ctx.value.isNotNull()
+                & ~F.coalesce(text.rlike(pattern), F.lit(False)),
+                path, "regex-rule violated"))
         elif name == "empty":
             if (ctx.value is not None and isinstance(ctx.dtype, T.ArrayType)
                     and not _truthy(arg)):
@@ -549,11 +551,12 @@ def compile_field(ctx: FieldCtx) -> tuple[list, FieldRef]:
             viols.append(_viol(_count_expr(ctx) > F.lit(int(arg)), path,
                                "maxlength-rule violated"))
         elif name == "contains":
-            needed = [str(_scalar_text(v)) for v in as_list(arg)]
+            needed = [str(scalar_text(v)) for v in as_list(arg)]
             needed_arr = F.array(*[F.lit(n) for n in needed])
             prefix = "contains-rule violated: missing "
             if ctx.value is not None and isinstance(ctx.dtype, T.ArrayType):
-                have = F.transform(ctx.value, lambda x: x.cast("string"))
+                elem_dt = ctx.dtype.elementType
+                have = F.transform(ctx.value, lambda x: text_expr(x, elem_dt))
                 ok = F.size(F.array_except(needed_arr, have)) == 0
                 # needed values absent from the list, in order with
                 # duplicates; a null list lacks them all
@@ -587,7 +590,6 @@ def compile_field(ctx: FieldCtx) -> tuple[list, FieldRef]:
                     if n in opts.spark_types
                     else convertible_expr(ctx.value, ctx.dtype, n)
                     for n in names
-                    if n in _BUILTIN_TYPE_NAMES or n in opts.spark_types
                 ]
                 ok = reduce(lambda a, b: a | b, preds) if preds else F.lit(False)
                 viols.append(_viol(base & ~ok, path,
@@ -607,13 +609,10 @@ def compile_field(ctx: FieldCtx) -> tuple[list, FieldRef]:
                     viols.append(_viol(
                         defined & ~ref.defined, path,
                         f"dependencies-rule violated: {dep} required"))
-                    strs = [str(_scalar_text(v)) for v in as_list(pinned)]
-                    dep_str = (decode_expr(ref.value, ref.dtype, "string")
-                               if ref.value is not None and ref.dtype is not None
-                               else None)
-                    pin_ok = (ref.defined
-                              & F.coalesce(dep_str.isin(strs), F.lit(False))
-                              if dep_str is not None else F.lit(False))
+                    strs = [str(scalar_text(v)) for v in as_list(pinned)]
+                    pin_ok = ref.defined & F.coalesce(
+                        text_expr(ref.value, ref.dtype).isin(strs),
+                        F.lit(False))
                     opts_s = ", ".join(strs)
                     viols.append(_viol(
                         defined & ~pin_ok, path,
@@ -717,9 +716,10 @@ def _compile_mapping(
     nested struct/map value — under the carrying field's ``policy``.
     Each schema field compiles against the mapping as normalized so far
     (:class:`Scope`); then keys neither ``schema`` nor ``exempt`` names
-    are violations. ``elem`` is the fields' ``FieldCtx.elem``. Returns
-    the violations and, in schema order, each field's name after
-    ``rename`` with its effective ref."""
+    are violations; a ``rename`` target is known, as in the
+    interpreter's ``found``. ``elem`` is the fields' ``FieldCtx.elem``.
+    Returns the violations and, in schema order, each field's name
+    after ``rename`` with its effective ref."""
     scope = Scope(parent, root)
     viols: list = []
     fields: list[tuple[str, FieldRef]] = []
@@ -732,10 +732,17 @@ def _compile_mapping(
         out_name = str(rules.get("rename", fname))
         if out_name != fname:
             scope.entries[fname] = None  # a rename moves the entry
+            held = scope.get(out_name, opts)
+            if held is not None and held.dtype == eff.dtype:
+                # an undefined field moves nothing: the key keeps its value
+                eff = FieldRef(F.when(eff.defined, eff.value)
+                               .otherwise(held.value), eff.dtype,
+                               eff.defined | held.defined)
         scope.entries[out_name] = eff
         fields.append((out_name, eff))
     if policy.rejects_unknown:
-        viols.extend(_unknown_key_viols(schema, parent, path, opts, exempt))
+        known = exempt | set(schema) | {name for name, _ in fields}
+        viols.extend(_unknown_key_viols(known, parent, path, opts))
     return viols, fields
 
 

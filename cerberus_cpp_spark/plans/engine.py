@@ -181,9 +181,10 @@ class TableValidator:
                      if k in df_schema.fieldNames()]
         norm_cols += [ref.value.alias(name) for name, ref in fields
                       if ref.value is not None]
-        if not self._policy.purge_unknown:
+        if not self._policy.purge_unknown:  # a rename target is no copy
+            known = exempt | set(self.schema) | {name for name, _ in fields}
             norm_cols += [F.col(k) for k in df_schema.fieldNames()
-                          if k not in self.schema and k not in exempt]
+                          if k not in known]
         return CompiledPlan(
             violations=assemble_violations(viols),
             violation_count=assemble_violation_count(viols),

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..dynamic.interpreter import _schema_form
-from ..functions.pytypes import UNDEFINED, _scalar_text
+from ..functions.pytypes import UNDEFINED, scalar_text
 
 
 def _rule_declared_type(rules: dict) -> str:
@@ -50,7 +50,7 @@ def _schema_arg(rules: dict, form: str, registry: dict | None) -> dict:
 def _scalar_cell(v: Any) -> str | None:
     if v is None:
         return None
-    text = _scalar_text(v)
+    text = scalar_text(v)
     if text is not None:
         return text
     return json.dumps(v, sort_keys=True)

@@ -60,6 +60,8 @@ def spark():
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.adaptive.enabled", "true")
+        # the production default of Spark 4: a cast that fails raises
+        .config("spark.sql.ansi.enabled", "true")
         .config("spark.driver.memory", "4g")
         .getOrCreate()
     )

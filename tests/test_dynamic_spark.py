@@ -18,6 +18,7 @@ from cerberus_cpp_spark.dynamic.interpreter import Validator
 from cerberus_cpp_spark.dynamic.spark import (
     MAX_DEPTH,
     NOT_JSON_MSG,
+    RAISED_MSG,
     TOO_DEEP_MSG,
     json_violations,
     validate_json,
@@ -243,3 +244,39 @@ def test_custom_rule_via_configure(spark) -> None:
                         allow_unknown=True)
     got = {r["doc_id"]: r["valid"] for r in ann.collect()}
     assert got == {0: True, 1: False}
+
+
+def test_raising_rule_fails_only_its_row(spark) -> None:
+    """A custom rule that raises on one document turns that row into
+    one ``^`` violation naming the exception; the job and the other
+    rows go on."""
+    def add_parity(v) -> None:
+        def parity(ctx):
+            if ctx.value is not None and int(ctx.value) % 2:
+                ctx.raise_error("parity-rule violated")
+        v.register_rule("parity", {"type": "boolean"}, parity)
+
+    df = spark.createDataFrame(
+        [(0, '{"n": 2}'), (1, '{"n": "abc"}'), (2, '{"n": 3}')],
+        "doc_id int, doc string")
+    ann = validate_json(df, {"n": {"parity": True}}, configure=add_parity,
+                        allow_unknown=True, include_normalized=True)
+    got = {r["doc_id"]: r for r in ann.collect()}
+    assert got[0]["valid"] and got[0]["normalized"] == '{"n":2}'
+    assert got[1]["violations"] == [("^", RAISED_MSG.format("ValueError"))]
+    assert got[1]["normalized"] is None
+    assert got[2]["violations"] == [("^.n", "parity-rule violated")]
+
+
+def test_nan_and_infinity_are_not_json(spark) -> None:
+    """RFC 8259 has no NaN or Infinity: such a document is not JSON, so
+    it never validates as a float nor comes back in ``normalized``."""
+    docs = ['{"v": NaN}', '{"v": Infinity}', '{"v": -Infinity}',
+            '{"v": 1.5}']
+    df = spark.createDataFrame(list(enumerate(docs)), "doc_id int, doc string")
+    got = {r["doc_id"]: r for r in validate_json(
+        df, {"v": {"type": "float"}}, include_normalized=True).collect()}
+    for i in range(3):
+        assert got[i]["violations"] == [("^", NOT_JSON_MSG)]
+        assert got[i]["normalized"] is None
+    assert got[3]["valid"] and got[3]["normalized"] == '{"v":1.5}'

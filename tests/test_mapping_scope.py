@@ -34,6 +34,8 @@ _RENAME_AHEAD = {"a": {"type": "integer", "rename": "b"},
                  "c": {"type": "integer", "dependencies": "a"}}
 _RENAME_TARGET = {"a": {"type": "integer", "rename": "b"},
                   "c": {"type": "integer", "dependencies": "b"}}
+_RENAME_ONTO = {"a": {"type": "integer", "rename": "b"}}
+_ONTO_DOCS = [{"a": 1, "b": 2}, {"a": 1}, {"b": 2}]
 _PINNED_DEFAULT = {"a": {"type": "integer", "default": 5},
                    "c": {"type": "integer", "dependencies": {"a": [5]}}}
 
@@ -90,6 +92,15 @@ MAPPING_CASES = {
         {"d": {"type": "dict", "schema": _RENAME_TARGET}},
         "d struct<a: bigint, c: bigint>",
         [{"d": {"a": 1, "c": 1}}, {"d": {"c": 1}}]),
+    # a rename target the mapping already holds is a known key
+    "rename-onto-held-key-root": (
+        _RENAME_ONTO, "a bigint, b bigint", _ONTO_DOCS),
+    "rename-onto-held-key-struct": (
+        {"d": {"type": "dict", "schema": _RENAME_ONTO}},
+        "d struct<a: bigint, b: bigint>", [{"d": d} for d in _ONTO_DOCS]),
+    "rename-onto-held-key-map": (
+        {"d": {"type": "dict", "schema": _RENAME_ONTO}},
+        "d map<string, bigint>", [{"d": d} for d in _ONTO_DOCS]),
 }
 
 _ELEM_DEP = {"type": "integer", "dependencies": "flag"}
@@ -186,3 +197,17 @@ def test_mapping_scope_matches_interpreter(name: str, spark) -> None:
 @pytest.mark.parametrize("name", sorted(ELEMENT_CASES))
 def test_element_scope_matches_interpreter(name: str, spark) -> None:
     _differential(spark, *ELEMENT_CASES[name])
+
+
+def test_rename_onto_held_key_normalizes_like_interpreter(spark) -> None:
+    """The row holds the rename target: ``normalized`` has one ``b``,
+    the renamed value where the field is defined, else the row's own."""
+    oracle = Validator(_RENAME_ONTO)
+    want = []
+    for d in _ONTO_DOCS:
+        oracle.validate(d)
+        want.append(oracle.get_document())
+    frame = spark.createDataFrame(_ONTO_DOCS, "a bigint, b bigint")
+    norm = TableValidator(_RENAME_ONTO).validate(frame).normalized
+    assert norm.columns == ["b"]
+    assert [r.asDict() for r in norm.collect()] == want

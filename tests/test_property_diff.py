@@ -11,6 +11,7 @@ property loop stays fast.
 from __future__ import annotations
 
 import random
+from collections import Counter
 
 import pytest
 
@@ -269,3 +270,209 @@ def test_violation_paths_match_interpreter(seed: int, spark) -> None:
         f"seed {seed}: first path mismatch {mismatches[0]}"
         f" schema={schema}"
     )
+
+
+# ---------------------------------------------------------------------------
+# The scalar table (functions/pytypes.py): both engines decode every
+# scalar the same way, and no cell can fail a job. The interpreter is the
+# oracle; each frame is its documents typed by a DDL string
+# (presence="null": an absent key is NULL), and the engine must report
+# the same (path, message) multiset per row.
+# ---------------------------------------------------------------------------
+
+TARGETS = ("integer", "float", "number", "boolean", "string")
+INT64_EDGES = [-(1 << 63), -(1 << 63) + 1, -1, 0, 1, (1 << 63) - 2,
+               (1 << 63) - 1]
+#: the YAML special forms and the edges of the lexical forms
+YAML_FORMS = [
+    ".inf", "-.inf", "+.inf", ".Inf", "-.INF", ".nan", ".NaN", "-.nan",
+    "0x1F", "0o17", "0X1F", "-0x1f", "+0o7", "0x", "0o8", "017", "00",
+    "-0", "+0", " 42", "42 ", "　42\t", "4 2", " 1.5", "1.", ".5",
+    "1e5", "1E+05", "1e-05", "1e999", "-1e999", "1.5e", "true", "True",
+    "yes", "Off", "y", " true", "99999999999999999999",
+    "9223372036854775807", "9223372036854775808", "-9223372036854775808",
+    "-9223372036854775809", "0x7fffffffffffffff", "0x8000000000000000",
+    "-0x8000000000000000", "0o1777777777777777777777",
+    "-0o1000000000000000000000", "0x" + "f" * 17, "", "abc", "1_000",
+    "inf", "nan", "12345678.0", "1e+20",
+]
+_ALPHABET = "0123456789+-.eExoabfInN \t　\xa0_"
+FLOATS = [0.0, -0.0, 1.5, -2.25, 1e-05, 12345678.0, 1e20, 1e16, 1e15,
+          0.0001, 5e-324, 1.7976931348623157e308, float("inf"),
+          float("-inf"), float("nan"), 42.0, 0.1]
+
+
+def _draw_text(rng: random.Random) -> str:
+    r = rng.random()
+    if r < 0.4:
+        return rng.choice(YAML_FORMS)
+    if r < 0.7:
+        return "".join(rng.choice(_ALPHABET)
+                       for _ in range(rng.randint(0, 8)))
+    if r < 0.85:
+        return str(_draw_number(rng))
+    # arbitrary code points, surrogates excluded
+    return "".join(chr(rng.choice([rng.randint(0x20, 0x7e),
+                                   rng.randint(0xa0, 0xd7ff)]))
+                   for _ in range(rng.randint(1, 5)))
+
+
+def _draw_int(rng: random.Random) -> int:
+    r = rng.random()
+    if r < 0.4:
+        return rng.choice(INT64_EDGES)
+    if r < 0.7:
+        return rng.randint(-50, 50)
+    return rng.randint(-(1 << 63), (1 << 63) - 1)
+
+
+def _draw_float(rng: random.Random) -> float:
+    r = rng.random()
+    if r < 0.4:
+        return rng.choice(FLOATS)
+    if r < 0.7:
+        return round(rng.uniform(-100, 100), rng.randint(0, 3))
+    return rng.uniform(-1, 1) * 10.0 ** rng.randint(-30, 30)
+
+
+def _draw_number(rng: random.Random) -> int | float:
+    return _draw_int(rng) if rng.random() < 0.5 else _draw_float(rng)
+
+
+def _draw_literal(rng: random.Random):
+    """A schema literal: any scalar, decodable as the target or not
+    (an int beyond int64 included)."""
+    return rng.choice([
+        _draw_text(rng), _draw_number(rng), rng.random() < 0.5,
+        rng.choice([1 << 70, -(1 << 64), 100000000000000000000]),
+    ])
+
+
+#: column DDL type → a value of it
+COLUMN_VALUES = {
+    "string": _draw_text,
+    "bigint": _draw_int,
+    "double": _draw_float,
+    "boolean": lambda rng: rng.random() < 0.5,
+}
+
+
+def _scalar_rules(rng: random.Random) -> dict:
+    """Every builtin target under type, min, max, allowed and
+    forbidden, twice each."""
+    schema = {}
+    for target in TARGETS:
+        for rule in ("type", "min", "max", "allowed", "forbidden"):
+            for k in range(2):
+                rules: dict = {"type": target}
+                if rule in ("min", "max"):
+                    rules[rule] = _draw_literal(rng)
+                elif rule != "type":
+                    rules[rule] = [_draw_literal(rng)
+                                   for _ in range(rng.randint(1, 3))]
+                schema[f"{target}_{rule}_{k}"] = rules
+    return schema
+
+
+def _multisets(spark, schema: dict, ddl: str, docs: list[dict]):
+    """The interpreter's and the engine's (path, message) multisets per
+    document, from ONE Spark job."""
+    oracle = Validator(schema)
+    want = []
+    for d in docs:
+        oracle.validate(d)
+        want.append(Counter((e.path, e.message) for e in oracle.errors))
+    frame = spark.createDataFrame(
+        [{"doc_id": i, **d} for i, d in enumerate(docs)],
+        f"doc_id int, {ddl}")
+    rows = TableValidator(schema, extra_cols=("doc_id",)).validate(frame)
+    got = {r["doc_id"]: Counter((v["path"], v["message"])
+                                for v in r["violations"])
+           for r in rows.annotated.collect()}
+    return want, [got[i] for i in range(len(docs))]
+
+
+@pytest.mark.parametrize("column", sorted(COLUMN_VALUES))
+def test_scalar_table_matches_interpreter(column: str, spark) -> None:
+    """Arbitrary strings, numbers (int64 edges included) and the YAML
+    special forms, in a column of each scalar Spark type, under every
+    builtin target and scalar rule: one job per column type, none
+    raises (the session runs in ANSI mode), and every row's violations
+    equal the interpreter's."""
+    rng = random.Random(f"scalar-table-{column}")
+    schema = _scalar_rules(rng)
+    draw = COLUMN_VALUES[column]
+    docs = [{f: draw(rng) for f in schema if rng.random() < 0.9}
+            for _ in range(40)]
+    ddl = ", ".join(f"{f} {column}" for f in schema)
+    want, got = _multisets(spark, schema, ddl, docs)
+    mismatches = [(i, docs[i], want[i], got[i])
+                  for i in range(len(docs)) if want[i] != got[i]]
+    assert not mismatches, (
+        f"{len(mismatches)} rows differ; first: {mismatches[0]}")
+
+
+# name → (schema, ddl, documents): each case raised or disagreed with
+# the interpreter before the scalar table
+SCALAR_CASES = {
+    "yaml-infinities": (
+        {"v": {"type": "float"}}, "v string",
+        [{"v": ".inf"}, {"v": "-.inf"}, {"v": ".nan"}, {"v": ".Inf"}]),
+    "beyond-int64": (
+        {"v": {"type": "integer"}}, "v string",
+        [{"v": "99999999999999999999"}, {"v": "-9223372036854775809"},
+         {"v": "9223372036854775807"}, {"v": "0x8000000000000000"}]),
+    "hex-and-octal": (
+        {"v": {"type": "integer", "min": 15}}, "v string",
+        [{"v": "0x1F"}, {"v": "0o17"}, {"v": "0X1F"}, {"v": "0o18"}]),
+    "surrounding-whitespace": (
+        {"v": {"type": "integer"}, "f": {"type": "float"}},
+        "v string, f string",
+        [{"v": " 42", "f": " 1.5"}, {"v": "42 ", "f": "1.5\t"}]),
+    "leading-zero": (
+        {"v": {"type": "integer"}}, "v string",
+        [{"v": "017"}, {"v": "00"}, {"v": "-0"}]),
+    "float-text-regex": (
+        {"v": {"regex": "1e-05"}}, "v double",
+        [{"v": 1e-05}, {"v": 12345678.0}, {"v": 1e20}]),
+    "float-text-allowed": (
+        {"v": {"type": "string", "allowed": ["1e-05", "1e+20"]}},
+        "v double", [{"v": 1e-05}, {"v": 1e20}, {"v": 12345678.0}]),
+    "float-text-contains": (
+        {"v": {"type": "list", "contains": [1e-05, 12345678.0]}},
+        "v array<double>", [{"v": [1e-05, 12345678.0]}, {"v": [1e-05]}]),
+    # schema literals that do not decode as the declared type: the
+    # interpreter's less/equality with them are False
+    "literal-not-integer": (
+        {"v": {"type": "integer", "min": "abc", "max": "abc",
+               "forbidden": ["x"], "allowed": ["abc", 5]}},
+        "v bigint", [{"v": 5}, {"v": 6}]),
+    "literal-beyond-int64": (
+        {"v": {"type": "integer", "min": 100000000000000000000,
+               "max": 100000000000000000000}},
+        "v bigint", [{"v": 5}]),
+    "literal-nan": (
+        {"v": {"type": "float", "min": ".nan", "max": ".nan",
+               "allowed": [".nan", 1.5], "forbidden": [".nan"]}},
+        "v double", [{"v": 1.5}, {"v": float("nan")}]),
+}
+
+
+@pytest.mark.parametrize("name", sorted(SCALAR_CASES))
+def test_scalar_case_matches_interpreter(name: str, spark) -> None:
+    want, got = _multisets(spark, *SCALAR_CASES[name])
+    assert got == want
+
+
+def test_float_text_is_the_interpreters(spark) -> None:
+    """A double's text is Python's repr, not Java's ``1.0E-5``."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from cerberus_cpp_spark.functions.pytypes import scalar_text
+    from cerberus_cpp_spark.functions.sparktypes import decode_expr
+
+    frame = spark.createDataFrame([(v,) for v in FLOATS], "v double")
+    text = decode_expr(F.col("v"), T.DoubleType(), "string")
+    got = [r[0] for r in frame.select(text).collect()]
+    assert got == [scalar_text(v) for v in FLOATS]
