@@ -58,7 +58,8 @@ VIOL_FIELDS = T.ArrayType(T.StructType([
 
 #: violation emitted when the payload cannot be parsed as JSON —
 #: mirrors the interpreter's top-level "document is not a mapping".
-#: ``NaN``, ``Infinity`` and ``-Infinity`` are not JSON (RFC 8259 §6)
+#: ``NaN``, ``Infinity`` and ``-Infinity`` are not JSON (RFC 8259 §6),
+#: nor is a number beyond the range of a double (``1e999``)
 NOT_JSON_MSG = "document is not valid JSON"
 #: the one violation of a document whose validation raised: a custom
 #: rule or type that fails on one document fails only that row
@@ -122,6 +123,7 @@ def validate_json(
         if pkg_parent not in sys.path:
             sys.path.insert(0, pkg_parent)
         import json
+        import math
 
         import pandas as pd
 
@@ -145,12 +147,17 @@ def validate_json(
         def not_json(constant):
             raise ValueError(f"{constant} is not JSON")
 
+        def finite(text):
+            x = float(text)
+            return x if math.isfinite(x) else not_json(text)
+
         def parse(raw):
             """(document, None), or (None, the one violation message)."""
             if raw is None:
                 return None, None
             try:
-                doc = json.loads(raw, parse_constant=not_json)
+                doc = json.loads(raw, parse_constant=not_json,
+                                 parse_float=finite)
             except RecursionError:
                 return None, TOO_DEEP_MSG
             except (ValueError, TypeError):
@@ -172,7 +179,8 @@ def validate_json(
                         if include_normalized:
                             norm = json.dumps(v.get_document(),
                                               sort_keys=True,
-                                              separators=(",", ":"))
+                                              separators=(",", ":"),
+                                              allow_nan=False)
                     except RecursionError:
                         msg = TOO_DEEP_MSG
                     except Exception as e:  # noqa: BLE001 — one row only

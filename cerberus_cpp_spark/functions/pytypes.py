@@ -7,8 +7,8 @@ decoded values (``types.hh:16-72``, SURVEY.md §1.2.3): ``42`` decodes
 as integer AND float, ``true`` not as integer, ``abc`` fails numerics,
 any scalar decodes as string (``test/testdata.yml:505-527``), and
 ``integer`` is a C++ ``long long``. This module holds the lexical
-forms, the int64 range, :data:`MATRIX` (value family × target: the
-decode ALWAYS succeeds, NEVER does, or must PARSE the text) and
+forms, the int64 range, :data:`MATRIX` (target × value family → the
+conversion or parse; no cell where the decode never succeeds) and
 :func:`scalar_text`. The interpreter reads it through
 :func:`builtin_types`, the columnar engine through
 ``functions/sparktypes.py``. Where the reference is silent the forms
@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from functools import partial
 from typing import Any, Callable
 
 
@@ -54,14 +55,16 @@ UNDEFINED = _Undefined()
 #: Python's ``str.isspace`` accepts, as a class both regex engines read
 _WS = (r"[\t\n\x0b\x0c\r\x1c-\x1f \x85\xa0\u1680\u2000-\u200a"
        r"\u2028\u2029\u202f\u205f\u3000]*")
-#: integer text; groups: sign, hex digits, octal digits, decimal digits
-#: (hex and octal without their leading zeros)
-INT_TEXT = (_WS + r"([-+]?)(?:0x0*([0-9a-fA-F]+)|0o0*([0-7]+)"
-            r"|(0+|[1-9][0-9]*))" + _WS)
-#: float/number text; groups: the number, ``.inf`` with its sign, ``.nan``
-FLOAT_TEXT = (_WS + r"(?:([-+]?(?:\.[0-9]+|[0-9]+(?:\.[0-9]*)?)"
-              r"(?:[eE][-+]?[0-9]+)?)|([-+]?\.(?:inf|Inf|INF))"
-              r"|(\.(?:nan|NaN|NAN)))" + _WS)
+#: integer text; its group is the number: a sign, then hex, octal or
+#: decimal digits. Hex and octal are bounded to 64 bits (a longer one is
+#: past int64 anyway), so the columnar ``conv`` never overflows
+INT_TEXT = (_WS + r"([-+]?(?:0x0*[0-9a-fA-F]{1,16}|0o0*1?[0-7]{1,21}"
+            r"|0+|[1-9][0-9]*))" + _WS)
+#: float/number text; its group is the number, ``.inf`` with its sign or
+#: ``.nan``
+FLOAT_TEXT = (_WS + r"([-+]?(?:\.[0-9]+|[0-9]+(?:\.[0-9]*)?)"
+              r"(?:[eE][-+]?[0-9]+)?|[-+]?\.(?:inf|Inf|INF)"
+              r"|\.(?:nan|NaN|NAN))" + _WS)
 #: boolean text → its value
 BOOL_TEXT = {
     **dict.fromkeys(("true", "True", "TRUE", "yes", "Yes", "YES",
@@ -74,24 +77,6 @@ INT64 = (-(1 << 63), (1 << 63) - 1)
 #: the decimal exponents a float's text writes in fixed notation
 #: (``0.0001``, ``1e-05``; ``1000000000000000.0``, ``1e+16``)
 FIXED_EXPONENTS = range(-4, 16)
-
-INTEGRAL, FRACTIONAL, BOOLEAN, TEXT = (
-    "integral", "fractional", "boolean", "text")
-ALWAYS, NEVER, PARSE = "always", "never", "parse"
-#: target → value family → how the decode goes; a value of no family
-#: (null, a container) never decodes
-MATRIX = {
-    "integer": {INTEGRAL: ALWAYS, FRACTIONAL: NEVER, BOOLEAN: NEVER,
-                TEXT: PARSE},
-    "float": {INTEGRAL: ALWAYS, FRACTIONAL: ALWAYS, BOOLEAN: NEVER,
-              TEXT: PARSE},
-    "boolean": {INTEGRAL: NEVER, FRACTIONAL: NEVER, BOOLEAN: ALWAYS,
-                TEXT: PARSE},
-    "string": dict.fromkeys((INTEGRAL, FRACTIONAL, BOOLEAN, TEXT), ALWAYS),
-}
-MATRIX["number"] = MATRIX["float"]
-
-_FAMILY = {int: INTEGRAL, float: FRACTIONAL, bool: BOOLEAN, str: TEXT}
 
 
 def scalar_text(value: Any) -> str | None:
@@ -110,56 +95,45 @@ _INT_RE = re.compile(INT_TEXT)
 _FLOAT_RE = re.compile(FLOAT_TEXT)
 
 
-def _parse_integer(text: str) -> int | None:
+def parse_integer(text: str) -> int | None:
     m = _INT_RE.fullmatch(text)
-    if m is None:
-        return None
-    sign, hexa, octal, dec = m.groups()
-    n = int(hexa, 16) if hexa else int(octal, 8) if octal else int(dec)
-    n = -n if sign == "-" else n
-    return n if INT64[0] <= n <= INT64[1] else None
+    n = None if m is None else int(m[1], 0)
+    return n if n is not None and INT64[0] <= n <= INT64[1] else None
 
 
-def _parse_float(text: str) -> float | None:
-    m = _FLOAT_RE.fullmatch(text)  # a number, a signed .inf or .nan
+def parse_float(text: str) -> float | None:
+    m = _FLOAT_RE.fullmatch(text)  # .inf and .nan lose their dot
     return None if m is None else float(
-        m[1] or (m[2] or "nan").replace(".", ""))
+        m[1].replace(".", "") if m[1][-1] in "fFnN" else m[1])
 
 
-#: target → the decode of a value its cell says ALWAYS decodes
-_CONVERT = {"integer": int, "float": float, "number": float,
-            "boolean": bool, "string": scalar_text}
-#: target → the parse of text, None when the text does not decode
-_PARSE = {"integer": _parse_integer, "float": _parse_float,
-          "number": _parse_float, "boolean": BOOL_TEXT.get}
+parse_boolean = BOOL_TEXT.get
+
+#: target → value family (the Python type of a value) → its decode: a
+#: conversion that always succeeds, or for text a parse that returns
+#: None where the text does not decode. A family the target does not
+#: list never decodes, nor does a value of no family (null, a container)
+MATRIX: dict[str, dict[type, Callable[[Any], Any]]] = {
+    "integer": {int: int, str: parse_integer},
+    "float": {int: float, float: float, str: parse_float},
+    "boolean": {bool: bool, str: parse_boolean},
+    "string": dict.fromkeys((int, float, bool, str), scalar_text),
+}
+MATRIX["number"] = MATRIX["float"]
 
 
-def _decoder(target: str) -> Callable[[Any], Any]:
-    """The decode of the builtin ``target``: the decoded value, or
-    ``ValueError`` where the YAML decode fails (yaml-cpp
-    ``convert<T>::decode`` returning false, ``types.hh:35-39``)."""
-    cells, convert = MATRIX[target], _CONVERT[target]
-    parse = _PARSE.get(target)
-    lo, hi = INT64
-
-    def decode(value: Any) -> Any:
-        # the family by Python type; an int beyond int64 is text: all a
-        # YAML decode sees of it is its digits
-        fam = _FAMILY.get(type(value))
-        if fam is INTEGRAL and not lo <= value <= hi:
-            fam = TEXT
-        cell = cells.get(fam, NEVER)
-        if cell is ALWAYS:
-            return convert(value)
-        out = parse(scalar_text(value)) if cell is PARSE else None
-        if out is None:
-            raise ValueError(f"not {target}-decodable: {value!r}")
-        return out
-    return decode
-
-
-#: builtin target → its decode
-DECODE = {target: _decoder(target) for target in MATRIX}
+def decode(target: str, value: Any) -> Any:
+    """``value`` decoded as the builtin ``target``; ``ValueError`` where
+    the YAML decode fails (yaml-cpp ``convert<T>::decode`` returning
+    false, ``types.hh:35-39``). An int beyond int64 decodes as its
+    digits: that is all a YAML decode sees of it."""
+    if type(value) is int and not INT64[0] <= value <= INT64[1]:
+        value = str(value)
+    cell = MATRIX[target].get(type(value))
+    out = None if cell is None else cell(value)
+    if out is None:
+        raise ValueError(f"not {target}-decodable: {value!r}")
+    return out
 
 
 @dataclass(frozen=True)
@@ -197,4 +171,4 @@ class TypeAdapter:
 def builtin_types() -> dict[str, TypeAdapter]:
     """The five builtin scalar types (reference ``types.hh:64-72``):
     :data:`MATRIX` decides, and only text reaches a parser."""
-    return {t: TypeAdapter(t, DECODE[t]) for t in MATRIX}
+    return {t: TypeAdapter(t, partial(decode, t)) for t in MATRIX}

@@ -3,12 +3,12 @@
 A YAML decode is NOT Spark's ``cast``: Spark casts ``"3.14"`` → long
 and boolean → int, a YAML decode does neither (``types.hh:31-58``). A
 column's family comes from its dtype, and the table's cell for
-(family, target) gives the expression: ALWAYS is the column itself or
-a widening, NEVER returns None so the compiler folds the rule, PARSE
-reads the text with the table's lexical forms. No expression here can
-fail a job under ANSI mode: a decode over data is a ``try_cast``, hex
-and octal digits reach ``conv`` only when they fit 64 bits, and
-``.inf``/``.nan`` are a ``when`` ahead of the cast. A fractional
+(target, family) gives the expression: a conversion is the column
+itself, a widening or its text; a parse takes the number out of the
+text with one ``regexp_extract`` of the table's lexical form and
+converts it with ``try_cast`` (hex and octal through ``conv``, within
+64 bits by the form); no cell is None, so the compiler folds the rule.
+No expression here can fail a job under ANSI mode. A fractional
 value's text is the interpreter's, Python's ``repr``: Spark's own cast
 writes ``1.0E-5`` for ``1e-05`` and, through JDK 17's
 ``Double.toString``, sometimes a digit too many.
@@ -26,70 +26,46 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .pytypes import (
-    ALWAYS,
-    BOOL_TEXT,
-    BOOLEAN,
-    DECODE,
-    FIXED_EXPONENTS,
-    FLOAT_TEXT,
-    FRACTIONAL,
-    INT_TEXT,
-    INTEGRAL,
-    MATRIX,
-    NEVER,
-    PARSE,
-    TEXT,
-)
+from .pytypes import (BOOL_TEXT, FIXED_EXPONENTS, FLOAT_TEXT, INT_TEXT,
+                      MATRIX, decode, parse_boolean, parse_float,
+                      parse_integer, scalar_text)
 
+#: a column's value family (the Python type :data:`MATRIX` keys), by dtype
 _FAMILIES = (
-    ((T.ByteType, T.ShortType, T.IntegerType, T.LongType), INTEGRAL),
-    ((T.FloatType, T.DoubleType, T.DecimalType), FRACTIONAL),
-    ((T.BooleanType,), BOOLEAN),
-    ((T.StringType,), TEXT),
+    ((T.ByteType, T.ShortType, T.IntegerType, T.LongType), int),
+    ((T.FloatType, T.DoubleType, T.DecimalType), float),
+    ((T.BooleanType,), bool),
+    ((T.StringType,), str),
 )
-#: the largest digit strings ``conv`` reads without overflow, by base
-_U64 = {16: f"{(1 << 64) - 1:x}", 8: f"{(1 << 64) - 1:o}"}
+INTEGRAL_TYPES = _FAMILIES[0][0]
 
 
-def _cell(dtype: T.DataType, target: str) -> tuple[str, str | None]:
-    """The table's cell for a column of ``dtype``, with the column's
-    family: NEVER for a dtype of no family and for a target the table
-    does not hold."""
-    for types, fam in _FAMILIES:
-        if isinstance(dtype, types):
-            return MATRIX.get(target, {}).get(fam, NEVER), fam
-    return NEVER, None
+def _family(dtype: T.DataType) -> type | None:
+    """The family of a column of ``dtype``; None for a container."""
+    return next((fam for types, fam in _FAMILIES
+                 if isinstance(dtype, types)), None)
 
 
-def _groups(text: Column, form: str, n: int) -> list[Column]:
-    """The ``n`` groups of a full match of ``form``; all ``""`` when
-    ``text`` does not match."""
-    return [F.regexp_extract(text, f"\\A(?:{form})\\z", i)
-            for i in range(1, n + 1)]
-
-
-def _conv(digits: Column, base: int) -> Column:
-    """``digits`` in ``base`` as decimal text; NULL past 64 bits, where
-    ANSI ``conv`` raises."""
-    top, n = _U64[base], F.length(digits)
-    fits = (n < len(top)) | ((n == len(top)) & (F.lower(digits) <= top))
-    return F.when(fits, F.conv(digits, base, 10))
+def _number(text: Column, form: str) -> Column:
+    """The group of a full match of ``form``: the number without its
+    whitespace; ``""`` when ``text`` does not match. One regex pass."""
+    return F.regexp_extract(text, f"\\A(?:{form})\\z", 1)
 
 
 def _parse_integer(text: Column) -> Column:
-    sign, hexa, octal, dec = _groups(text, INT_TEXT, 4)
-    digits = (F.when(hexa != "", _conv(hexa, 16))
-              .when(octal != "", _conv(octal, 8)).otherwise(dec))
-    return F.concat(sign, digits).try_cast("long")  # NULL past int64
+    num = _number(text, INT_TEXT)
+    base = F.when(num.contains("x"), 16).when(num.contains("o"), 8)
+    radix = F.concat(  # the form keeps hex and octal within 64 bits
+        F.when(num.startswith("-"), "-").otherwise(""), F.call_function(
+            "conv", F.substring_index(F.substring_index(num, "x", -1),
+                                      "o", -1), base, F.lit(10)))
+    return F.coalesce(num.try_cast("long"), radix.try_cast("long"))
 
 
 def _parse_float(text: Column) -> Column:
-    num, inf, nan = _groups(text, FLOAT_TEXT, 3)
-    return (F.when(inf != "", F.when(inf.startswith("-"), float("-inf"))
-                   .otherwise(float("inf")))
-            .when(nan != "", float("nan"))
-            .otherwise(num.try_cast("double")))
+    num = F.lower(_number(text, FLOAT_TEXT))  # .inf/.nan lose their dot
+    return F.replace(F.replace(num, F.lit(".inf"), F.lit("inf")),
+                     F.lit(".nan"), F.lit("nan")).try_cast("double")
 
 
 def _parse_boolean(text: Column) -> Column:
@@ -98,25 +74,29 @@ def _parse_boolean(text: Column) -> Column:
                   False))
 
 
-_PARSE = {"integer": _parse_integer, "float": _parse_float,
-          "number": _parse_float, "boolean": _parse_boolean}
+#: the table's parse of text → its Column expression
+_PARSE = {parse_integer: _parse_integer, parse_float: _parse_float,
+          parse_boolean: _parse_boolean}
 
 
 def _float_text(x: Column) -> Column:
-    """A double written as the interpreter writes a float: the fewest
-    decimals ``k`` whose ``%.{k}e`` text reads back as ``x``, laid out
-    by :data:`FIXED_EXPONENTS`."""
+    """A double written as the interpreter writes a float (``repr``).
+    Between 1e-3 and 1e7 Spark's own text is that already; elsewhere it
+    is ``%.{k}e`` with the fewest decimals ``k`` that read back as
+    ``x``, laid out by :data:`FIXED_EXPONENTS`."""
+    java = x.try_cast("string")
     k = F.coalesce(*[
         F.when(F.format_string(f"%.{d}e", x).try_cast("double") == x, d)
         for d in range(17)])
     sci = F.printf(F.concat(F.lit("%."), k, F.lit("e")), x)
-    e = F.regexp_extract(sci, "e([-+][0-9]+)$", 1).try_cast("int")
+    e = F.substring_index(sci, "e", -1).try_cast("int")
     fixed = F.printf(
         F.concat(F.lit("%."), F.greatest(k - e, F.lit(1)), F.lit("f")), x)
-    lo, hi = FIXED_EXPONENTS.start, FIXED_EXPONENTS.stop
+    lo, hi = FIXED_EXPONENTS.start, FIXED_EXPONENTS.stop - 1
     return (F.when(F.isnan(x), "nan")
             .when(x == float("inf"), "inf").when(x == float("-inf"), "-inf")
-            .when((e >= lo) & (e < hi), fixed).otherwise(sci))
+            .when(~java.contains("E"), java)
+            .when(F.abs(2 * e - (lo + hi)) <= hi - lo, fixed).otherwise(sci))
 
 
 def decode_expr(
@@ -127,19 +107,20 @@ def decode_expr(
     decodes to NULL: the interpreter's NaN is neither less than nor
     equal to anything, Spark's is the largest double and equals
     itself."""
-    cell, fam = _cell(dtype, target)
-    if cell is NEVER:
+    fam = _family(dtype)
+    cell = MATRIX.get(target, {}).get(fam)
+    if cell is None:
         return None
-    if target == "string":
-        if fam is FRACTIONAL:
+    if cell is scalar_text:
+        if fam is float:
             return _float_text(col.try_cast("double"))
-        return col if fam is TEXT else col.try_cast("string")
-    floats = MATRIX[target] is MATRIX["float"]
-    if cell is PARSE:
-        out = _PARSE[target](col)
+        return col if fam is str else col.try_cast("string")
+    if cell in _PARSE:
+        out = _PARSE[cell](col)
     else:  # integral as integer, boolean as boolean: the column itself
-        out = col.try_cast("double") if floats else col
-    return F.when(~F.isnan(out), out) if floats else out
+        out = col.try_cast("double") if cell is float else col
+    return F.when(~F.isnan(out), out) if cell in (float, parse_float) \
+        else out
 
 
 def text_expr(col: Optional[Column], dtype: T.DataType) -> Column:
@@ -154,10 +135,10 @@ def convertible_expr(
 ) -> Column:
     """Boolean Column: would a YAML decode of ``col`` to ``target``
     succeed? (NULL/undefined inputs are the caller's concern.)"""
-    cell, _ = _cell(dtype, target)
-    if cell is PARSE:
-        return _PARSE[target](col).isNotNull()
-    return F.lit(cell is ALWAYS)  # folded by Catalyst
+    cell = MATRIX.get(target, {}).get(_family(dtype))
+    if cell in _PARSE:
+        return _PARSE[cell](col).isNotNull()
+    return F.lit(cell is not None)  # folded by Catalyst
 
 
 @dataclass(frozen=True)
@@ -178,7 +159,8 @@ class SparkTypeAdapter:
       ``equality`` of ``doc/examples/datetype.cc`` expressed once as a
       canonicalization. None ⇒ statically never decodable.
     - ``literal(value) -> Column``: schema-side constant (the ``min:``
-      / ``allowed:`` argument) decoded to the SAME representation.
+      / ``allowed:`` argument) decoded to the SAME representation;
+      without it the literal compares as written.
     """
 
     name: str
@@ -193,6 +175,6 @@ def typed_literal(value, target: str) -> Optional[Column]:
     The interpreter's ``less``/``equality`` with such a literal are
     False, so the compiler folds its comparisons to that constant."""
     try:
-        return F.lit(DECODE[target](value))
+        return F.lit(decode(target, value))
     except (ValueError, KeyError):
         return None

@@ -57,6 +57,7 @@ from ..dynamic.interpreter import (
 from ..errors import SchemaError
 from ..functions.pytypes import scalar_text
 from ..functions.sparktypes import (
+    INTEGRAL_TYPES,
     convertible_expr,
     decode_expr,
     text_expr,
@@ -198,12 +199,12 @@ class FieldCtx:
         return decode_expr(self.value, self.dtype, self.declared_type())
 
     def literal(self, value) -> Optional[Column]:
-        """``value`` decoded as the declared type, a registered custom
-        type's ``literal`` first; None when it does not decode, so no
-        value is less than or equal to it."""
+        """``value`` decoded as the declared type: a registered custom
+        type's ``literal``, else the value as written; None when a
+        builtin decode fails, so no value is less than or equal to it."""
         ad = self.opts.spark_types.get(self.declared_type())
-        if ad is not None and ad.literal is not None:
-            return ad.literal(value)
+        if ad is not None:
+            return F.lit(value) if ad.literal is None else ad.literal(value)
         return typed_literal(value, self.declared_type())
 
 
@@ -733,17 +734,32 @@ def _compile_mapping(
         if out_name != fname:
             scope.entries[fname] = None  # a rename moves the entry
             held = scope.get(out_name, opts)
-            if held is not None and held.dtype == eff.dtype:
+            if held is not None and held.value is not None:
                 # an undefined field moves nothing: the key keeps its value
-                eff = FieldRef(F.when(eff.defined, eff.value)
-                               .otherwise(held.value), eff.dtype,
-                               eff.defined | held.defined)
+                eff = held if eff.value is None else _moved(eff, held)
         scope.entries[out_name] = eff
         fields.append((out_name, eff))
     if policy.rejects_unknown:
         known = exempt | set(schema) | {name for name, _ in fields}
         viols.extend(_unknown_key_viols(known, parent, path, opts))
     return viols, fields
+
+
+def _moved(field: FieldRef, held: FieldRef) -> FieldRef:
+    """A field renamed onto the key ``held``: its value where defined,
+    else the key's own; integral dtypes widen to bigint, other mixed
+    dtypes have no one column."""
+    a, b, dtype = field.value, held.value, field.dtype
+    if dtype != held.dtype:
+        if not (isinstance(dtype, INTEGRAL_TYPES)
+                and isinstance(held.dtype, INTEGRAL_TYPES)):
+            raise CompileError(
+                f"rename onto a key of another type ({dtype} over"
+                f" {held.dtype}) is not columnar-compilable (use the"
+                " dynamic interpreter path)")
+        a, b, dtype = a.cast("long"), b.cast("long"), T.LongType()
+    return FieldRef(F.when(field.defined, a).otherwise(b), dtype,
+                    field.defined | held.defined)
 
 
 def assemble_violations(viols: list) -> Column:

@@ -269,14 +269,22 @@ def test_raising_rule_fails_only_its_row(spark) -> None:
 
 
 def test_nan_and_infinity_are_not_json(spark) -> None:
-    """RFC 8259 has no NaN or Infinity: such a document is not JSON, so
-    it never validates as a float nor comes back in ``normalized``."""
+    """RFC 8259 has no NaN or Infinity, and a number beyond a double
+    reads as one: such a document is not JSON, so it never validates as
+    a float nor comes back in ``normalized``. A normalized document
+    that would hold one (a NaN default) is its row's one violation."""
     docs = ['{"v": NaN}', '{"v": Infinity}', '{"v": -Infinity}',
-            '{"v": 1.5}']
+            '{"v": 1e999}', '{"v": -1e400}', '{"v": 1.5}']
     df = spark.createDataFrame(list(enumerate(docs)), "doc_id int, doc string")
     got = {r["doc_id"]: r for r in validate_json(
         df, {"v": {"type": "float"}}, include_normalized=True).collect()}
-    for i in range(3):
+    for i in range(5):
         assert got[i]["violations"] == [("^", NOT_JSON_MSG)]
         assert got[i]["normalized"] is None
-    assert got[3]["valid"] and got[3]["normalized"] == '{"v":1.5}'
+    nan_default = validate_json(
+        df.where("doc_id = 5"),
+        {"v": {"type": "float"}, "w": {"default": float("nan")}},
+        include_normalized=True).collect()
+    assert [(r["violations"], r["normalized"]) for r in nan_default] == [
+        ([("^", RAISED_MSG.format("ValueError"))], None)]
+    assert got[5]["valid"] and got[5]["normalized"] == '{"v":1.5}'

@@ -234,3 +234,42 @@ def test_custom_type_decode_only_registration(spark) -> None:
     bad = {r["d"] for r in
            tv.validate(df).annotated.where("NOT valid").collect()}
     assert bad == {"nope"}
+
+
+def test_custom_type_without_literal_matches_interpreter(spark) -> None:
+    """A custom type registered with ``decode`` and ``py_decode`` but no
+    ``literal``: its schema literals compare as written, and the two
+    engines give the same ``(path, message)`` multisets under
+    min/max/allowed/forbidden."""
+    from collections import Counter
+
+    from cerberus_cpp_spark import Validator
+    from cerberus_cpp_spark.functions.pytypes import TypeAdapter
+
+    def py_even(v):
+        if type(v) is int and v % 2 == 0:
+            return v
+        raise ValueError(f"not even: {v!r}")
+
+    schema = {"a": {"type": "even", "min": 2, "max": 10},
+              "b": {"type": "even", "allowed": [4, 6]},
+              "c": {"type": "even", "forbidden": [8]}}
+    tv = TableValidator(schema, extra_cols=("doc_id",))
+    tv.register_spark_type(
+        "even", decode=lambda col, dtype: F.when(F.pmod(col, F.lit(2)) == 0,
+                                                 col),
+        py_decode=py_even)
+    oracle = Validator(schema)
+    oracle.register_type(TypeAdapter("even", py_even))
+    docs = [{"a": n, "b": n, "c": n} for n in (0, 2, 3, 4, 6, 8, 10, 12)]
+    want = []
+    for d in docs:
+        oracle.validate(d)
+        want.append(Counter((e.path, e.message) for e in oracle.errors))
+    df = spark.createDataFrame(
+        [{"doc_id": i, **d} for i, d in enumerate(docs)],
+        "doc_id int, a bigint, b bigint, c bigint")
+    got = {r["doc_id"]: Counter((v["path"], v["message"])
+                                for v in r["violations"])
+           for r in tv.validate(df).annotated.collect()}
+    assert [got[i] for i in range(len(docs))] == want

@@ -21,8 +21,10 @@ from __future__ import annotations
 from collections import Counter
 
 import pytest
+from pyspark.sql import types as T
 
 from cerberus_cpp_spark.dynamic.interpreter import Validator
+from cerberus_cpp_spark.plans.compiler import CompileError
 from cerberus_cpp_spark.plans.engine import TableValidator
 
 _D = {"type": "dict", "allow_unknown": True}
@@ -36,6 +38,8 @@ _RENAME_TARGET = {"a": {"type": "integer", "rename": "b"},
                   "c": {"type": "integer", "dependencies": "b"}}
 _RENAME_ONTO = {"a": {"type": "integer", "rename": "b"}}
 _ONTO_DOCS = [{"a": 1, "b": 2}, {"a": 1}, {"b": 2}]
+_RENAME_ONTO_DEP = {**_RENAME_ONTO,
+                    "c": {"type": "integer", "dependencies": "b"}}
 _PINNED_DEFAULT = {"a": {"type": "integer", "default": 5},
                    "c": {"type": "integer", "dependencies": {"a": [5]}}}
 
@@ -101,6 +105,17 @@ MAPPING_CASES = {
     "rename-onto-held-key-map": (
         {"d": {"type": "dict", "schema": _RENAME_ONTO}},
         "d map<string, bigint>", [{"d": d} for d in _ONTO_DOCS]),
+    # ... also when the renamed field is absent from the frame, or
+    # narrower than the key it lands on
+    "rename-onto-held-key-absent-field": (
+        _RENAME_ONTO_DEP, "b bigint, c bigint", [{"b": 2, "c": 1}, {"c": 1}]),
+    "rename-onto-held-key-absent-field-struct": (
+        {"d": {"type": "dict", "schema": _RENAME_ONTO_DEP}},
+        "d struct<b: bigint, c: bigint>",
+        [{"d": {"b": 2, "c": 1}}, {"d": {"c": 1}}]),
+    "rename-onto-held-key-widened": (
+        _RENAME_ONTO_DEP, "a int, b bigint, c bigint",
+        [{**d, "c": 1} for d in _ONTO_DOCS] + [{"c": 1}]),
 }
 
 _ELEM_DEP = {"type": "integer", "dependencies": "flag"}
@@ -199,15 +214,27 @@ def test_element_scope_matches_interpreter(name: str, spark) -> None:
     _differential(spark, *ELEMENT_CASES[name])
 
 
-def test_rename_onto_held_key_normalizes_like_interpreter(spark) -> None:
+@pytest.mark.parametrize("ddl", ["a bigint, b bigint", "b bigint",
+                                 "a int, b bigint"])
+def test_rename_onto_held_key_normalizes_like_interpreter(
+        ddl: str, spark) -> None:
     """The row holds the rename target: ``normalized`` has one ``b``,
     the renamed value where the field is defined, else the row's own."""
+    docs = [d for d in _ONTO_DOCS if "a" in ddl or "a" not in d]
     oracle = Validator(_RENAME_ONTO)
     want = []
-    for d in _ONTO_DOCS:
+    for d in docs:
         oracle.validate(d)
         want.append(oracle.get_document())
-    frame = spark.createDataFrame(_ONTO_DOCS, "a bigint, b bigint")
+    frame = spark.createDataFrame(docs, ddl)
     norm = TableValidator(_RENAME_ONTO).validate(frame).normalized
     assert norm.columns == ["b"]
     assert [r.asDict() for r in norm.collect()] == want
+
+
+def test_rename_onto_key_of_another_type_raises() -> None:
+    """A string field renamed onto a bigint key has no one column."""
+    ddl = T.StructType([T.StructField("a", T.StringType()),
+                        T.StructField("b", T.LongType())])
+    with pytest.raises(CompileError, match="rename onto a key"):
+        TableValidator({"a": {"rename": "b"}}).compile(ddl)
