@@ -23,13 +23,22 @@ accumulation without short-circuit, ``^``-anchored dependency paths.
 Dispatch is specialized once per rule map, not once per document: the
 first item a rule map validates builds its rule program, the ``(fn,
 arg)`` steps of the six phases in order (:class:`_Program`), and every
-later item runs those steps with one :class:`RuleCtx`. The programs of
-the stored schemas (the constructor schema, the registered schemas and,
-on the meta-validator, the schema-of-schemas) live until the next
-``register_*`` call; a schema passed to ``validate`` gets programs that
-go when the call returns. A program reads its rule map once, so a
-stored rule map edited in place after its first use keeps its old
-program.
+later item runs those steps with one :class:`RuleCtx`. A step holds its
+argument prepared (:data:`_PREPARED`): ``regex`` compiled; ``type`` as
+its names, the adapters they resolve to and the Python types a builtin
+adapter accepts by a conversion, which pass with one set test;
+``min``/``max``/``allowed``/``forbidden`` literals decoded once with
+the field's adapter (one that never decodes is marked so); a falsy
+``nullable`` as ``False``, a truthy one as no step. A custom decode is
+thus called on a schema literal when the program is built, not on
+every value. The programs of the stored schemas (the constructor
+schema, the registered schemas and, on the meta-validator, the
+schema-of-schemas) live until the next ``register_*`` call; a schema
+passed to ``validate`` gets programs that go when the call returns. A
+program reads its rule map and the adapters once, so a stored rule map
+edited in place after its first use keeps its old program, and a type
+change reaches the programs through ``register_type``, not through
+``types`` mutated directly.
 
 Documents are plain Python trees (``yaml.safe_load`` output); the
 ``UNDEFINED`` sentinel distinguishes an absent key from explicit null.
@@ -41,14 +50,16 @@ import copy
 import re
 from dataclasses import dataclass, field as dc_field, replace
 from enum import IntEnum
-from typing import Any, Callable
+from typing import Any, Callable, NamedTuple
 
 from ..errors import SchemaError, ValidationErrorItem
 from ..functions.pytypes import (
     BOOL_TEXT,
+    BUILTIN_TYPES,
+    CONVERTS,
+    INT64,
     UNDEFINED,
     TypeAdapter,
-    builtin_types,
     scalar_text,
 )
 
@@ -157,14 +168,6 @@ class RuleCtx:
     parent: Any                   # enclosing document mapping (or None)
     policy: _Policy               # the policy in force for this field
 
-    @property
-    def value(self) -> Any:
-        return self.item.value
-
-    @value.setter
-    def value(self, v: Any) -> None:
-        self.item.value = v
-
     def raise_error(self, message: str) -> None:
         self.state.errors.append(
             ValidationErrorItem(format_path(self.path), message)
@@ -172,15 +175,8 @@ class RuleCtx:
 
     def get_type(self, name: str | None = None) -> TypeAdapter:
         """Type adapter by name, or from the enclosing field schema's
-        ``type:`` entry (reference ``getType`` — ``validator.hh:368-387``);
-        defaults to string comparison when no type is declared."""
-        if name is None:
-            t = self.field_schema.get("type", "string")
-            name = t[0] if isinstance(t, list) and t else t
-        adapter = self.validator.types.get(str(name))
-        if adapter is None:
-            adapter = self.validator.types["string"]
-        return adapter
+        ``type:`` entry (:func:`_adapter`)."""
+        return _adapter(self.validator.types, self.field_schema, name)
 
     def lookup_path(self, path_str: str) -> Any:
         """Mini path language of ``dependencies``/``excludes``:
@@ -246,6 +242,7 @@ class _State:
 
 
 RuleFn = Callable[[RuleCtx], None]
+Types = dict[str, TypeAdapter]
 
 
 class _Program:
@@ -258,35 +255,123 @@ class _Program:
 
     __slots__ = ("rules", "scoped", "steps", "all_rules", "all_steps")
 
-    def __init__(self, registered: dict, rules: dict) -> None:
+    def __init__(self, registered: dict, types: Types, rules: dict) -> None:
         self.rules = rules
         #: the map has its own policy keys (:meth:`_Policy.enter`)
         self.scoped = any(k in rules for k in _POLICY_KEYS)
-        self.steps = _steps(registered, rules)
+        self.steps = _steps(registered, types, rules)
         self.all_rules = {**rules, "required": True}
-        self.all_steps = _steps(registered, self.all_rules)
+        self.all_steps = _steps(registered, types, self.all_rules)
 
 
-def _steps(registered: dict, rules: dict) -> list[tuple[RuleFn, Any]]:
+def _steps(registered: dict, types: Types,
+           rules: dict) -> list[tuple[RuleFn, Any]]:
     """The six-phase scan, done once per rule map; a rule listed in
     :data:`_PREPARED` gets its argument prepared here, once (an
-    ill-formed ``regex`` raises here)."""
+    ill-formed ``regex`` raises here), and no step where the prepared
+    argument is :data:`_NO_STEP`."""
     steps = []
     for phase in _PHASES:
         for name, arg in rules.items():
             fn = registered.get((phase, name))
-            if fn is not None:
-                prepare = _PREPARED.get(fn)
-                steps.append((fn, arg if prepare is None else prepare(arg)))
+            if fn is None:
+                continue
+            prepare = _PREPARED.get(fn)
+            if prepare is not None:
+                arg = prepare(arg, rules, types)
+                if arg is _NO_STEP:
+                    continue
+            steps.append((fn, arg))
     return steps
 
 
-def _compile_regex(arg: Any) -> re.Pattern:
+def _adapter(types: Types, rules: dict, name: Any = None) -> TypeAdapter:
+    """Type adapter by name, or from the rule map's ``type:`` entry
+    (reference ``getType`` — ``validator.hh:368-387``); defaults to
+    string comparison when no type is declared."""
+    if name is None:
+        t = rules.get("type", "string")
+        name = t[0] if isinstance(t, list) and t else t
+    adapter = types.get(str(name))
+    return types["string"] if adapter is None else adapter
+
+
+#: a prepared argument for a rule that can never fire: no step
+_NO_STEP = object()
+#: a value or schema literal that does not decode with its adapter
+_NEVER = object()
+
+
+def _decoded(adapter: TypeAdapter, value: Any) -> Any:
+    """``adapter.decode(value)``, or :data:`_NEVER` where it fails."""
+    try:
+        return adapter.decode(value)
+    except (ValueError, TypeError):
+        return _NEVER
+
+
+def _lt(a: Any, b: Any) -> Any:
+    """``a < b`` of two decoded values, False where they do not compare
+    (:meth:`TypeAdapter.less`)."""
+    try:
+        return a < b
+    except (ValueError, TypeError):
+        return False
+
+
+def _eq(a: Any, b: Any) -> Any:
+    """``a == b`` of two decoded values (:meth:`TypeAdapter.equality`);
+    ``==``, not a set, so NaN and unhashable values answer alike."""
+    try:
+        return a == b
+    except (ValueError, TypeError):
+        return False
+
+
+def _compile_regex(arg: Any, *_: Any) -> re.Pattern:
     return re.compile(str(arg))
 
 
-def _type_names(arg: Any) -> tuple[str, ...]:
-    return tuple(str(t) for t in as_list(arg))
+class _TypeCheck(NamedTuple):
+    """A ``type`` argument, prepared: the names as written, the
+    adapters they resolve to, and the Python types a builtin adapter
+    among them accepts by a conversion (:data:`CONVERTS`)."""
+
+    names: tuple[str, ...]
+    adapters: tuple[TypeAdapter, ...]
+    converts: frozenset[type]
+
+
+def _type_check(arg: Any, rules: dict, types: Types) -> _TypeCheck:
+    names = tuple(str(t) for t in as_list(arg))
+    adapters = tuple(types[n] for n in names if n in types)
+    converts: frozenset[type] = frozenset()
+    for adapter in adapters:
+        if adapter is not BUILTIN_TYPES.get(adapter.name):
+            break  # a custom decode runs before any later adapter
+        converts |= CONVERTS[adapter.name]
+    return _TypeCheck(names, adapters, converts)
+
+
+def _nullable(arg: Any, rules: dict, types: Types) -> Any:
+    return _NO_STEP if _truthy(arg) else False
+
+
+def _bound(arg: Any, rules: dict, types: Types) -> tuple[TypeAdapter, Any]:
+    """``min``/``max``: the field's adapter and the bound decoded with
+    it, or :data:`_NEVER`."""
+    adapter = _adapter(types, rules)
+    return adapter, _decoded(adapter, arg)
+
+
+def _literals(arg: Any, rules: dict, types: Types
+              ) -> tuple[TypeAdapter, tuple[tuple[Any, Any], ...]]:
+    """``allowed``/``forbidden``: the field's adapter and the
+    ``(literal, decoded)`` pairs of the literals that decode; one that
+    does not can never equal a value."""
+    adapter = _adapter(types, rules)
+    pairs = ((lit, _decoded(adapter, lit)) for lit in as_list(arg))
+    return adapter, tuple((lit, d) for lit, d in pairs if d is not _NEVER)
 
 
 class Validator:
@@ -311,7 +396,7 @@ class Validator:
         self.purge_unknown = purge_unknown
         self.require_all = require_all
         self.validate_schema = validate_schema
-        self.types: dict[str, TypeAdapter] = builtin_types()
+        self.types: dict[str, TypeAdapter] = dict(BUILTIN_TYPES)
         self.schema_registry: dict[str, dict] = {}
         # (priority, name) → rule fn; meta-schemas accumulate the
         # schema-of-schemas exactly like registerRule does
@@ -363,6 +448,8 @@ class Validator:
     def register_type(self, adapter: TypeAdapter) -> None:
         self.types[adapter.name] = adapter
         self._reset()
+        if self._meta is not None:  # it shares self.types (_meta_one)
+            self._meta._reset()
 
     def register_schema(self, name: str, schema: dict) -> None:
         self.schema_registry[name] = schema
@@ -586,7 +673,8 @@ class Validator:
 
     def _program(self, rules: dict) -> _Program:
         """The rule program of ``rules``, built on first use."""
-        prog = self._live[id(rules)] = _Program(self._rules, rules)
+        prog = self._live[id(rules)] = _Program(self._rules, self.types,
+                                                rules)
         return prog
 
 
@@ -602,11 +690,16 @@ def _rule_allowed(ctx: RuleCtx) -> None:
     """``rules.hh:79-100``. Divergence (unpinned by the reference
     corpus): undefined/null values are skipped rather than failing the
     equality probe — matches Python cerberus."""
-    if ctx.value is UNDEFINED or ctx.value is None:
+    value = ctx.item.value
+    if value is UNDEFINED or value is None:
         return
-    t = ctx.get_type()
-    if not any(t.equality(cand, ctx.value) for cand in as_list(ctx.arg)):
-        ctx.raise_error("value disallowed by allowed-rule")
+    adapter, literals = ctx.arg  # decoded once (_literals)
+    doc = _decoded(adapter, value) if literals else _NEVER
+    if doc is not _NEVER:
+        for _, d in literals:
+            if _eq(d, doc):
+                return
+    ctx.raise_error("value disallowed by allowed-rule")
 
 
 def _rule_contains(ctx: RuleCtx) -> None:
@@ -614,7 +707,7 @@ def _rule_contains(ctx: RuleCtx) -> None:
     required; an undefined/non-list document leaves every needed value
     missing (reference iterates zero items → error)."""
     needed = [str(scalar_text(x)) for x in as_list(ctx.arg)]
-    items = ctx.value if isinstance(ctx.value, list) else []
+    items = ctx.item.value if isinstance(ctx.item.value, list) else []
     t = ctx.get_type("string")
     for item in items:
         needed = [n for n in needed if not t.equality(n, item)]
@@ -626,15 +719,15 @@ def _rule_contains(ctx: RuleCtx) -> None:
 
 def _rule_default(ctx: RuleCtx) -> None:
     """``rules.hh:128-141`` — fires only on UNDEFINED, not null."""
-    if ctx.value is UNDEFINED:
-        ctx.value = copy.deepcopy(ctx.arg)
+    if ctx.item.value is UNDEFINED:
+        ctx.item.value = copy.deepcopy(ctx.arg)
 
 
 def _rule_dependencies(ctx: RuleCtx) -> None:
     """``rules.hh:143-187``: skip when the field itself is undefined;
     map form pins the dependency's value (string equality); paths may
     be ``^``-anchored at the document root."""
-    if ctx.value is UNDEFINED:
+    if ctx.item.value is UNDEFINED:
         return
     t = ctx.get_type("string")
     if isinstance(ctx.arg, dict):
@@ -658,17 +751,14 @@ def _rule_dependencies(ctx: RuleCtx) -> None:
 
 def _rule_empty(ctx: RuleCtx) -> None:
     """``rules.hh:189-203`` — only sequences are checked."""
-    if (
-        isinstance(ctx.value, list)
-        and not _truthy(ctx.arg)
-        and len(ctx.value) == 0
-    ):
+    value = ctx.item.value
+    if isinstance(value, list) and not _truthy(ctx.arg) and not value:
         ctx.raise_error("empty-rule violated for sequence")
 
 
 def _rule_excludes(ctx: RuleCtx) -> None:
     """``rules.hh:205-227`` — skip when the field is undefined."""
-    if ctx.value is UNDEFINED:
+    if ctx.item.value is UNDEFINED:
         return
     for exc in as_list(ctx.arg):
         if ctx.lookup_path(str(exc)) is not UNDEFINED:
@@ -679,17 +769,21 @@ def _rule_excludes(ctx: RuleCtx) -> None:
 
 def _rule_forbidden(ctx: RuleCtx) -> None:
     """``rules.hh:229-244``."""
-    if ctx.value is UNDEFINED or ctx.value is None:
+    value = ctx.item.value
+    if value is UNDEFINED or value is None:
         return
-    t = ctx.get_type()
-    for cand in as_list(ctx.arg):
-        if t.equality(cand, ctx.value):
+    adapter, literals = ctx.arg  # decoded once (_literals)
+    doc = _decoded(adapter, value) if literals else _NEVER
+    if doc is _NEVER:
+        return
+    for cand, d in literals:
+        if _eq(d, doc):
             ctx.raise_error(f"forbidden-rule violated: {cand}")
 
 
 def _rule_items(ctx: RuleCtx) -> None:
     """``rules.hh:246-268`` — positional per-index schemas."""
-    seq = ctx.value if isinstance(ctx.value, list) else []
+    seq = ctx.item.value if isinstance(ctx.item.value, list) else []
     for i, sub in enumerate(ctx.arg or []):
         elem = _Item(value=seq[i] if i < len(seq) else UNDEFINED)
         ctx.validator._validate_item(
@@ -701,12 +795,12 @@ def _rule_items(ctx: RuleCtx) -> None:
 
 def _rule_keysrules(ctx: RuleCtx) -> None:
     """``rules.hh:270-288`` — apply a rule-map to every KEY."""
-    if not isinstance(ctx.value, dict):
+    value = ctx.item.value
+    if not isinstance(value, dict):
         return
-    for key in ctx.value:
+    for key in value:
         ctx.validator._validate_item(
-            _Item(value=key), ctx.arg, ctx.path + (key,), ctx.value,
-            ctx.policy,
+            _Item(value=key), ctx.arg, ctx.path + (key,), value, ctx.policy,
         )
 
 
@@ -718,10 +812,12 @@ def _rule_max(ctx: RuleCtx) -> None:
     """``rules.hh:303-320`` — EXCLUSIVE bound: doc must be strictly
     less than the bound; skip undefined; a non-decodable doc (incl.
     null) passes (both comparisons fail) — asymmetric vs min."""
-    if ctx.value is UNDEFINED:
+    value = ctx.item.value
+    if value is UNDEFINED:
         return
-    t = ctx.get_type()
-    if t.less(ctx.arg, ctx.value) or t.equality(ctx.value, ctx.arg):
+    adapter, bound = ctx.arg  # decoded once (_bound)
+    doc = _NEVER if bound is _NEVER else _decoded(adapter, value)
+    if doc is not _NEVER and (_lt(bound, doc) or _eq(doc, bound)):
         ctx.raise_error("max-rule violated")
 
 
@@ -729,10 +825,12 @@ def _rule_min(ctx: RuleCtx) -> None:
     """``rules.hh:322-339`` — EXCLUSIVE bound: doc must be strictly
     greater; skip undefined; a non-decodable doc (incl. null) FAILS
     (``less`` returns false)."""
-    if ctx.value is UNDEFINED:
+    value = ctx.item.value
+    if value is UNDEFINED:
         return
-    t = ctx.get_type()
-    if not t.less(ctx.arg, ctx.value):
+    adapter, bound = ctx.arg  # decoded once (_bound)
+    doc = _NEVER if bound is _NEVER else _decoded(adapter, value)
+    if doc is _NEVER or not _lt(bound, doc):
         ctx.raise_error("min-rule violated")
 
 
@@ -744,29 +842,31 @@ def _count_items(value: Any) -> int:
 
 def _rule_maxlength(ctx: RuleCtx) -> None:
     """``rules.hh:341-363``."""
-    if _count_items(ctx.value) > int(ctx.arg):
+    if _count_items(ctx.item.value) > int(ctx.arg):
         ctx.raise_error("maxlength-rule violated")
 
 
 def _rule_minlength(ctx: RuleCtx) -> None:
     """``rules.hh:365-387``."""
-    if _count_items(ctx.value) < int(ctx.arg):
+    if _count_items(ctx.item.value) < int(ctx.arg):
         ctx.raise_error("minlength-rule violated")
 
 
 def _rule_nullable(ctx: RuleCtx) -> None:
     """``rules.hh:389-404`` — fires on explicit null only; the
     ``default: false`` in its meta-schema is what auto-injects
-    ``nullable: false`` into every field (SURVEY.md §1.2.2)."""
-    if not _truthy(ctx.arg) and ctx.value is None:
+    ``nullable: false`` into every field (SURVEY.md §1.2.2). Only a
+    falsy ``nullable`` gets a step (:func:`_nullable`)."""
+    if ctx.item.value is None:
         ctx.raise_error("nullable-rule violated")
 
 
 def _rule_regex(ctx: RuleCtx) -> None:
     """``rules.hh:438-452`` — FULL match (``std::regex_match``)."""
-    if ctx.value is UNDEFINED or ctx.value is None:
+    value = ctx.item.value
+    if value is UNDEFINED or value is None:
         return
-    text = scalar_text(ctx.value)
+    text = scalar_text(value)
     # the rule program compiled the argument (_steps)
     if text is None or not ctx.arg.fullmatch(text):
         ctx.raise_error("regex-rule violated")
@@ -781,7 +881,7 @@ def _rule_rename(ctx: RuleCtx) -> None:
 def _rule_required(ctx: RuleCtx) -> None:
     """``rules.hh:503-517`` — fires only on UNDEFINED (null passes
     required but fails nullable)."""
-    if _truthy(ctx.arg) and ctx.value is UNDEFINED:
+    if _truthy(ctx.arg) and ctx.item.value is UNDEFINED:
         ctx.raise_error("required-rule violated: field missing")
 
 
@@ -790,22 +890,22 @@ def _rule_schema(ctx: RuleCtx) -> None:
     apply one rule-map to every element; scalar arg → registered
     schema lookup (``validator.hh:408-415``), meta-validated like the
     top-level schema: once, and only under ``validate_schema``."""
-    arg = ctx.arg
+    arg, value = ctx.arg, ctx.item.value
     if isinstance(arg, str):
         if arg not in ctx.validator.schema_registry:
             ctx.raise_error(f"unknown registered schema: {arg}")
             return
         arg = ctx.validator._stored(arg)
-    if isinstance(ctx.value, dict):
-        ctx.validator._validate_dict(ctx.value, arg, ctx.path, ctx.policy)
-    elif isinstance(ctx.value, list):
-        for i in range(len(ctx.value)):
-            elem = _Item(value=ctx.value[i])
+    if isinstance(value, dict):
+        ctx.validator._validate_dict(value, arg, ctx.path, ctx.policy)
+    elif isinstance(value, list):
+        for i in range(len(value)):
+            elem = _Item(value=value[i])
             ctx.validator._validate_item(
                 elem, arg, ctx.path + (i,), ctx.parent, ctx.policy
             )
             if elem.value is not UNDEFINED:
-                ctx.value[i] = elem.value
+                value[i] = elem.value
 
 
 def _rule_type(ctx: RuleCtx) -> None:
@@ -813,19 +913,20 @@ def _rule_type(ctx: RuleCtx) -> None:
     check structurally against ``list``/``dict``; scalars must be
     YAML-decodable to at least one named type. TYPECHECKING phase —
     runs after ordinary validation."""
-    if ctx.value is UNDEFINED or ctx.value is None:
+    value = ctx.item.value
+    kind = type(value)
+    names, adapters, converts = ctx.arg  # prepared once (_type_check)
+    if kind in converts and (kind is not int
+                             or INT64[0] <= value <= INT64[1]):
+        return  # a builtin conversion: no parse, no decode call
+    if value is UNDEFINED or value is None:
         return
-    names = ctx.arg  # the rule program's tuple of names (_steps)
-    if isinstance(ctx.value, list):
+    if isinstance(value, list):
         ok = "list" in names
-    elif isinstance(ctx.value, dict):
+    elif isinstance(value, dict):
         ok = "dict" in names
     else:
-        ok = any(
-            ctx.validator.types[n].is_convertible(ctx.value)
-            for n in names
-            if n in ctx.validator.types
-        )
+        ok = any(a.is_convertible(value) for a in adapters)
     if not ok:
         ctx.raise_error(
             "type-rule violated: expected " + "/".join(names)
@@ -834,22 +935,29 @@ def _rule_type(ctx: RuleCtx) -> None:
 
 def _rule_valuesrules(ctx: RuleCtx) -> None:
     """``rules.hh:614-632`` — apply a rule-map to every VALUE."""
-    if not isinstance(ctx.value, dict):
+    value = ctx.item.value
+    if not isinstance(value, dict):
         return
-    for key in list(ctx.value.keys()):
-        elem = _Item(value=ctx.value[key])
+    for key in list(value.keys()):
+        elem = _Item(value=value[key])
         ctx.validator._validate_item(
-            elem, ctx.arg, ctx.path + (key,), ctx.value, ctx.policy
+            elem, ctx.arg, ctx.path + (key,), value, ctx.policy
         )
         if elem.value is not UNDEFINED:
-            ctx.value[key] = elem.value
+            value[key] = elem.value
 
 
-#: rule fn → how its program step prepares the schema argument, once
-#: per rule map instead of once per value
-_PREPARED: dict[RuleFn, Callable[[Any], Any]] = {
+#: rule fn → how its program step prepares the schema argument from
+#: ``(argument, rule map, types)``, once per rule map instead of once
+#: per value
+_PREPARED: dict[RuleFn, Callable[[Any, dict, Types], Any]] = {
+    _rule_allowed: _literals,
+    _rule_forbidden: _literals,
+    _rule_max: _bound,
+    _rule_min: _bound,
+    _rule_nullable: _nullable,
     _rule_regex: _compile_regex,
-    _rule_type: _type_names,
+    _rule_type: _type_check,
 }
 
 

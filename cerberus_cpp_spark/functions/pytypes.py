@@ -10,7 +10,7 @@ any scalar decodes as string (``test/testdata.yml:505-527``), and
 forms, the int64 range, :data:`MATRIX` (target × value family → the
 conversion or parse; no cell where the decode never succeeds) and
 :func:`scalar_text`. The interpreter reads it through
-:func:`builtin_types`, the columnar engine through
+:data:`BUILTIN_TYPES`, the columnar engine through
 ``functions/sparktypes.py``. Where the reference is silent the forms
 keep the interpreter's answers: whitespace around a number is allowed,
 hex and octal need a lowercase ``0x``/``0o``, a decimal integer with a
@@ -120,6 +120,12 @@ MATRIX: dict[str, dict[type, Callable[[Any], Any]]] = {
     "string": dict.fromkeys((int, float, bool, str), scalar_text),
 }
 MATRIX["number"] = MATRIX["float"]
+#: target → the Python types whose :data:`MATRIX` cell is a conversion,
+#: not a parse: every value of them decodes (an int only within INT64)
+CONVERTS = {
+    target: frozenset(kind for kind, cell in cells.items() if cell not in (
+        parse_integer, parse_float, parse_boolean))
+    for target, cells in MATRIX.items()}
 
 
 def decode(target: str, value: Any) -> Any:
@@ -168,7 +174,7 @@ class TypeAdapter:
             return False
 
 
-def builtin_types() -> dict[str, TypeAdapter]:
-    """The five builtin scalar types (reference ``types.hh:64-72``):
-    :data:`MATRIX` decides, and only text reaches a parser."""
-    return {t: TypeAdapter(t, partial(decode, t)) for t in MATRIX}
+#: the five builtin scalar types (reference ``types.hh:64-72``):
+#: :data:`MATRIX` decides, and only text reaches a parser. Immutable, so
+#: every validator's type table starts from these same adapters
+BUILTIN_TYPES = {t: TypeAdapter(t, partial(decode, t)) for t in MATRIX}

@@ -9,6 +9,8 @@ same engine, different execution substrate)."""
 from __future__ import annotations
 
 import json
+import random
+import zipfile
 
 import pytest
 
@@ -231,8 +233,9 @@ def test_custom_rule_via_configure(spark) -> None:
 
     def add_odd(v) -> None:
         def odd(ctx):
-            if ctx.value is not None and not isinstance(ctx.value, dict):
-                if int(ctx.value) % 2 == 0:
+            value = ctx.item.value
+            if value is not None and not isinstance(value, dict):
+                if int(value) % 2 == 0:
                     ctx.raise_error("odd-rule violated")
         v.register_rule("odd", {"type": "boolean"}, odd,
                         Priority.VALIDATION)
@@ -252,7 +255,7 @@ def test_raising_rule_fails_only_its_row(spark) -> None:
     rows go on."""
     def add_parity(v) -> None:
         def parity(ctx):
-            if ctx.value is not None and int(ctx.value) % 2:
+            if ctx.item.value is not None and int(ctx.item.value) % 2:
                 ctx.raise_error("parity-rule violated")
         v.register_rule("parity", {"type": "boolean"}, parity)
 
@@ -288,3 +291,92 @@ def test_nan_and_infinity_are_not_json(spark) -> None:
     assert [(r["violations"], r["normalized"]) for r in nan_default] == [
         ([("^", RAISED_MSG.format("ValueError"))], None)]
     assert got[5]["valid"] and got[5]["normalized"] == '{"v":1.5}'
+
+
+def test_rule_from_an_added_zip_survives_dropped_finders(
+        spark, tmp_path) -> None:
+    """Each task drops the worker's zip finders; a ``configure`` hook
+    that imports from a zip added with ``addPyFile`` still works, task
+    after task: two runs give the same rows."""
+    archive = tmp_path / "zipped_rules.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zipped_rules/__init__.py", (
+            "def register(v):\n"
+            "    from zipped_rules import parity\n"
+            "    v.register_rule('parity', {'type': 'boolean'},"
+            " parity.rule)\n"))
+        z.writestr("zipped_rules/parity.py", (
+            "def rule(ctx):\n"
+            "    if isinstance(ctx.item.value, int) and ctx.item.value % 2:\n"
+            "        ctx.raise_error('parity-rule violated')\n"))
+    spark.sparkContext.addPyFile(str(archive))
+
+    def configure(v) -> None:
+        import zipped_rules
+
+        zipped_rules.register(v)
+
+    df = spark.createDataFrame(
+        [(i, json.dumps({"n": i})) for i in range(40)],
+        "doc_id int, doc string").repartition(4)
+
+    def run() -> list:
+        out = validate_json(df, {"n": {"type": "integer", "parity": True}},
+                            configure=configure)
+        return sorted(tuple(r) for r in out.collect())
+
+    first, second = run(), run()
+    assert first == second
+    assert [r[0] for r in first if not r[3]] == list(range(1, 40, 2))
+
+
+def _hostile_inputs(rng: random.Random, n: int) -> list:
+    """Arbitrary text, arbitrary bytes decoded with ``errors="replace"``
+    and mangled JSON, seeded."""
+    alphabet = [chr(c) for c in range(0x20)] + list(
+        '{}[]":,.-+0123456789eE truefalsnNaIiy\\u') + [
+        "\u00e9", "\u2028", "\ufffd", "\U0001f600", "\x00"]
+    out: list = [None, "", "{}", "[]", "null", '"x"', "1", "{" * 2000,
+                 "[" * 5000 + "]" * 5000, '{"id": 1e999}', '{"id": NaN}']
+    for _ in range(n):
+        kind = rng.randrange(4)
+        if kind == 0:
+            out.append("".join(rng.choice(alphabet)
+                               for _ in range(rng.randrange(60))))
+        elif kind == 1:
+            raw = bytes(rng.randrange(256) for _ in range(rng.randrange(60)))
+            out.append(raw.decode("utf-8", errors="replace"))
+        elif kind == 2:
+            text = "".join(chr(rng.choice([rng.randrange(0x20, 0x7f),
+                                           rng.randrange(0xa0, 0xd800),
+                                           rng.randrange(0xe000, 0x110000)]))
+                           for _ in range(rng.randrange(40)))
+            out.append(text)
+        else:
+            doc = json.dumps({"id": rng.choice([1, -5, "7", None, 2 ** 70]),
+                              "image": {"w": rng.randrange(-5, 20000)},
+                              "tags": rng.choice([["red"], "red", [1]])})
+            cut = rng.randrange(len(doc) + 1)
+            out.append(doc[:cut] + rng.choice(["", "}", "]", ",", "x"])
+                       + doc[cut:])
+    return out
+
+
+def test_every_input_string_yields_one_verdict_row(spark) -> None:
+    """No input string fails the job: each one — arbitrary text,
+    arbitrary bytes, mangled JSON — gives exactly one row, with
+    ``valid`` set and agreeing with its violations."""
+    from perfbench.workloads import JSON_SCHEMA
+
+    inputs = _hostile_inputs(random.Random(20), 400)
+    df = spark.createDataFrame(list(enumerate(inputs)),
+                               "doc_id int, doc string").repartition(3)
+    out = validate_json(df, JSON_SCHEMA, include_normalized=True)
+    rows = out.select(
+        "doc_id", "valid", "n_violations",
+        F.size("violations").alias("size")).collect()
+    assert sorted(r["doc_id"] for r in rows) == list(range(len(inputs)))
+    for r in rows:
+        assert r["valid"] is not None
+        assert r["n_violations"] == r["size"]
+        assert r["valid"] == (r["n_violations"] == 0)

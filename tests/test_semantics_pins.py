@@ -161,10 +161,10 @@ def test_custom_rule_registration() -> None:
     v = Validator()
 
     def odd_rule(ctx) -> None:
-        if ctx.value is None or not ctx.arg:
+        if ctx.item.value is None or not ctx.arg:
             return
         try:
-            if int(ctx.value) % 2 == 0:
+            if int(ctx.item.value) % 2 == 0:
                 ctx.raise_error("odd-rule violated")
         except (TypeError, ValueError):
             pass
