@@ -20,25 +20,40 @@ checks, string-equality ``contains``/``dependencies``, full-match
 ``regex``, lexically scoped policies, six priority phases, error
 accumulation without short-circuit, ``^``-anchored dependency paths.
 
-Dispatch is specialized once per rule map, not once per document: the
-first item a rule map validates builds its rule program, the ``(fn,
-arg)`` steps of the six phases in order (:class:`_Program`), and every
-later item runs those steps with one :class:`RuleCtx`. A step holds its
-argument prepared (:data:`_PREPARED`): ``regex`` compiled; ``type`` as
-its names, the adapters they resolve to and the Python types a builtin
-adapter accepts by a conversion, which pass with one set test;
-``min``/``max``/``allowed``/``forbidden`` literals decoded once with
-the field's adapter (one that never decodes is marked so); a falsy
-``nullable`` as ``False``, a truthy one as no step. A custom decode is
-thus called on a schema literal when the program is built, not on
-every value. The programs of the stored schemas (the constructor
-schema, the registered schemas and, on the meta-validator, the
-schema-of-schemas) live until the next ``register_*`` call; a schema
-passed to ``validate`` gets programs that go when the call returns. A
-program reads its rule map and the adapters once, so a stored rule map
-edited in place after its first use keeps its old program, and a type
-change reaches the programs through ``register_type``, not through
-``types`` mutated directly.
+Each schema is compiled to Python once, not dispatched per document.
+The first document that reaches a rule map under a policy generates
+one function for the pair (:func:`_generate`). A field map's function
+unrolls its fields: read, run the field's rules, rename, write back,
+then purge or report the unknown keys. A rule map reached as a list
+element, an ``items`` entry, a key or a value gets an item function.
+Each builtin rule with an emitter (:data:`_EMITTERS`) is inlined in
+phase order, schema-key order within a phase, with its argument
+prepared once: ``regex`` compiled; ``type`` resolved to its adapters
+and to the Python types a builtin adapter accepts by a conversion,
+which pass with one set test; ``min``/``max``/``allowed``/``forbidden``
+literals decoded with the field's adapter; a truthy ``nullable``,
+``meta`` and the policy keys emit nothing. Every other rule (a custom
+one, an override of a builtin name, and the cold ``contains``,
+``empty``, ``minlength`` and ``maxlength``) is a ``fn(RuleCtx)`` call
+from the generated code, which writes the context's item back; a
+custom type is called through its :class:`TypeAdapter`.
+
+No schema value is spliced into the source text. Keys, literals,
+messages, patterns, paths, adapters and custom rules are bound in the
+function's namespace under generated names, so the source depends only
+on the schema's shape, and ``compile()`` is memoized by source text
+(:func:`_compiled`). A nested rule map or field map is generated when a
+document first reaches it, and a registered schema is looked up and
+normalized then too: a rule map that is not a mapping raises, and a
+registered schema raises its ``SchemaError``, at the same document as
+a walk that looked them up per item. The functions of the stored
+schemas (the constructor schema, the registered schemas and, on the
+meta-validator, the schema-of-schemas) live until the next
+``register_*`` call; a schema passed to ``validate`` gets functions
+that go when the call returns. A function reads its schema and the
+adapters once, so a stored schema edited in place after its first use
+keeps its old function, and a type change reaches the functions
+through ``register_type``, not through ``types`` mutated directly.
 
 Documents are plain Python trees (``yaml.safe_load`` output); the
 ``UNDEFINED`` sentinel distinguishes an absent key from explicit null.
@@ -50,7 +65,8 @@ import copy
 import re
 from dataclasses import dataclass, field as dc_field, replace
 from enum import IntEnum
-from typing import Any, Callable, NamedTuple
+from functools import lru_cache
+from typing import Any, Callable
 
 from ..errors import SchemaError, ValidationErrorItem
 from ..functions.pytypes import (
@@ -143,10 +159,33 @@ def too_deep(doc: Any) -> bool:
     return True
 
 
+def _path_steps(text: str) -> tuple[bool, tuple[Any, ...]]:
+    """A ``dependencies``/``excludes`` path: whether ``^`` anchors it at
+    the document root, and its steps, a key or an ``int`` index."""
+    anchored = text.startswith("^")
+    if anchored:
+        text = text[1:].lstrip(".")
+    return anchored, tuple(int(idx) if idx else key
+                           for key, idx in _PATH_TOKEN.findall(text))
+
+
+def _follow(node: Any, steps: tuple[Any, ...]) -> Any:
+    """The node ``steps`` lead to from ``node``, or UNDEFINED."""
+    for step in steps:
+        if type(step) is int:
+            if not (isinstance(node, list) and step < len(node)):
+                return UNDEFINED
+        elif not (isinstance(node, dict) and step in node):
+            return UNDEFINED
+        node = node[step]
+    return node
+
+
 @dataclass(slots=True)
 class _Item:
-    """Mutable holder for one (value, field-name) pair during the
-    phases — lets normalization rules (default/rename) write back."""
+    """Mutable holder for one (value, field-name) pair handed to a
+    ``fn(RuleCtx)`` rule — lets it normalize the value or rename the
+    field; the generated code reads both back."""
 
     value: Any
     field: str | None = None
@@ -156,8 +195,8 @@ class _Item:
 class RuleCtx:
     """What a rule implementation sees — the Python analogue of the
     reference's ``ValidationRuleInterface`` (``validator.hh:225-470``).
-    One context serves every rule of a field: the rule program swaps
-    ``arg`` before each step."""
+    The generated code builds one per custom rule call and reads its
+    ``item`` back."""
 
     validator: "Validator"
     state: "_State"
@@ -182,25 +221,9 @@ class RuleCtx:
         """Mini path language of ``dependencies``/``excludes``:
         ``^`` anchors at the document root, dotted keys descend,
         ``[i]`` indexes (reference ``stack.hh:146-172``)."""
-        text = str(path_str)
-        if text.startswith("^"):
-            node = self.state.root
-            text = text[1:].lstrip(".")
-        else:
-            node = self.parent
-        for m in _PATH_TOKEN.finditer(text):
-            key, idx = m.group(1), m.group(2)
-            if idx is not None:
-                if isinstance(node, list) and int(idx) < len(node):
-                    node = node[int(idx)]
-                else:
-                    return UNDEFINED
-            else:
-                if isinstance(node, dict) and key in node:
-                    node = node[key]
-                else:
-                    return UNDEFINED
-        return node
+        anchored, steps = _path_steps(str(path_str))
+        return _follow(self.state.root if anchored else self.parent,
+                       steps)
 
 
 @dataclass(frozen=True)
@@ -245,46 +268,6 @@ RuleFn = Callable[[RuleCtx], None]
 Types = dict[str, TypeAdapter]
 
 
-class _Program:
-    """One rule map, dispatched once: its ``(fn, arg)`` steps in phase
-    order, schema-key order within a phase (``validator.hh:266-287``),
-    plus the variant with ``required: true`` injected for a
-    ``require_all`` scope (``validator.hh:273-275``). A key that names
-    no rule (``__nullable_injected__``, say) gets no step. The program
-    holds its rule map, so the map's ``id`` keys it uniquely."""
-
-    __slots__ = ("rules", "scoped", "steps", "all_rules", "all_steps")
-
-    def __init__(self, registered: dict, types: Types, rules: dict) -> None:
-        self.rules = rules
-        #: the map has its own policy keys (:meth:`_Policy.enter`)
-        self.scoped = any(k in rules for k in _POLICY_KEYS)
-        self.steps = _steps(registered, types, rules)
-        self.all_rules = {**rules, "required": True}
-        self.all_steps = _steps(registered, types, self.all_rules)
-
-
-def _steps(registered: dict, types: Types,
-           rules: dict) -> list[tuple[RuleFn, Any]]:
-    """The six-phase scan, done once per rule map; a rule listed in
-    :data:`_PREPARED` gets its argument prepared here, once (an
-    ill-formed ``regex`` raises here), and no step where the prepared
-    argument is :data:`_NO_STEP`."""
-    steps = []
-    for phase in _PHASES:
-        for name, arg in rules.items():
-            fn = registered.get((phase, name))
-            if fn is None:
-                continue
-            prepare = _PREPARED.get(fn)
-            if prepare is not None:
-                arg = prepare(arg, rules, types)
-                if arg is _NO_STEP:
-                    continue
-            steps.append((fn, arg))
-    return steps
-
-
 def _adapter(types: Types, rules: dict, name: Any = None) -> TypeAdapter:
     """Type adapter by name, or from the rule map's ``type:`` entry
     (reference ``getType`` — ``validator.hh:368-387``); defaults to
@@ -296,8 +279,6 @@ def _adapter(types: Types, rules: dict, name: Any = None) -> TypeAdapter:
     return types["string"] if adapter is None else adapter
 
 
-#: a prepared argument for a rule that can never fire: no step
-_NO_STEP = object()
 #: a value or schema literal that does not decode with its adapter
 _NEVER = object()
 
@@ -326,52 +307,6 @@ def _eq(a: Any, b: Any) -> Any:
         return a == b
     except (ValueError, TypeError):
         return False
-
-
-def _compile_regex(arg: Any, *_: Any) -> re.Pattern:
-    return re.compile(str(arg))
-
-
-class _TypeCheck(NamedTuple):
-    """A ``type`` argument, prepared: the names as written, the
-    adapters they resolve to, and the Python types a builtin adapter
-    among them accepts by a conversion (:data:`CONVERTS`)."""
-
-    names: tuple[str, ...]
-    adapters: tuple[TypeAdapter, ...]
-    converts: frozenset[type]
-
-
-def _type_check(arg: Any, rules: dict, types: Types) -> _TypeCheck:
-    names = tuple(str(t) for t in as_list(arg))
-    adapters = tuple(types[n] for n in names if n in types)
-    converts: frozenset[type] = frozenset()
-    for adapter in adapters:
-        if adapter is not BUILTIN_TYPES.get(adapter.name):
-            break  # a custom decode runs before any later adapter
-        converts |= CONVERTS[adapter.name]
-    return _TypeCheck(names, adapters, converts)
-
-
-def _nullable(arg: Any, rules: dict, types: Types) -> Any:
-    return _NO_STEP if _truthy(arg) else False
-
-
-def _bound(arg: Any, rules: dict, types: Types) -> tuple[TypeAdapter, Any]:
-    """``min``/``max``: the field's adapter and the bound decoded with
-    it, or :data:`_NEVER`."""
-    adapter = _adapter(types, rules)
-    return adapter, _decoded(adapter, arg)
-
-
-def _literals(arg: Any, rules: dict, types: Types
-              ) -> tuple[TypeAdapter, tuple[tuple[Any, Any], ...]]:
-    """``allowed``/``forbidden``: the field's adapter and the
-    ``(literal, decoded)`` pairs of the literals that decode; one that
-    does not can never equal a value."""
-    adapter = _adapter(types, rules)
-    pairs = ((lit, _decoded(adapter, lit)) for lit in as_list(arg))
-    return adapter, tuple((lit, d) for lit, d in pairs if d is not _NEVER)
 
 
 class Validator:
@@ -408,10 +343,11 @@ class Validator:
         # the constructor schema (key None) and registered schemas,
         # normalized on first use; every register_* call empties it
         self._normalized: dict[str | None, dict] = {}
-        # id(rule map) → _Program for the stored schemas; register_*
-        # empties it. _live is the store the running validate() fills:
-        # this one, or a per-call one for a schema passed to validate
-        self._programs: dict[int, _Program] = {}
+        # (kind, id(node), policy) → (node, generated function) for the
+        # stored schemas; register_* empties it. _live is the store the
+        # running validate() fills: this one, or a per-call one for a
+        # schema passed to validate
+        self._programs: dict[tuple, tuple[Any, Callable]] = {}
         self._live = self._programs
         _register_builtin_rules(self)
 
@@ -448,17 +384,19 @@ class Validator:
     def register_type(self, adapter: TypeAdapter) -> None:
         self.types[adapter.name] = adapter
         self._reset()
-        if self._meta is not None:  # it shares self.types (_meta_one)
-            self._meta._reset()
 
     def register_schema(self, name: str, schema: dict) -> None:
         self.schema_registry[name] = schema
         self._reset()
 
     def _reset(self) -> None:
-        """Forget the normalized schemas and their rule programs."""
+        """Forget the normalized schemas and their functions, and the
+        meta-validator's: it reads ``schema_schema``, ``types`` and the
+        registry of this validator (:meth:`_meta_one`)."""
         self._normalized.clear()
         self._programs.clear()
+        if self._meta is not None:
+            self._meta._reset()
 
     # -- public validation entry points --------------------------------
     def validate(self, document: Any, schema: dict | str | None = None) -> bool:
@@ -475,8 +413,8 @@ class Validator:
     ) -> bool:
         """:meth:`validate` on a document the caller hands over: the
         normalization rules write into it. A stored schema keeps its
-        rule programs; a schema passed here gets programs that go when
-        the call returns."""
+        generated functions; a schema passed here gets functions that
+        go when the call returns."""
         if schema is None or isinstance(schema, str):
             schema = self._stored(schema)
         else:
@@ -491,7 +429,7 @@ class Validator:
                     ValidationErrorItem("^", "document is not a mapping")
                 )
                 return False
-            self._validate_dict(document, schema, (), self._policy)
+            self._validate_dict(document, schema)
             return not self._state.errors
         finally:
             self._live = self._programs
@@ -599,7 +537,7 @@ class Validator:
         out = self._normalize_nested(inner.get_document())
         if "regex" in out:
             try:
-                _compile_regex(out["regex"])
+                re.compile(str(out["regex"]))
             except re.error as e:
                 raise SchemaError([ValidationErrorItem(
                     "^.regex", f"regex does not compile: {e}")]) from None
@@ -609,97 +547,230 @@ class Validator:
             out[_INJECTED] = True
         return out
 
-    # -- recursive traversal (reference validateDict/validateItem) -----
-    def _validate_dict(
-        self, doc: dict, schema: dict, path: tuple[Any, ...],
-        policy: _Policy,
-    ) -> None:
-        """Reference ``validateDict`` (``validator.hh:302-344``):
-        iterate schema fields, descend, apply rename moves, then purge
-        or flag unknown keys by ``policy``."""
-        st = self._state
-        assert st is not None
-        found: list[str] = []
-        for field_name, rules in schema.items():
-            item = _Item(
-                value=doc.get(field_name, UNDEFINED), field=field_name
-            )
-            self._validate_item(
-                item, rules, path + (field_name,), doc, policy)
-            if item.field != field_name and field_name in doc:
-                del doc[field_name]  # rename move (validator.hh:316-320)
-            if item.value is not UNDEFINED:
-                doc[item.field] = item.value
-            found.append(item.field)
-        if policy.purge_unknown:
-            for k in list(doc.keys()):
-                if k not in found:
-                    del doc[k]  # validator.hh:326-333
-        if not policy.allow_unknown:
-            for k in doc.keys():
-                if k not in found:
-                    st.errors.append(
-                        ValidationErrorItem(
-                            format_path(path),
-                            f"unknown field not permitted: {k}",
-                        )
-                    )  # validator.hh:334-339
 
-    def _validate_item(
-        self,
-        item: _Item,
-        rules: dict,
-        path: tuple[Any, ...],
-        parent: Any,
-        policy: _Policy,
-    ) -> None:
-        """Reference ``validateItem`` (``validator.hh:261-290``): run
-        the rule program of ``rules`` (six priority phases, schema-key
-        order within a phase). The field's own policy keys scope over
-        its subtree, and require_all selects the program variant with
-        ``required: true`` injected (``validator.hh:273-275``)."""
-        prog = self._live.get(id(rules)) or self._program(rules)
-        if prog.scoped:
-            policy = policy.enter(rules)
+    # -- generated validation (reference validateDict/validateItem) -----
+    def _validate_dict(self, doc: dict, schema: dict) -> None:
+        """Reference ``validateDict`` (``validator.hh:302-344``) on the
+        document root, by the generated function of ``schema``."""
+        self._fn("dict", schema, self._policy)(doc, ())
+
+    def _fn(self, kind: str, node: Any, policy: _Policy) -> Callable:
+        """The generated function of ``node`` — a field map (``kind``
+        ``"dict"``) or a rule map (``"item"``) — under ``policy``, built
+        on first use. The store holds ``node``, so its ``id`` keys it
+        uniquely."""
+        key = (kind, id(node), policy)
+        entry = self._live.get(key)
+        if entry is None:
+            entry = self._live[key] = (node, _generate(self, kind, node,
+                                                       policy))
+        return entry[1]
+
+    def _error(self, path: tuple[Any, ...], message: str) -> None:
+        self._state.errors.append(
+            ValidationErrorItem(format_path(path), message))
+
+
+# ---------------------------------------------------------------------------
+# The generator. A field map's function is ``f(doc, p)``: ``doc`` the
+# mapping, ``p`` its path. A rule map's item function is
+# ``f(v, p, k, doc) -> v``: the value, the path of its container and its
+# key there, and the enclosing mapping (``dependencies``/``excludes``
+# resolve against it); it returns the value as normalized. Inside a
+# field map's function each field runs the same lines, with ``k`` the
+# field's key and ``doc`` the mapping.
+# ---------------------------------------------------------------------------
+
+
+def _indent(lines: list[str]) -> list[str]:
+    return ["    " + line for line in lines]
+
+
+@lru_cache(maxsize=1024)
+def _compiled(source: str) -> Any:
+    """``compile`` memoized by source text: the source holds no schema
+    value, so rule maps of one shape share one code object."""
+    return compile(source, "<rule map>", "exec")
+
+
+class _Gen:
+    """The source lines and the namespace of one generated function.
+    Schema values reach the source only as names bound in :attr:`ns`."""
+
+    def __init__(self, validator: Validator) -> None:
+        self.v = validator
+        self.ns: dict[str, Any] = {
+            "U": UNDEFINED, "NEVER": _NEVER, "LO": INT64[0], "HI": INT64[1],
+            "V": validator, "E": validator._error, "dec": _decoded,
+            "lt": _lt, "eq": _eq, "text": scalar_text, "follow": _follow,
+            "deepcopy": copy.deepcopy, "Item": _Item, "Ctx": RuleCtx,
+        }
+        #: the expression of the item's field name: a bound name while
+        #: it is known here, a local once a custom rule may have set it
+        self.field = "None"
+        #: the policy in force for the rule map being emitted
+        self.policy = _Policy()
+
+    def bind(self, value: Any) -> str:
+        name = f"c{len(self.ns)}"
+        self.ns[name] = value
+        return name
+
+    def err(self, message: str) -> str:
+        """A statement reporting ``message`` at the item's path."""
+        return f"E(p + (k,), {self.bind(message)})"
+
+    def child(self, kind: str, node: Any) -> str:
+        """A name calling the function of ``node`` under the current
+        policy: generated at its first call, which rebinds the name, so
+        a nested rule map is generated when a document first reaches
+        it."""
+        ns, v, policy = self.ns, self.v, self.policy
+        name = f"c{len(ns)}"
+
+        def first(*args: Any) -> Any:
+            fn = ns[name] = v._fn(kind, node, policy)
+            return fn(*args)
+
+        ns[name] = first
+        return name
+
+    @staticmethod
+    def builtin(adapter: TypeAdapter) -> bool:
+        return adapter is BUILTIN_TYPES.get(adapter.name)
+
+    def decode(self, adapter: TypeAdapter) -> str:
+        """An expression: ``v`` decoded with ``adapter``, or NEVER. A
+        value of the Python type a builtin decodes to is itself."""
+        call = f"dec({self.bind(adapter)}, v)"
+        own = _OWN.get(adapter.name) if self.builtin(adapter) else None
+        if own is None:
+            return call
+        test = ("type(v) is int and LO <= v <= HI" if own is int
+                else f"type(v) is {own.__name__}")
+        return f"(v if {test} else {call})"
+
+    def look(self, path: str) -> str:
+        """An expression: the node a ``dependencies``/``excludes`` path
+        names, or UNDEFINED (:meth:`RuleCtx.lookup_path`)."""
+        anchored, steps = _path_steps(path)
+        node = "V._state.root" if anchored else "doc"
+        return f"follow({node}, {self.bind(steps)})"
+
+    def body(self, rules: Any, policy: _Policy) -> list[str]:
+        """Reference ``validateItem`` (``validator.hh:261-290``): the
+        lines running ``rules`` on ``v``, six priority phases, schema-key
+        order within a phase. The rule map's own policy keys scope over
+        its subtree, and require_all injects ``required: true``
+        (``validator.hh:273-275``). A key that names no rule
+        (``__nullable_injected__``, say) emits nothing; a rule without
+        an emitter is a ``fn(RuleCtx)`` call."""
+        self.policy = policy = policy.enter(rules)
         if policy.require_all:
-            rules, steps = prog.all_rules, prog.all_steps
+            rules = {**rules, "required": True}
+        lines: list[str] = []
+        ctx = None
+        for phase in _PHASES:
+            for name, arg in rules.items():
+                fn = self.v._rules.get((phase, name))
+                if fn in _EMITTERS:
+                    lines += fn(self, arg, rules)
+                elif fn is not None:
+                    if ctx is None:
+                        ctx = (f"{self.bind(rules)}, p + (k,), doc, "
+                               f"{self.bind(policy)}")
+                    var = f"f{len(self.ns)}"
+                    lines += [
+                        f"it = Item(v, {self.field})",
+                        f"{self.bind(fn)}(Ctx(V, V._state, it, "
+                        f"{self.bind(arg)}, {ctx}))",
+                        f"v, {var} = it.value, it.field"]
+                    self.field = var
+        return lines
+
+
+def _generate(validator: Validator, kind: str, node: Any,
+              policy: _Policy) -> Callable:
+    """The function of a rule map (``kind`` ``"item"``) or of a field
+    map (``"dict"``: its fields unrolled, each read, run, renamed and
+    written back, then the unknown keys purged or reported by
+    ``policy``, ``validator.hh:302-344``)."""
+    g = _Gen(validator)
+    if kind == "item":
+        lines = ["def f(v, p, k, doc):", *_indent(g.body(node, policy)),
+                 "    return v"]
+    else:
+        lines, found = ["def f(doc, p):", "    pass"], []
+        for key, rules in node.items():
+            g.field = g.bind(key)
+            lines += [f"    k = {g.field}", "    v = doc.get(k, U)",
+                      *_indent(g.body(rules, policy))]
+            final = g.field
+            if final not in g.ns:  # a custom rule may have moved it
+                lines.append(f"    if {final} != k and k in doc: del doc[k]")
+            elif g.ns[final] != key:  # renamed (validator.hh:316-320)
+                lines.append("    if k in doc: del doc[k]")
+            lines.append(f"    if v is not U: doc[{final}] = v")
+            found.append(final)
+        if all(name in g.ns for name in found):
+            known = g.bind(frozenset(g.ns[name] for name in found))
         else:
-            steps = prog.steps
-        ctx = RuleCtx(self, self._state, item, None, rules, path, parent,
-                      policy)
-        for fn, arg in steps:
-            ctx.arg = arg
-            fn(ctx)
-
-    def _program(self, rules: dict) -> _Program:
-        """The rule program of ``rules``, built on first use."""
-        prog = self._live[id(rules)] = _Program(self._rules, self.types,
-                                                rules)
-        return prog
+            known = "found"
+            lines.append(f"    found = [{', '.join(found)}]")
+        if policy.purge_unknown:  # validator.hh:326-333
+            lines += ["    for x in list(doc):",
+                      f"        if x not in {known}: del doc[x]"]
+        elif not policy.allow_unknown:  # validator.hh:334-339
+            lines += ["    for x in doc:",
+                      f"        if x not in {known}:",
+                      "            E(p, f'unknown field not permitted: {x}')"]
+    exec(_compiled("\n".join(lines)), g.ns)
+    return g.ns["f"]
 
 
 # ---------------------------------------------------------------------------
-# Builtin rules — the full reference vocabulary (``rules.hh:640-667``),
-# re-implemented in Python idiom. Order of registration mirrors the
-# reference list for documentation purposes only (execution order is
-# phase-then-schema-key order, ``validator.hh:266-287``).
+# Builtin rules — the full reference vocabulary (``rules.hh:640-667``).
+# An emitter ``(gen, argument, rule map) -> lines`` prepares its argument
+# once and returns the lines that check ``v``; the cold rules stay
+# ``fn(RuleCtx)`` calls. Order of registration mirrors the reference list
+# for documentation purposes only (execution order is phase-then-schema-
+# key order, ``validator.hh:266-287``).
 # ---------------------------------------------------------------------------
 
 
-def _rule_allowed(ctx: RuleCtx) -> None:
+#: builtin target → the Python type it decodes to itself (an int only
+#: within INT64)
+_OWN = {"integer": int, "float": float, "number": float, "string": str,
+        "boolean": bool}
+
+
+def _literals(g: _Gen, arg: Any, rules: dict
+              ) -> tuple[TypeAdapter, list[tuple[Any, Any]]]:
+    """``allowed``/``forbidden``: the field's adapter and the
+    ``(literal, decoded)`` pairs of the literals that decode; one that
+    does not can never equal a value."""
+    adapter = _adapter(g.v.types, rules)
+    pairs = ((lit, _decoded(adapter, lit)) for lit in as_list(arg))
+    return adapter, [(lit, d) for lit, d in pairs if d is not _NEVER]
+
+
+def _emit_allowed(g: _Gen, arg: Any, rules: dict) -> list[str]:
     """``rules.hh:79-100``. Divergence (unpinned by the reference
     corpus): undefined/null values are skipped rather than failing the
-    equality probe — matches Python cerberus."""
-    value = ctx.item.value
-    if value is UNDEFINED or value is None:
-        return
-    adapter, literals = ctx.arg  # decoded once (_literals)
-    doc = _decoded(adapter, value) if literals else _NEVER
-    if doc is not _NEVER:
-        for _, d in literals:
-            if _eq(d, doc):
-                return
-    ctx.raise_error("value disallowed by allowed-rule")
+    equality probe — matches Python cerberus. Under a builtin type the
+    decoded literals are a set (NaN, equal to nothing, left out)."""
+    adapter, pairs = _literals(g, arg, rules)
+    fail = g.err("value disallowed by allowed-rule")
+    if not pairs:
+        return [f"if v is not U and v is not None: {fail}"]
+    if g.builtin(adapter):
+        known = g.bind(frozenset(d for _, d in pairs if d == d))
+        return [f"if v is not U and v is not None and "
+                f"{g.decode(adapter)} not in {known}: {fail}"]
+    return ["if v is not U and v is not None:",
+            f"    d = {g.decode(adapter)}",
+            f"    if d is NEVER or not any(eq(x, d) for x in "
+            f"{g.bind(tuple(d for _, d in pairs))}): {fail}"]
 
 
 def _rule_contains(ctx: RuleCtx) -> None:
@@ -717,36 +788,36 @@ def _rule_contains(ctx: RuleCtx) -> None:
         )
 
 
-def _rule_default(ctx: RuleCtx) -> None:
-    """``rules.hh:128-141`` — fires only on UNDEFINED, not null."""
-    if ctx.item.value is UNDEFINED:
-        ctx.item.value = copy.deepcopy(ctx.arg)
+def _emit_default(g: _Gen, arg: Any, rules: dict) -> list[str]:
+    """``rules.hh:128-141`` — fires only on UNDEFINED, not null; a
+    container default is copied per document."""
+    value = g.bind(arg)
+    if type(arg) not in (str, int, float, bool, type(None)):
+        value = f"deepcopy({value})"
+    return [f"if v is U: v = {value}"]
 
 
-def _rule_dependencies(ctx: RuleCtx) -> None:
+def _emit_dependencies(g: _Gen, arg: Any, rules: dict) -> list[str]:
     """``rules.hh:143-187``: skip when the field itself is undefined;
     map form pins the dependency's value (string equality); paths may
     be ``^``-anchored at the document root."""
-    if ctx.item.value is UNDEFINED:
-        return
-    t = ctx.get_type("string")
-    if isinstance(ctx.arg, dict):
-        for dep, pinned in ctx.arg.items():
-            looked = ctx.lookup_path(str(dep))
-            if looked is UNDEFINED:
-                ctx.raise_error(
-                    f"dependencies-rule violated: {dep} required"
-                )
-            if not any(t.equality(looked, v) for v in as_list(pinned)):
-                opts = ", ".join(str(v) for v in as_list(pinned))
-                ctx.raise_error(
-                    f"dependencies-rule violated: {dep} requires value"
-                    f" out of [{opts}]"
-                )
-        return
-    for dep in as_list(ctx.arg):
-        if ctx.lookup_path(str(dep)) is UNDEFINED:
-            ctx.raise_error(f"dependencies-rule violated: {dep} required")
+    lines = []
+    if isinstance(arg, dict):
+        equal = g.bind(_adapter(g.v.types, rules, "string").equality)
+        for dep, pinned in arg.items():
+            opts = as_list(pinned)
+            lines += [
+                f"x = {g.look(str(dep))}",
+                f"if x is U: "
+                f"{g.err(f'dependencies-rule violated: {dep} required')}",
+                f"if not any({equal}(x, c) for c in {g.bind(opts)}): "
+                + g.err(f"dependencies-rule violated: {dep} requires value"
+                        f" out of [{', '.join(str(o) for o in opts)}]")]
+    else:
+        lines += [f"if {g.look(str(dep))} is U: "
+                  f"{g.err(f'dependencies-rule violated: {dep} required')}"
+                  for dep in as_list(arg)]
+    return ["if v is not U:", *_indent(lines)] if lines else []
 
 
 def _rule_empty(ctx: RuleCtx) -> None:
@@ -756,82 +827,91 @@ def _rule_empty(ctx: RuleCtx) -> None:
         ctx.raise_error("empty-rule violated for sequence")
 
 
-def _rule_excludes(ctx: RuleCtx) -> None:
+def _emit_excludes(g: _Gen, arg: Any, rules: dict) -> list[str]:
     """``rules.hh:205-227`` — skip when the field is undefined."""
-    if ctx.item.value is UNDEFINED:
-        return
-    for exc in as_list(ctx.arg):
-        if ctx.lookup_path(str(exc)) is not UNDEFINED:
-            ctx.raise_error(
-                f"excludes-rule violated: {exc} is not allowed"
-            )
+    lines = [f"if {g.look(str(exc))} is not U: "
+             f"{g.err(f'excludes-rule violated: {exc} is not allowed')}"
+             for exc in as_list(arg)]
+    return ["if v is not U:", *_indent(lines)] if lines else []
 
 
-def _rule_forbidden(ctx: RuleCtx) -> None:
-    """``rules.hh:229-244``."""
-    value = ctx.item.value
-    if value is UNDEFINED or value is None:
-        return
-    adapter, literals = ctx.arg  # decoded once (_literals)
-    doc = _decoded(adapter, value) if literals else _NEVER
-    if doc is _NEVER:
-        return
-    for cand, d in literals:
-        if _eq(d, doc):
-            ctx.raise_error(f"forbidden-rule violated: {cand}")
+def _emit_forbidden(g: _Gen, arg: Any, rules: dict) -> list[str]:
+    """``rules.hh:229-244`` — one violation per equal literal."""
+    adapter, pairs = _literals(g, arg, rules)
+    if not pairs:
+        return []
+    hits = g.bind(tuple((f"forbidden-rule violated: {lit}", d)
+                        for lit, d in pairs))
+    if g.builtin(adapter):
+        known = g.bind(frozenset(d for _, d in pairs if d == d))
+        test, equal = f"d in {known}", "x == d"
+    else:
+        test, equal = "d is not NEVER", "eq(x, d)"
+    return ["if v is not U and v is not None:",
+            f"    d = {g.decode(adapter)}",
+            f"    if {test}:",
+            f"        for m, x in {hits}:",
+            f"            if {equal}: E(p + (k,), m)"]
 
 
-def _rule_items(ctx: RuleCtx) -> None:
-    """``rules.hh:246-268`` — positional per-index schemas."""
-    seq = ctx.item.value if isinstance(ctx.item.value, list) else []
-    for i, sub in enumerate(ctx.arg or []):
-        elem = _Item(value=seq[i] if i < len(seq) else UNDEFINED)
-        ctx.validator._validate_item(
-            elem, sub, ctx.path + (i,), ctx.parent, ctx.policy
-        )
-        if i < len(seq) and elem.value is not UNDEFINED:
-            seq[i] = elem.value
+def _each_element(fn: str) -> list[str]:
+    """Lines running the item function ``fn`` on every element of the
+    list ``v``, writing each normalized element back."""
+    return ["q = p + (k,)", "for i in range(len(v)):",
+            f"    x = {fn}(v[i], q, i, doc)", "    if x is not U: v[i] = x"]
 
 
-def _rule_keysrules(ctx: RuleCtx) -> None:
+def _emit_items(g: _Gen, arg: Any, rules: dict) -> list[str]:
+    """``rules.hh:246-268`` — positional per-index rule maps; an index
+    past the list's end validates as undefined."""
+    lines = ["s = v if isinstance(v, list) else ()", "q = p + (k,)"]
+    for i, sub in enumerate(arg or []):
+        lines += [f"x = {g.child('item', sub)}"
+                  f"(s[{i}] if {i} < len(s) else U, q, {i}, doc)",
+                  f"if {i} < len(s) and x is not U: s[{i}] = x"]
+    return lines
+
+
+def _emit_keysrules(g: _Gen, arg: Any, rules: dict) -> list[str]:
     """``rules.hh:270-288`` — apply a rule-map to every KEY."""
-    value = ctx.item.value
-    if not isinstance(value, dict):
-        return
-    for key in value:
-        ctx.validator._validate_item(
-            _Item(value=key), ctx.arg, ctx.path + (key,), value, ctx.policy,
-        )
+    return ["if isinstance(v, dict):", "    q = p + (k,)",
+            f"    for x in v: {g.child('item', arg)}(x, q, x, v)"]
 
 
-def _rule_meta(ctx: RuleCtx) -> None:
-    """``rules.hh:290-301`` — metadata carrier, no validation."""
+def _emit_nothing(g: _Gen, arg: Any, rules: dict) -> list[str]:
+    """``meta`` (``rules.hh:290-301``), a metadata carrier, and the
+    policy keys, which act through :meth:`_Policy.enter`."""
+    return []
 
 
-def _rule_max(ctx: RuleCtx) -> None:
+def _emit_max(g: _Gen, arg: Any, rules: dict) -> list[str]:
     """``rules.hh:303-320`` — EXCLUSIVE bound: doc must be strictly
     less than the bound; skip undefined; a non-decodable doc (incl.
     null) passes (both comparisons fail) — asymmetric vs min."""
-    value = ctx.item.value
-    if value is UNDEFINED:
-        return
-    adapter, bound = ctx.arg  # decoded once (_bound)
-    doc = _NEVER if bound is _NEVER else _decoded(adapter, value)
-    if doc is not _NEVER and (_lt(bound, doc) or _eq(doc, bound)):
-        ctx.raise_error("max-rule violated")
+    adapter = _adapter(g.v.types, rules)
+    bound = _decoded(adapter, arg)
+    if bound is _NEVER:
+        return []
+    b = g.bind(bound)
+    test = f"{b} <= d" if g.builtin(adapter) else f"lt({b}, d) or eq(d, {b})"
+    return ["if v is not U:", f"    d = {g.decode(adapter)}",
+            f"    if d is not NEVER and ({test}): "
+            f"{g.err('max-rule violated')}"]
 
 
-def _rule_min(ctx: RuleCtx) -> None:
+def _emit_min(g: _Gen, arg: Any, rules: dict) -> list[str]:
     """``rules.hh:322-339`` — EXCLUSIVE bound: doc must be strictly
     greater; skip undefined; a non-decodable doc (incl. null) FAILS
     (``less`` returns false)."""
-    value = ctx.item.value
-    if value is UNDEFINED:
-        return
-    adapter, bound = ctx.arg  # decoded once (_bound)
-    doc = _NEVER if bound is _NEVER else _decoded(adapter, value)
-    if doc is _NEVER or not _lt(bound, doc):
-        ctx.raise_error("min-rule violated")
+    adapter = _adapter(g.v.types, rules)
+    bound = _decoded(adapter, arg)
+    fail = g.err("min-rule violated")
+    if bound is _NEVER:
+        return [f"if v is not U: {fail}"]
+    b = g.bind(bound)
+    less = f"{b} < d" if g.builtin(adapter) else f"lt({b}, d)"
+    return ["if v is not U:", f"    d = {g.decode(adapter)}",
+            f"    if d is NEVER or not {less}: {fail}"]
 
 
 def _count_items(value: Any) -> int:
@@ -852,113 +932,106 @@ def _rule_minlength(ctx: RuleCtx) -> None:
         ctx.raise_error("minlength-rule violated")
 
 
-def _rule_nullable(ctx: RuleCtx) -> None:
+def _emit_nullable(g: _Gen, arg: Any, rules: dict) -> list[str]:
     """``rules.hh:389-404`` — fires on explicit null only; the
     ``default: false`` in its meta-schema is what auto-injects
-    ``nullable: false`` into every field (SURVEY.md §1.2.2). Only a
-    falsy ``nullable`` gets a step (:func:`_nullable`)."""
-    if ctx.item.value is None:
-        ctx.raise_error("nullable-rule violated")
+    ``nullable: false`` into every field (SURVEY.md §1.2.2)."""
+    if _truthy(arg):
+        return []
+    return [f"if v is None: {g.err('nullable-rule violated')}"]
 
 
-def _rule_regex(ctx: RuleCtx) -> None:
+def _emit_regex(g: _Gen, arg: Any, rules: dict) -> list[str]:
     """``rules.hh:438-452`` — FULL match (``std::regex_match``)."""
-    value = ctx.item.value
-    if value is UNDEFINED or value is None:
-        return
-    text = scalar_text(value)
-    # the rule program compiled the argument (_steps)
-    if text is None or not ctx.arg.fullmatch(text):
-        ctx.raise_error("regex-rule violated")
+    match = g.bind(re.compile(str(arg)).fullmatch)
+    return ["if v is not U and v is not None:",
+            "    x = v if type(v) is str else text(v)",
+            f"    if x is None or not {match}(x): "
+            f"{g.err('regex-rule violated')}"]
 
 
-def _rule_rename(ctx: RuleCtx) -> None:
+def _emit_rename(g: _Gen, arg: Any, rules: dict) -> list[str]:
     """``rules.hh:454-469`` — POST_NORMALIZATION field move, applied
-    by the dict traversal (``validator.hh:316-320``)."""
-    ctx.item.field = str(ctx.arg)
+    by the field map's function (``validator.hh:316-320``)."""
+    g.field = g.bind(str(arg))
+    return []
 
 
-def _rule_required(ctx: RuleCtx) -> None:
+def _emit_required(g: _Gen, arg: Any, rules: dict) -> list[str]:
     """``rules.hh:503-517`` — fires only on UNDEFINED (null passes
     required but fails nullable)."""
-    if _truthy(ctx.arg) and ctx.item.value is UNDEFINED:
-        ctx.raise_error("required-rule violated: field missing")
+    if not _truthy(arg):
+        return []
+    return [f"if v is U: {g.err('required-rule violated: field missing')}"]
 
 
-def _rule_schema(ctx: RuleCtx) -> None:
-    """``rules.hh:519-573``: dict doc → recurse field-map; list doc →
-    apply one rule-map to every element; scalar arg → registered
-    schema lookup (``validator.hh:408-415``), meta-validated like the
-    top-level schema: once, and only under ``validate_schema``."""
-    arg, value = ctx.arg, ctx.item.value
-    if isinstance(arg, str):
-        if arg not in ctx.validator.schema_registry:
-            ctx.raise_error(f"unknown registered schema: {arg}")
-            return
-        arg = ctx.validator._stored(arg)
-    if isinstance(value, dict):
-        ctx.validator._validate_dict(value, arg, ctx.path, ctx.policy)
-    elif isinstance(value, list):
-        for i in range(len(value)):
-            elem = _Item(value=value[i])
-            ctx.validator._validate_item(
-                elem, arg, ctx.path + (i,), ctx.parent, ctx.policy
-            )
-            if elem.value is not UNDEFINED:
-                value[i] = elem.value
+def _emit_schema(g: _Gen, arg: Any, rules: dict) -> list[str]:
+    """``rules.hh:519-573``: dict doc → the field map's function; list
+    doc → one rule map for every element; a string argument names a
+    registered schema (``validator.hh:408-415``), looked up and
+    meta-validated when a document first reaches it: once, and only
+    under ``validate_schema``."""
+    if not isinstance(arg, str):
+        return [f"if isinstance(v, dict): {g.child('dict', arg)}(v, p + (k,))",
+                "elif isinstance(v, list):",
+                *_indent(_each_element(g.child("item", arg)))]
+    name, policy = g.bind(arg), g.bind(g.policy)
+    return [f"if {name} not in V.schema_registry: "
+            f"{g.err(f'unknown registered schema: {arg}')}",
+            "else:",
+            f"    s = V._stored({name})",
+            f"    if isinstance(v, dict): V._fn('dict', s, {policy})"
+            "(v, p + (k,))",
+            "    elif isinstance(v, list):",
+            f"        w = V._fn('item', s, {policy})",
+            *_indent(_indent(_each_element("w")))]
 
 
-def _rule_type(ctx: RuleCtx) -> None:
+def _emit_type(g: _Gen, arg: Any, rules: dict) -> list[str]:
     """``rules.hh:575-612``: skipped for null/undefined; containers
     check structurally against ``list``/``dict``; scalars must be
     YAML-decodable to at least one named type. TYPECHECKING phase —
-    runs after ordinary validation."""
-    value = ctx.item.value
-    kind = type(value)
-    names, adapters, converts = ctx.arg  # prepared once (_type_check)
-    if kind in converts and (kind is not int
-                             or INT64[0] <= value <= INT64[1]):
-        return  # a builtin conversion: no parse, no decode call
-    if value is UNDEFINED or value is None:
-        return
-    if isinstance(value, list):
-        ok = "list" in names
-    elif isinstance(value, dict):
-        ok = "dict" in names
-    else:
-        ok = any(a.is_convertible(value) for a in adapters)
-    if not ok:
-        ctx.raise_error(
-            "type-rule violated: expected " + "/".join(names)
-        )
+    runs after ordinary validation. A value of a Python type that a
+    builtin adapter converts (:data:`CONVERTS`, an int only within
+    INT64) passes with one set test, counting the adapters up to the
+    first custom one: a custom decode listed first still runs first."""
+    names = tuple(str(t) for t in as_list(arg))
+    adapters = [g.v.types[n] for n in names if n in g.v.types]
+    converts: frozenset[type] = frozenset()
+    for adapter in adapters:
+        if not g.builtin(adapter):
+            break
+        converts |= CONVERTS[adapter.name]
+    fail = g.err("type-rule violated: expected " + "/".join(names))
+    skip = "v is U or v is None"
+    if converts:
+        skip = (f"type(v) in {g.bind(converts)}"
+                + (" and (type(v) is not int or LO <= v <= HI)"
+                   if int in converts else "") + " or " + skip)
+    scalar = " or ".join(f"{g.bind(a.is_convertible)}(v)"
+                         for a in adapters)
+    return [f"if {skip}: pass",
+            f"elif isinstance(v, list): {'pass' if 'list' in names else fail}",
+            f"elif isinstance(v, dict): {'pass' if 'dict' in names else fail}",
+            f"elif not ({scalar or 'False'}): {fail}"]
 
 
-def _rule_valuesrules(ctx: RuleCtx) -> None:
+def _emit_valuesrules(g: _Gen, arg: Any, rules: dict) -> list[str]:
     """``rules.hh:614-632`` — apply a rule-map to every VALUE."""
-    value = ctx.item.value
-    if not isinstance(value, dict):
-        return
-    for key in list(value.keys()):
-        elem = _Item(value=value[key])
-        ctx.validator._validate_item(
-            elem, ctx.arg, ctx.path + (key,), value, ctx.policy
-        )
-        if elem.value is not UNDEFINED:
-            value[key] = elem.value
+    return ["if isinstance(v, dict):", "    q = p + (k,)",
+            "    for x in list(v):",
+            f"        y = {g.child('item', arg)}(v[x], q, x, v)",
+            "        if y is not U: v[x] = y"]
 
 
-#: rule fn → how its program step prepares the schema argument from
-#: ``(argument, rule map, types)``, once per rule map instead of once
-#: per value
-_PREPARED: dict[RuleFn, Callable[[Any, dict, Types], Any]] = {
-    _rule_allowed: _literals,
-    _rule_forbidden: _literals,
-    _rule_max: _bound,
-    _rule_min: _bound,
-    _rule_nullable: _nullable,
-    _rule_regex: _compile_regex,
-    _rule_type: _type_check,
-}
+#: the rules whose checks are generated inline; every other rule runs
+#: as a ``fn(RuleCtx)`` call
+_EMITTERS = frozenset({
+    _emit_allowed, _emit_default, _emit_dependencies, _emit_excludes,
+    _emit_forbidden, _emit_items, _emit_keysrules, _emit_max, _emit_min,
+    _emit_nothing, _emit_nullable, _emit_regex, _emit_rename,
+    _emit_required, _emit_schema, _emit_type, _emit_valuesrules,
+})
 
 
 def _register_builtin_rules(v: Validator) -> None:
@@ -976,37 +1049,38 @@ def _register_builtin_rules(v: Validator) -> None:
         "min": 0,
         "dependencies": {"type": ["list", "dict"]},
     }
-    # policy keys act through _Policy.enter; their rules are no-ops
-    # that carry the meta-schema
-    v.register_rule("allow_unknown", {"type": "boolean"}, _rule_meta)
-    v.register_rule("allowed", {"type": "list"}, _rule_allowed)
+    # policy keys act through _Policy.enter; they emit no code and
+    # carry the meta-schema
+    v.register_rule("allow_unknown", {"type": "boolean"}, _emit_nothing)
+    v.register_rule("allowed", {"type": "list"}, _emit_allowed)
     v.register_rule(
         "contains", {"type": ["string", "list"]}, _rule_contains
     )
-    v.register_rule("default", {}, _rule_default, P.NORMALIZATION)
-    v.register_rule("dependencies", {}, _rule_dependencies)
+    v.register_rule("default", {}, _emit_default, P.NORMALIZATION)
+    v.register_rule("dependencies", {}, _emit_dependencies)
     v.register_rule("empty", {"type": "boolean"}, _rule_empty)
     v.register_rule(
-        "excludes", {"type": ["string", "list"]}, _rule_excludes
+        "excludes", {"type": ["string", "list"]}, _emit_excludes
     )
-    v.register_rule("forbidden", {"type": "list"}, _rule_forbidden)
-    v.register_rule("items", {"type": "list"}, _rule_items)
-    v.register_rule("keysrules", {"type": "dict"}, _rule_keysrules)
+    v.register_rule("forbidden", {"type": "list"}, _emit_forbidden)
+    v.register_rule("items", {"type": "list"}, _emit_items)
+    v.register_rule("keysrules", {"type": "dict"}, _emit_keysrules)
     v.register_rule(
-        "meta", {"type": "dict", "allow_unknown": True}, _rule_meta
+        "meta", {"type": "dict", "allow_unknown": True}, _emit_nothing
     )
-    v.register_rule("max", {}, _rule_max)
-    v.register_rule("min", {}, _rule_min)
+    v.register_rule("max", {}, _emit_max)
+    v.register_rule("min", {}, _emit_min)
     v.register_rule("maxlength", dict(length_meta), _rule_maxlength)
     v.register_rule("minlength", dict(length_meta), _rule_minlength)
     v.register_rule(
-        "nullable", {"type": "boolean", "default": False}, _rule_nullable
+        "nullable", {"type": "boolean", "default": False}, _emit_nullable
     )
-    v.register_rule("purge_unknown", {"type": "boolean"}, _rule_meta)
-    v.register_rule("regex", {"type": "string"}, _rule_regex)
-    v.register_rule("rename", {"type": "string"}, _rule_rename, P.POST_NORMALIZATION)
-    v.register_rule("require_all", {"type": "boolean"}, _rule_meta)
-    v.register_rule("required", {"type": "boolean"}, _rule_required)
-    v.register_rule("schema", {}, _rule_schema)
-    v.register_rule("type", {}, _rule_type, P.TYPECHECKING)
-    v.register_rule("valuesrules", {"type": "dict"}, _rule_valuesrules)
+    v.register_rule("purge_unknown", {"type": "boolean"}, _emit_nothing)
+    v.register_rule("regex", {"type": "string"}, _emit_regex)
+    v.register_rule("rename", {"type": "string"}, _emit_rename,
+                    P.POST_NORMALIZATION)
+    v.register_rule("require_all", {"type": "boolean"}, _emit_nothing)
+    v.register_rule("required", {"type": "boolean"}, _emit_required)
+    v.register_rule("schema", {}, _emit_schema)
+    v.register_rule("type", {}, _emit_type, P.TYPECHECKING)
+    v.register_rule("valuesrules", {"type": "dict"}, _emit_valuesrules)

@@ -269,6 +269,9 @@ def _tdigest_sides(src: DataFrame, sides: int, comp: int) -> dict:
         if pkg_parent not in sys.path:
             sys.path.insert(0, pkg_parent)
         from cerberus_cpp_spark.functions.tdigest import TDigest as TD
+        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+
+        drop_zip_finders()
 
         return TD
 

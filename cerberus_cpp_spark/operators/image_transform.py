@@ -149,6 +149,9 @@ def resize_images(
             encode_pixels,
             webp_is_lossless,
         )
+        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+
+        drop_zip_finders()
 
         for pdf in batches:
             n = len(pdf)
@@ -304,6 +307,9 @@ def augment_images(
             encode_pixels,
             webp_is_lossless,
         )
+        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+
+        drop_zip_finders()
 
         for pdf in batches:
             n = len(pdf)
@@ -433,6 +439,9 @@ def image_quality_profile(
             UnsupportedCodecError,
             decode_image,
         )
+        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+
+        drop_zip_finders()
 
         for pdf in batches:
             n = len(pdf)

@@ -1,4 +1,4 @@
-"""Multimodal column operators: image resize, audio/video
+"""Multimodal column operators: audio/video
 frame-sampling plumbing.
 
 Spark-side design is identical for every modality: an opaque
@@ -38,28 +38,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.shipping import PKG_PARENT
-
-
-def resize_images(df: DataFrame, *, width: int, height: int,
-                  id_col: str = "image_id",
-                  bytes_col: str = "bytes",
-                  out_fmt: str = "png") -> DataFrame:
-    """Legacy convenience wrapper (round 1) — delegates to the full
-    engine in ``operators/image_transform.py`` (pixel-center nearest,
-    per-row failure routing, checksum policy) and keeps this module's
-    original output schema. Prefer ``image_transform.resize_images``
-    (methods, aspect-preserving boxes, status taxonomy) directly."""
-    from .image_transform import resize_images as _resize
-
-    out = _resize(df, size=(width, height), method="nearest",
-                  out_fmt=out_fmt, id_col=id_col, bytes_col=bytes_col)
-    return out.select(
-        "image_id",
-        F.col("out_bytes").alias("bytes"),
-        F.lit(int(width)).alias("w"),
-        F.lit(int(height)).alias("h"),
-        F.lit(out_fmt).alias("fmt"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -109,6 +87,9 @@ def sample_frames(
             demux_avi_mjpeg,
             sniff_avi,
         )
+        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+
+        drop_zip_finders()
 
         for pdf in batches:
             rows = {"clip_id": [], "frame_idx": [], "frame": [],
@@ -224,6 +205,9 @@ def animation_frames(
             iter_webp_anim_frames,
             webp_features,
         )
+        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+
+        drop_zip_finders()
 
         if reference == "animgen":
             from cerberus_cpp_spark.sources.animgen import (
@@ -308,6 +292,9 @@ def audio_features(
             decode_wav,
             sniff_wav,
         )
+        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+
+        drop_zip_finders()
 
         cols = ("sample_rate", "n_samples", "duration_sec", "rms",
                 "zero_crossings", "sumsq")
@@ -412,6 +399,9 @@ def normalize_orientation(df: DataFrame, *, id_col: str = "image_id",
         )
         from cerberus_cpp_spark.sources.tiffcodec import encode_tiff
         from cerberus_cpp_spark.sources.webpx import encode_webp_vp8x
+        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+
+        drop_zip_finders()
 
         def passthrough(rows, rid, blob, msg=None):
             rows["image_id"].append(rid)
@@ -541,6 +531,9 @@ def heif_burst_frames(
             decode_heif_all,
             heif_available,
         )
+        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+
+        drop_zip_finders()
 
         for pdf in batches:
             rows = {"image_id": [], "frame_idx": [], "w": [], "h": [],
@@ -627,6 +620,9 @@ def audio_header_info(
             sniff_wav,
             wav_header_info,
         )
+        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+
+        drop_zip_finders()
 
         cols = ("fmt", "ok", "message", "sample_rate", "channels",
                 "duration_ms", "n_frames", "bitrate_kbps_min",
@@ -732,6 +728,9 @@ def video_header_info(
             sniff_h264_annexb,
         )
         from cerberus_cpp_spark.sources.imagegen import image_header_info
+        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+
+        drop_zip_finders()
 
         cols = ("fmt", "ok", "message", "width", "height", "n_frames",
                 "n_idr", "profile_idc", "level_idc", "fps")
@@ -827,6 +826,9 @@ def mp4_track_frames(
         if pkg_parent not in sys.path:
             sys.path.insert(0, pkg_parent)
         from cerberus_cpp_spark.sources.isobmff import mp4_movie_info
+        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+
+        drop_zip_finders()
 
         cols = ("ok", "message", "brand", "movie_duration_ms",
                 "n_tracks", "track_id", "handler", "codec", "width",
@@ -916,6 +918,9 @@ def webm_track_frames(
         if pkg_parent not in sys.path:
             sys.path.insert(0, pkg_parent)
         from cerberus_cpp_spark.sources.ebml import webm_movie_info
+        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+
+        drop_zip_finders()
 
         cols = ("ok", "message", "doctype", "timestamp_scale",
                 "movie_duration_ms", "n_clusters", "n_tracks",
@@ -1002,6 +1007,9 @@ def ogg_stream_frames(
         if pkg_parent not in sys.path:
             sys.path.insert(0, pkg_parent)
         from cerberus_cpp_spark.sources.ogg import ogg_stream_info
+        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+
+        drop_zip_finders()
 
         cols = ("ok", "message", "codec", "channels", "rate",
                 "pre_skip", "n_pages", "duration_ms", "crc_ok",
@@ -1079,6 +1087,9 @@ def flac_stream_frames(
         if pkg_parent not in sys.path:
             sys.path.insert(0, pkg_parent)
         from cerberus_cpp_spark.sources.flac import flac_stream_info
+        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+
+        drop_zip_finders()
 
         cols = ("ok", "message", "rate", "channels",
                 "bits_per_sample", "total_samples", "duration_ms",
@@ -1165,6 +1176,9 @@ def compression_census(
         from cerberus_cpp_spark.sources.compression import (
             decompress_bounded,
         )
+        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+
+        drop_zip_finders()
 
         cols = ("ok", "message", "fmt", "n_comp", "n_raw", "ratio",
                 "raw_md5")
@@ -1242,6 +1256,9 @@ def archive_census(
             tar_members,
             zip_members,
         )
+        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+
+        drop_zip_finders()
 
         cols = ("ok", "message", "fmt", "n_members", "member_name",
                 "member_size", "typeflag", "method", "crc_ok")
@@ -1328,6 +1345,9 @@ def warc_census(
         if pkg_parent not in sys.path:
             sys.path.insert(0, pkg_parent)
         from cerberus_cpp_spark.sources.warc import warc_records
+        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+
+        drop_zip_finders()
 
         cols = ("ok", "message", "n_records", "record_type",
                 "record_id", "uri", "content_length",
@@ -1404,6 +1424,9 @@ def tfrecord_census(
         from cerberus_cpp_spark.sources.tfrecord import (
             tfrecord_records,
         )
+        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+
+        drop_zip_finders()
 
         cols = ("ok", "message", "n_records", "record_index",
                 "length", "crc_ok")
@@ -1475,6 +1498,9 @@ def warc_text_frames(
         from cerberus_cpp_spark.sources.warc import (
             warc_response_bodies,
         )
+        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+
+        drop_zip_finders()
 
         for pdf in batches:
             ids, uris, stats, htmls = [], [], [], []

@@ -162,6 +162,9 @@ def robots_rules(
             rule_regex,
             select_group,
         )
+        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+
+        drop_zip_finders()
 
         for pdf in batches:
             hosts, allows, pats, rxs, lens = [], [], [], [], []

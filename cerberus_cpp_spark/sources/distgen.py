@@ -125,6 +125,9 @@ def _attach_bytes(df: DataFrame, seed: int, *,
             lossy_webp_payload,
             pixel_seed,
         )
+        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+
+        drop_zip_finders()
 
         for pdf in batches:
             payload = []

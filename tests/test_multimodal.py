@@ -1,6 +1,5 @@
-"""Multimodal operators: real image feature/resize paths over the
-repo codecs; the stub fallbacks for non-decodable payload formats
-(these clips are image bytes, not WAV/AVI) exercise the Spark
+"""Multimodal operators: the stub fallbacks for non-decodable payload
+formats (these clips are image bytes, not WAV/AVI) exercise the Spark
 plumbing and raise honestly by default. Real WAV/AVI decode paths
 are covered in test_avwav.py."""
 
@@ -12,7 +11,6 @@ from pyspark.sql import functions as F
 
 from cerberus_cpp_spark.operators.multimodal import (
     audio_features,
-    resize_images,
     sample_frames,
 )
 from cerberus_cpp_spark.sources.distgen import image_caption_frame
@@ -23,19 +21,6 @@ def with_bytes(spark):
     return image_caption_frame(
         spark, 120, partitions=4, with_bytes=True
     ).cache()
-
-
-def test_resize_roundtrip(spark, with_bytes) -> None:
-    out = resize_images(with_bytes, width=4, height=4)
-    rows = out.collect()
-    assert all(r["w"] == 4 and r["h"] == 4 for r in rows)
-    from cerberus_cpp_spark.sources.imagegen import decode_image
-
-    decoded = [
-        decode_image(bytes(r["bytes"]))[1]
-        for r in rows if r["bytes"] is not None
-    ]
-    assert decoded and all(p.shape == (4, 4, 3) for p in decoded)
 
 
 def test_video_stub_raises_by_default(spark, with_bytes) -> None:

@@ -8,11 +8,15 @@ they use in code (a ``Name``, an ``Attribute.attr`` or an import
 alias, f-string expressions included) is a root, and so is every name
 used by a module-level statement of the library that is not a
 definition or an import, and every ``ALLOWED`` entry. A top-level
-definition is reached when its name is a root or occurs in the body of
-a reached definition. Names match by bare name, so a collision can only
-hide dead code, never flag live code. String literals and comments
-never count: no library code looks up one of its own definitions by
-string.
+definition is reached when a root or the body of a reached definition
+uses it. A use names its definition by module wherever the module is
+known: a name defined at the top of the using module, a name imported
+from a library module (followed through re-exports), or an attribute of
+an imported library module. Any other use (``obj.method``, a name no
+import explains) matches every definition of that bare name, so a
+collision can only hide dead code, never flag live code. String
+literals and comments never count: no library code looks up one of its
+own definitions by string.
 
 Library code that only its own tests reach is deleted together with
 those tests; the few definitions that tests need as fixtures or oracles
@@ -24,6 +28,8 @@ from __future__ import annotations
 import ast
 from collections import defaultdict
 from pathlib import Path
+
+import pytest
 
 ROOT = Path(__file__).resolve().parents[1]
 LIB = ROOT / "cerberus_cpp_spark"
@@ -98,21 +104,7 @@ ALLOWED = {
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef,
          ast.Assign, ast.AnnAssign)
-
-
-def _names(node: ast.AST) -> set[str]:
-    """Every name ``node`` uses in code; string literals do not count."""
-    out = set()
-    for n in ast.walk(node):
-        if isinstance(n, ast.Name):
-            out.add(n.id)
-        elif isinstance(n, ast.Attribute):
-            out.add(n.attr)
-        elif isinstance(n, ast.alias):
-            out.update(n.name.split("."))
-            if n.asname:
-                out.add(n.asname)
-    return out
+PKG = "cerberus_cpp_spark"
 
 
 def _bound(node: ast.AST) -> list[str]:
@@ -125,29 +117,123 @@ def _bound(node: ast.AST) -> list[str]:
             if isinstance(n, ast.Name)]
 
 
-def _graph() -> tuple[set[str], dict[str, set[str]]]:
-    """(roots, definitions): the names the real callers and the
-    library's non-definition module-level statements use, and
-    ``"<module>::<name>"`` of every top-level definition -> the names
-    its body uses."""
+def _module_key(lib: Path, parts: list[str]) -> str | None:
+    """The module under ``lib`` that the package path ``parts`` names."""
+    base = "/".join(parts)
+    for key in (f"{base}.py", f"{base}/__init__.py" if base else
+                "__init__.py"):
+        if (lib / key).is_file():
+            return key
+    return None
+
+
+class _Library:
+    """Every module's top-level definitions and import table: local
+    name -> ``(module, name)`` targets, ``name`` None for a module."""
+
+    def __init__(self, lib: Path) -> None:
+        self.lib = lib
+        self.trees = {path.relative_to(lib).as_posix(): ast.parse(
+            path.read_text()) for path in sorted(lib.rglob("*.py"))}
+        self.names = {module: {name for node in tree.body
+                               if isinstance(node, _DEFS)
+                               for name in _bound(node)}
+                      for module, tree in self.trees.items()}
+        self.imports = {module: self.import_table(module, tree)
+                        for module, tree in self.trees.items()}
+
+    def import_table(self, module: str | None, tree: ast.AST
+                     ) -> dict[str, set[tuple[str, str | None]]]:
+        package = module.split("/")[:-1] if module else []
+        table = defaultdict(set)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom):
+                dotted = (node.module or "").split(".") if node.module else []
+                if node.level:
+                    up = len(package) - (node.level - 1)
+                    if up < 0:
+                        continue
+                    base = package[:up] + dotted
+                elif dotted[:1] == [PKG]:
+                    base = dotted[1:]
+                else:
+                    continue
+                source = _module_key(self.lib, base)
+                for alias in node.names:
+                    sub = _module_key(self.lib, base + [alias.name])
+                    target = (sub, None) if sub else (source, alias.name)
+                    if target[0]:
+                        table[alias.asname or alias.name].add(target)
+            elif isinstance(node, ast.Import):
+                for alias in node.names:
+                    dotted = alias.name.split(".")
+                    sub = _module_key(self.lib, dotted[1:])
+                    if dotted[0] == PKG and alias.asname and sub:
+                        table[alias.asname].add((sub, None))
+        return table
+
+    def resolve(self, module: str | None, name: str,
+                table: dict | None = None, depth: int = 0) -> set[str]:
+        """``name`` as ``module`` sees it, as definition keys, through
+        re-exports; the bare name where no definition explains it. A
+        caller outside the library (``module`` None) brings its own
+        import ``table``."""
+        if module is not None and name in self.names[module]:
+            return {f"{module}::{name}"}
+        out = set()
+        for source, imported in (self.imports[module] if table is None
+                                 else table).get(name, ()):
+            if imported is not None and depth < 8:
+                out |= self.resolve(source, imported, depth=depth + 1)
+        return out or {name}
+
+    def uses(self, node: ast.AST, module: str | None,
+             table: dict) -> set[str]:
+        """Every definition ``node`` uses in code, as a key where the
+        module is known, else as a bare name; string literals do not
+        count."""
+        out = set()
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                out |= self.resolve(module, n.id, table)
+            elif isinstance(n, ast.Attribute):
+                modules = [source for source, imported in table.get(
+                    n.value.id, ()) if imported is None] if isinstance(
+                    n.value, ast.Name) else []
+                out |= set().union(*(self.resolve(m, n.attr)
+                                     for m in modules)) or {n.attr}
+            elif isinstance(n, ast.alias):
+                out |= self.resolve(module, n.asname or n.name.split(".")[0],
+                                    table)
+        return out
+
+
+def _graph(lib: Path = LIB, callers: list[Path] = CALLERS
+           ) -> tuple[set[str], dict[str, set[str]]]:
+    """(roots, definitions): what the real callers and the library's
+    non-definition module-level statements use, and
+    ``"<module>::<name>"`` of every top-level definition -> what its
+    body uses (:meth:`_Library.uses`)."""
+    library = _Library(lib)
     roots: set[str] = set()
-    for path in CALLERS:
-        roots |= _names(ast.parse(path.read_text()))
+    for path in callers:
+        tree = ast.parse(path.read_text())
+        roots |= library.uses(tree, None, library.import_table(None, tree))
     defs: dict[str, set[str]] = {}
-    for path in sorted(LIB.rglob("*.py")):
-        module = path.relative_to(LIB).as_posix()
-        for node in ast.parse(path.read_text()).body:
+    for module, tree in library.trees.items():
+        table = library.imports[module]
+        for node in tree.body:
             if isinstance(node, (ast.Import, ast.ImportFrom)):
                 if module == "__init__.py":  # the package exports
-                    roots |= _names(node)
+                    roots |= library.uses(node, module, table)
                 continue
             names = [n for n in (_bound(node) if isinstance(node, _DEFS)
                                  else [])
                      if not (n.startswith("__") and n.endswith("__"))]
             if not names:
-                roots |= _names(node)
+                roots |= library.uses(node, module, table)
             for name in names:
-                defs[f"{module}::{name}"] = _names(node)
+                defs[f"{module}::{name}"] = library.uses(node, module, table)
     return roots, defs
 
 
@@ -156,30 +242,65 @@ def _bare(key: str) -> str:
 
 
 def _reached(roots: set[str], defs: dict[str, set[str]]) -> set[str]:
-    """Names reached from ``roots`` through the definitions' bodies."""
+    """The definition keys reached from ``roots`` through the
+    definitions' bodies; a bare name reaches every definition of it."""
     by_name = defaultdict(list)
-    for key, uses in defs.items():
-        by_name[_bare(key)].append(uses)
-    seen, todo = set(), list(roots)
+    for key in defs:
+        by_name[_bare(key)].append(key)
+    seen: set[str] = set()
+    todo = list(roots)
     while todo:
-        name = todo.pop()
-        if name not in seen:
-            seen.add(name)
-            for uses in by_name[name]:
-                todo.extend(uses - seen)
+        use = todo.pop()
+        for key in ([use] if "::" in use else by_name[use]):
+            if key in defs and key not in seen:
+                seen.add(key)
+                todo.extend(defs[key])
     return seen
 
 
 def test_every_definition_has_a_non_test_caller() -> None:
     roots, defs = _graph()
-    allowed = {_bare(k) for k in ALLOWED}
-    reached = _reached(roots | allowed, defs)
-    unreached = sorted(k for k in defs if _bare(k) not in reached)
+    reached = _reached(roots | ALLOWED.keys(), defs)
+    unreached = sorted(defs.keys() - reached)
     assert not unreached, (
         f"only tests reach {unreached}: delete them with their tests, or "
         "list a fixture or oracle in ALLOWED with its reason")
     gone = sorted(ALLOWED.keys() - defs.keys())
     assert not gone, f"ALLOWED names a gone definition: {gone}"
-    stale = sorted(k for k in ALLOWED if _bare(k) in _reached(
-        roots | allowed - {_bare(k)}, defs))
+    stale = sorted(k for k in ALLOWED if k in _reached(
+        roots | ALLOWED.keys() - {k}, defs))
     assert not stale, f"ALLOWED names a definition reached without it: {stale}"
+
+
+@pytest.fixture
+def colliding(tmp_path: Path) -> tuple[Path, list[Path]]:
+    """A library whose modules share names: ``helper`` in ``a`` (used
+    in ``a``) and ``b`` (dead); ``size`` in ``b`` (imported by ``a``) and
+    ``c`` (dead); ``run`` in ``a`` (called through a module alias) and
+    ``c`` (dead)."""
+    lib = tmp_path / PKG
+    (lib / "sub").mkdir(parents=True)
+    (lib / "__init__.py").write_text("")
+    (lib / "sub" / "__init__.py").write_text("")
+    (lib / "sub" / "a.py").write_text(
+        "from .b import size\n\n\ndef helper(x):\n    return x\n\n\n"
+        "def run(x):\n    return helper(size(x))\n")
+    (lib / "sub" / "b.py").write_text(
+        "def helper(x):\n    return -x\n\n\ndef size(x):\n"
+        "    return len(x)\n")
+    (lib / "sub" / "c.py").write_text(
+        "def size(x):\n    return 0\n\n\ndef run(x):\n    return x\n")
+    caller = tmp_path / "caller.py"
+    caller.write_text(f"import {PKG}.sub.a as A\n\nA.run([1])\n")
+    return lib, [caller]
+
+
+def test_name_collision_no_longer_hides_dead_code(colliding) -> None:
+    """By bare name every colliding definition was reached through its
+    live namesake; resolved by module, the dead ones are not."""
+    roots, defs = _graph(*colliding)
+    reached = _reached(roots, defs)
+    assert defs.keys() - reached == {
+        "sub/b.py::helper", "sub/c.py::size", "sub/c.py::run"}
+    bare = {_bare(k) for k in reached}
+    assert all(_bare(k) in bare for k in defs)  # what bare names saw

@@ -1,14 +1,16 @@
-"""The rule program against the dispatch it replaced.
+"""The generated rule-map functions against the per-item scan.
 
-The interpreter builds one rule program per rule map: its ``(fn, arg)``
-steps in phase order, schema-key order within a phase, with the
-arguments of the rules in ``_PREPARED`` prepared once (type adapters
-resolved, literals decoded). ``ScanValidator`` below is the dispatch it
-replaced, kept here as the oracle: every phase scans every key of the
-rule map for every item, and each prepared rule runs in its per-value
-form (``SCAN``), which reads the raw argument and decodes through the
-``TypeAdapter`` on every value. Both must give the same ordered
-``(path, message)`` list and the same normalized document.
+The interpreter compiles each rule map to a Python function once
+(``_generate``): fields unrolled, each builtin rule with an emitter
+inlined with its argument prepared. ``ScanValidator`` below is the walk
+it replaced, kept here as the oracle: every item scans the six phases
+over every key of its rule map and calls each rule with a ``RuleCtx``,
+in the ctx form of every rule that has an emitter (``SCAN``). That form
+reads the raw argument, decodes through the ``TypeAdapter`` on every
+value and resolves paths with its own lookup, so the oracle reaches no
+generated code. Both must give the same ordered ``(path, message)``
+list, the same normalized document, and the same exception type where
+validation raises.
 """
 
 from __future__ import annotations
@@ -17,26 +19,41 @@ import copy
 import datetime
 import random
 import re
+import time
 
 import pytest
 
+from cerberus_cpp_spark.dynamic import interpreter
 from cerberus_cpp_spark.dynamic.interpreter import (
+    _EMITTERS,
     Priority,
-    _PREPARED,
     RuleCtx,
     Validator,
-    _TypeCheck,
-    _rule_allowed,
-    _rule_forbidden,
-    _rule_max,
-    _rule_min,
-    _rule_nullable,
-    _rule_regex,
-    _rule_type,
+    _emit_allowed,
+    _emit_default,
+    _emit_dependencies,
+    _emit_excludes,
+    _emit_forbidden,
+    _emit_items,
+    _emit_keysrules,
+    _emit_max,
+    _emit_min,
+    _emit_nothing,
+    _emit_nullable,
+    _emit_regex,
+    _emit_rename,
+    _emit_required,
+    _emit_schema,
+    _emit_type,
+    _emit_valuesrules,
+    _Gen,
+    _Item,
+    _Policy,
     _truthy,
     as_list,
+    format_path,
 )
-from cerberus_cpp_spark.errors import SchemaError
+from cerberus_cpp_spark.errors import SchemaError, ValidationErrorItem
 from cerberus_cpp_spark.functions.pytypes import (
     UNDEFINED,
     TypeAdapter,
@@ -49,8 +66,34 @@ from tests.conftest import reference_corpus
 
 GOLDEN = reference_corpus("testdata.yml")
 
+_PATH_TOKEN = re.compile(r"([^.\[\]]+)|\[(\d+)\]")
 
-# The per-value forms of the prepared rules: the raw schema argument,
+
+def _lookup(ctx: RuleCtx, path_str) -> object:
+    """``dependencies``/``excludes`` paths, resolved per call: ``^``
+    anchors at the document root, dotted keys descend, ``[i]`` indexes
+    (reference ``stack.hh:146-172``)."""
+    text = str(path_str)
+    if text.startswith("^"):
+        node = ctx.state.root
+        text = text[1:].lstrip(".")
+    else:
+        node = ctx.parent
+    for m in _PATH_TOKEN.finditer(text):
+        key, idx = m.group(1), m.group(2)
+        if idx is not None:
+            if isinstance(node, list) and int(idx) < len(node):
+                node = node[int(idx)]
+            else:
+                return UNDEFINED
+        elif isinstance(node, dict) and key in node:
+            node = node[key]
+        else:
+            return UNDEFINED
+    return node
+
+
+# The ctx forms of the rules with an emitter: the raw schema argument,
 # decoded through the adapter on every value.
 def _scan_allowed(ctx: RuleCtx) -> None:
     value = ctx.item.value
@@ -61,6 +104,38 @@ def _scan_allowed(ctx: RuleCtx) -> None:
         ctx.raise_error("value disallowed by allowed-rule")
 
 
+def _scan_default(ctx: RuleCtx) -> None:
+    if ctx.item.value is UNDEFINED:
+        ctx.item.value = copy.deepcopy(ctx.arg)
+
+
+def _scan_dependencies(ctx: RuleCtx) -> None:
+    if ctx.item.value is UNDEFINED:
+        return
+    t = ctx.get_type("string")
+    if isinstance(ctx.arg, dict):
+        for dep, pinned in ctx.arg.items():
+            looked = _lookup(ctx, dep)
+            if looked is UNDEFINED:
+                ctx.raise_error(f"dependencies-rule violated: {dep} required")
+            if not any(t.equality(looked, v) for v in as_list(pinned)):
+                opts = ", ".join(str(v) for v in as_list(pinned))
+                ctx.raise_error(f"dependencies-rule violated: {dep} requires"
+                                f" value out of [{opts}]")
+        return
+    for dep in as_list(ctx.arg):
+        if _lookup(ctx, dep) is UNDEFINED:
+            ctx.raise_error(f"dependencies-rule violated: {dep} required")
+
+
+def _scan_excludes(ctx: RuleCtx) -> None:
+    if ctx.item.value is UNDEFINED:
+        return
+    for exc in as_list(ctx.arg):
+        if _lookup(ctx, exc) is not UNDEFINED:
+            ctx.raise_error(f"excludes-rule violated: {exc} is not allowed")
+
+
 def _scan_forbidden(ctx: RuleCtx) -> None:
     value = ctx.item.value
     if value is UNDEFINED or value is None:
@@ -69,6 +144,28 @@ def _scan_forbidden(ctx: RuleCtx) -> None:
     for cand in as_list(ctx.arg):
         if t.equality(cand, value):
             ctx.raise_error(f"forbidden-rule violated: {cand}")
+
+
+def _scan_items(ctx: RuleCtx) -> None:
+    seq = ctx.item.value if isinstance(ctx.item.value, list) else []
+    for i, sub in enumerate(ctx.arg or []):
+        elem = _Item(value=seq[i] if i < len(seq) else UNDEFINED)
+        ctx.validator._scan_item(elem, sub, ctx.path + (i,), ctx.parent,
+                                 ctx.policy)
+        if i < len(seq) and elem.value is not UNDEFINED:
+            seq[i] = elem.value
+
+
+def _scan_keysrules(ctx: RuleCtx) -> None:
+    value = ctx.item.value
+    if isinstance(value, dict):
+        for key in value:
+            ctx.validator._scan_item(_Item(value=key), ctx.arg,
+                                     ctx.path + (key,), value, ctx.policy)
+
+
+def _scan_nothing(ctx: RuleCtx) -> None:
+    pass
 
 
 def _scan_max(ctx: RuleCtx) -> None:
@@ -102,6 +199,32 @@ def _scan_regex(ctx: RuleCtx) -> None:
         ctx.raise_error("regex-rule violated")
 
 
+def _scan_rename(ctx: RuleCtx) -> None:
+    ctx.item.field = str(ctx.arg)
+
+
+def _scan_required(ctx: RuleCtx) -> None:
+    if _truthy(ctx.arg) and ctx.item.value is UNDEFINED:
+        ctx.raise_error("required-rule violated: field missing")
+
+
+def _scan_schema(ctx: RuleCtx) -> None:
+    arg, value, v = ctx.arg, ctx.item.value, ctx.validator
+    if isinstance(arg, str):
+        if arg not in v.schema_registry:
+            ctx.raise_error(f"unknown registered schema: {arg}")
+            return
+        arg = v._stored(arg)
+    if isinstance(value, dict):
+        v._scan_dict(value, arg, ctx.path, ctx.policy)
+    elif isinstance(value, list):
+        for i in range(len(value)):
+            elem = _Item(value=value[i])
+            v._scan_item(elem, arg, ctx.path + (i,), ctx.parent, ctx.policy)
+            if elem.value is not UNDEFINED:
+                value[i] = elem.value
+
+
 def _scan_type(ctx: RuleCtx) -> None:
     value = ctx.item.value
     if value is UNDEFINED or value is None:
@@ -119,22 +242,75 @@ def _scan_type(ctx: RuleCtx) -> None:
         ctx.raise_error("type-rule violated: expected " + "/".join(names))
 
 
+def _scan_valuesrules(ctx: RuleCtx) -> None:
+    value = ctx.item.value
+    if isinstance(value, dict):
+        for key in list(value.keys()):
+            elem = _Item(value=value[key])
+            ctx.validator._scan_item(elem, ctx.arg, ctx.path + (key,), value,
+                                     ctx.policy)
+            if elem.value is not UNDEFINED:
+                value[key] = elem.value
+
+
 SCAN = {
-    _rule_allowed: _scan_allowed,
-    _rule_forbidden: _scan_forbidden,
-    _rule_max: _scan_max,
-    _rule_min: _scan_min,
-    _rule_nullable: _scan_nullable,
-    _rule_regex: _scan_regex,
-    _rule_type: _scan_type,
+    _emit_allowed: _scan_allowed,
+    _emit_default: _scan_default,
+    _emit_dependencies: _scan_dependencies,
+    _emit_excludes: _scan_excludes,
+    _emit_forbidden: _scan_forbidden,
+    _emit_items: _scan_items,
+    _emit_keysrules: _scan_keysrules,
+    _emit_max: _scan_max,
+    _emit_min: _scan_min,
+    _emit_nothing: _scan_nothing,
+    _emit_nullable: _scan_nullable,
+    _emit_regex: _scan_regex,
+    _emit_rename: _scan_rename,
+    _emit_required: _scan_required,
+    _emit_schema: _scan_schema,
+    _emit_type: _scan_type,
+    _emit_valuesrules: _scan_valuesrules,
 }
 
 
 class ScanValidator(Validator):
     """Six-phase scan per item, one ``RuleCtx`` per matched rule, the
-    per-value form of every prepared rule."""
+    ctx form of every rule with an emitter; its meta-validator scans
+    too."""
 
-    def _validate_item(self, item, rules, path, parent, policy) -> None:
+    def __init__(self, *args, _meta: bool = True, **kwargs) -> None:
+        super().__init__(*args, **kwargs)
+        if _meta:
+            self._meta = ScanValidator(self.schema_schema,
+                                       validate_schema=False, _meta=False)
+
+    def _validate_dict(self, doc, schema) -> None:
+        self._scan_dict(doc, schema, (), self._policy)
+
+    def _scan_dict(self, doc, schema, path, policy) -> None:
+        found = []
+        for field_name, rules in schema.items():
+            item = _Item(value=doc.get(field_name, UNDEFINED),
+                         field=field_name)
+            self._scan_item(item, rules, path + (field_name,), doc, policy)
+            if item.field != field_name and field_name in doc:
+                del doc[field_name]
+            if item.value is not UNDEFINED:
+                doc[item.field] = item.value
+            found.append(item.field)
+        if policy.purge_unknown:
+            for k in list(doc.keys()):
+                if k not in found:
+                    del doc[k]
+        if not policy.allow_unknown:
+            for k in doc.keys():
+                if k not in found:
+                    self._state.errors.append(ValidationErrorItem(
+                        format_path(path),
+                        f"unknown field not permitted: {k}"))
+
+    def _scan_item(self, item, rules, path, parent, policy) -> None:
         policy = policy.enter(rules)
         if policy.require_all:
             rules = {**rules, "required": True}
@@ -147,14 +323,25 @@ class ScanValidator(Validator):
                 fn(RuleCtx(self, self._state, item, arg, rules, path,
                            parent, policy))
 
+    def _fn(self, *args):
+        raise AssertionError("the oracle reached the generator")
+
 
 def test_scan_oracle_covers_every_prepared_rule() -> None:
-    assert set(SCAN) == set(_PREPARED)
+    assert set(SCAN) == _EMITTERS
 
 
 def _run(v: Validator, doc, schema=None) -> tuple:
     ok = v.validate(doc, schema)
     return ok, [(e.path, e.message) for e in v.errors], v.get_document()
+
+
+def _outcome(v: Validator, doc, schema=None) -> object:
+    """:func:`_run`, or the type of the exception validation raised."""
+    try:
+        return repr(_run(v, doc, schema))
+    except Exception as e:  # noqa: BLE001 — compared, not handled
+        return type(e)
 
 
 @pytest.mark.parametrize("name", GOLDEN.params())
@@ -220,8 +407,8 @@ def test_json_schema_documents_dispatch_alike(require_all: bool) -> None:
 
 
 def test_schema_of_schemas_dispatch_alike() -> None:
-    """Meta-validation runs rule programs too: rule maps validated
-    against the schema-of-schemas dispatch like the scan."""
+    """Meta-validation runs generated functions too: rule maps validated
+    against the schema-of-schemas answer like the scan."""
     meta = Validator().schema_schema
     pair = (Validator(meta, validate_schema=False),
             ScanValidator(meta, validate_schema=False))
@@ -259,63 +446,50 @@ def test_rule_registered_after_validate_reaches_programs(
     assert got[1][:2] == [("^.a", "late max 3"), ("^.a", "max-rule violated")]
 
 
-def test_program_steps_pin_dispatch_cost() -> None:
-    """Only keys that name a rule get a step: the bookkeeping tag and a
-    truthy ``nullable`` cost nothing per document. Steps run in phase
-    order, key order within a phase, and hold their prepared arguments;
-    the ``require_all`` variant injects ``required``."""
-    meta = {"unit": "px"}
-    rules = {"type": "integer", "nullable": False,
-             "__nullable_injected__": True, "meta": meta, "min": "7"}
-    v = Validator()
-    prog = v._program(rules)
-    P = Priority
-    integer = v.types["integer"]
-    assert prog.steps == [
-        (v._rules[(P.VALIDATION, "nullable")], False),
-        (v._rules[(P.VALIDATION, "meta")], meta),
-        (v._rules[(P.VALIDATION, "min")], (integer, 7)),
-        (v._rules[(P.TYPECHECKING, "type")],
-         _TypeCheck(("integer",), (integer,), frozenset({int}))),
-    ]
-    assert [fn for fn, _ in prog.all_steps] == [
-        v._rules[(P.VALIDATION, "nullable")],
-        v._rules[(P.VALIDATION, "meta")],
-        v._rules[(P.VALIDATION, "min")],
-        v._rules[(P.VALIDATION, "required")],
-        v._rules[(P.TYPECHECKING, "type")],
-    ]
-    assert [fn for fn, _ in v._program({"nullable": True}).steps] == []
+# -- what the generator emits (pins of an internal representation) ----------
+
+def _emitted(rules: dict, policy: _Policy = _Policy()) -> list[str]:
+    return _Gen(Validator()).body(rules, policy)
 
 
-def test_regex_step_holds_compiled_pattern() -> None:
-    v = Validator()
-    (fn, arg), = v._program({"regex": "[a-z]+"}).steps
-    assert fn is _rule_regex and arg.pattern == "[a-z]+"
+def test_bookkeeping_keys_emit_nothing() -> None:
+    """A truthy ``nullable``, ``meta``, the policy keys and the
+    ``__nullable_injected__`` tag cost nothing per document."""
+    assert _emitted({"nullable": True, "meta": {"unit": "px"},
+                     "__nullable_injected__": True, "allow_unknown": True,
+                     "purge_unknown": False}) == []
+    line, = _emitted({"nullable": False})
+    assert line.startswith("if v is None: E(p + (k,), ")
 
 
-def test_type_step_holds_parsed_names() -> None:
-    """The ``type`` step holds its names once, as a tuple of strings,
-    the adapters they resolve to, and the Python types the builtin
-    adapters accept by a conversion up to the first custom adapter;
-    the violation message still joins the names as written."""
-    v = Validator()
-    (fn, arg), = v._program({"type": ["integer", 7]}).steps
-    assert fn is _rule_type and arg == _TypeCheck(
-        ("integer", "7"), (v.types["integer"],), frozenset({int}))
-    v.register_type(TypeAdapter("date", datetime.date.fromisoformat))
-    (_, arg), = v._program({"type": ["float", "date", "string"]}).steps
-    assert arg.names == ("float", "date", "string")
-    assert arg.adapters == tuple(v.types[n] for n in arg.names)
-    assert arg.converts == {int, float}
-    assert not v.validate({"a": "x"}, {"a": {"type": ["integer", "float"]}})
-    assert [(e.path, e.message) for e in v.errors] == [
-        ("^.a", "type-rule violated: expected integer/float")]
+def test_require_all_injects_required() -> None:
+    rules = {"type": "integer", "min": "7"}
+    scoped = _emitted(rules, _Policy(require_all=True))
+    assert scoped == _emitted({**rules, "required": True})
+    assert scoped != _emitted(rules)
+    assert sum(line.startswith("if v is U: E(") for line in scoped) == 1
+
+
+def test_schema_values_are_bound_not_spliced() -> None:
+    """Keys, literals, patterns and messages are namespace names: rule
+    maps of one shape compile to one code object."""
+    shapes = [{"k%d" % i: {"type": "string", "regex": "x{%d}" % i,
+                           "allowed": ["a%d" % i], "min": "b%d" % i}}
+              for i in range(3)]
+    before = interpreter._compiled.cache_info()
+    for schema in shapes:
+        v = Validator(schema)
+        v.validate({})
+    after = interpreter._compiled.cache_info()
+    assert after.hits - before.hits >= 2 * (len(shapes) - 1)
 
 
 @pytest.mark.parametrize("validate_schema", [True, False])
 def test_per_call_schemas_leave_program_store_bounded(
         validate_schema: bool) -> None:
+    """10,000 schemas passed to ``validate`` leave no function behind,
+    on the validator or its meta-validator; each call regenerates its
+    functions from a memoized compile."""
     v = Validator(validate_schema=validate_schema)
     doc = {"a": 1, "b": ["x"]}
 
@@ -325,8 +499,10 @@ def test_per_call_schemas_leave_program_store_bounded(
 
     assert v.validate(doc, fresh())
     meta_programs = len(v._meta._programs) if v._meta else 0
+    start = time.perf_counter()
     for _ in range(10_000):
         v.validate(doc, fresh())
+    print(f"10,000 per-call schemas: {time.perf_counter() - start:.2f} s")
     assert v._live is v._programs and not v._programs
     assert (len(v._meta._programs) if v._meta else 0) == meta_programs
 
@@ -491,3 +667,253 @@ def test_custom_decode_before_a_builtin_still_runs_first() -> None:
         with pytest.raises(AttributeError):
             v.validate({"a": 5}, {"a": {"type": ["stripped", "integer"]}})
         assert v.validate({"a": 5}, {"a": {"type": ["integer", "stripped"]}})
+
+
+# -- seeded schemas over every emitted rule ---------------------------------
+
+def _odd(ctx: RuleCtx) -> None:
+    """A custom rule that also normalizes: an odd int is reported, an
+    even one halved."""
+    value = ctx.item.value
+    if ctx.arg and type(value) is int:
+        if value % 2:
+            ctx.raise_error(f"odd at {ctx.item.field}")
+        else:
+            ctx.item.value = value // 2
+
+
+def _move(ctx: RuleCtx) -> None:
+    """A custom rule that renames a defined field."""
+    if ctx.item.value is not UNDEFINED:
+        ctx.item.field = ctx.arg
+
+
+def _with_custom(v: Validator) -> None:
+    v.register_rule("odd", {"type": "boolean"}, _odd)
+    v.register_rule("move", {"type": "string"}, _move,
+                    Priority.NORMALIZATION)
+    v.register_type(TypeAdapter("word", _words))
+
+
+_LEAVES = [
+    {"type": "integer", "min": 0, "max": 9},
+    {"type": "string", "regex": "[a-c]+", "allowed": ["a", "b", "ab"]},
+    {"type": ["integer", "string"], "forbidden": [3, "x"]},
+    {"type": "word", "min": "one", "allowed": ["two", 3]},
+    {"type": "integer", "odd": True},
+    {"type": "integer", "odd": True, "move": "b", "min": 1},
+    {"type": "float", "nullable": True, "default": 1.5},
+    {"type": "boolean", "required": True},
+    {"default": {"n": [1, 2]}},
+    {"default": [0, {"m": 1}]},
+]
+_KEYS = ["a", "b", "c", "d"]
+
+
+def _rules(rng: random.Random, depth: int) -> dict:
+    """One rule map: a leaf, or a container with a nested ``schema``
+    (dict or list form), ``items`` or ``keysrules``/``valuesrules``;
+    with policy keys, ``rename``, ``dependencies`` and ``excludes``
+    sprinkled in."""
+    kind = rng.randrange(7) if depth < 3 else 0
+    if kind <= 1:
+        rules = copy.deepcopy(rng.choice(_LEAVES))
+    elif kind == 2:
+        rules = {"type": "dict", "schema": _fields(rng, depth + 1)}
+    elif kind == 3:
+        rules = {"type": "list", "schema": _rules(rng, depth + 1)}
+    elif kind == 4:
+        rules = {"type": "list", "items": [
+            _rules(rng, depth + 1) for _ in range(rng.randrange(1, 3))]}
+    elif kind == 5:
+        rules = {"type": "dict", "keysrules": {"type": "string",
+                                               "regex": "[a-z]"},
+                 "valuesrules": _rules(rng, depth + 1)}
+    else:
+        rules = {"type": "dict", "schema": "node"}
+    for key in ("allow_unknown", "purge_unknown", "require_all"):
+        if rng.random() < 0.1:
+            rules[key] = rng.random() < 0.7
+    if rng.random() < 0.15:
+        rules["rename"] = rng.choice(_KEYS)
+    if rng.random() < 0.2:
+        rules["dependencies"] = rng.choice([
+            rng.choice(_KEYS), ["^.a", "b"], {"^.c": [1, "x"]},
+            "^.a.b", "a[0]"])
+    if rng.random() < 0.15:
+        rules["excludes"] = rng.choice(["^.d", rng.choice(_KEYS)])
+    return rules
+
+
+def _fields(rng: random.Random, depth: int) -> dict:
+    return {key: _rules(rng, depth)
+            for key in rng.sample(_KEYS, rng.randrange(1, 4))}
+
+
+def _value(rng: random.Random, depth: int = 0) -> object:
+    kind = rng.randrange(9 if depth < 3 else 6)
+    if kind < 6:
+        return rng.choice([0, 1, 2, 3, 7, -1, "a", "ab", "x", "two", "one",
+                           True, None, 2.5, "3", 10])
+    if kind < 8:
+        return {rng.choice(_KEYS + ["Z", "e"]): _value(rng, depth + 1)
+                for _ in range(rng.randrange(4))}
+    return [_value(rng, depth + 1) for _ in range(rng.randrange(4))]
+
+
+def _doc(rng: random.Random, rules, node: dict, depth: int = 0) -> object:
+    """A value shaped by ``rules`` most of the time, else any value."""
+    if not isinstance(rules, dict) or depth > 5 or rng.random() < 0.2:
+        return _value(rng, 2)
+    sub = rules.get("schema")
+    if sub == "node":
+        return _mapping(rng, node, node, depth + 1)
+    if isinstance(sub, dict) and rules.get("type") == "list":
+        return [_doc(rng, sub, node, depth + 1)
+                for _ in range(rng.randrange(4))]
+    if isinstance(sub, dict):
+        return _mapping(rng, sub, node, depth + 1)
+    if "items" in rules:
+        return [_doc(rng, r, node, depth + 1)
+                for r in rules["items"][:rng.randrange(4)]]
+    if "valuesrules" in rules:
+        return {rng.choice(["a", "B", "c"]): _doc(
+            rng, rules["valuesrules"], node, depth + 1)
+            for _ in range(rng.randrange(3))}
+    return rng.choice([0, 1, 2, 4, 7, 10, "a", "ab", "x", "two", None,
+                       2.5, True])
+
+
+def _mapping(rng: random.Random, fields: dict, node: dict,
+             depth: int) -> dict:
+    out = {key: _doc(rng, rules, node, depth)
+           for key, rules in fields.items() if rng.random() < 0.8}
+    if rng.random() < 0.2:
+        out[rng.choice(["Z", "a", "d"])] = 1
+    return out
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_seeded_schemas_answer_like_the_scan(seed: int) -> None:
+    """Nested ``schema`` (dict and list forms), ``items``,
+    ``keysrules``/``valuesrules``, ``rename`` (also onto a key the
+    mapping holds), container defaults, scoped policy keys, a recursive
+    registered schema, ``^`` paths, a custom rule and a custom type."""
+    rng = random.Random(seed)
+    for _ in range(40):
+        schema = _fields(rng, 0)
+        node = {"value": _rules(rng, 2),
+                "children": {"type": "list",
+                             "schema": {"type": "dict", "schema": "node"}}}
+        flags = {key: rng.random() < 0.3 for key in
+                 ("allow_unknown", "purge_unknown", "require_all")}
+        pair = (Validator(schema, **flags), ScanValidator(schema, **flags))
+        for v in pair:
+            _with_custom(v)
+            v.register_schema("node", node)
+        for i in range(20):
+            doc = (_mapping(rng, schema, node, 0) if i % 4 else
+                   _value(rng, 1))
+            doc = doc if isinstance(doc, dict) else {"a": doc}
+            got, want = (_outcome(v, doc) for v in pair)
+            assert got == want, (schema, doc)
+
+
+def test_container_default_is_copied_per_document() -> None:
+    schema = {"a": {"type": "dict", "default": {"n": [1, 2]}},
+              "b": {"type": "list", "items": [{"default": [0]}]}}
+    outcomes = []
+    for v in (Validator(schema), ScanValidator(schema)):
+        runs = []
+        for doc in ({}, {}, {"b": []}):
+            runs.append(_outcome(v, doc))
+            normalized = v.get_document()
+            normalized["a"]["n"].append(9)
+        outcomes.append(runs)
+    assert outcomes[0] == outcomes[1]
+    assert schema["a"]["default"] == {"n": [1, 2]}
+
+
+def test_registered_schema_is_normalized_when_first_reached() -> None:
+    """An ill-formed registered schema raises its ``SchemaError`` at the
+    first document that reaches the rule map naming it, not before."""
+    schema = {"outer": {"type": "dict", "schema": {
+        "a": {"type": "dict", "schema": "sub"}}}}
+    docs = [{"outer": 1}, {}, {"outer": {}}, {"outer": {"a": {}}}]
+    outcomes = []
+    for v in (Validator(schema), ScanValidator(schema)):
+        v.register_schema("sub", {"x": {"type": "integer", "minlength": 2}})
+        outcomes.append([_outcome(v, doc) for doc in docs])
+        assert "sub" not in v._normalized
+    assert outcomes[0] == outcomes[1]
+    assert [o is SchemaError for o in outcomes[0]] == [False, False, True,
+                                                       True]
+
+
+@pytest.mark.parametrize("schema", [
+    {"outer": {"type": "dict", "schema": {"a": 5}}},
+    {"outer": {"type": "list", "schema": 4.5}},
+    {"outer": {"type": "list", "items": [{"type": "integer"}, None]}},
+    {"outer": {"type": "dict", "valuesrules": [1]}},
+    {"outer": {"type": "dict", "keysrules": 7}},
+    {"outer": {"type": "dict", "schema": [{"a": 1}]}},
+])
+def test_non_mapping_rule_map_raises_at_the_same_document(schema) -> None:
+    docs = [{}, {"outer": 1}, {"outer": {}}, {"outer": []},
+            {"outer": {"k": 1}}, {"outer": [1, 2]}]
+    pair = (Validator(schema, validate_schema=False),
+            ScanValidator(schema, validate_schema=False))
+    outcomes = [[_outcome(v, doc) for doc in docs] for v in pair]
+    assert outcomes[0] == outcomes[1]
+    assert any(isinstance(o, type) for o in outcomes[0])
+
+
+# -- hostile schema text ----------------------------------------------------
+
+_HOSTILE = ['q"uo\'te', "back\\slash", "new\nline", "br{ace}s",
+            'tri"""ple', "__import__('os').system('x')", "ünïcödé",
+            "not an identifier!"]
+
+
+def test_hostile_schema_text_stays_out_of_the_source(monkeypatch) -> None:
+    """Keys, literals, patterns, rename targets, paths, registered
+    schema names and custom rule names holding quotes, backslashes,
+    newlines, braces, code or non-identifier text validate like the
+    scan, and none of them reaches the generated source."""
+    sources = []
+    compiled = interpreter._compiled
+
+    def spy(source: str):
+        sources.append(source)
+        return compiled(source)
+
+    monkeypatch.setattr(interpreter, "_compiled", spy)
+    h = _HOSTILE
+    schema = {key: {"type": "string", "allowed": h, "forbidden": [key],
+                    "regex": re.escape(key) + "|.*", "default": key,
+                    "dependencies": {"^." + h[i - 1]: h},
+                    "excludes": "^." + h[i - 2] + "[0]",
+                    "rename": h[i - 3], rule: True}
+              for i, (key, rule) in enumerate(zip(h, h[::-1]))}
+    schema["nested"] = {"type": "dict", "schema": h[0],
+                        "keysrules": {"regex": h[1] + "|.*"}}
+    docs = [{}, dict.fromkeys(h, "x"), {h[0]: h[1], h[2]: h[2]},
+            {"nested": {h[3]: h[4], "k": 1}, h[5]: [h[6]]},
+            {"nested": [h[7]], h[7]: None}]
+    pair = (Validator(schema), ScanValidator(schema))
+    for v in pair:
+        for name in h:
+            v.register_rule(name, {"type": "boolean"}, _flag)
+        v.register_schema(h[0], {key: {"type": "string", "min": key}
+                                 for key in h})
+    for doc in docs:
+        got, want = (_outcome(v, doc) for v in pair)
+        assert got == want, doc
+    assert sources
+    leaked = [s for s in h for source in sources if s in source]
+    assert not leaked
+
+
+def _flag(ctx: RuleCtx) -> None:
+    if ctx.item.value is not UNDEFINED:
+        ctx.raise_error(f"flagged {ctx.arg} at {ctx.item.field}")
