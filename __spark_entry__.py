@@ -142,12 +142,10 @@ def q_suggest_robust_bounds(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
     """Quantile ("robust") bounds (round 4): numeric min/max derive
     from the exact 1%/99% percentiles instead of observed extremes —
-    the deequ-style outlier-tolerant suggestion. quantile_method=
-    'exact' here so DuckDB's quantile_cont replays it bit-for-bit;
-    the t-digest method (one melted scan for ALL numeric columns,
-    checks.tdigests_of) is the 100 TB path, pinned against this
-    exact output in tests instead of the oracle. Output: only the
-    min/max triples (the rest of the suggestion is
+    the deequ-style outlier-tolerant suggestion. The percentiles are
+    Spark's exact ``percentile`` aggregate inside the profile's one
+    pass, so DuckDB's quantile_cont replays them bit-for-bit. Output:
+    only the min/max triples (the rest of the suggestion is
     suggest_orders_rules' contract)."""
     from cerberus_cpp_spark.plans.suggest import (
         rules_as_rows,
@@ -879,7 +877,7 @@ def q_volume_anomaly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     drought_kept = ev.where(F.expr(
         f"NOT ({h} % 211 = 3 AND event_id % 5 != 0)"))
     planted = drought_kept.unionByName(storm)
-    return checks.volume_anomalies(planted, "ts", z=3.5)
+    return checks.volume_anomalies(planted, "ts")
 
 
 _VOLUME_ANOMALY_SQL = """
@@ -7311,7 +7309,7 @@ def q_emb_dim_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "transform(embedding, (x, i) -> CASE WHEN i < 8 THEN"
         " cast(x as double) * 1.6D ELSE cast(x as double) END)"
     ).alias("embedding"))
-    return checks.embedding_dim_drift_frame(a, b, rel_tolerance=0.1)
+    return checks.embedding_dim_drift_frame(a, b)
 
 
 def _emb_dim_drift_sql() -> str:

@@ -77,13 +77,14 @@ NOT_JSON_MSG = "document is not valid JSON"
 #: the one violation of a document whose validation raised: a custom
 #: rule or type that fails on one document fails only that row
 RAISED_MSG = "validation raised {}"
+#: the JSON document column
+DOC_COL = "doc"
 
 
 def validate_json(
     df: DataFrame,
     schema: dict,
     *,
-    doc_col: str = "doc",
     id_cols: tuple[str, ...] | None = None,
     allow_unknown: bool = False,
     purge_unknown: bool = False,
@@ -92,10 +93,10 @@ def validate_json(
     registry: dict[str, dict] | None = None,
     configure: Callable[[Validator], None] | None = None,
 ) -> DataFrame:
-    """Validate a JSON-document column with the dynamic interpreter,
-    distributed via ``mapInPandas``.
+    """Validate the JSON-document column ``doc`` with the dynamic
+    interpreter, distributed via ``mapInPandas``.
 
-    Returns ``id_cols`` (default: every column except ``doc_col``,
+    Returns ``id_cols`` (default: every column except ``doc``,
     original dtypes preserved) + ``violations`` + ``n_violations`` +
     ``valid`` [+ ``normalized`` JSON string when
     ``include_normalized``, with object keys sorted for deterministic
@@ -115,8 +116,8 @@ def validate_json(
     norm_schema, norm_registry = driver_v.normalized_schemas()
 
     if id_cols is None:
-        id_cols = tuple(c for c in df.columns if c != doc_col)
-    src = df.select(*id_cols, doc_col)
+        id_cols = tuple(c for c in df.columns if c != DOC_COL)
+    src = df.select(*id_cols, DOC_COL)
     out_fields = [df.schema[c] for c in id_cols] + [
         T.StructField("violations", VIOL_FIELDS, False),
         T.StructField("n_violations", T.IntegerType(), False),
@@ -184,7 +185,7 @@ def validate_json(
 
         for pdf in batches:
             viols, counts, valids, norms = [], [], [], []
-            for raw in pdf[doc_col]:
+            for raw in pdf[DOC_COL]:
                 doc, msg = parse(raw)
                 norm = None
                 if msg is None:
@@ -221,7 +222,6 @@ def json_violations(
     df: DataFrame,
     schema: dict,
     *,
-    doc_col: str = "doc",
     id_cols: tuple[str, ...] | None = None,
     **kw,
 ) -> DataFrame:
@@ -229,7 +229,6 @@ def json_violations(
     analogue of the reference's error list for schemaless payloads
     (same output shape as ``TableValidationResult.violations``)."""
     if id_cols is None:
-        id_cols = tuple(c for c in df.columns if c != doc_col)
+        id_cols = tuple(c for c in df.columns if c != DOC_COL)
     return explode_violations(
-        validate_json(df, schema, doc_col=doc_col, id_cols=id_cols, **kw),
-        id_cols)
+        validate_json(df, schema, id_cols=id_cols, **kw), id_cols)

@@ -11,7 +11,7 @@ Scale design notes (the part the judge grades):
   salt (``pmod(hash(id), S)``) splits a hot key across S reducers in
   phase 1; phase 2 reduces S partials per key. Guards the hot-phash
   tail the north_rule calls out. Violation ROWS come from a join
-  back, broadcast when the duplicate-key set is small.
+  back against the broadcast duplicate-key set.
 - ``referential_violations`` — LEFT ANTI join, broadcasting the
   dimension key set when allowed (dim keys are deduplicated FIRST so
   the broadcast is minimal and the join is key-unique).
@@ -20,6 +20,17 @@ Scale design notes (the part the judge grades):
   aggregate over their side-tagged union: one tiny reduce, O(1)
   driver compare; never moves row data. Every two-snapshot drift
   check is such a single tagged scan.
+- ``heavy_hitters`` — per-partition Misra-Gries summaries sized from
+  the threshold (``ceil(1/min_share)`` counters, which guarantees
+  completeness), then an exact count of the candidates.
+
+A check takes as parameters only what its callers set; the rest are
+constants of the check: the drift probes and the 0.1 drift tolerance,
+the one-hour calendar bucket of ``missing_time_buckets`` and
+``volume_anomalies`` (z cut 3.5), the column pairs of
+``cross_modal_conflicts``, HyperLogLog's 5% error in
+``column_stats``; and a histogram's bounds are always the column's
+exact min and max.
 """
 
 from __future__ import annotations
@@ -30,13 +41,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def column_stats(df: DataFrame, cols: Sequence[str] | None = None,
-                 rsd: float = 0.05) -> DataFrame:
+def column_stats(df: DataFrame, cols: Sequence[str] | None = None
+                 ) -> DataFrame:
     """Long-format per-column stats: one wide agg → unpivot.
 
     Output: (col_name, n_rows, null_count, null_rate, approx_distinct,
     min_value, max_value) with min/max as strings (type-stable across
-    heterogeneous columns).
+    heterogeneous columns); ``approx_distinct`` is HyperLogLog++ at a
+    5% relative standard deviation.
     """
     cols = list(cols or df.columns)
     aggs: list[Column] = [F.count(F.lit(1)).alias("__n")]
@@ -46,7 +58,7 @@ def column_stats(df: DataFrame, cols: Sequence[str] | None = None,
             # sum over ZERO rows is NULL — empty tables must report 0
             F.coalesce(F.sum(col.isNull().cast("long")), F.lit(0))
             .alias(f"__null_{c}"),
-            F.approx_count_distinct(col, rsd).alias(f"__dist_{c}"),
+            F.approx_count_distinct(col, 0.05).alias(f"__dist_{c}"),
             F.min(col).cast("string").alias(f"__min_{c}"),
             F.max(col).cast("string").alias(f"__max_{c}"),
         ]
@@ -129,15 +141,12 @@ def duplicate_keys(
     return counts.where(F.col("cnt") > 1)
 
 
-def duplicate_rows(
-    df: DataFrame, key: str, *, broadcast_threshold: bool = True, **kw
-) -> DataFrame:
+def duplicate_rows(df: DataFrame, key: str) -> DataFrame:
     """All rows participating in a duplicated key (violation rows).
-    Join back LEFT SEMI against the (small) duplicate-key set —
-    broadcast by default since |dup keys| ≪ |rows|."""
-    dups = duplicate_keys(df, key, **kw).select(key)
-    right = F.broadcast(dups) if broadcast_threshold else dups
-    return df.join(right, on=key, how="left_semi")
+    Join back LEFT SEMI against the (small) duplicate-key set,
+    broadcast since |dup keys| ≪ |rows|."""
+    dups = duplicate_keys(df, key).select(key)
+    return df.join(F.broadcast(dups), on=key, how="left_semi")
 
 
 def referential_violations(
@@ -163,9 +172,6 @@ def referential_violations(
 def referential_chain(
     fact: DataFrame,
     hops: Sequence[tuple[DataFrame, str, str, str]],
-    *,
-    broadcast_dims: bool = True,
-    dedup_dims: bool = True,
 ) -> DataFrame:
     """Multi-hop referential integrity (fact → dim1 → dim2 → …):
     returns fact rows that break the chain anywhere, with
@@ -173,18 +179,15 @@ def referential_chain(
 
     Each hop is ``(dim, fk, pk, label)`` where ``fk`` is a column of
     the PREVIOUS level (the fact for hop 0) and ``pk``/``label``
-    belong to ``dim``. Dimensions are broadcast by default — hop
-    tables are small by construction (nation/region-like), so the
-    whole chain is one scan of the fact with N broadcast hash joins,
-    no shuffle of the fact side. NULL FKs at any level are not
-    violations (reference ``rules.hh:152-154`` semantics), but a
-    present FK pointing at a dim row whose OWN fk is null breaks the
-    chain at the next hop.
-
-    ``dedup_dims`` guards against duplicate PKs multiplying fact rows
-    (a small dim-side shuffle before the broadcast); pass ``False``
-    when PK uniqueness is already enforced to make the whole plan
-    broadcast-only."""
+    belong to ``dim``. Dimensions are broadcast: hop tables are small
+    by construction (nation/region-like), so the whole chain is one
+    scan of the fact with N broadcast hash joins, no shuffle of the
+    fact side. Each dimension's keys are deduplicated first (a small
+    dim-side shuffle before the broadcast), so duplicate PKs cannot
+    multiply fact rows. NULL FKs at any level are not violations
+    (reference ``rules.hh:152-154`` semantics), but a present FK
+    pointing at a dim row whose OWN fk is null breaks the chain at
+    the next hop."""
     cur = fact
     markers: list[tuple[str, str]] = []  # (pk marker col, label)
     prev_fk_marker: str | None = None
@@ -192,15 +195,11 @@ def referential_chain(
         pk_marker = f"__hop{i}_{pk}"
         fk_col = F.col(fk) if prev_fk_marker is None else F.col(
             prev_fk_marker)
-        keyed = dim.select(
+        keyed = F.broadcast(dim.select(
             F.col(pk).alias(pk_marker),
             *([F.col(hops[i + 1][1]).alias(f"__hop{i}_next_fk")]
               if i + 1 < len(hops) else []),
-        )
-        if dedup_dims:
-            keyed = keyed.distinct()
-        if broadcast_dims:
-            keyed = F.broadcast(keyed)
+        ).distinct())
         cur = cur.join(keyed, fk_col.eqNullSafe(F.col(pk_marker)), "left")
         markers.append((pk_marker, label))
         prev_fk_marker = f"__hop{i}_next_fk" if i + 1 < len(hops) else None
@@ -232,29 +231,30 @@ def referential_chain(
 # ---------------------------------------------------------------------------
 
 _DRIFT_PROBS = (0.01, 0.05, 0.25, 0.5, 0.75, 0.95, 0.99)
+#: a probe drifts when its relative gap exceeds this
+_DRIFT_TOLERANCE = 0.1
 
 
-def _tdigest_sides(src: DataFrame, sides: int, comp: int) -> dict:
+def _tdigest_sides(src: DataFrame, comp: int) -> tuple:
     """THE distributed t-digest (functions/tdigest.py — the sketch the
     north_star names for snapshot drift): ``src`` is ``(side, v)``;
-    returns ``{side: TDigest}`` for every side in ``range(sides)``.
+    returns the digests of sides 0 and 1.
 
     One value policy for every digest: NULL, NaN and ±inf are dropped
     here (they would poison the extreme quantiles), as are rows tagged
-    outside ``range(sides)``.
+    with any other side.
 
     Shape: per-(side, Arrow batch) partial digests (narrow
     mapInPandas) → one shuffle of centroid ARRAYS ONLY (O(compression)
     doubles per partition and side, never values) into (side,
     pid mod 64) merge groups → the bucket digests (a few KB) merge on
-    the driver. At 100 TB the only data movement is n_partitions ×
-    sides × ~2·compression doubles, in one job pair whatever the
-    number of sides. Merge order is pinned: partials carry (partition
-    id, Arrow batch) and every merge sorts on both with a STABLE sort
-    (the pid alone left batch ties to shuffle arrival), so results are
-    deterministic for a fixed partitioning; in the exact regime (see
-    functions/tdigest.py) they are order-independent and
-    SQL-replayable."""
+    the driver. At 100 TB the only data movement is n_partitions × 2
+    × ~2·compression doubles, in one job pair. Merge order is pinned:
+    partials carry (partition id, Arrow batch) and every merge sorts
+    on both with a STABLE sort (the pid alone left batch ties to
+    shuffle arrival), so results are deterministic for a fixed
+    partitioning; in the exact regime (see functions/tdigest.py) they
+    are order-independent and SQL-replayable."""
     from ..functions.shipping import PKG_PARENT
     from ..functions.tdigest import TDigest
 
@@ -304,7 +304,7 @@ def _tdigest_sides(src: DataFrame, sides: int, comp: int) -> dict:
         src.select(F.col("side").cast("long").alias("side"),
                    F.col("v").cast("double").alias("v"))
         # NULL, NaN (Spark orders it above +inf) and ±inf all fail |v| < inf
-        .where(F.col("side").between(0, sides - 1)
+        .where(F.col("side").between(0, 1)
                & (F.abs("v") < float("inf")))
         .mapInPandas(partials, schema=schema)
         .withColumn("bucket", F.pmod("pid", F.lit(64)))
@@ -312,10 +312,10 @@ def _tdigest_sides(src: DataFrame, sides: int, comp: int) -> dict:
         .applyInPandas(merge_bucket, schema=schema)
         .collect()
     )
-    out = {s: TDigest(comp) for s in range(sides)}
+    out = [TDigest(comp), TDigest(comp)]
     for r in sorted(rows, key=lambda r: (r["side"], r["pid"], r["batch"])):
         out[r["side"]] = out[r["side"]].merge(TDigest.from_row(r, comp))
-    return out
+    return tuple(out)
 
 
 def _exact_drift_frame(a: DataFrame, b: DataFrame, by: list, probs,
@@ -345,40 +345,30 @@ def _exact_drift_frame(a: DataFrame, b: DataFrame, by: list, probs,
 
 
 def exact_quantile_drift_frame(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    col: str,
-    probs: Sequence[float] | None = None,
-    *,
-    rel_tolerance: float = 0.1,
+    df_a: DataFrame, df_b: DataFrame, col: str
 ) -> DataFrame:
     """Drift as a DataFrame plan (no driver collect): EXACT
     percentiles of both snapshots from one aggregate over their
     tagged union (small/medium scale or oracle checking; the sketch
     paths `quantile_drift`/`tdigest_pair` are the 100TB route).
-    Output: (prob, q_a, q_b, rel_gap, drifted)."""
+    Output: (prob, q_a, q_b, rel_gap, drifted) at the ``_DRIFT_PROBS``
+    probes, drifted past a relative gap of 0.1."""
     def v(df: DataFrame) -> DataFrame:
         return df.select(F.col(col).cast("double").alias("v"))
 
-    return _exact_drift_frame(v(df_a), v(df_b), [],
-                              probs or _DRIFT_PROBS, rel_tolerance)
+    return _exact_drift_frame(v(df_a), v(df_b), [], _DRIFT_PROBS,
+                              _DRIFT_TOLERANCE)
 
 
-def quantile_drift(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    col: str,
-    probs: Sequence[float] | None = None,
-    *,
-    rel_tolerance: float = 0.1,
-) -> dict:
+def quantile_drift(df_a: DataFrame, df_b: DataFrame, col: str) -> dict:
     """Compare quantile vectors of two snapshots; drift = max relative
     gap across probed quantiles (t-digest-style snapshot comparison
     per north_star). Both fixed-size ``percentile_approx`` sketches
     (KLL family) come from ONE aggregate over the union of both
     snapshots, tagged ``side`` 0 and 1 — one tiny reduce, never moving
-    row data — and the two tiny vectors are compared driver-side."""
-    probs = list(probs or _DRIFT_PROBS)
+    row data — and the two tiny vectors are compared driver-side. The
+    probes are ``_DRIFT_PROBS``; drifted means a gap above 0.1."""
+    probs = list(_DRIFT_PROBS)
     v = F.col(col).cast("double").alias("v")
     both = df_a.select(F.lit(0).alias("side"), v).unionByName(
         df_b.select(F.lit(1).alias("side"), v))
@@ -393,26 +383,7 @@ def quantile_drift(
                for x, y in zip(qa, qb)), default=0.0)
     return {"column": col, "probs": probs, "quantiles_a": qa,
             "quantiles_b": qb, "max_rel_gap": gap,
-            "drifted": gap > rel_tolerance}
-
-
-def tdigests_of(df: DataFrame, cols: list[str], *,
-                compression: int = 100) -> dict:
-    """t-digests for MANY columns in ONE scan: the columns melt into
-    (side=column-index, v) rows via ``posexplode`` (narrow — no
-    shuffle of values; each Arrow batch folds into per-side partial
-    digests exactly like :func:`tdigest_pair`). The suggestion
-    engine's 100 TB quantile path (``plans/suggest.py``): one job
-    regardless of column count, shuffle payload = n_partitions ×
-    n_cols × ~2·compression doubles.
-
-    NaN and ±inf are excluded (they would poison the extreme
-    quantiles; the caller's isfinite guard handles the min/max rules
-    separately). Returns ``{col: TDigest}``."""
-    src = df.select(F.posexplode(F.array(
-        *[F.col(c).cast("double") for c in cols])).alias("side", "v"))
-    d = _tdigest_sides(src, len(cols), int(compression))
-    return {c: d[i] for i, c in enumerate(cols)}
+            "drifted": gap > _DRIFT_TOLERANCE}
 
 
 def tdigest_pair(df: DataFrame, side_col: str, col: str, *,
@@ -423,8 +394,7 @@ def tdigest_pair(df: DataFrame, side_col: str, col: str, *,
     pass, so comparing two snapshots of the same table costs one read.
     Returns ``(digest_side0, digest_side1)``."""
     src = df.select(F.col(side_col).alias("side"), F.col(col).alias("v"))
-    d = _tdigest_sides(src, 2, int(compression))
-    return d[0], d[1]
+    return _tdigest_sides(src, int(compression))
 
 
 # ---------------------------------------------------------------------------
@@ -479,140 +449,61 @@ def _mg_partials(df: DataFrame, key: str, capacity: int) -> DataFrame:
     return df.select(F.col(key).alias("key")).mapInPandas(mg, schema)
 
 
-def _verify_candidates(
-    df: DataFrame, key: str, cand: DataFrame, total: DataFrame,
-    min_share: float | None, min_count: int | None,
-) -> DataFrame:
-    """Shared pass 2: EXACT counts restricted to the candidate set —
-    a semi-join (AQE picks broadcast vs shuffled from the runtime
-    size; no forced hint, mirroring the round-4 dedup fix) followed
-    by a hash aggregate whose map-side partials bound the shuffle at
-    |candidates| rows per task. ``total`` is a 1-row (total bigint)
-    frame — attached with a broadcast-NL cross join."""
+def heavy_hitters(df: DataFrame, key: str, *, min_share: float
+                  ) -> DataFrame:
+    """EXACT counts of every key holding at least ``min_share`` of the
+    non-null keys, without ever shuffling the raw table on the key
+    (the north_rule's hot-phash scenario: detect the keys that would
+    melt a reducer BEFORE running the salted aggregate).
+
+    Pass 1 builds per-partition Misra-Gries summaries in one narrow
+    Arrow pass (``_mg_partials``) with ``capacity = ceil(1 /
+    min_share)`` counters. Completeness is DETERMINISTIC by
+    pigeonhole: a key with global non-null share >= ``min_share`` has
+    per-partition share >= ``min_share`` > 1/(capacity+1) in at least
+    one partition, where the MG deficit bound keeps its counter
+    positive. The reduced summary (<= capacity rows per partition + 1
+    total row) is eagerly ``localCheckpoint``-ed — a few KB — so the
+    total-count and candidate branches don't re-run the scan.
+    Shuffle: O(partitions x capacity) rows. The pass-1 cost is the
+    Arrow export of the key column to Python — measured SLOWER than
+    the plain JVM groupBy on a single host (BENCH.md §17); it pays off
+    where the wire matters more than the local CPU: a real cluster,
+    where the naive groupBy ships every distinct key across the
+    network and MG ships kilobytes.
+
+    Pass 2 counts the candidates EXACTLY: a semi-join (AQE picks
+    broadcast vs shuffled from the runtime size; no forced hint)
+    followed by a hash aggregate whose map-side partials bound the
+    shuffle at |candidates| rows per task; the 1-row total is attached
+    with a broadcast-NL cross join.
+
+    Returns ``(key, cnt, share)`` for keys with exact count >=
+    ``ceil(min_share x non-null rows)``. NULL keys are ignored
+    (null-rate is ``column_stats``' job). Eager: pass 1 runs at call
+    time (like ``ivf_index``)."""
+    import math
+
+    if not 0.0 < min_share <= 1.0:
+        raise ValueError(f"min_share must be in (0, 1]: {min_share}")
+    partials = _mg_partials(df, key, int(math.ceil(1.0 / min_share)))
+    summary = (
+        partials.groupBy("key", "is_total")
+        .agg(F.sum("cnt").alias("cnt"))
+        .coalesce(1)
+        .localCheckpoint(eager=True)
+    )
+    total = summary.where("is_total").select(F.sum("cnt").alias("total"))
+    cand = summary.where(~F.col("is_total")).select(F.col("key").alias(key))
     exact = (
         df.where(F.col(key).isNotNull())
         .join(cand, on=key, how="left_semi")
         .groupBy(key)
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    out = exact.crossJoin(total)
-    thresholds = []
-    if min_count is not None:
-        thresholds.append(F.lit(int(min_count)))
-    if min_share is not None:
-        thresholds.append(F.ceil(F.lit(float(min_share)) * F.col("total")))
-    thr = thresholds[0]
-    for t in thresholds[1:]:
-        thr = F.greatest(thr, t)
-    return out.where(F.col("cnt") >= thr).select(
-        key, "cnt", (F.col("cnt") / F.col("total")).alias("share")
-    )
-
-
-def heavy_hitters(
-    df: DataFrame,
-    key: str,
-    *,
-    min_share: float | None = None,
-    min_count: int | None = None,
-    capacity: int = 256,
-    method: str = "mg",
-    sample_fraction: float = 1e-3,
-) -> DataFrame:
-    """EXACT counts of every over-threshold key — without ever
-    shuffling the raw table on the key (the north_rule's hot-phash
-    scenario: detect the keys that would melt a reducer BEFORE
-    running the salted aggregate). Two candidate generators feed the
-    same exact verify pass; the FINAL counts are exact either way,
-    the methods differ only in the completeness guarantee and where
-    the pass-1 work happens:
-
-    ``method="mg"`` — per-partition Misra-Gries summaries in one
-    narrow Arrow pass (``_mg_partials``). Completeness is
-    DETERMINISTIC by pigeonhole: a key with global non-null share
-    > 1/(capacity+1) must have per-partition share > 1/(capacity+1)
-    in at least one partition, where the MG deficit bound keeps its
-    counter positive. ``capacity`` auto-widens to ``ceil(1/
-    min_share)`` so the guarantee always covers the requested
-    threshold. The reduced summary (<= capacity rows per partition +
-    1 total row) is eagerly ``localCheckpoint``-ed — a few KB — so
-    the total-count and candidate branches don't re-run the scan.
-    Shuffle: O(partitions x capacity) rows. The pass-1 cost is the
-    Arrow export of the key column to Python — measured SLOWER than
-    the plain JVM groupBy on a single host (BENCH.md §17), so this
-    is the right method only where the wire matters more than the
-    local CPU: a real cluster, where the naive groupBy ships every
-    distinct key across the network and MG ships kilobytes.
-
-    ``method="sample"`` — JVM-only: a Bernoulli sample's key counts
-    (shuffle: ~fraction x distinct rows after map-side combine)
-    generate the candidates; completeness is PROBABILISTIC — a key
-    at exactly ``min_share`` is missed with probability
-    ``exp(-sample_fraction x min_share x n / 8)`` (Chernoff lower
-    tail at the half-expectation cut), e.g. 1e-3 x 1% x 120M rows →
-    e^-150; for small tables or tiny thresholds raise
-    ``sample_fraction`` (or use "mg"). Requires ``min_share``.
-    Stays in whole-stage codegen end-to-end and wins on wall time
-    AND shuffle bytes at scale (BENCH.md §17).
-
-    Returns ``(key, cnt, share)`` for keys with exact count >= the
-    threshold (``min_count`` and/or ``ceil(min_share x non-null
-    rows)``; both given → the stricter). NULL keys are ignored
-    (null-rate is ``column_stats``' job). Eager: pass 1 runs at call
-    time (like ``ivf_index``)."""
-    import math
-
-    if min_share is None and min_count is None:
-        raise ValueError("need min_share and/or min_count")
-    if min_share is not None:
-        if not 0.0 < min_share <= 1.0:
-            raise ValueError(f"min_share must be in (0, 1]: {min_share}")
-
-    if method == "mg":
-        if min_share is not None:
-            capacity = max(capacity, int(math.ceil(1.0 / min_share)))
-        partials = _mg_partials(df, key, capacity)
-        summary = (
-            partials.groupBy("key", "is_total")
-            .agg(F.sum("cnt").alias("cnt"))
-            .coalesce(1)
-            .localCheckpoint(eager=True)
-        )
-        total = summary.where("is_total").select(
-            F.sum("cnt").alias("total")
-        )
-        cand = summary.where(~F.col("is_total")).select(
-            F.col("key").alias(key)
-        )
-    elif method == "sample":
-        if min_share is None:
-            raise ValueError('method="sample" needs min_share')
-        if not 0.0 < sample_fraction <= 1.0:
-            raise ValueError(
-                f"sample_fraction must be in (0, 1]: {sample_fraction}"
-            )
-        nn = df.where(F.col(key).isNotNull())
-        n = nn.count()  # columnar sources answer this near-free
-        # candidate cut at HALF the expected sampled count of a key
-        # sitting exactly at min_share — the Chernoff miss bound in
-        # the docstring; >= 1 so tiny tables still yield candidates
-        cut = max(
-            1, int(math.ceil(0.5 * sample_fraction * min_share * n))
-        )
-        cand = (
-            nn.sample(fraction=float(sample_fraction), seed=42)
-            .groupBy(key)
-            .agg(F.count(F.lit(1)).alias("__scnt"))
-            .where(F.col("__scnt") >= cut)
-            .select(key)
-        )
-        total = df.sparkSession.createDataFrame(
-            [(n,)], "total bigint"
-        )
-    else:
-        raise ValueError(f"unknown method {method!r}")
-
-    return _verify_candidates(df, key, cand, total, min_share, min_count)
+    return exact.crossJoin(total).where(
+        F.col("cnt") >= F.ceil(F.lit(float(min_share)) * F.col("total"))
+    ).select(key, "cnt", (F.col("cnt") / F.col("total")).alias("share"))
 
 
 # ---------------------------------------------------------------------------
@@ -683,7 +574,6 @@ def snapshot_row_diff(
     keys: Sequence[str] | str,
     *,
     compare_cols: Sequence[str] | None = None,
-    include_unchanged: bool = False,
 ) -> DataFrame:
     """Row-level delta between two snapshots of a keyed table — the
     finest-grained face of the north_star's "compared across
@@ -698,8 +588,8 @@ def snapshot_row_diff(
     ('added', 'removed', 'changed'), and ``changed_cols`` — a
     comma-joined list (in ``compare_cols`` order) of the columns
     whose values differ, NULL for added/removed rows. Unchanged rows
-    are dropped unless ``include_unchanged`` (they dominate at scale;
-    the filter happens before any further stage).
+    are dropped (they dominate at scale; the filter happens before
+    any further stage).
 
     ``compare_cols`` defaults to every shared non-key column whose
     type matches on both sides (a type change is a schema delta, not
@@ -761,15 +651,7 @@ def snapshot_row_diff(
              | any_diff).alias("_differs"),
         )
     )
-    if not include_unchanged:
-        out = out.where(F.col("_differs"))
-    else:
-        out = out.withColumn(
-            "status",
-            F.when(~F.col("_differs"), F.lit("unchanged"))
-            .otherwise(F.col("status")),
-        )
-    return out.drop("_differs")
+    return out.where(F.col("_differs")).drop("_differs")
 
 
 def incremental_validation_targets(
@@ -796,26 +678,23 @@ def incremental_validation_targets(
     return new.join(delta, on=key_list, how="left_semi")
 
 
-def cross_modal_conflicts(
-    df: DataFrame,
-    pairs: "Sequence[tuple[str, str]]" = (
-        ("phash", "caption"),
-        ("caption", "image_id"),
-    ),
-    *,
-    min_distinct: int = 2,
-) -> DataFrame:
+#: (group_key, other) column pairs ``cross_modal_conflicts`` checks
+_CONFLICT_PAIRS = (("phash", "caption"), ("caption", "image_id"))
+
+
+def cross_modal_conflicts(df: DataFrame) -> DataFrame:
     """Cross-modal consistency over an image+caption table: for each
-    (group_key, other) pair, find group_key values whose rows carry
-    ≥ ``min_distinct`` DISTINCT ``other`` values. The defaults detect
-    the two training-data poisons of the input_hint table: the same
-    image (phash) published under conflicting captions, and the same
-    caption stamped onto many images (boilerplate/alt-text spam).
+    (group_key, other) pair of ``_CONFLICT_PAIRS``, find group_key
+    values whose rows carry two or more DISTINCT ``other`` values.
+    The pairs detect the two training-data poisons of the input_hint
+    table: the same image (phash) published under conflicting
+    captions, and the same caption stamped onto many images
+    (boilerplate/alt-text spam).
 
     ONE scan for every pair: ``stack()`` melts each row into
     (kind, key, other) triples JVM-side, one hash aggregate computes
     ``n_rows`` + exact ``n_distinct_other`` per (kind, key), and the
-    ``min_distinct`` filter runs on the already-reduced frame.
+    conflict filter runs on the already-reduced frame.
     Returns (kind, key, n_rows, n_distinct_other), kind =
     ``'<group_key>~<other>'``. NULL keys and NULL others are excluded
     (a NULL caption is the nullable-rule's business, not a conflict).
@@ -826,16 +705,11 @@ def cross_modal_conflicts(
     absorbs most of it (count-distinct partials are per-key sets, so
     a truly pathological key should be pre-screened with
     ``heavy_hitters`` and handled separately)."""
-    pair_list = list(pairs)
-    if not pair_list:
-        raise ValueError("pairs must be non-empty")
-    if min_distinct < 2:
-        raise ValueError("min_distinct must be >= 2")
     melt = "stack({}, {}) as (kind, key, other)".format(
-        len(pair_list),
+        len(_CONFLICT_PAIRS),
         ", ".join(
             f"'{k}~{o}', cast(`{k}` as string), cast(`{o}` as string)"
-            for k, o in pair_list
+            for k, o in _CONFLICT_PAIRS
         ),
     )
     return (
@@ -846,21 +720,15 @@ def cross_modal_conflicts(
             F.count(F.lit(1)).alias("n_rows"),
             F.countDistinct("other").alias("n_distinct_other"),
         )
-        .where(F.col("n_distinct_other") >= F.lit(int(min_distinct)))
+        .where(F.col("n_distinct_other") >= F.lit(2))
     )
 
 
-def embedding_dim_drift_frame(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    probs: tuple = (0.1, 0.25, 0.5, 0.75, 0.9),
-    rel_tolerance: float = 0.1,
-) -> DataFrame:
+def embedding_dim_drift_frame(df_a: DataFrame, df_b: DataFrame
+                              ) -> DataFrame:
     """Embedding-space drift between two snapshots, per DIMENSION:
-    melt each vector with ``posexplode`` and compare EXACT per-dim
-    quantile vectors in one tagged aggregate — catches what no
+    melt the ``embedding`` vectors with ``posexplode`` and compare
+    EXACT per-dim quantile vectors in one tagged aggregate — catches what no
     metadata column can see: a re-embedding batch from a different
     model checkpoint, a normalization change (all dims shrink
     together), or a projection swap (a few dims move). The embedding
@@ -868,67 +736,66 @@ def embedding_dim_drift_frame(
     ``image_content_drift_frame`` (same frame, grouped by ``dim``).
 
     Output: (dim, prob, q_a, q_b, rel_gap, drifted) with 0-based
-    dims. ONE scan of the tagged union of both snapshots, values
+    dims, probes 0.1, 0.25, 0.5, 0.75 and 0.9, drifted past a relative
+    gap of 0.1. ONE scan of the tagged union of both snapshots, values
     shuffled once into the per-dim aggregate. Exact percentiles —
     right for oracle checking and small/medium scale; at 100 TB
-    project the dimensions to columns and digest them with
-    :func:`tdigests_of` (centroid-only shuffle)."""
+    digest a dimension with :func:`tdigest_pair` (centroid-only
+    shuffle)."""
     def melt(df: DataFrame) -> DataFrame:
-        return df.where(F.col(vec_col).isNotNull()).select(
+        return df.where(F.col("embedding").isNotNull()).select(
             F.posexplode(F.expr(
-                f"transform({vec_col}, x -> cast(x as double))"
+                "transform(embedding, x -> cast(x as double))"
             )).alias("dim", "v"))
 
-    return _exact_drift_frame(melt(df_a), melt(df_b), ["dim"], probs,
-                              rel_tolerance)
+    return _exact_drift_frame(melt(df_a), melt(df_b), ["dim"],
+                              (0.1, 0.25, 0.5, 0.75, 0.9),
+                              _DRIFT_TOLERANCE)
+
+
+#: the calendar bucket of ``missing_time_buckets`` and
+#: ``volume_anomalies``: one hour
+_BUCKET_SECONDS = 3600
 
 
 def missing_time_buckets(
     df: DataFrame,
     ts_col: str,
     *,
-    bucket_seconds: int = 3600,
-    group_col: str | None = None,
     max_buckets: int = 2_000_000,
 ) -> DataFrame:
-    """Completeness/timeliness check: find time ranges with ZERO
-    events between the observed first and last bucket — a feed that
-    silently stopped for three hours passes every row-level rule and
-    every distribution check; only the calendar notices.
+    """Completeness/timeliness check: find the hours with ZERO events
+    between the observed first and last hour — a feed that silently
+    stopped for three hours passes every row-level rule and every
+    distribution check; only the calendar notices.
 
     ``max_buckets`` guards the expected-bucket explode: one corrupt
-    outlier timestamp (epoch 0) with a small ``bucket_seconds`` would
-    otherwise inflate the "tiny" expected frame to billions of rows or
-    past Spark's sequence element limit (ADVICE r4). The guard is an
-    in-plan ``assert_true`` on the bounds frame — zero extra jobs —
-    that fails the job with an actionable message (widen
-    ``bucket_seconds``, raise ``max_buckets``, or clean the outlier)
-    instead of silently exploding.
+    outlier timestamp (epoch 0) would otherwise inflate the "tiny"
+    expected frame to millions of rows or past Spark's sequence
+    element limit (ADVICE r4). The guard is an in-plan
+    ``assert_true`` on the bounds frame — zero extra jobs — that fails
+    the job with an actionable message (raise ``max_buckets`` or clean
+    the outlier) instead of silently exploding.
 
-    Returns one row per contiguous gap: (``group_col``?,
-    ``gap_start_bucket``, ``gap_end_bucket``, ``n_missing``) where
-    bucket ``b`` covers instants ``[b·bucket_seconds,
-    (b+1)·bucket_seconds)`` — integer bucket ids, not rendered
-    timestamps, so engine timezone rendering can never skew the
-    comparison.
+    Returns one row per contiguous gap: (``gap_start_bucket``,
+    ``gap_end_bucket``, ``n_missing``) where bucket ``b`` covers
+    instants ``[b·3600, (b+1)·3600)`` — integer bucket ids, not
+    rendered timestamps, so engine timezone rendering can never skew
+    the comparison.
 
     Scale shape: ONE distinct-bucket aggregate over the source
     (map-side partial dedup; never a global sort of events). The
     expected-vs-observed anti-join and the run collapse
     (``bucket - row_number()`` grouping) operate on the tiny bucket
-    frame — ≤ range/bucket_seconds rows regardless of event count."""
+    frame — ≤ range/3600 rows regardless of event count."""
     from pyspark.sql.window import Window
 
-    if bucket_seconds < 1:
-        raise ValueError("bucket_seconds must be >= 1")
     if max_buckets < 1:
         raise ValueError("max_buckets must be >= 1")
-    grp = [group_col] if group_col else []
     b = F.floor(F.unix_timestamp(F.col(ts_col))
-                / F.lit(int(bucket_seconds))).alias("bucket")
-    observed = df.where(F.col(ts_col).isNotNull()) \
-        .select(*grp, b).distinct()
-    bounds = observed.groupBy(*grp).agg(
+                / F.lit(_BUCKET_SECONDS)).alias("bucket")
+    observed = df.where(F.col(ts_col).isNotNull()).select(b).distinct()
+    bounds = observed.agg(
         F.min("bucket").alias("lo"), F.max("bucket").alias("hi"))
     span = F.col("hi") - F.col("lo") + F.lit(1)
     guard = F.assert_true(
@@ -937,27 +804,24 @@ def missing_time_buckets(
             F.lit("missing_time_buckets: expected-bucket span "),
             span.cast("string"),
             F.lit(f" exceeds max_buckets={int(max_buckets)}"
-                  f" (bucket_seconds={int(bucket_seconds)}) — an"
-                  f" outlier timestamp or too-fine bucketing; widen"
-                  f" bucket_seconds, raise max_buckets, or clean the"
+                  f" (bucket_seconds={_BUCKET_SECONDS}) — an outlier"
+                  f" timestamp; raise max_buckets or clean the"
                   f" outlier"),
         ),
     )
     # the guard is woven INTO the exploded expression (assert_true
     # yields NULL on pass) so column pruning cannot optimize it away
     expected = bounds.select(
-        *grp,
         F.explode(
             F.when(guard.isNull(), F.expr("sequence(lo, hi)"))
         ).alias("bucket"),
     )
-    missing = expected.join(observed, on=grp + ["bucket"],
-                            how="left_anti")
-    w = Window.partitionBy(*grp).orderBy("bucket")
+    missing = expected.join(observed, on=["bucket"], how="left_anti")
+    w = Window.orderBy("bucket")
     runs = missing.withColumn(
         "run", F.col("bucket") - F.row_number().over(w))
     return (
-        runs.groupBy(*grp, "run")
+        runs.groupBy("run")
         .agg(F.min("bucket").alias("gap_start_bucket"),
              F.max("bucket").alias("gap_end_bucket"),
              F.count(F.lit(1)).alias("n_missing"))
@@ -990,46 +854,33 @@ def group_staleness(
     )
 
 
-def volume_anomalies(
-    df: DataFrame,
-    ts_col: str,
-    *,
-    bucket_seconds: int = 3600,
-    z: float = 3.5,
-    group_col: str | None = None,
-) -> DataFrame:
-    """Event-VOLUME anomalies per time bucket — the partner of
+def volume_anomalies(df: DataFrame, ts_col: str) -> DataFrame:
+    """Event-VOLUME anomalies per hour — the partner of
     :func:`missing_time_buckets`: a feed that halves (upstream
     sampling bug) or 10×es (replay storm) its hourly volume without
     ever stopping leaves no gap and breaks no row rule; the count
     series shows it.
 
-    Per (``group_col``?, bucket): ``robust_z = |cnt − median| /
-    (1.4826 · MAD)`` over that group's bucket counts — a median/MAD
-    score, immune to the outliers it hunts (``MAD = 0`` degrades to
-    flagging any deviation from the median). Buckets with zero events are the
-    GAP check's job and are absent here by construction.
+    Per hourly bucket: ``robust_z = |cnt − median| / (1.4826 · MAD)``
+    over the bucket counts — a median/MAD score, immune to the
+    outliers it hunts (``MAD = 0`` degrades to flagging any deviation
+    from the median). Buckets with zero events are the GAP check's
+    job and are absent here by construction.
 
     Scale shape: ONE count aggregate over the source (map-side
     partials); the median/MAD aggregates and the score run on the
-    tiny bucket-count frame. Returns rows with ``robust_z > z``
-    (or MAD 0 and ``cnt ≠ median``): (``group_col``?, ``bucket``,
-    ``cnt``, ``med``, ``mad``, ``robust_z``)."""
-    if bucket_seconds < 1:
-        raise ValueError("bucket_seconds must be >= 1")
-    grp = [group_col] if group_col else []
+    tiny bucket-count frame. Returns rows with ``robust_z > 3.5``
+    (or MAD 0 and ``cnt ≠ median``): (``bucket``, ``cnt``, ``med``,
+    ``mad``, ``robust_z``)."""
     b = F.floor(F.unix_timestamp(F.col(ts_col))
-                / F.lit(int(bucket_seconds))).alias("bucket")
+                / F.lit(_BUCKET_SECONDS)).alias("bucket")
     counts = df.where(F.col(ts_col).isNotNull()) \
-        .groupBy(*grp, b).agg(F.count(F.lit(1)).alias("cnt"))
-    med = counts.groupBy(*grp).agg(
-        F.expr("percentile(cnt, 0.5)").alias("med"))
-    with_med = counts.join(med, on=grp) if grp else \
-        counts.crossJoin(med)
-    mad = with_med.groupBy(*grp).agg(
+        .groupBy(b).agg(F.count(F.lit(1)).alias("cnt"))
+    med = counts.agg(F.expr("percentile(cnt, 0.5)").alias("med"))
+    with_med = counts.crossJoin(med)
+    mad = with_med.agg(
         F.expr("percentile(abs(cnt - med), 0.5)").alias("mad"))
-    scored = (with_med.join(mad, on=grp) if grp else
-              with_med.crossJoin(mad)).withColumn(
+    scored = with_med.crossJoin(mad).withColumn(
         "robust_z",
         F.when(
             F.col("mad") > 0,
@@ -1038,9 +889,9 @@ def volume_anomalies(
         ),
     )
     return scored.where(
-        (F.col("robust_z") > float(z))
+        (F.col("robust_z") > 3.5)
         | (F.col("mad") == 0) & (F.col("cnt") != F.col("med"))
-    ).select(*grp, "bucket", "cnt", "med", "mad", "robust_z")
+    ).select("bucket", "cnt", "med", "mad", "robust_z")
 
 
 def numeric_histogram(
@@ -1048,8 +899,6 @@ def numeric_histogram(
     col: str,
     *,
     bins: int = 32,
-    lo: float | None = None,
-    hi: float | None = None,
 ) -> DataFrame:
     """EXACT equi-width histogram of a numeric column — the numeric
     sibling of the categorical frequency histograms above, and the
@@ -1059,13 +908,10 @@ def numeric_histogram(
     and assignments are plain IEEE f64 arithmetic, identical across
     engines given identical bounds). NULL, NaN, and ±inf rows are
     excluded (they have no bin semantics; count them with
-    column_stats). Bounds: pass ``lo``/``hi`` for the single-pass
-    variant (values outside clamp into the edge bins — the
-    streaming-friendly fixed-domain form); omit them and the plan
-    computes exact min/max in a first aggregate and cross-joins the
-    1-row bounds frame (two passes over the column, zero driver
-    round-trips). A degenerate domain (lo == hi) lands everything
-    in bin 0.
+    column_stats). Bounds: the plan computes exact min/max in a first
+    aggregate and cross-joins the 1-row bounds frame (two passes over
+    the column, zero driver round-trips). A degenerate domain
+    (min == max) lands everything in bin 0.
 
     Scale shape: the bounds aggregate and the bin aggregate each
     ship O(1) / O(bins) partials per task; nothing else shuffles.
@@ -1073,37 +919,19 @@ def numeric_histogram(
     to a distribution summary."""
     if bins < 1:
         raise ValueError("bins must be >= 1")
-    if (lo is None) != (hi is None):
-        raise ValueError(
-            "pass BOTH lo and hi for the fixed-domain variant, or "
-            "neither for in-plan exact bounds — a single bound "
-            "would be silently ignored")
-    if lo is not None and not (float(lo) <= float(hi)):
-        raise ValueError(f"lo must be <= hi, got [{lo}, {hi}]")
     c = F.col(col).cast("double")
     finite = df.where(
         c.isNotNull() & ~F.isnan(c)
         & (F.abs(c) != F.lit(float("inf")))
     ).select(c.alias("_x"))
-    if lo is None or hi is None:
-        bounds = finite.agg(
-            F.min("_x").alias("_lo"), F.max("_x").alias("_hi")
-        )
-        src = finite.crossJoin(F.broadcast(bounds))
-    else:
-        src = finite.select(
-            "_x",
-            F.lit(float(lo)).alias("_lo"),
-            F.lit(float(hi)).alias("_hi"),
-        )
+    bounds = finite.agg(F.min("_x").alias("_lo"), F.max("_x").alias("_hi"))
+    src = finite.crossJoin(F.broadcast(bounds))
     width = (F.col("_hi") - F.col("_lo")) / F.lit(float(bins))
     rawbin = F.floor((F.col("_x") - F.col("_lo")) / width)
+    # the maximum computes to bin ``bins``: it belongs to the last one
     bin_ = (
         F.when(F.col("_lo") == F.col("_hi"), F.lit(0))
-        .otherwise(
-            F.least(F.lit(int(bins) - 1),
-                    F.greatest(F.lit(0), rawbin))
-        )
+        .otherwise(F.least(F.lit(int(bins) - 1), rawbin))
         .cast("int")
     )
     return (

@@ -1115,7 +1115,7 @@ def pq_encode(
     drifts away from the training sample, quantization error climbs
     and ADC ranking quality decays silently — monitor pq_err
     quantiles on fresh batches against the training-time baseline
-    (``checks.tdigests_of``) and retrain when they drift, the
+    (``checks.tdigest_pair``) and retrain when they drift, the
     index-maintenance twin of ``checks.embedding_dim_drift_frame``
     (which watches the INPUT side).
 

@@ -32,8 +32,12 @@ Design decisions (all scale-driven):
 - **Wilson, not Wald.** The normal-approximation interval collapses
   at p→0 — exactly the regime a validation audit lives in (rates of
   1e-6 on a 10^7-row sample). Wilson stays inside [0,1] and has
-  near-nominal coverage at extreme p. z defaults to the two-sided
-  95% quantile.
+  near-nominal coverage at extreme p. z is the two-sided 95%
+  quantile.
+- **One path count for both passes.** The sampled audit and the exact
+  escalation pass count violating rows per path the same way
+  (``_count_markers``, ``_with_denominator``); they differ only in
+  which markers a row carries.
 - **Identical expression trees in both engines.** The interval
   arithmetic is built as ONE SQL string (``wilson_sql``) evaluated by
   Spark via ``F.expr`` and by the DuckDB oracle verbatim — both parse
@@ -109,6 +113,38 @@ def sample_predicate(key: str | Column, fraction: float,
     return split_bucket(key, seed) < F.lit(int(round(fraction * SCALE)))
 
 
+def _distinct_paths() -> Column:
+    """A row's distinct violation paths."""
+    return F.array_distinct(
+        F.transform(F.col("violations"), lambda v: v["path"]))
+
+
+def _count_markers(annotated: DataFrame, *markers: Column) -> DataFrame:
+    """``(path, violating_rows)``: every row of ``annotated`` carries
+    the ``__n__`` marker followed by its ``markers`` (string arrays);
+    one ``explode`` and ONE hash aggregate count the rows per marker,
+    so the ``__n__`` row holds the row count."""
+    return (
+        annotated.select(F.explode(F.concat(
+            F.array(F.lit(_N_MARK)), *markers)).alias("path"))
+        .groupBy("path")
+        .agg(F.count(F.lit(1)).alias("violating_rows"))
+    )
+
+
+def _with_denominator(counts: DataFrame, name: str) -> DataFrame:
+    """``counts`` without its ``__n__`` row, whose count every other
+    row carries as ``name``: a single-partition window over the
+    already-tiny (path, count) frame, O(distinct violation paths) =
+    O(rules) rows, so it is driver-cheap and rescans nothing."""
+    everything = Window.partitionBy(F.lit(0))
+    return counts.withColumn(
+        name,
+        F.max(F.when(F.col("path") == _N_MARK,
+                     F.col("violating_rows"))).over(everything),
+    ).where(F.col("path") != _N_MARK)
+
+
 def sampled_audit(
     validator: TableValidator,
     df: DataFrame,
@@ -117,7 +153,6 @@ def sampled_audit(
     fraction: float = 0.01,
     seed: int = 0,
     budget: float = 0.0,
-    z: str = Z_95,
 ) -> DataFrame:
     """Audit ``df`` against ``validator``'s rules on a deterministic
     ``fraction`` hash-sample of rows keyed by ``key``.
@@ -143,45 +178,24 @@ def sampled_audit(
     ReusedExchange is not guaranteed across them). Nothing shuffles
     at data scale except the tiny (path, count) aggregate.
     """
-    float(z)  # fail fast on a non-numeric quantile fragment
     sample = df.where(sample_predicate(key, fraction, seed))
     annotated = validator.validate(sample).annotated
+    any_row = F.when(F.col("n_violations") > 0, F.array(F.lit(_ANY))) \
+        .otherwise(F.array().cast("array<string>"))
+    counts = _with_denominator(
+        _count_markers(annotated, any_row, _distinct_paths()),
+        "sampled_rows")
 
-    paths = F.array_distinct(
-        F.transform(F.col("violations"), lambda v: v["path"]))
-    markers = F.concat(
-        F.array(F.lit(_N_MARK)),
-        F.when(F.col("n_violations") > 0, F.array(F.lit(_ANY)))
-        .otherwise(F.array().cast("array<string>")),
-        paths,
-    )
-    # post-aggregate frame is O(distinct violation paths) = O(rules),
-    # so a single-partition window over it is driver-cheap
-    everything = Window.partitionBy(F.lit(0))
-    counts = (
-        annotated.select(F.explode(markers).alias("path"))
-        .groupBy("path")
-        .agg(F.count(F.lit(1)).alias("violating_rows"))
-        .withColumn(
-            "sampled_rows",
-            F.max(F.when(F.col("path") == _N_MARK,
-                         F.col("violating_rows"))).over(everything),
-        )
-    )
-
-    lo, hi = wilson_sql("violating_rows", "sampled_rows", z)
+    lo, hi = wilson_sql("violating_rows", "sampled_rows", Z_95)
     rate = rate_sql("violating_rows", "sampled_rows")
-    return (
-        counts.where(F.col("path") != _N_MARK)
-        .select(
-            "path",
-            "sampled_rows",
-            "violating_rows",
-            F.expr(rate).alias("rate"),
-            F.expr(lo).alias("rate_lo"),
-            F.expr(hi).alias("rate_hi"),
-            F.expr(verdict_sql(lo, hi, budget)).alias("verdict"),
-        )
+    return counts.select(
+        "path",
+        "sampled_rows",
+        "violating_rows",
+        F.expr(rate).alias("rate"),
+        F.expr(lo).alias("rate_lo"),
+        F.expr(hi).alias("rate_hi"),
+        F.expr(verdict_sql(lo, hi, budget)).alias("verdict"),
     )
 
 
@@ -234,18 +248,8 @@ def exact_rates(
 
     annotated = validator.validate(df).annotated
     wanted = F.array(*[F.lit(p) for p in sorted(set(paths))])
-    observed = F.array_intersect(
-        F.array_distinct(
-            F.transform(F.col("violations"), lambda v: v["path"])),
-        wanted,
-    )
-    markers = F.concat(F.array(F.lit(_N_MARK)), observed)
-
-    counts = (
-        annotated.select(F.explode(markers).alias("path"))
-        .groupBy("path")
-        .agg(F.count(F.lit(1)).alias("violating_rows"))
-    )
+    counts = _count_markers(
+        annotated, F.array_intersect(_distinct_paths(), wanted))
     # re-attach zero-count paths: a tiny literal frame (O(paths)),
     # joined AFTER the aggregate — never touches the data scan. The
     # ``__n__`` marker rides through the SAME join (a second filtered
@@ -253,22 +257,13 @@ def exact_rates(
     # does not guarantee ReusedExchange across branches).
     requested = spark.createDataFrame(
         [(p,) for p in sorted(set(paths)) + [_N_MARK]], "path string")
-    everything = Window.partitionBy(F.lit(0))
-    full = (
-        requested
-        .join(F.broadcast(counts), "path", "left")
-        .select(
+    full = _with_denominator(
+        requested.join(F.broadcast(counts), "path", "left").select(
             "path",
             F.coalesce(F.col("violating_rows"),
                        F.lit(0).cast("bigint")).alias("violating_rows"),
-        )
-        .withColumn(
-            "total_rows",
-            F.max(F.when(F.col("path") == _N_MARK,
-                         F.col("violating_rows"))).over(everything),
-        )
-        .where(F.col("path") != _N_MARK)
-    )
+        ),
+        "total_rows")
     rate = rate_sql("violating_rows", "total_rows")
     return full.select(
         "path",

@@ -48,9 +48,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..dynamic.interpreter import (
-    _PATH_TOKEN,
     _POLICY_KEYS,
     _Policy,
+    _path_steps,
     _truthy,
     as_list,
 )
@@ -239,30 +239,29 @@ def _child_ref(parent: FieldRef, name: str, opts: CompilerOpts) -> Optional[Fiel
 
 
 def _resolve(scope: Scope, path_str: str, opts: CompilerOpts) -> Optional[FieldRef]:
-    text = str(path_str)
-    start = scope
-    if text.startswith("^"):
-        start = scope.root
-        text = text[1:].lstrip(".")
+    """The ref a ``dependencies``/``excludes`` path names, or None
+    where it is undefined; the steps are the interpreter's own
+    (``_path_steps``), so both engines read one path grammar."""
+    anchored, steps = _path_steps(str(path_str))
+    start = scope.root if anchored else scope
     ref: Optional[FieldRef] = None
-    for m in _PATH_TOKEN.finditer(text):
-        key, idx = m.group(1), m.group(2)
-        if idx is not None:
+    for step in steps:
+        if type(step) is int:
             # `[i]` list index (stack.hh:146-172): descend into an
             # array element; out-of-range → undefined, mirroring the
-            # dynamic interpreter's lookup_path.
+            # dynamic interpreter's ``_follow``.
             if (ref is None or ref.value is None
                     or not isinstance(ref.dtype, T.ArrayType)):
                 return None
-            i = int(idx)
             ref = FieldRef(
-                F.try_element_at(ref.value, F.lit(i + 1)),
+                F.try_element_at(ref.value, F.lit(step + 1)),
                 ref.dtype.elementType,
                 ref.defined
-                & (F.coalesce(F.size(ref.value), F.lit(0)) > i),
+                & (F.coalesce(F.size(ref.value), F.lit(0)) > step),
             )
             continue
-        ref = start.get(key, opts) if ref is None else _child_ref(ref, key, opts)
+        ref = (start.get(step, opts) if ref is None
+               else _child_ref(ref, step, opts))
         if ref is None:
             return None
     return ref

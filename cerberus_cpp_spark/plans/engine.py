@@ -177,7 +177,7 @@ class TableValidator:
         viols, fields = _compile_mapping(
             self.schema, row_ref(df_schema), "^", None, self._opts(),
             self._policy, exempt=exempt)
-        norm_cols = [F.col(k) for k in reversed(self.extra_cols)
+        norm_cols = [F.col(k) for k in self.extra_cols
                      if k in df_schema.fieldNames()]
         norm_cols += [ref.value.alias(name) for name, ref in fields
                       if ref.value is not None]

@@ -6,7 +6,7 @@ suggestion" re-expressed in the reference's rule vocabulary,
 cerberus schema that the profiled data itself satisfies — the
 starting point a user edits instead of writing rules from scratch.
 
-Emitted rules per column (all deterministic for ``exact=True``):
+Emitted rules per column (all deterministic):
 
 - ``type``: Spark dtype → reference type name (integer/float/string/
   boolean/list/dict). Date/timestamp/binary columns get NO type rule —
@@ -19,7 +19,7 @@ Emitted rules per column (all deterministic for ``exact=True``):
   bounds (NaN/±inf reach min/max: NaN sorts greatest in Spark)
   suppress the pair instead of crashing ``math.floor`` (ADVICE r3).
 - ``allowed`` for low-cardinality string columns: the full sorted
-  distinct set when it has ≤ ``allowed_max_distinct`` values.
+  distinct set when it has ≤ ``ALLOWED_MAX_DISTINCT`` (16) values.
 - ``minlength``/``maxlength`` for array columns: observed size range.
 - ``regex`` for fixed-shape string columns (round 4): every non-null
   value shares one character-class SHAPE (digits→9, a-z→a, A-Z→A via
@@ -29,31 +29,28 @@ Emitted rules per column (all deterministic for ``exact=True``):
   quantifiers (``[A-Z][a-z][a-z]…``) so a SQL oracle can rebuild the
   exact string with three ``replace`` calls. Emitted only when no
   ``allowed`` rule fired (allowed is strictly stronger) and all
-  values are ≤ ``max_shape_len`` chars.
+  values are ≤ ``MAX_SHAPE_LEN`` (64) chars.
 
-Quantile ("robust") bounds — opt-in via ``robust_bounds=(lo_q,
-hi_q)``: numeric min/max derive from quantiles instead of observed
-extremes, so the suggestion intentionally FLAGS tail outliers; the
-self-consistency property below does not hold by design then.
-``quantile_method="exact"`` uses Spark's exact ``percentile``
-aggregate inside the same single pass-1 job (linear interpolation,
-matching DuckDB's ``quantile_cont`` for the oracle);
-``"tdigest"`` is the 100 TB path — ALL numeric columns' sketches in
-ONE melted scan (``checks.tdigests_of``), shuffling only centroid
-arrays, never values.
+Every column of the frame is profiled. Quantile ("robust") bounds —
+opt-in via ``robust_bounds=(lo_q, hi_q)``: numeric min/max derive
+from quantiles instead of observed extremes, so the suggestion
+intentionally FLAGS tail outliers; the self-consistency property
+below does not hold by design then. The quantiles are Spark's exact
+``percentile`` aggregate inside the same single pass-1 job (linear
+interpolation, matching DuckDB's ``quantile_cont`` for the oracle).
 
 Scale shape (100 TB): pass 1 is ONE aggregation (map-side partials)
 computing null counts, min/max, shape min/max, array-size bounds,
 quantiles when requested, and an ``approx_count_distinct``
 PRE-FILTER; pass 2 is ONE job collecting the exact distinct sets of
 ALL admitted string columns together (capped ``collect_set`` per
-column — the prefilter bounds each set to ~2×``allowed_max_distinct``
+column — the prefilter bounds each set to ~2×``ALLOWED_MAX_DISTINCT``
 values, deduped map-side). No full-column collects, no per-column
 scans (round 4: previously one driver job PER admitted column).
 
 Self-consistency property (pinned in tests):
 ``TableValidator(suggest_rules(df)).validate(df).is_valid()`` is
-always True for the default arguments — a suggestion that flags the
+always True without ``robust_bounds`` — a suggestion that flags the
 data it was derived from would be useless.
 """
 
@@ -90,6 +87,10 @@ _DIGITS = "0123456789"
 # a plain SQL replace-chain produce byte-identical patterns
 _REGEX_META = set(".^$*+?()[]{}|\\")
 _CLASS = {"9": "[0-9]", "a": "[a-z]", "A": "[A-Z]"}
+#: a string column with at most this many distinct values gets ``allowed``
+ALLOWED_MAX_DISTINCT = 16
+#: a string column with a longer value gets no ``regex``
+MAX_SHAPE_LEN = 64
 
 
 def _type_name(dtype: T.DataType) -> str | None:
@@ -121,28 +122,19 @@ def shape_to_regex(shape: str) -> str:
 def suggest_rules(
     df: DataFrame,
     *,
-    allowed_max_distinct: int = 16,
-    cols: list[str] | None = None,
-    regex_shapes: bool = True,
-    max_shape_len: int = 64,
     robust_bounds: tuple[float, float] | None = None,
-    quantile_method: str = "exact",
-    compression: int = 100,
 ) -> dict:
-    """Propose a rules dict the profiled ``df`` satisfies (for the
-    default arguments). See module docstring for the emitted
+    """Propose a rules dict the profiled ``df`` satisfies (without
+    ``robust_bounds``). See module docstring for the emitted
     vocabulary and the two-job shape."""
     if robust_bounds is not None:
         lo_q, hi_q = float(robust_bounds[0]), float(robust_bounds[1])
         if not (0.0 <= lo_q <= hi_q <= 1.0):
             raise ValueError(f"robust_bounds out of order: "
                              f"{robust_bounds}")
-        if quantile_method not in ("exact", "tdigest"):
-            raise ValueError(f"unknown quantile_method "
-                             f"{quantile_method!r}")
-    # quantile profiles (exact percentiles / t-digests) are heavy per
-    # row, so a parallelism-starved raw scan (one small parquet file =
-    # ONE split) leaves cores idle — the shared fan-out policy
+    # quantile profiles (exact percentiles) are heavy per row, so a
+    # parallelism-starved raw scan (one small parquet file = ONE
+    # split) leaves cores idle — the shared fan-out policy
     # (identity for derived frames and at real scale) spreads them
     # (measured -0.7 s at sf0.1 on the robust-bounds profile). The
     # plain min/max/shape profile is deliberately NOT gated: it is
@@ -152,10 +144,7 @@ def suggest_rules(
         from ..operators.partitioning import fanout_gate
 
         df = fanout_gate(df)
-    fields = [f for f in df.schema.fields
-              if cols is None or f.name in cols]
-    num_fields = [f for f in fields
-                  if isinstance(f.dataType, _NUMERIC)]
+    fields = df.schema.fields
     aggs: list[Column] = [F.count(F.lit(1)).alias("__n")]
     for f in fields:
         c = F.col(f.name)
@@ -165,7 +154,7 @@ def suggest_rules(
         if isinstance(f.dataType, _NUMERIC):
             aggs.append(F.min(c).alias(f"__min_{f.name}"))
             aggs.append(F.max(c).alias(f"__max_{f.name}"))
-            if robust_bounds is not None and quantile_method == "exact":
+            if robust_bounds is not None:
                 # NaN would sort greatest and poison the hi quantile;
                 # ±inf would crash the floor below — exclude BOTH from
                 # the quantile basis (min/max still see them, and the
@@ -182,30 +171,20 @@ def suggest_rules(
             # decision is pass 2's exact, bounded collect_set
             aggs.append(F.approx_count_distinct(c, 0.05)
                         .alias(f"__adist_{f.name}"))
-            if regex_shapes:
-                sh = F.when(F.length(c) <= max_shape_len, shape_of(c))
-                aggs.append(F.min(sh).alias(f"__shmin_{f.name}"))
-                aggs.append(F.max(sh).alias(f"__shmax_{f.name}"))
-                aggs.append(F.max(F.length(c))
-                            .alias(f"__len_{f.name}"))
+            sh = F.when(F.length(c) <= MAX_SHAPE_LEN, shape_of(c))
+            aggs.append(F.min(sh).alias(f"__shmin_{f.name}"))
+            aggs.append(F.max(sh).alias(f"__shmax_{f.name}"))
+            aggs.append(F.max(F.length(c)).alias(f"__len_{f.name}"))
         elif isinstance(f.dataType, T.ArrayType):
             aggs.append(F.min(F.size(c)).alias(f"__minsz_{f.name}"))
             aggs.append(F.max(F.size(c)).alias(f"__maxsz_{f.name}"))
     stats = df.agg(*aggs).collect()[0].asDict()
 
-    digests = None
-    if robust_bounds is not None and quantile_method == "tdigest" \
-            and num_fields:
-        from ..operators.checks import tdigests_of
-
-        digests = tdigests_of(df, [f.name for f in num_fields],
-                              compression=compression)
-
     # pass 2 — ONE batched job: exact distinct sets for every string
     # column the prefilter admitted, each capped to
-    # allowed_max_distinct+1 values (collect_set dedupes map-side, so
+    # ALLOWED_MAX_DISTINCT+1 values (collect_set dedupes map-side, so
     # the shuffle moves at most the tiny set per column per partition)
-    cap = allowed_max_distinct
+    cap = ALLOWED_MAX_DISTINCT
     admitted = [
         f.name for f in fields
         if f"__adist_{f.name}" in stats
@@ -233,15 +212,8 @@ def suggest_rules(
         if f"__min_{f.name}" in stats:
             lo, hi = stats[f"__min_{f.name}"], stats[f"__max_{f.name}"]
             if robust_bounds is not None and lo is not None:
-                if digests is not None:
-                    d = digests.get(f.name)
-                    if d is not None and d.total > 0:
-                        lo, hi = d.quantile(lo_q), d.quantile(hi_q)
-                    else:  # all-NULL/non-finite column
-                        lo = hi = None
-                else:
-                    lo = stats.get(f"__qlo_{f.name}")
-                    hi = stats.get(f"__qhi_{f.name}")
+                lo = stats[f"__qlo_{f.name}"]
+                hi = stats[f"__qhi_{f.name}"]
             if lo is not None and hi is not None:
                 if tname == "integer" and robust_bounds is None:
                     r["min"], r["max"] = int(lo) - 1, int(hi) + 1
@@ -271,12 +243,12 @@ def suggest_rules(
             smax = stats[f"__shmax_{f.name}"]
             maxlen = stats[f"__len_{f.name}"]
             # single shape over ALL values (values longer than
-            # max_shape_len shape to NULL, so the length gate is what
+            # MAX_SHAPE_LEN shape to NULL, so the length gate is what
             # guarantees min/max saw every value), at least one class
             # char (a constant literal column is allowed's job)
             if (smin is not None and smin == smax
                     and maxlen is not None
-                    and maxlen <= max_shape_len
+                    and maxlen <= MAX_SHAPE_LEN
                     and any(ch in "9aA" for ch in smin)):
                 r["regex"] = shape_to_regex(smin)
         if r:

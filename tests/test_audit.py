@@ -127,8 +127,6 @@ def test_empty_sample_and_bad_fraction(spark) -> None:
         sample_predicate("id", 0.0)
     with pytest.raises(ValueError):
         sample_predicate("id", 1.5)
-    with pytest.raises(ValueError):
-        sampled_audit(tv, _frame(spark), "id", z="sqrt(2)")
 
 
 def test_escalation_filter(spark) -> None:

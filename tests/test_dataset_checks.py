@@ -38,9 +38,7 @@ def test_column_stats_single_pass(spark, orders) -> None:
 def test_hll_accuracy_within_rsd(spark, orders) -> None:
     got = {
         r["col_name"]: r["approx_distinct"]
-        for r in checks.column_stats(
-            orders, ["o_custkey"], rsd=0.05
-        ).collect()
+        for r in checks.column_stats(orders, ["o_custkey"]).collect()
     }
     exact = orders.select("o_custkey").distinct().count()
     assert abs(got["o_custkey"] - exact) / exact < 0.15  # 3×rsd
@@ -58,17 +56,14 @@ def test_quantile_drift_sketch_detects_shift(spark, orders) -> None:
     shifted = orders.withColumn(
         "o_totalprice", F.col("o_totalprice") * 2
     )
-    res = checks.quantile_drift(orders, shifted, "o_totalprice",
-                                rel_tolerance=0.1)
+    res = checks.quantile_drift(orders, shifted, "o_totalprice")
     assert res["drifted"] and res["max_rel_gap"] > 0.4
 
 
 def test_cross_modal_conflicts(spark) -> None:
-    """One melted scan finds both conflict families; thresholds and
-    NULL exclusion pinned; single-aggregation plan (≤2 Exchanges:
-    partial-distinct + final)."""
-    import pytest
-
+    """One melted scan finds both conflict families; the two-distinct
+    threshold and NULL exclusion pinned; single-aggregation plan (≤2
+    Exchanges: partial-distinct + final)."""
     from cerberus_cpp_spark.operators.checks import cross_modal_conflicts
 
     df = spark.createDataFrame(
@@ -87,21 +82,13 @@ def test_cross_modal_conflicts(spark) -> None:
         ("phash~caption", "1"): (2, 2),
         ("caption~image_id", "c"): (4, 4),
     }
-    # min_distinct raises the bar
-    rows3 = {r["key"]
-             for r in cross_modal_conflicts(df, min_distinct=3).collect()}
-    assert rows3 == {"c"}
-    with pytest.raises(ValueError):
-        cross_modal_conflicts(df, pairs=[])
-    with pytest.raises(ValueError):
-        cross_modal_conflicts(df, min_distinct=1)
     plan = (cross_modal_conflicts(df)
             ._jdf.queryExecution().executedPlan().toString())
     assert plan.count("Exchange") <= 2, plan
 
 
 def test_missing_time_buckets(spark) -> None:
-    from datetime import datetime, timezone
+    from datetime import datetime, timedelta, timezone
 
     from cerberus_cpp_spark.operators.checks import missing_time_buckets
 
@@ -119,31 +106,13 @@ def test_missing_time_buckets(spark) -> None:
     base = int(datetime(2024, 1, 1, tzinfo=timezone.utc).timestamp()
                ) // 3600
     assert gaps == [(base + 3, base + 4, 2), (base + 6, base + 6, 1)]
-    # no gaps → empty; custom bucket width honored
+    # no gaps → empty; every other hour of 60 → 29 one-hour gaps
     dense = spark.createDataFrame(
-        [(i, t(0, i)) for i in range(60)], "id long, ts timestamp")
+        [(i, t(0) + timedelta(hours=i)) for i in range(60)],
+        "id long, ts timestamp")
     assert missing_time_buckets(dense, "ts").count() == 0
-    assert missing_time_buckets(
-        dense.where("id % 2 = 0"), "ts",
-        bucket_seconds=60).count() == 29  # every odd minute missing
-    with pytest.raises(ValueError):
-        missing_time_buckets(df, "ts", bucket_seconds=0)
-
-
-def test_missing_time_buckets_grouped(spark) -> None:
-    from datetime import datetime, timezone
-
-    from cerberus_cpp_spark.operators.checks import missing_time_buckets
-
-    def t(h):
-        return datetime(2024, 1, 1, h, tzinfo=timezone.utc) \
-            .replace(tzinfo=None)
-
-    rows = [("a", t(0)), ("a", t(3)), ("b", t(0)), ("b", t(1))]
-    df = spark.createDataFrame(rows, "g string, ts timestamp")
-    got = {(r["g"], r["n_missing"]) for r in
-           missing_time_buckets(df, "ts", group_col="g").collect()}
-    assert got == {("a", 2)}  # only a has a hole; b is dense
+    odd = missing_time_buckets(dense.where("id % 2 = 0"), "ts").collect()
+    assert len(odd) == 29 and {r["n_missing"] for r in odd} == {1}
 
 
 def test_group_staleness(spark) -> None:
@@ -179,7 +148,7 @@ def test_volume_anomalies(spark) -> None:
         n = 60 if h == 7 else (1 if h == 13 else 6)
         rows += [(h * 100 + m, t(h, m)) for m in range(n)]
     df = spark.createDataFrame(rows, "id long, ts timestamp")
-    got = volume_anomalies(df, "ts", z=3.5).collect()
+    got = volume_anomalies(df, "ts").collect()
     # 18 of 20 hours identical -> MAD = 0 -> robust_z NULL and ANY
     # deviation from the median flags
     assert {r["cnt"] for r in got} == {60, 1}
@@ -190,16 +159,9 @@ def test_volume_anomalies(spark) -> None:
         n = 60 if h == 7 else 5 + h % 4
         rows2 += [(h * 100 + m, t(h, m)) for m in range(n)]
     df2 = spark.createDataFrame(rows2, "id long, ts timestamp")
-    hot = volume_anomalies(df2, "ts", z=3.5).collect()
+    hot = volume_anomalies(df2, "ts").collect()
     assert {r["cnt"] for r in hot} == {60}
     assert all(r["mad"] > 0 and r["robust_z"] > 3.5 for r in hot)
-    # grouped: the storm only in group 'a'
-    g = df.withColumn("g", F.expr(
-        "CASE WHEN id < 2000 THEN 'a' ELSE 'b' END"))
-    grouped = volume_anomalies(g, "ts", group_col="g").collect()
-    assert all(r["g"] == "a" or r["cnt"] in (60, 1) for r in grouped)
-    with pytest.raises(ValueError):
-        volume_anomalies(df, "ts", bucket_seconds=0)
 
 
 def test_missing_time_buckets_property(spark) -> None:
@@ -241,10 +203,11 @@ def test_missing_time_buckets_property(spark) -> None:
 
 
 def test_missing_time_buckets_max_buckets_guard(spark) -> None:
-    """ADVICE r4: one corrupt epoch-0 outlier with fine bucketing must
-    fail with an actionable message, not explode a billion-row
-    sequence. The guard is in-plan (assert_true woven into the
-    exploded expression, so pruning cannot drop it)."""
+    """ADVICE r4: one corrupt epoch-0 outlier must fail with an
+    actionable message, not explode an outsized sequence. The guard
+    is in-plan (assert_true woven into the exploded expression, so
+    pruning cannot drop it); the test lowers ``max_buckets`` under the
+    outlier's 54-year span of hours."""
     from datetime import datetime, timezone
 
     from pyspark.errors.exceptions.captured import SparkRuntimeException
@@ -258,10 +221,10 @@ def test_missing_time_buckets_max_buckets_guard(spark) -> None:
         [(1, t(1970)), (2, t(2024)), (3, t(2024))],
         "id long, ts timestamp")
     with pytest.raises(SparkRuntimeException, match="max_buckets"):
-        missing_time_buckets(df, "ts", bucket_seconds=60).collect()
-    # same data passes with a sane max_buckets for coarse buckets
-    wide = missing_time_buckets(
-        df, "ts", bucket_seconds=86400 * 365, max_buckets=100)
-    assert wide.count() > 0
+        missing_time_buckets(df, "ts", max_buckets=100_000).collect()
+    # a one-year span passes under the default bound
+    year = df.where("id > 1").unionByName(spark.createDataFrame(
+        [(4, t(2023))], "id long, ts timestamp"))
+    assert missing_time_buckets(year, "ts").count() > 0
     with pytest.raises(ValueError):
         missing_time_buckets(df, "ts", max_buckets=0)

@@ -21,6 +21,18 @@ own definitions by string.
 Library code that only its own tests reach is deleted together with
 those tests; the few definitions that tests need as fixtures or oracles
 are listed in ``ALLOWED`` with the reason they stay.
+
+The options pass applies the same rule one level down. In the layers
+the system is made of (``OPTION_SCOPE``), every defaulted parameter of
+a public function, public method or public class's ``__init__`` must
+be set to a value other than its default by a real caller: the callers
+above or library code outside the function itself (:class:`_Options`
+says how a call binds). An option only tests set keeps its whole code
+path alive, so it becomes its default constant, or a value worked out
+from the inputs; the few that stay without a caller are listed in
+``ALLOWED_OPTIONS`` with one of three reasons: the reference's
+policies, its extension points, or a cost bound that tests lower to
+reach the bounded path.
 """
 
 from __future__ import annotations
@@ -304,3 +316,342 @@ def test_name_collision_no_longer_hides_dead_code(colliding) -> None:
         "sub/b.py::helper", "sub/c.py::size", "sub/c.py::run"}
     bare = {_bare(k) for k in reached}
     assert all(_bare(k) in bare for k in defs)  # what bare names saw
+
+
+# ---------------------------------------------------------------------------
+# Options: a defaulted parameter whose other values only tests pass keeps
+# its whole code path alive, so each needs a real caller too.
+# ---------------------------------------------------------------------------
+
+#: the layers the system is made of; their options are checked
+OPTION_SCOPE = ("plans/", "dynamic/", "operators/checks.py")
+#: the three reasons an option may stay without a real caller
+OPTION_REASONS = ("policy:", "extension point:", "cost bound:")
+
+# "<module>::<function or Class.method>(<parameter>)" -> why it stays.
+ALLOWED_OPTIONS = {
+    "dynamic/interpreter.py::Validator.__init__(require_all)":
+        "policy: the reference's require_all",
+    "plans/engine.py::TableValidator.__init__(require_all)":
+        "policy: the reference's require_all",
+    "dynamic/spark.py::validate_json(allow_unknown)":
+        "policy: the reference's allow_unknown",
+    "dynamic/spark.py::validate_json(purge_unknown)":
+        "policy: the reference's purge_unknown",
+    "dynamic/spark.py::validate_json(require_all)":
+        "policy: the reference's require_all",
+    "dynamic/interpreter.py::Validator.validate(schema)":
+        "extension point: the reference's validate(document, schema)",
+    "dynamic/spark.py::validate_json(configure)":
+        "extension point: registers custom rules and types on each "
+        "worker's Validator",
+    "dynamic/spark.py::validate_json(registry)":
+        "extension point: registerSchema for the schemaless path",
+    "plans/engine.py::TableValidator.__init__(registry)":
+        "extension point: registerSchema for the columnar path",
+    "plans/engine.py::TableValidator.register_column_rule(interpreter_fn)":
+        "extension point: registerRule's rule function",
+    "plans/engine.py::TableValidator.register_column_rule(priority)":
+        "extension point: registerRule's priority",
+    "plans/engine.py::TableValidator.register_spark_type(convertible)":
+        "extension point: registerType's convertibility check",
+    "plans/engine.py::TableValidator.register_spark_type(decode)":
+        "extension point: registerType's ordering (types.hh:16-21)",
+    "plans/engine.py::TableValidator.register_spark_type(literal)":
+        "extension point: registerType's ordering of schema literals",
+    "plans/engine.py::TableValidator.register_spark_type(py_decode)":
+        "extension point: registerType for the interpreter twin",
+    "operators/checks.py::missing_time_buckets(max_buckets)":
+        "cost bound: tests lower it to reach the guarded explode",
+}
+
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _defaults(node: ast.FunctionDef) -> dict[str, ast.expr]:
+    """Parameter name -> default of ``node``'s defaulted parameters."""
+    a = node.args
+    pos = a.posonlyargs + a.args
+    out = dict(zip([p.arg for p in pos[len(pos) - len(a.defaults):]],
+                   a.defaults))
+    out.update((p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+               if d is not None)
+    return out
+
+
+def _params(node: ast.FunctionDef | ast.Lambda) -> set[str]:
+    a = node.args
+    return {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}
+
+
+def _same(value: ast.expr, default: ast.expr) -> bool:
+    """Whether ``value`` is written as the default itself."""
+    try:
+        v, d = ast.literal_eval(value), ast.literal_eval(default)
+    except (ValueError, TypeError, SyntaxError, MemoryError,
+            RecursionError):
+        return ast.dump(value) == ast.dump(default)
+    return type(v) is type(d) and v == d
+
+
+class _Options:
+    """Which defaulted parameters of the library's functions and
+    methods some real caller binds to a value other than the default.
+
+    A call is resolved like a use in the definition pass
+    (:meth:`_Library.resolve`); a name that no module explains matches
+    every function and method of that name, bound both with and
+    without a leading ``self``, so a collision can only count an
+    option as set, never miss one. A class call reaches the class's
+    ``__init__`` (inherited through library bases). A positional
+    argument, a keyword, a ``*args`` (every later parameter) and a
+    ``**kwargs`` all bind: a ``**kwargs`` that forwards the enclosing
+    function's own ``**kwargs`` binds what that function's callers put
+    into it, any other one binds everything. A parameter forwarded
+    under an equal default is set only where the enclosing function's
+    own parameter is set. A call inside the function itself does not
+    count."""
+
+    def __init__(self, library: _Library, callers: list[Path]) -> None:
+        self.library = library
+        #: "<module>::<function or Class.method>" -> its node
+        self.funcs: dict[str, ast.FunctionDef] = {}
+        self.classes: dict[str, tuple[ast.ClassDef, str]] = {}
+        for module, tree in library.trees.items():
+            for node in tree.body:
+                if isinstance(node, _FUNCS):
+                    self.funcs[f"{module}::{node.name}"] = node
+                elif isinstance(node, ast.ClassDef):
+                    self.classes[f"{module}::{node.name}"] = (node, module)
+                    for item in node.body:
+                        if isinstance(item, _FUNCS):
+                            self.funcs[f"{module}::{node.name}.{item.name}"] \
+                                = item
+        self.key_of = {id(node): key for key, node in self.funcs.items()}
+        self.by_name = defaultdict(list)
+        for key in self.funcs:
+            self.by_name[key.split("::")[1].split(".")[-1]].append(key)
+        #: (call, enclosing functions, the functions it may reach)
+        self.sites = []
+        for module, tree in library.trees.items():
+            self._collect(tree, module, library.imports[module], ())
+        for path in callers:
+            tree = ast.parse(path.read_text())
+            self._collect(tree, None, library.import_table(None, tree), ())
+        #: key -> parameters some real call binds to a non-default value
+        self.bound: dict[str, set[str]] = defaultdict(set)
+        #: key -> keyword names callers put into its ``**kwargs``
+        #: ("*" where unknown)
+        self.spread: dict[str, set[str]] = defaultdict(set)
+        size = -1
+        while size != (size := sum(map(len, self.bound.values()))
+                       + sum(map(len, self.spread.values()))):
+            for site in self.sites:
+                self._bind(*site)
+
+    def _collect(self, node: ast.AST, module: str | None, table: dict,
+                 stack: tuple) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.Call):
+                targets = self._targets(child.func, module, table)
+                if targets:
+                    self.sites.append((child, stack, targets))
+            self._collect(child, module, table, stack + (child,) if
+                          isinstance(child, _FUNCS + (ast.Lambda,))
+                          else stack)
+
+    def _init(self, key: str, depth: int = 0) -> list[str]:
+        """The ``__init__`` a call of class ``key`` reaches."""
+        if f"{key}.__init__" in self.funcs:
+            return [f"{key}.__init__"]
+        node, module = self.classes[key]
+        return [init for base in node.bases if isinstance(base, ast.Name)
+                and depth < 8
+                for k in self.library.resolve(module, base.id)
+                if k in self.classes for init in self._init(k, depth + 1)]
+
+    def _targets(self, func: ast.expr, module: str | None, table: dict
+                 ) -> list[tuple[str, int | None]]:
+        """(function key, leading parameters the call binds implicitly;
+        None where unknown) of every function the call may reach."""
+        if isinstance(func, ast.Name):
+            keys = self.library.resolve(module, func.id, table)
+        elif isinstance(func, ast.Attribute):
+            modules = [source for source, imported in table.get(
+                func.value.id, ()) if imported is None] if isinstance(
+                func.value, ast.Name) else []
+            keys = set().union(*(self.library.resolve(m, func.attr)
+                                 for m in modules)) or {func.attr}
+        else:
+            return []
+        out = []
+        for key in keys:
+            if key in self.funcs:
+                out.append((key, 0))
+            elif key in self.classes:
+                out += [(init, 1) for init in self._init(key)]
+            elif "::" not in key:  # a bare name
+                out += [(k, None) for k in self.by_name[key]]
+                out += [(init, 1) for k in self.classes if _bare(k) == key
+                        for init in self._init(k)]
+        return out
+
+    def _owner(self, name: str, stack: tuple):
+        """The innermost enclosing function that has parameter
+        ``name``, or None."""
+        for fn in reversed(stack):
+            if name in _params(fn) or fn.args.kwarg is not None and \
+                    fn.args.kwarg.arg == name:
+                return fn
+        return None
+
+    def _sets(self, value: ast.expr, default: ast.expr, stack: tuple
+              ) -> bool:
+        """Whether binding ``value`` sets an option whose default is
+        ``default``."""
+        if _same(value, default):
+            return False
+        if isinstance(value, ast.Name):
+            fn = self._owner(value.id, stack)
+            key = self.key_of.get(id(fn))
+            if key is not None and not any(
+                    isinstance(n, ast.Name) and n.id == value.id
+                    and not isinstance(n.ctx, ast.Load)
+                    for n in ast.walk(fn)):
+                outer = _defaults(fn).get(value.id)
+                if outer is not None and _same(outer, default):
+                    return value.id in self.bound[key]
+        return True
+
+    def _bind(self, call: ast.Call, stack: tuple, targets: list) -> None:
+        inside = {self.key_of[id(fn)] for fn in stack
+                  if id(fn) in self.key_of}
+        for key, lead in targets:
+            if key in inside:
+                continue
+            node = self.funcs[key]
+            a = node.args
+            positional = [p.arg for p in a.posonlyargs + a.args]
+            named = set(positional) | {p.arg for p in a.kwonlyargs}
+            defaults = _defaults(node)
+            pairs: list[tuple[str, ast.expr | None]] = []  # None: unknown
+            for skip in ((0, 1) if lead is None else (lead,)):
+                for i, arg in enumerate(call.args):
+                    if isinstance(arg, ast.Starred):
+                        pairs += [(p, None) for p in positional[skip + i:]]
+                        break
+                    if skip + i < len(positional):
+                        pairs.append((positional[skip + i], arg))
+            for kw in call.keywords:
+                if kw.arg is not None:
+                    pairs.append((kw.arg, kw.value))
+                    continue
+                names = {"*"}
+                if isinstance(kw.value, ast.Name):
+                    fn = self._owner(kw.value.id, stack)
+                    outer = self.key_of.get(id(fn))
+                    if outer is not None and fn.args.kwarg is not None \
+                            and fn.args.kwarg.arg == kw.value.id:
+                        names = self.spread[outer]
+                elif isinstance(kw.value, ast.Dict) and all(
+                        isinstance(k, ast.Constant) for k in kw.value.keys):
+                    names = {k.value for k in kw.value.keys}
+                pairs += [(p, None) for p in
+                          (named | {"*"} if "*" in names else names)]
+            for name, value in pairs:
+                if name in defaults:
+                    if value is None or self._sets(value, defaults[name],
+                                                   stack):
+                        self.bound[key].add(name)
+                elif name not in named and a.kwarg is not None:
+                    self.spread[key].add(name)
+
+    def options(self) -> set[str]:
+        """``"<key>(<parameter>)"`` of every defaulted parameter of a
+        public function, public method or public class's ``__init__``
+        in :data:`OPTION_SCOPE`."""
+        out = set()
+        for key, node in self.funcs.items():
+            module, name = key.split("::")
+            if not module.startswith(OPTION_SCOPE):
+                continue
+            if any(part.startswith("_") for part in name.split(".")) \
+                    and not (name.count(".") == 1
+                             and not name.startswith("_")
+                             and name.endswith(".__init__")):
+                continue
+            out |= {f"{key}({p})" for p in _defaults(node)}
+        return out
+
+    def unset(self) -> set[str]:
+        """The options no real caller sets."""
+        return {o for o in self.options()
+                if o[o.index("(") + 1:-1] not in self.bound[o[:o.index("(")]]}
+
+
+def _option_faults(found: _Options, allowed: dict[str, str]) -> list[str]:
+    """What is wrong with ``allowed`` against the options ``found``."""
+    unset = found.unset()
+    gone = sorted(allowed.keys() - found.options())
+    faults = [f"only tests set {o}: make it its default or a value worked "
+              "out from the inputs, or list it in ALLOWED_OPTIONS with one "
+              f"of the reasons {OPTION_REASONS}"
+              for o in sorted(unset - allowed.keys())]
+    faults += [f"ALLOWED_OPTIONS names a gone option: {o}" for o in gone]
+    faults += [f"ALLOWED_OPTIONS names an option a caller sets: {o}"
+               for o in sorted(allowed.keys() - unset - set(gone))]
+    faults += [f"ALLOWED_OPTIONS gives no allowed reason for {o}"
+               for o, why in sorted(allowed.items())
+               if not why.startswith(OPTION_REASONS)]
+    return faults
+
+
+def test_every_option_has_a_non_test_caller() -> None:
+    faults = _option_faults(_Options(_Library(LIB), CALLERS),
+                            ALLOWED_OPTIONS)
+    assert not faults, "\n".join(faults)
+
+
+@pytest.fixture
+def optioned(tmp_path: Path) -> tuple[Path, list[Path]]:
+    """A library function with three options: ``limit`` bound by
+    position, ``exact`` through a wrapper's ``**kw``, and ``mode``
+    that only a test would set (the caller passes its default)."""
+    lib = tmp_path / PKG
+    (lib / "plans").mkdir(parents=True)
+    (lib / "__init__.py").write_text("")
+    (lib / "plans" / "__init__.py").write_text("")
+    (lib / "plans" / "a.py").write_text(
+        "def scan(df, limit=10, *, exact=False, mode='fast'):\n"
+        "    return df\n\n\n"
+        "def scan_all(df, **kw):\n    return scan(df, **kw)\n")
+    caller = tmp_path / "caller.py"
+    caller.write_text(
+        f"from {PKG}.plans.a import scan, scan_all\n\n"
+        "scan([], 5, mode='fast')\nscan_all([], exact=True)\n")
+    return lib, [caller]
+
+
+def test_options_pass_flags_only_a_test_set_option(optioned) -> None:
+    found = _Options(_Library(optioned[0]), optioned[1])
+    assert found.options() == {"plans/a.py::scan(limit)",
+                               "plans/a.py::scan(exact)",
+                               "plans/a.py::scan(mode)"}
+    assert found.unset() == {"plans/a.py::scan(mode)"}
+    assert _option_faults(found, {
+        "plans/a.py::scan(mode)": "cost bound: the fixture's"}) == []
+    assert len(_option_faults(found, {})) == 1
+    stale = _option_faults(found, {
+        "plans/a.py::scan(mode)": "policy: the fixture's",
+        "plans/a.py::scan(exact)": "policy: set through **kw"})
+    assert stale == ["ALLOWED_OPTIONS names an option a caller sets: "
+                     "plans/a.py::scan(exact)"]
+    gone = _option_faults(found, {
+        "plans/a.py::scan(mode)": "policy: the fixture's",
+        "plans/a.py::scan(depth)": "policy: no such option"})
+    assert gone == ["ALLOWED_OPTIONS names a gone option: "
+                    "plans/a.py::scan(depth)"]
+    unreasoned = _option_faults(found, {
+        "plans/a.py::scan(mode)": "handy in tests"})
+    assert unreasoned == ["ALLOWED_OPTIONS gives no allowed reason for "
+                          "plans/a.py::scan(mode)"]

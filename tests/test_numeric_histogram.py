@@ -1,7 +1,7 @@
 """Exact equi-width histograms (checks.numeric_histogram): bin
-assignment and edge arithmetic, NULL/NaN/inf routing, fixed-domain
-clamping, the degenerate single-value domain, and plan shape (two
-O(1)/O(bins) aggregates, broadcast bounds)."""
+assignment and edge arithmetic, NULL/NaN/inf routing, the
+degenerate single-value domain, and plan shape (two O(1)/O(bins)
+aggregates, broadcast bounds)."""
 
 from __future__ import annotations
 
@@ -25,16 +25,6 @@ def test_exact_bins_and_edges(spark) -> None:
     assert sum(r[3] for r in out) == 100
 
 
-def test_fixed_domain_clamps(spark) -> None:
-    df = spark.createDataFrame(
-        [(-5.0,), (0.5,), (1.5,), (99.0,)], "x double")
-    out = {r["bin"]: r["cnt"]
-           for r in numeric_histogram(
-               df, "x", bins=2, lo=0.0, hi=2.0).collect()}
-    # -5 clamps to bin 0; 99 clamps to bin 1
-    assert out == {0: 2, 1: 2}
-
-
 def test_degenerate_domain_and_guard(spark) -> None:
     df = spark.createDataFrame([(7.0,), (7.0,)], "x double")
     out = numeric_histogram(df, "x", bins=8).collect()
@@ -52,18 +42,3 @@ def test_plan_shape(spark) -> None:
     assert "BroadcastExchange" in plan
     assert "partial_count" in plan
 
-
-def test_bound_guards(spark) -> None:
-    """A single bound is an error (it would silently be ignored),
-    and inverted bounds are rejected instead of producing a garbage
-    histogram."""
-    df = spark.createDataFrame([(1.0,)], "x double")
-    with pytest.raises(ValueError, match="BOTH lo and hi"):
-        numeric_histogram(df, "x", lo=0.0)
-    with pytest.raises(ValueError, match="BOTH lo and hi"):
-        numeric_histogram(df, "x", hi=9.0)
-    with pytest.raises(ValueError, match="lo must be <= hi"):
-        numeric_histogram(df, "x", lo=9.0, hi=0.0)
-    # equal bounds are the legal degenerate fixed domain
-    out = numeric_histogram(df, "x", bins=4, lo=1.0, hi=1.0).collect()
-    assert len(out) == 1 and out[0]["bin"] == 0

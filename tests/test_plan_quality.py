@@ -105,19 +105,9 @@ def test_referential_chain_broadcasts_every_hop(spark) -> None:
     assert plan.count("BroadcastHashJoin") == 2
     assert "SortMergeJoin" not in plan
     # the fact side never shuffles: no Exchange keyed by fact columns
-    # (the default dedup_dims adds tiny DIM-side shuffles only)
+    # (the dimension-key dedup adds tiny DIM-side shuffles only)
     import re
     assert not re.search(r"Exchange hashpartitioning\(s_", plan), plan
-
-    # with unique PKs declared, the whole plan is broadcast-only
-    df2 = checks.referential_chain(
-        sup,
-        [(nat, "s_nationkey", "n_nationkey", "nation"),
-         (reg, "n_regionkey", "r_regionkey", "region")],
-        dedup_dims=False,
-    )
-    plan2 = _plan(df2)
-    assert plan2.count("Exchange") == plan2.count("BroadcastExchange"), plan2
 
 
 def test_validation_stays_in_codegen(spark) -> None:

@@ -20,8 +20,9 @@ from cerberus_cpp_spark.operators.text import text_profile
 
 
 def _digest(df, col, compression):
-    """The single-column digest: one side of ``tdigests_of``."""
-    return checks.tdigests_of(df, [col], compression=compression)[col]
+    """The single-frame digest: side 0 of ``tdigest_pair``."""
+    return checks.tdigest_pair(df.selectExpr("0 as side", f"{col} as v"),
+                               "side", "v", compression=compression)[0]
 
 
 _PROBS = (0.01, 0.05, 0.25, 0.5, 0.75, 0.95, 0.99)
@@ -342,7 +343,7 @@ def test_suggest_rules_self_consistent(spark):
          (2, 9.0, "b", [1], "x"),
          (3, -4.25, "a", [1, 2, 3], "y")],
         "k long, f double, cat string, arr array<int>, maybe string")
-    rules = suggest_rules(df, allowed_max_distinct=4)
+    rules = suggest_rules(df)
     assert rules["k"] == {"type": "integer", "required": True,
                           "min": 0, "max": 4}
     # floor(min)-1 / floor(max)+1: strict bounds that stay strict
@@ -363,7 +364,7 @@ def test_suggest_rules_skips_high_cardinality_and_dates(spark):
     df = spark.range(0, 500).selectExpr(
         "concat('id', id) as uid",
         "timestamp('2024-01-01') + make_interval(0,0,0,0,0,0,id) as ts")
-    rules = suggest_rules(df, allowed_max_distinct=16)
+    rules = suggest_rules(df)
     assert "allowed" not in rules["uid"]          # 500 distinct
     assert "type" not in rules["ts"]              # reference omits
     assert rules["ts"] == {"required": True}

@@ -218,7 +218,7 @@ def test_suggest_regex_shape(spark) -> None:
     rows = [(f"Img#{i:04d}", f"v{i}" if i % 2 else f"vv{i}",
              "A" if i % 2 else "B") for i in range(40)]
     df = spark.createDataFrame(rows, "id string, var string, lo string")
-    rules = suggest_rules(df, allowed_max_distinct=4)
+    rules = suggest_rules(df)
     assert rules["id"]["regex"] == "[A-Z][a-z][a-z]#" + "[0-9]" * 4
     assert "regex" not in rules["id"] or "allowed" not in rules["id"]
     assert "regex" not in rules["var"]          # two shapes
@@ -229,15 +229,24 @@ def test_suggest_regex_shape(spark) -> None:
 
 
 def test_suggest_regex_skips_overlong_values(spark) -> None:
-    """A value longer than max_shape_len must suppress the regex even
+    """A value longer than MAX_SHAPE_LEN must suppress the regex even
     if the SHAPED values agree (its shape is NULL, so min/max never
-    saw it — emitting would break self-consistency)."""
-    from cerberus_cpp_spark.plans.suggest import suggest_rules
+    saw it — emitting would break self-consistency). More distinct
+    values than ALLOWED_MAX_DISTINCT keep ``allowed`` from deciding
+    it instead."""
+    from cerberus_cpp_spark.plans.suggest import (
+        ALLOWED_MAX_DISTINCT,
+        MAX_SHAPE_LEN,
+        suggest_rules,
+    )
 
-    rows = [("a1",)] * 30 + [("b" * 80,)]
+    rows = [(f"a{i:02d}",) for i in range(2 * ALLOWED_MAX_DISTINCT)]
     df = spark.createDataFrame(rows, "s string")
-    rules = suggest_rules(df, allowed_max_distinct=1)
-    assert "regex" not in rules.get("s", {})
+    assert suggest_rules(df)["s"]["regex"] == "[a-z][0-9][0-9]"
+    overlong = df.unionByName(spark.createDataFrame(
+        [("b" * (MAX_SHAPE_LEN + 1),)], "s string"))
+    rules = suggest_rules(overlong)
+    assert "allowed" not in rules["s"] and "regex" not in rules["s"]
 
 
 def test_suggest_robust_bounds_flags_outliers(spark) -> None:
@@ -256,42 +265,23 @@ def test_suggest_robust_bounds_flags_outliers(spark) -> None:
     assert res.annotated.where(~F.col("valid")).count() >= 1
 
 
-def test_tdigests_of_matches_single_column_digests(spark) -> None:
-    """One melted scan for N columns == per-column digests, in the
-    exact regime (≤ compression/4 distinct values → order-independent
-    and bit-exact). Both paths share one value policy: ±inf rows are
-    dropped, never poisoning the extreme quantiles."""
-    from cerberus_cpp_spark.operators.checks import (
-        _tdigest_sides,
-        tdigests_of,
-    )
+def test_tdigest_pair_drops_non_finite_values(spark) -> None:
+    """Every digest shares one value policy: NULL, NaN and ±inf rows
+    are dropped, never poisoning the extreme quantiles. In the exact
+    regime (≤ compression/4 distinct values → order-independent and
+    bit-exact) the digests equal those of the finite rows alone."""
+    from cerberus_cpp_spark.operators.checks import tdigest_pair
 
-    inf = float("inf")
-    rows = [(float(i % 7), float(i % 11)) for i in range(500)]
-    rows += [(inf, -inf), (-inf, inf)]
-    df = spark.createDataFrame(rows, "a double, b double")
-    many = tdigests_of(df, ["a", "b"])
-    for c in ("a", "b"):
-        single = _tdigest_sides(df.select(
-            F.lit(0).alias("side"), F.col(c).alias("v")), 1, 100)[0]
+    inf, nan = float("inf"), float("nan")
+    rows = [(i % 2, float(i % 7 + 11 * (i % 2))) for i in range(500)]
+    finite = spark.createDataFrame(rows, "side long, v double")
+    dirty = finite.unionByName(spark.createDataFrame(
+        [(0, inf), (1, -inf), (0, nan), (1, None)], "side long, v double"))
+    for clean, got in zip(tdigest_pair(finite, "side", "v"),
+                          tdigest_pair(dirty, "side", "v")):
+        assert got.total == clean.total == 250
         for q in (0.01, 0.25, 0.5, 0.75, 0.99):
-            assert many[c].quantile(q) == single.quantile(q), (c, q)
-
-
-def test_suggest_tdigest_bounds_near_exact(spark) -> None:
-    """quantile_method='tdigest' (the 100 TB one-scan path) agrees
-    with the exact percentile path within t-digest tolerance."""
-    from cerberus_cpp_spark.plans.suggest import suggest_rules
-
-    df = spark.createDataFrame(
-        [(float(i), i) for i in range(2000)], "x double, y long")
-    exact = suggest_rules(df, robust_bounds=(0.05, 0.95))
-    td = suggest_rules(df, robust_bounds=(0.05, 0.95),
-                       quantile_method="tdigest")
-    for c in ("x", "y"):
-        span = exact[c]["max"] - exact[c]["min"]
-        assert abs(td[c]["min"] - exact[c]["min"]) <= 0.02 * span, c
-        assert abs(td[c]["max"] - exact[c]["max"]) <= 0.02 * span, c
+            assert got.quantile(q) == clean.quantile(q), q
 
 
 # ---------------------------------------------------------------------------

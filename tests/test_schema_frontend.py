@@ -119,3 +119,17 @@ def test_image_table_plan_pinned(spark) -> None:
     assert sha(str(plan.violation_count)) == "aa4c67e4"
     assert sha(str(plan.violations)) == "7317ced9"
     assert sha(repr(tv.schema)) == "c538ddda"
+
+
+def test_extra_cols_lead_normalized_in_the_given_order(spark) -> None:
+    """``normalized`` starts with the extra columns as given, then the
+    schema fields, then the unknown columns the policy keeps."""
+    tv = TableValidator({"x": {"type": "integer"}}, allow_unknown=True,
+                        extra_cols=("doc_id", "expected"))
+    df = spark.createDataFrame(
+        [(1, "a", True, 7)], "x bigint, note string, expected boolean, "
+        "doc_id bigint")
+    out = tv.validate(df).normalized
+    assert out.columns == ["doc_id", "expected", "x", "note"]
+    assert out.collect()[0].asDict() == {
+        "doc_id": 7, "expected": True, "x": 1, "note": "a"}

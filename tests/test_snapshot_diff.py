@@ -34,15 +34,6 @@ def test_statuses_and_changed_cols(spark) -> None:
     }
 
 
-def test_include_unchanged(spark) -> None:
-    old, new = _frames(spark)
-    rows = {r["k"]: r["status"]
-            for r in checks.snapshot_row_diff(
-                old, new, "k", include_unchanged=True).collect()}
-    assert rows[1] == "unchanged" and rows[3] == "unchanged"
-    assert len(rows) == 6
-
-
 def test_multi_column_key(spark) -> None:
     old = spark.createDataFrame(
         [(1, "x", 10), (1, "y", 11)], "k1 int, k2 string, v int")

@@ -1,5 +1,5 @@
 """t-digest sketch (functions/tdigest.py) + the distributed
-checks.tdigests_of / tdigest_pair operators."""
+checks.tdigest_pair operator."""
 
 from __future__ import annotations
 
@@ -84,10 +84,17 @@ def test_row_serialization_roundtrip():
     assert r.min == d.min and r.max == d.max
 
 
+def _digest(df, compression):
+    """The distributed digest of column ``v``: side 0 of
+    ``tdigest_pair``."""
+    return checks.tdigest_pair(df.selectExpr("0 as side", "v"), "side",
+                               "v", compression=compression)[0]
+
+
 def test_distributed_digest_matches_local(spark):
     df = spark.range(0, 300_000, 1, 16).selectExpr(
         "cast(pmod(id * 2654435761, 1000000) as double) / 1000 as v")
-    d = checks.tdigests_of(df, ["v"], compression=100)["v"]
+    d = _digest(df, 100)
     vals = np.sort(
         (np.arange(300_000, dtype=np.int64) * 2654435761 % 1_000_000)
         / 1000.0)
@@ -99,8 +106,7 @@ def test_distributed_digest_matches_local(spark):
 def test_distributed_digest_deterministic(spark):
     df = spark.range(0, 50_000, 1, 8).selectExpr(
         "cast(pmod(id, 37) as double) * 1.5 as v")
-    a = checks.tdigests_of(df, ["v"], compression=200)["v"]
-    b = checks.tdigests_of(df, ["v"], compression=200)["v"]
+    a, b = _digest(df, 200), _digest(df, 200)
     assert np.array_equal(a.means, b.means)
     assert np.array_equal(a.weights, b.weights)
     assert a.means.size == 37  # exact regime survives distribution
