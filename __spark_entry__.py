@@ -5146,7 +5146,7 @@ def q_schemaless_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     string or explicit null depending on the row, so NO static Spark
     type exists and the columnar compiler refuses the column. The
     validation runs through the DISTRIBUTED interpreter
-    (dynamic/spark.py: Arrow-batched mapInPandas, one Validator per
+    (dynamic/spark.py: one mapInArrow worker, one Validator per
     worker). Docs are synthesized from pure event_id arithmetic so
     DuckDB can oracle the exact violation set without JSON parsing."""
     from cerberus_cpp_spark.dynamic.spark import json_violations

@@ -4,7 +4,7 @@ validation engine with the capabilities of dokempf/cerberus-cpp.
 Two execution paths share one schema front-end:
 
 - :class:`Validator` — the dynamic document interpreter (driver-side
-  meta-validation, schemaless fallback, distributed via mapInPandas).
+  meta-validation, schemaless fallback, distributed via mapInArrow).
 - :class:`TableValidator` (``plans.engine``) — the columnar compiler:
   a whole schema fused into ONE Spark ``select`` of Column
   predicates producing a violations array per row; the 100 TB path.

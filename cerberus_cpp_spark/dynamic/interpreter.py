@@ -9,7 +9,7 @@ validator.hh:159-344`` + ``rules.hh:47-667``), used for three jobs:
    ill-formed schemas before anything touches the cluster.
 2. **The dynamic fallback** for truly schemaless / heterogeneous
    documents that the columnar compiler cannot type statically —
-   distributed via ``mapInPandas`` over a JSON column (see
+   distributed via ``mapInArrow`` over a JSON column (see
    ``cerberus_cpp_spark.dynamic.spark``).
 3. **The oracle** for the columnar compiler's own tests.
 

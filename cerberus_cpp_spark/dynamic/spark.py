@@ -6,8 +6,8 @@ scalar in the next (reference ``rules.hh:549-553,592-597``, golden
 case ``type-simple`` ``test/testdata.yml:505-516``) — cannot be typed
 statically and previously validated only driver-side. This module
 runs the SAME interpreter (:mod:`cerberus_cpp_spark.dynamic.
-interpreter`) inside Arrow-batched ``mapInPandas`` over a JSON string
-column, so heterogeneous documents validate distributed.
+interpreter`) inside one Arrow worker (``mapInArrow``) over a JSON
+string column, so heterogeneous documents validate distributed.
 
 Scale design:
 
@@ -15,33 +15,33 @@ Scale design:
   on the driver, by the driver ``Validator``'s
   ``normalized_schemas()`` (``SchemaError`` raised before anything
   ships); workers receive those normalized trees and run with
-  ``validate_schema=False``.
-- ONE ``Validator`` per worker task, reused across every document in
-  its partition: rule/type registries and the generated function of
-  each rule map (its fields unrolled, its builtin rules inlined) are
-  built once per task, not per row. ``compile()`` is memoized by
-  source text for the life of the worker process, so a reused worker
-  generates each task's source (about 0.5 ms for ``JSON_SCHEMA``) but
-  compiles it once. The interpreter walk is the largest share of a
-  document's Python cost that this module controls, next to
-  ``json.loads`` and the ``json.dumps`` of ``normalized``.
-- Each task drops the worker's zip-import finders once its imports
-  are done (:func:`~cerberus_cpp_spark.functions.shipping.
-  drop_zip_finders`): PySpark invalidates the import caches at the
-  start of every task, and each ``zipimporter`` finder then re-reads
-  its archive's central directory: 16 of them in a warm worker, about
-  0.29 CPU-s per task before any document is read (0.046 s without
-  them, on a shared 4-vCPU host).
+  ``validate_schema=False``; the verdicts' Arrow types are derived there.
+- ONE ``Validator``, ONE ``json.JSONDecoder`` and ONE
+  ``json.JSONEncoder`` per worker task, reused across every document
+  in its partition: ``json.loads``/``json.dumps`` with keyword
+  arguments build a new codec on every call. Rule/type registries and
+  the generated function of each rule map (its fields unrolled, its
+  builtin rules inlined) are built once per task, not per row.
+  ``compile()`` is memoized by source text for the life of the worker
+  process, so a reused worker generates each task's source (about
+  0.5 ms for ``JSON_SCHEMA``) but compiles it once.
+- Each task runs :func:`~cerberus_cpp_spark.functions.shipping.
+  task_prelude` once its imports are done: it drops the zip-import
+  finders that PySpark's per-task ``importlib.invalidate_caches()``
+  would make re-read their archives, and freezes the imported heap
+  that the daemon's per-task ``gc.collect()`` would walk again.
 - The worker hands each freshly parsed document to the interpreter
   (``Validator._validate_owned``), so normalization writes into it in
   place instead of into a deep copy.
-- The stage is a narrow projection — no shuffle, embarrassingly
-  parallel over input partitions; batches arrive via Arrow.
+- No pandas frame, no shuffle: ``doc`` is read from the Arrow batch,
+  the id columns pass through as the Arrow arrays they arrived as (a
+  ``bigint`` beside a NULL keeps every digit), and the verdict columns
+  are built directly as Arrow arrays.
 - Per-document Python is the *fidelity contract* here, not an
   accident: there is no columnar representation of a value whose type
-  varies per row, so this is the sanctioned ``mapInPandas`` escape
-  hatch (the columnar engine remains the hot path for statically
-  typed columns; a field whose shape varies per row belongs here).
+  varies per row, so this is the sanctioned Python escape hatch (the
+  columnar engine remains the hot path for statically typed columns;
+  a field whose shape varies per row belongs here).
 - Output is the columnar engine's violations schema
   (``array<struct<path,message>>`` + allocation-free ``n_violations``
   + ``valid``), so ledgers, partition verdicts and windowed rollups
@@ -57,8 +57,8 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions.shipping import PKG_PARENT
 from ..plans.engine import explode_violations
@@ -94,16 +94,18 @@ def validate_json(
     configure: Callable[[Validator], None] | None = None,
 ) -> DataFrame:
     """Validate the JSON-document column ``doc`` with the dynamic
-    interpreter, distributed via ``mapInPandas``.
+    interpreter, distributed via one Arrow worker (``mapInArrow``).
 
-    Returns ``id_cols`` (default: every column except ``doc``,
-    original dtypes preserved) + ``violations`` + ``n_violations`` +
-    ``valid`` [+ ``normalized`` JSON string when
+    Returns ``id_cols`` (default: every column except ``doc``, values
+    and dtypes passed through untouched) + ``violations`` +
+    ``n_violations`` + ``valid`` [+ ``normalized`` JSON string when
     ``include_normalized``, with object keys sorted for deterministic
     output — the reference's ``getDocument()``].
 
-    ``configure`` runs once per worker-side ``Validator`` (register
-    custom rules/types there; it must be picklable)."""
+    Each task parses with one ``json.JSONDecoder`` and writes
+    ``normalized`` with one ``json.JSONEncoder``, reused across its
+    documents. ``configure`` runs once per worker-side ``Validator``
+    (register custom rules/types there; it must be picklable)."""
     # driver-side meta-validation: fail fast, ship the NORMALIZED tree
     driver_v = Validator(
         schema, allow_unknown=allow_unknown, purge_unknown=purge_unknown,
@@ -118,18 +120,21 @@ def validate_json(
     if id_cols is None:
         id_cols = tuple(c for c in df.columns if c != DOC_COL)
     src = df.select(*id_cols, DOC_COL)
-    out_fields = [df.schema[c] for c in id_cols] + [
+    verdict_fields = [
         T.StructField("violations", VIOL_FIELDS, False),
         T.StructField("n_violations", T.IntegerType(), False),
         T.StructField("valid", T.BooleanType(), False),
     ]
     if include_normalized:
-        out_fields.append(
-            T.StructField("normalized", T.StringType(), True)
-        )
-    out_schema = T.StructType(out_fields)
+        verdict_fields.append(T.StructField("normalized", T.StringType()))
+    out_schema = T.StructType([df.schema[c] for c in id_cols]
+                              + verdict_fields)
+    # the verdict columns' Arrow types; the id arrays keep their own
+    verdict_types = [f.type for f in to_arrow_schema(
+        T.StructType(verdict_fields))]
+    names = out_schema.fieldNames()
     pkg_parent = PKG_PARENT
-    id_list = list(id_cols)
+    n_ids = len(id_cols)
 
     def run(batches):
         import sys
@@ -139,22 +144,16 @@ def validate_json(
         import json
         import math
 
-        import pandas as pd
+        import pyarrow as pa
 
-        from cerberus_cpp_spark.dynamic.interpreter import (
-            Validator,
-            too_deep,
-        )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.dynamic.interpreter import Validator, too_deep
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()  # the next task re-reads no zip directory
-        v = Validator(
-            norm_schema,
-            allow_unknown=allow_unknown,
-            purge_unknown=purge_unknown,
-            require_all=require_all,
-            validate_schema=False,  # pre-normalized on the driver
-        )
+        task_prelude()
+        v = Validator(  # pre-normalized on the driver
+            norm_schema, allow_unknown=allow_unknown,
+            purge_unknown=purge_unknown, require_all=require_all,
+            validate_schema=False)
         if configure is not None:
             configure(v)
         for name, s in norm_registry.items():
@@ -167,13 +166,17 @@ def validate_json(
             x = float(text)
             return x if math.isfinite(x) else not_json(text)
 
+        decode = json.JSONDecoder(parse_constant=not_json,
+                                  parse_float=finite).decode
+        encode = json.JSONEncoder(sort_keys=True, separators=(",", ":"),
+                                  allow_nan=False).encode
+
         def parse(raw):
             """(document, None), or (None, the one violation message)."""
             if raw is None:
                 return None, None
             try:
-                doc = json.loads(raw, parse_constant=not_json,
-                                 parse_float=finite)
+                doc = decode(raw)
             except RecursionError:
                 return None, TOO_DEEP_MSG
             except (ValueError, TypeError):
@@ -183,20 +186,17 @@ def validate_json(
                 return None, TOO_DEEP_MSG
             return doc, None
 
-        for pdf in batches:
+        for batch in batches:
             viols, counts, valids, norms = [], [], [], []
-            for raw in pdf[DOC_COL]:
+            for raw in batch.column(n_ids).to_pylist():
                 doc, msg = parse(raw)
                 norm = None
                 if msg is None:
                     try:
-                        v._validate_owned(doc)  # json.loads made it fresh
+                        v._validate_owned(doc)  # the decoder made it fresh
                         errs = [(e.path, e.message) for e in v.errors]
                         if include_normalized:
-                            norm = json.dumps(v.get_document(),
-                                              sort_keys=True,
-                                              separators=(",", ":"),
-                                              allow_nan=False)
+                            norm = encode(v.get_document())
                     except RecursionError:
                         msg = TOO_DEEP_MSG
                     except Exception as e:  # noqa: BLE001 — one row only
@@ -207,15 +207,13 @@ def validate_json(
                 counts.append(len(errs))
                 valids.append(not errs)
                 norms.append(norm)
-            data = {c: pdf[c] for c in id_list}
-            data["violations"] = viols
-            data["n_violations"] = counts
-            data["valid"] = valids
-            if include_normalized:
-                data["normalized"] = norms
-            yield pd.DataFrame(data)
+            yield pa.RecordBatch.from_arrays(  # zip drops norms if untyped
+                batch.columns[:n_ids] + [
+                    pa.array(col, type=t) for col, t in zip(
+                        (viols, counts, valids, norms), verdict_types)],
+                names=names)
 
-    return src.mapInPandas(run, schema=out_schema)
+    return src.mapInArrow(run, schema=out_schema)
 
 
 def json_violations(

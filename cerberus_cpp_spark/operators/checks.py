@@ -269,9 +269,9 @@ def _tdigest_sides(src: DataFrame, comp: int) -> tuple:
         if pkg_parent not in sys.path:
             sys.path.insert(0, pkg_parent)
         from cerberus_cpp_spark.functions.tdigest import TDigest as TD
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         return TD
 

@@ -81,9 +81,9 @@ def metadata_consistency_violations(
             decode_image,
             image_header_info,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         for pdf in batches:
             ids, paths, msgs = [], [], []
@@ -182,9 +182,9 @@ def tiered_image_check(
             decode_image,
             image_header_info,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         for pdf in batches:
             flagged = []
@@ -252,9 +252,9 @@ def fidelity_check(
             synth_pixels,
             webp_is_lossless,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         for pdf in batches:
             out = {"image_id": pdf["image_id"], "psnr_db": [],
@@ -384,9 +384,9 @@ def image_full_check(
             audit_chunks,
             sniff_png,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
         if quality:
             from cerberus_cpp_spark.operators.image_transform import (
                 quality_metrics,
@@ -544,9 +544,9 @@ def pixel_phash(df: DataFrame, *, id_col: str = "image_id",
             decode_image,
             phash64,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         for pdf in batches:
             out = {"image_id": pdf["image_id"], "phash": []}
@@ -594,9 +594,9 @@ def exif_consistency_violations(
             sys.path.insert(0, pkg_parent)
         from cerberus_cpp_spark.sources.imagegen import image_header_info
         from cerberus_cpp_spark.sources.imagemeta import image_metadata
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         for pdf in batches:
             ids, paths, msgs = [], [], []
@@ -671,9 +671,9 @@ def png_chunk_audit(df: DataFrame, *, id_col: str = "image_id",
         if pkg_parent not in sys.path:
             sys.path.insert(0, pkg_parent)
         from cerberus_cpp_spark.sources.pngcodec import audit_chunks
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         for pdf in batches:
             rows = {k: [] for k in ("image_id", "verdict", "n_chunks",
@@ -732,9 +732,9 @@ def image_container_audit(df: DataFrame, *, id_col: str = "image_id",
         from cerberus_cpp_spark.sources.containeraudit import (
             audit_container,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         for pdf in batches:
             fmts, verdicts, details = [], [], []
@@ -836,9 +836,9 @@ def strip_image_metadata(df: DataFrame, *, id_col: str = "image_id",
         if pkg_parent not in sys.path:
             sys.path.insert(0, pkg_parent)
         from cerberus_cpp_spark.sources.imagemeta import strip_metadata
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         for pdf in batches:
             rows = {k: [] for k, _ in fields}
@@ -930,9 +930,9 @@ def gps_pii_audit(df: DataFrame, *, id_col: str = "image_id",
             parse_gps,
             raw_exif,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         blank = {k: None for k, _ in fields[2:]}
         for pdf in batches:
@@ -1013,9 +1013,9 @@ def pixel_fingerprints(df: DataFrame, *, id_col: str = "image_id",
         from cerberus_cpp_spark.sources.webpcodec import (
             UnsupportedCodecError,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         for pdf in batches:
             rows = {k: [] for k, _ in fields}
@@ -1135,9 +1135,9 @@ def icc_profile_audit(df: DataFrame, *, id_col: str = "image_id",
         from cerberus_cpp_spark.sources.imagegen import sniff_format
         from cerberus_cpp_spark.sources.imagemeta import jpeg_metadata
         from cerberus_cpp_spark.sources.webpx import extract_metadata
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         blank = {k: None for k, _ in fields[2:]}
         for pdf in batches:
@@ -1244,9 +1244,9 @@ def jpeg_quality_audit(df: DataFrame, *, id_col: str = "image_id",
             implied_scale_pct,
             parse_dqt_tables,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         blank = {k: None for k, _ in fields[2:]}
         for pdf in batches:
@@ -1351,9 +1351,9 @@ def pixel_stats(df: DataFrame, *, id_col: str = "image_id",
             UnsupportedCodecError,
             decode_image,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         blank = {k: None for k, _ in fields[2:]}
         for pdf in batches:
@@ -1453,9 +1453,9 @@ def pixel_sharpness(df: DataFrame, *, id_col: str = "image_id",
             UnsupportedCodecError,
             decode_image,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         blank = {k: None for k, _ in fields[2:]}
         for pdf in batches:
@@ -1546,9 +1546,9 @@ def jpeg_sof_census(df: DataFrame, *, id_col: str = "image_id",
             sys.path.insert(0, pkg_parent)
         from cerberus_cpp_spark.sources.imagegen import sniff_format
         from cerberus_cpp_spark.sources.jpegcodec import parse_sof_info
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         blank = {k: None for k, _ in fields[2:]}
         for pdf in batches:
@@ -1638,9 +1638,9 @@ def exif_thumbnail_audit(df: DataFrame, *, id_col: str = "image_id",
             parse_thumbnail,
             raw_exif,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         blank = {k: None for k, _ in fields[2:]}
         for pdf in batches:
@@ -1758,9 +1758,9 @@ def image_curation_verdict(
             estimate_ijg_quality,
             parse_dqt_tables,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         blank = {k: None for k, _ in fields[2:]}
         for pdf in batches:

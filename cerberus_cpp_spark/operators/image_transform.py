@@ -149,9 +149,9 @@ def resize_images(
             encode_pixels,
             webp_is_lossless,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         for pdf in batches:
             n = len(pdf)
@@ -307,9 +307,9 @@ def augment_images(
             encode_pixels,
             webp_is_lossless,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         for pdf in batches:
             n = len(pdf)
@@ -439,9 +439,9 @@ def image_quality_profile(
             UnsupportedCodecError,
             decode_image,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         for pdf in batches:
             n = len(pdf)

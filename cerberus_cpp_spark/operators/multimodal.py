@@ -87,9 +87,9 @@ def sample_frames(
             demux_avi_mjpeg,
             sniff_avi,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         for pdf in batches:
             rows = {"clip_id": [], "frame_idx": [], "frame": [],
@@ -205,9 +205,9 @@ def animation_frames(
             iter_webp_anim_frames,
             webp_features,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         if reference == "animgen":
             from cerberus_cpp_spark.sources.animgen import (
@@ -292,9 +292,9 @@ def audio_features(
             decode_wav,
             sniff_wav,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         cols = ("sample_rate", "n_samples", "duration_sec", "rms",
                 "zero_crossings", "sumsq")
@@ -399,9 +399,9 @@ def normalize_orientation(df: DataFrame, *, id_col: str = "image_id",
         )
         from cerberus_cpp_spark.sources.tiffcodec import encode_tiff
         from cerberus_cpp_spark.sources.webpx import encode_webp_vp8x
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         def passthrough(rows, rid, blob, msg=None):
             rows["image_id"].append(rid)
@@ -531,9 +531,9 @@ def heif_burst_frames(
             decode_heif_all,
             heif_available,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         for pdf in batches:
             rows = {"image_id": [], "frame_idx": [], "w": [], "h": [],
@@ -620,9 +620,9 @@ def audio_header_info(
             sniff_wav,
             wav_header_info,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         cols = ("fmt", "ok", "message", "sample_rate", "channels",
                 "duration_ms", "n_frames", "bitrate_kbps_min",
@@ -728,9 +728,9 @@ def video_header_info(
             sniff_h264_annexb,
         )
         from cerberus_cpp_spark.sources.imagegen import image_header_info
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         cols = ("fmt", "ok", "message", "width", "height", "n_frames",
                 "n_idr", "profile_idc", "level_idc", "fps")
@@ -826,9 +826,9 @@ def mp4_track_frames(
         if pkg_parent not in sys.path:
             sys.path.insert(0, pkg_parent)
         from cerberus_cpp_spark.sources.isobmff import mp4_movie_info
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         cols = ("ok", "message", "brand", "movie_duration_ms",
                 "n_tracks", "track_id", "handler", "codec", "width",
@@ -918,9 +918,9 @@ def webm_track_frames(
         if pkg_parent not in sys.path:
             sys.path.insert(0, pkg_parent)
         from cerberus_cpp_spark.sources.ebml import webm_movie_info
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         cols = ("ok", "message", "doctype", "timestamp_scale",
                 "movie_duration_ms", "n_clusters", "n_tracks",
@@ -1007,9 +1007,9 @@ def ogg_stream_frames(
         if pkg_parent not in sys.path:
             sys.path.insert(0, pkg_parent)
         from cerberus_cpp_spark.sources.ogg import ogg_stream_info
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         cols = ("ok", "message", "codec", "channels", "rate",
                 "pre_skip", "n_pages", "duration_ms", "crc_ok",
@@ -1087,9 +1087,9 @@ def flac_stream_frames(
         if pkg_parent not in sys.path:
             sys.path.insert(0, pkg_parent)
         from cerberus_cpp_spark.sources.flac import flac_stream_info
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         cols = ("ok", "message", "rate", "channels",
                 "bits_per_sample", "total_samples", "duration_ms",
@@ -1176,9 +1176,9 @@ def compression_census(
         from cerberus_cpp_spark.sources.compression import (
             decompress_bounded,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         cols = ("ok", "message", "fmt", "n_comp", "n_raw", "ratio",
                 "raw_md5")
@@ -1256,9 +1256,9 @@ def archive_census(
             tar_members,
             zip_members,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         cols = ("ok", "message", "fmt", "n_members", "member_name",
                 "member_size", "typeflag", "method", "crc_ok")
@@ -1345,9 +1345,9 @@ def warc_census(
         if pkg_parent not in sys.path:
             sys.path.insert(0, pkg_parent)
         from cerberus_cpp_spark.sources.warc import warc_records
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         cols = ("ok", "message", "n_records", "record_type",
                 "record_id", "uri", "content_length",
@@ -1424,9 +1424,9 @@ def tfrecord_census(
         from cerberus_cpp_spark.sources.tfrecord import (
             tfrecord_records,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         cols = ("ok", "message", "n_records", "record_index",
                 "length", "crc_ok")
@@ -1498,9 +1498,9 @@ def warc_text_frames(
         from cerberus_cpp_spark.sources.warc import (
             warc_response_bodies,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         for pdf in batches:
             ids, uris, stats, htmls = [], [], [], []

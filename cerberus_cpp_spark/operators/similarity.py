@@ -120,9 +120,9 @@ def rh_signatures(
             sys.path.insert(0, pkg_parent)
         import numpy as np
         import pandas as pd
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         planes = None
         weights = (1 << np.arange(n_bits)).astype(np.int64)

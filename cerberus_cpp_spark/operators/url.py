@@ -162,9 +162,9 @@ def robots_rules(
             rule_regex,
             select_group,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         for pdf in batches:
             hosts, allows, pats, rxs, lens = [], [], [], [], []

@@ -162,9 +162,9 @@ def anim_clip_frame(spark: SparkSession, n: int, *, seed: int = 42,
         if pkg_parent not in sys.path:
             sys.path.insert(0, pkg_parent)
         from cerberus_cpp_spark.sources.animgen import anim_payload
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         for pdf in batches:
             pdf = pdf.copy()

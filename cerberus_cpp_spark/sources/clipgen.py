@@ -44,9 +44,9 @@ def audio_clip_frame(spark: SparkSession, n: int,
             encode_wav,
             synth_pcm,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         for pdf in batches:
             ids = [int(v) for v in pdf["id"]]
@@ -78,9 +78,9 @@ def video_clip_frame(spark: SparkSession, n: int,
         if pkg_parent not in sys.path:
             sys.path.insert(0, pkg_parent)
         from cerberus_cpp_spark.sources.avicodec import synth_clip
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         for pdf in batches:
             ids = [int(v) for v in pdf["id"]]

@@ -125,9 +125,9 @@ def _attach_bytes(df: DataFrame, seed: int, *,
             lossy_webp_payload,
             pixel_seed,
         )
-        from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+        from cerberus_cpp_spark.functions.shipping import task_prelude
 
-        drop_zip_finders()
+        task_prelude()
 
         for pdf in batches:
             payload = []

@@ -2,7 +2,7 @@
 
 The whole reference golden corpus — INCLUDING the heterogeneous
 ``type-simple`` case the columnar compiler must refuse — runs through
-``mapInPandas`` + the interpreter, distributed. Verdicts must equal
+``mapInArrow`` + the interpreter, distributed. Verdicts must equal
 the corpus expectation AND the driver-side interpreter (differential:
 same engine, different execution substrate)."""
 
@@ -380,3 +380,63 @@ def test_every_input_string_yields_one_verdict_row(spark) -> None:
         assert r["valid"] is not None
         assert r["n_violations"] == r["size"]
         assert r["valid"] == (r["n_violations"] == 0)
+
+
+def test_id_columns_pass_through_untouched(spark) -> None:
+    """Id columns come back with their values and dtypes: a ``bigint``
+    above 2^53 beside a NULL in the same batch keeps every digit (a
+    pandas boundary would make it a ``float64``), and timestamp,
+    decimal, string and binary ids are unchanged."""
+    import datetime
+    from decimal import Decimal
+
+    ids = [(9007199254740993, "a", datetime.datetime(2024, 1, 2, 3, 4, 5,
+                                                     678901),
+            Decimal("12345678.91"), b"\x00\xff"),
+           (None, None, None, None, None)]
+    df = spark.createDataFrame(
+        [(*row, '{"n": "x"}') for row in ids],
+        "big long, s string, ts timestamp, d decimal(10,2), b binary,"
+        " doc string").coalesce(1)  # one batch holds both rows
+    id_cols = ("big", "s", "ts", "d", "b")
+    schema = {"n": {"type": "integer"}}
+
+    def got(out) -> list:
+        assert out.dtypes[:len(id_cols)] == df.dtypes[:len(id_cols)]
+        return sorted((tuple(r[c] for c in id_cols) for r in out.collect()),
+                      key=lambda row: row[0] is None)
+
+    assert got(validate_json(df, schema)) == ids
+    assert got(json_violations(df, schema)) == ids
+
+
+#: hostile rows → (violations, normalized): what a JSON codec must
+#: read and write exactly, so a swapped or reconfigured codec shows
+HOSTILE = {
+    '{"s": "é\\u007f\\ud800"}': ([], '{"s":"\\u00e9\\u007f\\ud800"}'),
+    '{"f": NaN}': ([("^", NOT_JSON_MSG)], None),
+    '{"f": 1e999}': ([("^", NOT_JSON_MSG)], None),
+    "[" * 3000 + "]" * 3000: ([("^", TOO_DEEP_MSG)], None),
+    None: ([("^", "document is not a mapping")], "null"),
+    '{"n": 123456789012345678901234567890}': (
+        [("^.n", "type-rule violated: expected integer")],
+        '{"n":123456789012345678901234567890}'),
+    '{"f": 1.5e300}': ([], '{"f":1.5e+300}'),
+    '{"f": -0.0, "g": 1e16}': ([], '{"f":-0.0,"g":1e+16}'),
+    '{"s": "\\u0001"}': ([], '{"s":"\\u0001"}'),
+    "not json": ([("^", NOT_JSON_MSG)], None),
+}
+
+
+def test_hostile_rows_have_pinned_violations_and_normalized_text(
+        spark) -> None:
+    docs = list(HOSTILE)
+    df = spark.createDataFrame(list(enumerate(docs)),
+                               "doc_id int, doc string")
+    schema = {"s": {"type": "string"}, "n": {"type": "integer"},
+              "f": {"type": "float"}, "g": {"type": "float"}}
+    got = {docs[r["doc_id"]]: ([tuple(v) for v in r["violations"]],
+                               r["normalized"])
+           for r in validate_json(df, schema,
+                                  include_normalized=True).collect()}
+    assert got == HOSTILE

@@ -3,38 +3,89 @@
 from __future__ import annotations
 
 import ast
+import json
+import subprocess
 import sys
-import zipfile
-import zipimport
 from pathlib import Path
 
-from cerberus_cpp_spark.functions.shipping import drop_zip_finders
+import pytest
 
-LIB = Path(__file__).resolve().parents[1] / "cerberus_cpp_spark"
+ROOT = Path(__file__).resolve().parents[1]
+LIB = ROOT / "cerberus_cpp_spark"
+
+#: runs in a fresh interpreter, so the test process's heap is never
+#: frozen; prints what it saw as one JSON object
+PRELUDE_PROBE = """
+import gc, json, sys, weakref, zipfile, zipimport
+sys.path.insert(0, sys.argv[1])
+from cerberus_cpp_spark.functions.shipping import task_prelude
+
+def zip_finders():
+    return any(isinstance(f, zipimport.zipimporter)
+               for f in sys.path_importer_cache.values())
+
+archive = sys.argv[2]
+with zipfile.ZipFile(archive, "w") as z:
+    z.writestr("zipped_pair/__init__.py", "")
+    z.writestr("zipped_pair/first.py", "VALUE = 1\\n")
+    z.writestr("zipped_pair/second.py", "VALUE = 2\\n")
+sys.path.insert(0, archive)
+from zipped_pair import first
+out = {"first": first.VALUE, "finders_before": zip_finders(),
+       "frozen_before": gc.get_freeze_count()}
+task_prelude()
+out["finders_after"] = zip_finders()
+out["frozen_first"] = gc.get_freeze_count()
+next_task = [[] for _ in range(10)]  # built before the next prelude
+task_prelude()
+out["frozen_again"] = gc.get_freeze_count()
+from zipped_pair import second  # a new module, its finder made anew
+out["second"] = second.VALUE
+task_prelude()
+out["frozen_after_import"] = gc.get_freeze_count()
+
+class Node:
+    pass
+
+a, b = Node(), Node()
+a.peer, b.peer = b, a
+gone = weakref.ref(a)
+del a, b
+gc.collect()
+out["cycle_reclaimed"] = gone() is None
+print(json.dumps(out))
+"""
 
 
-def test_drop_zip_finders_keeps_zip_imports_working(tmp_path) -> None:
-    archive = tmp_path / "zipped_pair.zip"
-    with zipfile.ZipFile(archive, "w") as z:
-        z.writestr("zipped_pair/__init__.py", "")
-        z.writestr("zipped_pair/first.py", "VALUE = 1\n")
-        z.writestr("zipped_pair/second.py", "VALUE = 2\n")
-    sys.path.insert(0, str(archive))
-    try:
-        from zipped_pair import first
-        assert first.VALUE == 1
-        assert any(isinstance(f, zipimport.zipimporter)
-                   for f in sys.path_importer_cache.values())
-        drop_zip_finders()
-        assert not any(isinstance(f, zipimport.zipimporter)
-                       for f in sys.path_importer_cache.values())
-        from zipped_pair import second  # the finder comes back on demand
-        assert second.VALUE == 2
-    finally:
-        sys.path.remove(str(archive))
-        for name in ("zipped_pair", "zipped_pair.first",
-                     "zipped_pair.second"):
-            sys.modules.pop(name, None)
+@pytest.fixture(scope="module")
+def prelude(tmp_path_factory) -> dict:
+    archive = tmp_path_factory.mktemp("prelude") / "zipped_pair.zip"
+    done = subprocess.run(
+        [sys.executable, "-c", PRELUDE_PROBE, str(ROOT), str(archive)],
+        capture_output=True, text=True, timeout=120, check=True)
+    return json.loads(done.stdout)
+
+
+def test_task_prelude_freezes_once_per_module_set(prelude) -> None:
+    """The first call freezes the heap; a call with no new import
+    freezes nothing more; after an import the next call freezes
+    again."""
+    assert prelude["frozen_before"] == 0
+    assert prelude["frozen_first"] > 0
+    assert prelude["frozen_again"] == prelude["frozen_first"]
+    assert prelude["frozen_after_import"] > prelude["frozen_again"]
+
+
+def test_task_prelude_leaves_new_cycles_collectable(prelude) -> None:
+    assert prelude["cycle_reclaimed"]
+
+
+def test_task_prelude_keeps_zip_imports_working(prelude) -> None:
+    """The prelude drops the zip finders; an import from the zip after
+    it still works, because the finder comes back on demand."""
+    assert prelude["first"] == 1 and prelude["finders_before"]
+    assert not prelude["finders_after"]
+    assert prelude["second"] == 2
 
 
 def _calls(fn: ast.AST) -> list[str]:
@@ -52,10 +103,11 @@ def _calls(fn: ast.AST) -> list[str]:
     return out
 
 
-def test_every_worker_closure_drops_zip_finders() -> None:
+def test_every_worker_closure_runs_the_task_prelude() -> None:
     """Each library function that puts ``pkg_parent`` on ``sys.path``
-    (a worker closure re-importing the package) also drops the zip
-    finders, so its tasks re-read no zip directory."""
+    (a worker closure re-importing the package) also runs the task
+    prelude, so its tasks re-read no zip directory and the daemon's
+    per-task collection walks no imported module."""
     closures, missing = 0, []
     for path in sorted(LIB.rglob("*.py")):
         for fn in ast.walk(ast.parse(path.read_text())):
@@ -65,7 +117,7 @@ def test_every_worker_closure_drops_zip_finders() -> None:
             if "sys.path.insert(0, pkg_parent)" not in calls:
                 continue
             closures += 1
-            if "drop_zip_finders()" not in calls:
+            if "task_prelude()" not in calls:
                 missing.append(f"{path.relative_to(LIB)}::{fn.name}")
     assert closures >= 45
     assert not missing
