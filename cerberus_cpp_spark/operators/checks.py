@@ -416,9 +416,20 @@ def _mg_partials(df: DataFrame, key: str, capacity: int) -> DataFrame:
     ``true_count - counter <= n_partition/(capacity+1)``."""
     key_type = df.schema[key].dataType.simpleString()
     schema = f"key {key_type}, cnt long, is_total boolean"
+    from ..functions.shipping import PKG_PARENT
+
+    pkg_parent = PKG_PARENT
 
     def mg(batches):
+        import sys
+
         import pandas as pd
+
+        if pkg_parent not in sys.path:
+            sys.path.insert(0, pkg_parent)
+        from cerberus_cpp_spark.functions.shipping import task_prelude
+
+        task_prelude()
 
         acc = None
         total = 0

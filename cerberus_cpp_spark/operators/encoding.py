@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.shipping import PKG_PARENT
+
 ENCODING_SCHEMA = (
     "clip_id string, ok boolean, message string, utf8_valid "
     "boolean, has_bom boolean, n_bytes bigint, n_nonascii_bytes "
@@ -47,8 +49,17 @@ def encoding_census(
     streams. NULL payloads route to ok=false; an EMPTY payload is
     valid UTF-8 of zero chars."""
     src = df.select(F.col(id_col).alias("clip_id"), F.col(bytes_col))
+    pkg_parent = PKG_PARENT
 
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import sys
+
+        if pkg_parent not in sys.path:
+            sys.path.insert(0, pkg_parent)
+        from cerberus_cpp_spark.functions.shipping import task_prelude
+
+        task_prelude()
+
         cols = ("ok", "message", "utf8_valid", "has_bom",
                 "n_bytes", "n_nonascii_bytes", "n_chars",
                 "n_replacement_chars", "invalid_at")
@@ -127,8 +138,17 @@ def nfc_census(
     import unicodedata
 
     src = df.select(F.col(id_col).alias("doc_id"), F.col(text_col))
+    pkg_parent = PKG_PARENT
 
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import sys
+
+        if pkg_parent not in sys.path:
+            sys.path.insert(0, pkg_parent)
+        from cerberus_cpp_spark.functions.shipping import task_prelude
+
+        task_prelude()
+
         for pdf in batches:
             out = {k: [] for k in ("doc_id", "status", "is_nfc",
                                    "n_chars", "n_chars_nfc",

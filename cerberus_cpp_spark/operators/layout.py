@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.shipping import PKG_PARENT
+
 LAYOUT_SCHEMA = (
     "file_name string, ok boolean, message string, "
     "row_group_id int, row_group_rows bigint, path_in_schema "
@@ -51,11 +53,19 @@ def parquet_layout(
     prerequisite), and compressed/uncompressed bytes. ``file_name``
     is the basename so results are location-relocatable."""
     src = df_paths.select(F.col(path_col).alias("path"))
+    pkg_parent = PKG_PARENT
 
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import os
+        import sys
 
         import pyarrow.parquet as pq
+
+        if pkg_parent not in sys.path:
+            sys.path.insert(0, pkg_parent)
+        from cerberus_cpp_spark.functions.shipping import task_prelude
+
+        task_prelude()
 
         cols = ("ok", "message", "row_group_id", "row_group_rows",
                 "path_in_schema", "compression", "n_values",

@@ -73,7 +73,8 @@ def sample_frames(
     - ``"fake"``: deterministic fake frames (seeded digest payload)
       exercising the fan-out plumbing only.
     """
-    src = df.select(F.col(id_col).alias("clip_id"), F.col(bytes_col))
+    src = df.select(F.col(id_col).cast("string").alias("clip_id"),
+                    F.col(bytes_col))
     pkg_parent = PKG_PARENT
 
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -188,7 +189,8 @@ def animation_frames(
     """
     if reference not in (None, "animgen"):
         raise ValueError(f"unknown reference family: {reference!r}")
-    src = df.select(F.col(id_col).alias("image_id"), F.col(bytes_col))
+    src = df.select(F.col(id_col).cast("string").alias("image_id"),
+                    F.col(bytes_col))
     pkg_parent = PKG_PARENT
 
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -278,7 +280,8 @@ def audio_features(
     n_samples, duration_sec, rms, zero_crossings, sumsq) — the
     integer columns (n_samples, zero_crossings, sumsq) are exact,
     which is what lets a SQL oracle replay them bit-for-bit."""
-    src = df.select(F.col(id_col).alias("clip_id"), F.col(bytes_col))
+    src = df.select(F.col(id_col).cast("string").alias("clip_id"),
+                    F.col(bytes_col))
     pkg_parent = PKG_PARENT
 
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -375,7 +378,8 @@ def normalize_orientation(df: DataFrame, *, id_col: str = "image_id",
     98) — one documented generation loss on exactly the rows that
     needed fixing, the same tradeoff every EXIF-baking pipeline
     makes."""
-    src = df.select(F.col(id_col).alias("image_id"), F.col(bytes_col))
+    src = df.select(F.col(id_col).cast("string").alias("image_id"),
+                    F.col(bytes_col))
     pkg_parent = PKG_PARENT
 
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -517,7 +521,8 @@ def heif_burst_frames(
     through ``image_checks`` first if that distinction matters).
     One Arrow-batched ``mapInPandas`` stage, narrow, no shuffle.
     """
-    src = df.select(F.col(id_col).alias("image_id"), F.col(bytes_col))
+    src = df.select(F.col(id_col).cast("string").alias("image_id"),
+                    F.col(bytes_col))
     pkg_parent = PKG_PARENT
 
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -602,7 +607,8 @@ def audio_header_info(
     payload); ``ok`` False carries a structural ``message``.
     Family-specific columns are NULL elsewhere (cbr/id3v1/bitrates
     are MPEG-only; profile is ADTS-only)."""
-    src = df.select(F.col(id_col).alias("clip_id"), F.col(bytes_col))
+    src = df.select(F.col(id_col).cast("string").alias("clip_id"),
+                    F.col(bytes_col))
     pkg_parent = PKG_PARENT
 
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -711,7 +717,8 @@ def video_header_info(
 
     ``fmt``: 'avi' / 'h264' / NULL. H.264-only columns are NULL for
     avi rows (profile/level/n_idr) and vice versa (fps)."""
-    src = df.select(F.col(id_col).alias("clip_id"), F.col(bytes_col))
+    src = df.select(F.col(id_col).cast("string").alias("clip_id"),
+                    F.col(bytes_col))
     pkg_parent = PKG_PARENT
 
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -817,7 +824,8 @@ def mp4_track_frames(
     a single ok=false row naming the offending box, never killing
     the job — the per-row verdict contract of the reference's
     document-level pass/fail (validator.hh:239-258)."""
-    src = df.select(F.col(id_col).alias("clip_id"), F.col(bytes_col))
+    src = df.select(F.col(id_col).cast("string").alias("clip_id"),
+                    F.col(bytes_col))
     pkg_parent = PKG_PARENT
 
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -909,7 +917,8 @@ def webm_track_frames(
     single ok=false row naming the offending element, never killing
     the job — the per-row verdict contract of the reference's
     document-level pass/fail (validator.hh:239-258)."""
-    src = df.select(F.col(id_col).alias("clip_id"), F.col(bytes_col))
+    src = df.select(F.col(id_col).cast("string").alias("clip_id"),
+                    F.col(bytes_col))
     pkg_parent = PKG_PARENT
 
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -998,7 +1007,8 @@ def ogg_stream_frames(
     single ok=false row naming the offending page/field, never
     killing the job — the per-row verdict contract of the
     reference's document-level pass/fail (validator.hh:239-258)."""
-    src = df.select(F.col(id_col).alias("clip_id"), F.col(bytes_col))
+    src = df.select(F.col(id_col).cast("string").alias("clip_id"),
+                    F.col(bytes_col))
     pkg_parent = PKG_PARENT
 
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1078,7 +1088,8 @@ def flac_stream_frames(
     single ok=false row naming the offending block, never killing
     the job — the per-row verdict contract of the reference's
     document-level pass/fail (validator.hh:239-258)."""
-    src = df.select(F.col(id_col).alias("clip_id"), F.col(bytes_col))
+    src = df.select(F.col(id_col).cast("string").alias("clip_id"),
+                    F.col(bytes_col))
     pkg_parent = PKG_PARENT
 
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1163,7 +1174,8 @@ def compression_census(
     corrupt, trailing garbage, over-limit, absent zstd decoder) —
     the per-row verdict contract of the reference's document-level
     pass/fail (validator.hh:239-258)."""
-    src = df.select(F.col(id_col).alias("clip_id"), F.col(bytes_col))
+    src = df.select(F.col(id_col).cast("string").alias("clip_id"),
+                    F.col(bytes_col))
     pkg_parent = PKG_PARENT
     bound = int(max_out)
 
@@ -1241,7 +1253,8 @@ def archive_census(
     routing with CONSTANT message classes — the per-row verdict
     contract of the reference's document-level pass/fail
     (validator.hh:239-258)."""
-    src = df.select(F.col(id_col).alias("clip_id"), F.col(bytes_col))
+    src = df.select(F.col(id_col).cast("string").alias("clip_id"),
+                    F.col(bytes_col))
     pkg_parent = PKG_PARENT
     bound = int(max_out)
 
@@ -1336,7 +1349,8 @@ def warc_census(
     routing with CONSTANT message classes — the per-row verdict
     contract of the reference's document-level pass/fail
     (validator.hh:239-258)."""
-    src = df.select(F.col(id_col).alias("clip_id"), F.col(bytes_col))
+    src = df.select(F.col(id_col).cast("string").alias("clip_id"),
+                    F.col(bytes_col))
     pkg_parent = PKG_PARENT
 
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1413,7 +1427,8 @@ def tfrecord_census(
 
     One narrow Arrow stage (zero Exchange); per-payload verdict
     contract (validator.hh:239-258)."""
-    src = df.select(F.col(id_col).alias("clip_id"), F.col(bytes_col))
+    src = df.select(F.col(id_col).cast("string").alias("clip_id"),
+                    F.col(bytes_col))
     pkg_parent = PKG_PARENT
 
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1487,7 +1502,8 @@ def warc_text_frames(
     the per-payload verdicts; this stage is the happy path.
 
     One narrow Arrow stage (zero Exchange)."""
-    src = df.select(F.col(id_col).alias("clip_id"), F.col(bytes_col))
+    src = df.select(F.col(id_col).cast("string").alias("clip_id"),
+                    F.col(bytes_col))
     pkg_parent = PKG_PARENT
 
     def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

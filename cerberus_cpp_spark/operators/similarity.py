@@ -186,9 +186,19 @@ def _attach_cosine_arrow(pairs: DataFrame,
             .astype(np.float64, copy=False)
         return vals, off, lens
 
+    pkg_parent = PKG_PARENT
+
     def work(batches):
+        import sys
+
         import numpy as np
         import pyarrow as pa
+
+        if pkg_parent not in sys.path:
+            sys.path.insert(0, pkg_parent)
+        from cerberus_cpp_spark.functions.shipping import task_prelude
+
+        task_prelude()
 
         for batch in batches:
             n = batch.num_rows
@@ -404,9 +414,19 @@ def _exact_near_duplicates_blas(base: DataFrame,
 
     src = base.select("vid")
 
+    pkg_parent = PKG_PARENT
+
     def work(batches):
+        import sys
+
         import numpy as np
         import pandas as pd
+
+        if pkg_parent not in sys.path:
+            sys.path.insert(0, pkg_parent)
+        from cerberus_cpp_spark.functions.shipping import task_prelude
+
+        task_prelude()
 
         all_ids, all_unit = bc.value
         pos = {int(v): i for i, v in enumerate(all_ids)}
@@ -449,9 +469,19 @@ def _assign_lists(df: DataFrame, centroids: np.ndarray, *,
     src = df.select(id_col, vec_col)
     _ = id_dtype  # documented: schema derives from the input frame
 
+    pkg_parent = PKG_PARENT
+
     def work(batches):
+        import sys
+
         import numpy as np
         import pandas as pd
+
+        if pkg_parent not in sys.path:
+            sys.path.insert(0, pkg_parent)
+        from cerberus_cpp_spark.functions.shipping import task_prelude
+
+        task_prelude()
 
         for pdf in batches:
             if not len(pdf):
@@ -924,9 +954,19 @@ def rotate_embeddings(
     names = [f.name for f in fields]
     dim = rot.shape[0]
 
+    pkg_parent = PKG_PARENT
+
     def work(batches):
+        import sys
+
         import numpy as np
         import pandas as pd
+
+        if pkg_parent not in sys.path:
+            sys.path.insert(0, pkg_parent)
+        from cerberus_cpp_spark.functions.shipping import task_prelude
+
+        task_prelude()
 
         for pdf in batches:
             if len(pdf):
@@ -1181,9 +1221,19 @@ def pq_encode(
              and use_list_col not in keep else [])
     src = df.select(id_col, *keep, *extra, vec_col)
 
+    pkg_parent = PKG_PARENT
+
     def work(batches):
+        import sys
+
         import numpy as np
         import pandas as pd
+
+        if pkg_parent not in sys.path:
+            sys.path.insert(0, pkg_parent)
+        from cerberus_cpp_spark.functions.shipping import task_prelude
+
+        task_prelude()
 
         b2 = (books ** 2).sum(axis=2)  # (m, n_codes)
         for pdf in batches:
@@ -1352,9 +1402,19 @@ def _adc_partial_topn(
     # per-query Python overhead) while bounding task memory at scale
     cell_budget = 4_000_000
 
+    pkg_parent = PKG_PARENT
+
     def work(batches):
+        import sys
+
         import numpy as np
         import pandas as pd
+
+        if pkg_parent not in sys.path:
+            sys.path.insert(0, pkg_parent)
+        from cerberus_cpp_spark.functions.shipping import task_prelude
+
+        task_prelude()
 
         acc: list[pd.DataFrame] = []
         for pdf in batches:
@@ -1613,9 +1673,19 @@ def build_query_luts(
     src = queries.select(F.col(id_col).alias("query_id"),
                          F.col(vec_col).alias("qvec"))
 
+    pkg_parent = PKG_PARENT
+
     def work(batches):
+        import sys
+
         import numpy as np
         import pandas as pd
+
+        if pkg_parent not in sys.path:
+            sys.path.insert(0, pkg_parent)
+        from cerberus_cpp_spark.functions.shipping import task_prelude
+
+        task_prelude()
 
         for pdf in batches:
             if not len(pdf):
@@ -1965,9 +2035,19 @@ def embedding_decontamination(
     dim = eunit.shape[1]
     thr = float(threshold)
 
+    pkg_parent = PKG_PARENT
+
     def work(batches):
+        import sys
+
         import numpy as np
         import pandas as pd
+
+        if pkg_parent not in sys.path:
+            sys.path.insert(0, pkg_parent)
+        from cerberus_cpp_spark.functions.shipping import task_prelude
+
+        task_prelude()
 
         ev = bc.value
         for pdf in batches:

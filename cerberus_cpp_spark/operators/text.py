@@ -19,6 +19,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.shipping import PKG_PARENT
+
 TOKEN_RE = "[a-z0-9]+"
 ROLL_MOD = 1_000_000_007
 ROLL_BASE = 131
@@ -393,13 +395,21 @@ def ngram_hashes(
     from .partitioning import fanout_gate
 
     src = fanout_gate(df, idc).select(idc, txt)
+    pkg_parent = PKG_PARENT
 
     def work(batches):
         import hashlib
         import re
+        import sys
 
         import numpy as np
         import pandas as pd
+
+        if pkg_parent not in sys.path:
+            sys.path.insert(0, pkg_parent)
+        from cerberus_cpp_spark.functions.shipping import task_prelude
+
+        task_prelude()
 
         tok_re = re.compile(TOKEN_RE)
         pw = np.uint64(1099511628211) ** np.arange(

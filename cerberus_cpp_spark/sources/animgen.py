@@ -31,6 +31,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .distgen import caption_text, image_id_text
 from .imagegen import pixel_seed, synth_pixels
 
 TRUNC_EVERY = 20  # i % 20 == 11 → truncated payload
@@ -142,12 +143,11 @@ def anim_clip_frame(spark: SparkSession, n: int, *, seed: int = 42,
     df = spark.range(0, n, 1, num_parts)
     base = df.select(
         "id",
-        F.format_string("img-%012d", F.col("id")).alias("image_id"),
+        image_id_text(F.col("id")).alias("image_id"),
         F.expr("CAST(12 + (id % 3) * 2 AS INT)").alias("w"),
         F.expr("CAST(12 + (id % 5) * 2 AS INT)").alias("h"),
         F.lit("webp").alias("fmt"),
-        F.format_string("caption %d about image number %d",
-                        F.expr("id % 997"), F.col("id")).alias("caption"),
+        caption_text(F.col("id")).alias("caption"),
         F.expr(f"(id * 2654435761L + {seed}L) "
                "& 9223372036854775807L").alias("phash"),
     )

@@ -2,10 +2,21 @@
 
 from __future__ import annotations
 
-from cerberus_cpp_spark.sources.distgen import image_caption_frame
+from pyspark.sql import functions as F
+
+from cerberus_cpp_spark.sources.distgen import (
+    caption_text,
+    image_caption_frame,
+    image_id_text,
+)
 from cerberus_cpp_spark.sources.fixtures import image_caption_rows
 
 N = 700
+
+#: each digit-count boundary up to 10 digits, and an id near the top
+#: of the generator's exact domain (2^63 / 2654435761 ≈ 3.47e9)
+BOUNDARY_IDS = sorted({0, 3_470_000_000}
+                      | {10 ** k + d for k in range(1, 10) for d in (-1, 0)})
 
 
 def _key(row: dict) -> tuple:
@@ -57,6 +68,20 @@ def test_lossy_plant_matches_driver_fixture(spark) -> None:
 
 
 def test_no_shuffle_in_generation(spark) -> None:
-    df = image_caption_frame(spark, 1000, partitions=4)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    """One narrow stage, and no ``java.util.Formatter`` per row: the
+    text columns are ``concat``/``lpad`` kernels."""
+    for violation_every in (100, None):
+        df = image_caption_frame(spark, 1000, partitions=4,
+                                 violation_every=violation_every)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan
+        assert "format_string" not in plan, plan
+
+
+def test_text_helpers_match_python_format_at_boundary_ids(spark) -> None:
+    df = spark.createDataFrame([(i,) for i in BOUNDARY_IDS], "id bigint")
+    rows = df.select("id", image_id_text(F.col("id")).alias("image_id"),
+                     caption_text(F.col("id")).alias("caption")).collect()
+    assert {r["id"]: (r["image_id"], r["caption"]) for r in rows} == {
+        i: (f"img-{i:012d}", f"caption {i % 997} about image number {i}")
+        for i in BOUNDARY_IDS}

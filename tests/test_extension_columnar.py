@@ -35,6 +35,35 @@ def test_custom_column_rule_odd(spark) -> None:
     assert all(r["message"] == "odd-rule violated" for r in v)
 
 
+def test_registered_rule_after_validate_applies(spark) -> None:
+    """A registration clears the compiled plans: the next validate of
+    the same frame compiles the newly registered rule in."""
+
+    def compile_odd(ctx, arg):
+        cond = ctx.defined & (F.pmod(ctx.value, F.lit(2)) == 0)
+        return [_viol(cond, F.lit(ctx.path), "odd-rule violated")]
+
+    tv = TableValidator({"n": {"type": "integer", "odd": True}})
+    tv.register_column_rule("odd", {"type": "boolean"}, lambda ctx, arg: [])
+    df = spark.createDataFrame([(1,), (2,), (7,), (10,)], ["n"])
+    assert tv.validate(df).counts()["invalid_rows"] == 0
+    tv.register_column_rule("odd", {"type": "boolean"}, compile_odd)
+    bad = tv.validate(df).annotated.where("NOT valid").collect()
+    assert {r["n"] for r in bad} == {2, 10}
+
+
+def test_registered_type_after_validate_applies(spark) -> None:
+    tv = TableValidator({"d": {"type": "date"}})
+    tv.register_spark_type("date", lambda col, dtype: F.lit(True),
+                           py_decode=str)
+    df = spark.createDataFrame([("2021-06-21",), ("not-a-date",)], ["d"])
+    assert tv.validate(df).counts()["invalid_rows"] == 0
+    tv.register_spark_type("date", lambda col, dtype: F.try_to_timestamp(
+        col, F.lit("yyyy-MM-dd")).isNotNull())
+    bad = tv.validate(df).annotated.where("NOT valid").collect()
+    assert {r["d"] for r in bad} == {"not-a-date"}
+
+
 def test_unregistered_custom_rule_still_raises(spark) -> None:
     tv = TableValidator({"n": {"type": "integer", "odd": True}})
     df = spark.createDataFrame([(1,)], ["n"])

@@ -11,9 +11,13 @@ from pyspark.sql import functions as F
 
 from cerberus_cpp_spark.operators.multimodal import (
     audio_features,
+    audio_header_info,
+    normalize_orientation,
     sample_frames,
 )
 from cerberus_cpp_spark.sources.distgen import image_caption_frame
+from cerberus_cpp_spark.sources.imagegen import encode_image
+from cerberus_cpp_spark.sources.wavcodec import encode_wav, synth_pcm
 
 
 @pytest.fixture(scope="module")
@@ -64,3 +68,27 @@ def test_audio_fake_features(spark, with_bytes) -> None:
     ok = [r for r in res if r["rms"] is not None]
     assert len(ok) == 120
     assert all(r["duration_sec"] > 0 for r in ok)
+
+
+def test_bigint_ids_beside_a_null_come_back_as_text(spark) -> None:
+    """The fixed-schema operators name their id column ``string``; a
+    ``bigint`` id beside a NULL id in one batch comes back as its
+    decimal text, not as a failed job."""
+    big = 2 ** 53 + 1
+    wav = encode_wav(synth_pcm(1, 1600), sample_rate=16000)
+    clips = spark.createDataFrame(
+        [(big, bytearray(wav)), (None, None)],
+        "clip_id bigint, bytes binary").coalesce(1)
+    out = {r["clip_id"]: r for r in audio_header_info(clips).collect()}
+    assert set(out) == {str(big), None}
+    assert out[str(big)]["ok"] and out[str(big)]["fmt"] == "wav"
+    assert out[None]["ok"] is False
+
+    png = encode_image(7, 8, 8, "png")
+    images = spark.createDataFrame(
+        [(big, bytearray(png)), (None, bytearray(png))],
+        "image_id bigint, bytes binary").coalesce(1)
+    rows = normalize_orientation(images).collect()
+    assert sorted((r["image_id"] or "", bytes(r["bytes"]), r["fixed"])
+                  for r in rows) == [("", png, False),
+                                     (str(big), png, False)]

@@ -11,7 +11,9 @@ from __future__ import annotations
 import hashlib
 
 from cerberus_cpp_spark.dynamic.interpreter import Validator
+from cerberus_cpp_spark.plans import engine
 from cerberus_cpp_spark.plans.engine import TableValidator
+from cerberus_cpp_spark.sources.distgen import image_caption_frame
 from cerberus_cpp_spark.sources.fixtures import (
     IMAGE_TABLE_RULES,
     image_caption_table,
@@ -133,3 +135,45 @@ def test_extra_cols_lead_normalized_in_the_given_order(spark) -> None:
     assert out.columns == ["doc_id", "expected", "x", "note"]
     assert out.collect()[0].asDict() == {
         "doc_id": 7, "expected": True, "x": 1, "note": "a"}
+
+
+def _count_compiles(monkeypatch) -> list:
+    """Patch the engine's row compiler to record each call."""
+    calls, real = [], engine._compile_mapping
+
+    def counted(*args, **kwargs):
+        calls.append(args[0])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(engine, "_compile_mapping", counted)
+    return calls
+
+
+def test_validate_compiles_once_per_input_schema(spark, monkeypatch) -> None:
+    """Generated frames of any size share one schema, so repeated
+    validations of them, as the benchmark's timed operations run,
+    compile once and reuse that plan."""
+    compiles = _count_compiles(monkeypatch)
+    tv = TableValidator(IMAGE_TABLE_RULES, extra_cols=("id",))
+    a = image_caption_frame(spark, 200, partitions=2)
+    b = image_caption_frame(spark, 300, seed=7, partitions=2)
+    plan = tv.compile(a.schema)
+    assert tv.validate(a).plan is plan
+    assert tv.validate(b).plan is plan
+    for _ in range(3):
+        assert tv.validate(a).counts() == {
+            "rows": 200, "violations": 2, "invalid_rows": 2}
+    assert len(compiles) == 1
+
+
+def test_changed_nullability_gets_its_own_plan(spark, monkeypatch) -> None:
+    compiles = _count_compiles(monkeypatch)
+    tv = TableValidator({"x": {"type": "integer", "min": 0}})
+    loose = spark.createDataFrame([(1,), (-1,)], "x bigint")
+    strict = spark.createDataFrame([(1,), (-1,)], "x bigint not null")
+    plan = tv.validate(loose).plan
+    assert tv.validate(spark.createDataFrame([], "x bigint")).plan is plan
+    assert tv.validate(strict).plan is not plan
+    assert len(compiles) == 2
+    for df in (loose, strict):
+        assert tv.validate(df).counts()["invalid_rows"] == 1

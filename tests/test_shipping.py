@@ -88,36 +88,71 @@ def test_task_prelude_keeps_zip_imports_working(prelude) -> None:
     assert prelude["second"] == 2
 
 
-def _calls(fn: ast.AST) -> list[str]:
-    """The calls of ``fn``'s own statements as source text, nested
-    definitions left out."""
+#: the DataFrame methods that run a Python function in a worker
+WORKER_METHODS = {"mapInPandas", "mapInArrow", "applyInPandas"}
+
+
+def _own(fn: ast.AST) -> list[ast.AST]:
+    """The nodes of ``fn``'s own statements, nested definitions left
+    out but listed themselves."""
     out, todo = [], list(fn.body)
     while todo:
         node = todo.pop()
+        out.append(node)
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
                              ast.Lambda, ast.ClassDef)):
             continue
-        if isinstance(node, ast.Call):
-            out.append(ast.unparse(node))
         todo.extend(ast.iter_child_nodes(node))
     return out
 
 
+def _runs_prelude(fn: ast.AST, helpers: dict[str, ast.AST]) -> bool:
+    """Whether ``fn`` calls ``task_prelude()``, itself or through a
+    function of ``helpers`` that it calls by name."""
+    seen, todo = set(), [fn]
+    while todo:
+        f = todo.pop()
+        if id(f) in seen:
+            continue
+        seen.add(id(f))
+        for node in _own(f):
+            if not isinstance(node, ast.Call):
+                continue
+            if ast.unparse(node) == "task_prelude()":
+                return True
+            if isinstance(node.func, ast.Name) and node.func.id in helpers:
+                todo.append(helpers[node.func.id])
+    return False
+
+
 def test_every_worker_closure_runs_the_task_prelude() -> None:
-    """Each library function that puts ``pkg_parent`` on ``sys.path``
-    (a worker closure re-importing the package) also runs the task
-    prelude, so its tasks re-read no zip directory and the daemon's
-    per-task collection walks no imported module."""
-    closures, missing = 0, []
+    """Every function the library hands to ``mapInPandas``,
+    ``mapInArrow`` or ``applyInPandas``, and every function that puts
+    ``pkg_parent`` on ``sys.path``, runs the task prelude, itself or
+    through a helper defined beside it, so its tasks re-read no zip
+    directory and the daemon's per-task collection walks no imported
+    module."""
+    workers, bootstraps, missing = 0, 0, []
     for path in sorted(LIB.rglob("*.py")):
-        for fn in ast.walk(ast.parse(path.read_text())):
-            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+        for scope in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(scope, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 continue
-            calls = _calls(fn)
-            if "sys.path.insert(0, pkg_parent)" not in calls:
-                continue
-            closures += 1
-            if "task_prelude()" not in calls:
-                missing.append(f"{path.relative_to(LIB)}::{fn.name}")
-    assert closures >= 45
+            own = _own(scope)
+            defs = {f.name: f for f in own
+                    if isinstance(f, (ast.FunctionDef, ast.AsyncFunctionDef))}
+            calls = [n for n in own if isinstance(n, ast.Call)]
+            if "sys.path.insert(0, pkg_parent)" in map(ast.unparse, calls):
+                bootstraps += 1
+                if not _runs_prelude(scope, {}):
+                    missing.append(f"{path.relative_to(LIB)}::{scope.name}")
+            for call in calls:
+                if not (isinstance(call.func, ast.Attribute)
+                        and call.func.attr in WORKER_METHODS):
+                    continue
+                workers += 1
+                arg = call.args[0] if call.args else None
+                if not (isinstance(arg, ast.Name) and arg.id in defs
+                        and _runs_prelude(defs[arg.id], defs)):
+                    missing.append(f"{path.relative_to(LIB)}:{call.lineno}")
     assert not missing
+    assert workers >= 59 and bootstraps >= 58
