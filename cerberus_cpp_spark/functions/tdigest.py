@@ -2,10 +2,10 @@
 
 The north_star names this sketch for distribution-drift detection
 ("t-digest quantile sketches compared across snapshots"); Spark's
-built-in ``percentile_approx`` (used by ``checks.quantile_drift``)
-is a different sketch (KLL-style). This is a from-scratch
-implementation of the public algorithm (Dunning & Ertl, "Computing
-Extremely Accurate Quantiles Using t-Digests", arXiv:1902.04023):
+built-in ``percentile_approx`` is a different sketch (KLL-style).
+This is a from-scratch implementation of the public algorithm
+(Dunning & Ertl, "Computing Extremely Accurate Quantiles Using
+t-Digests", arXiv:1902.04023):
 
 - centroids (mean, weight) kept sorted by mean;
 - the merge pass bounds each centroid's weight by the k0-style size

@@ -315,213 +315,6 @@ def fidelity_check(
     )
 
 
-def image_full_check(
-    df: DataFrame,
-    *,
-    seed: int = 42,
-    psnr_threshold_db: float = 40.0,
-    id_col: str = "image_id",
-    check_dims: bool = True,
-    container_audit: bool = False,
-    quality: bool = False,
-) -> DataFrame:
-    """BOTH image verdict families from ONE decode pass (r3 verdict
-    #5: the pipeline previously ran metadata_consistency_violations
-    and fidelity_check as two separate full decodes of ``bytes`` —
-    the dominant cost of the image leg, paid twice).
-
-    One Arrow-batched narrow stage decodes each payload once and
-    emits per row:
-    ``(image_id, n_meta_violations, meta_messages, psnr_db,
-    pixels_ok, caption_ok, verdict)`` — the metadata family
-    aggregated to a count + messages (sum(n_meta_violations) equals
-    the row count of ``metadata_consistency_violations``, pinned in
-    tests), the fidelity family exactly as :func:`fidelity_check`
-    including its 5-state ``verdict``.
-
-    The standalone functions remain the contract/violation-row
-    surfaces; this is the pipeline's fused path.
-
-    ``container_audit=True`` appends ``container_ok boolean,
-    container_msg string`` from the tolerant PNG chunk-CRC walk
-    (:func:`png_chunk_audit`) in the SAME pass — the payload bytes
-    are already in the Arrow batch, so the audit costs zero extra
-    byte reads. NULL for non-PNG payloads (JPEG/GIF/WebP containers
-    carry no per-chunk CRCs; their structural damage already
-    surfaces through the decode probe).
-
-    ``quality=True`` appends the training-data quality family from
-    the SAME decoded pixels (zero extra decodes):
-    ``lap_abs_sum`` (interior |Laplacian| sharpness energy),
-    ``n_distinct_rgb`` (1 ⇒ blank), ``is_grayscale``,
-    ``luma1000_min``/``luma1000_max`` (exposure range) — exactly
-    :func:`~cerberus_cpp_spark.operators.image_transform.quality_metrics`
-    (equality pinned in tests); NULL when the payload did not
-    decode."""
-    src = df.select(
-        F.col(id_col).alias("image_id"), "bytes", "caption",
-        F.col("fmt").alias("meta_fmt"),
-        F.col("w").alias("meta_w"), F.col("h").alias("meta_h"),
-    )
-
-    pkg_parent = PKG_PARENT
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-        import sys
-
-        if pkg_parent not in sys.path:
-            sys.path.insert(0, pkg_parent)
-        from cerberus_cpp_spark.sources.imagegen import (
-            UnsupportedCodecError,
-            decode_image,
-            pixel_seed,
-            psnr,
-            synth_pixels,
-            webp_is_lossless,
-        )
-        from cerberus_cpp_spark.sources.pngcodec import (
-            audit_chunks,
-            sniff_png,
-        )
-        from cerberus_cpp_spark.functions.shipping import task_prelude
-
-        task_prelude()
-        if quality:
-            from cerberus_cpp_spark.operators.image_transform import (
-                quality_metrics,
-            )
-        _q_cols = ("lap_abs_sum", "n_distinct_rgb", "is_grayscale",
-                   "luma1000_min", "luma1000_max")
-
-        for pdf in batches:
-            out = {"image_id": pdf["image_id"],
-                   "n_meta_violations": [], "meta_messages": [],
-                   "psnr_db": [], "pixels_ok": [], "caption_ok": [],
-                   "verdict": []}
-            if container_audit:
-                out["container_ok"] = []
-                out["container_msg"] = []
-            if quality:
-                for c in _q_cols:
-                    out[c] = []
-            for idx, (img_id, blob, cap) in enumerate(zip(
-                pdf["image_id"], pdf["bytes"], pdf["caption"]
-            )):
-                msgs: list[str] = []
-                fmt = px = None
-                decode_err = None
-                unsupported = False
-                if blob is None:
-                    decode_err = "no payload"
-                else:
-                    try:
-                        fmt, px = decode_image(bytes(blob))
-                    except UnsupportedCodecError as e:
-                        decode_err = str(e)[:120]
-                        unsupported = True
-                    except Exception as e:
-                        decode_err = str(e)[:120]
-                # -- quality family (same decoded pixels, zero extra
-                #    decodes) --
-                if quality:
-                    m = quality_metrics(px) if px is not None else None
-                    for c in _q_cols:
-                        out[c].append(None if m is None else m[c])
-                # -- container family (PNG chunk CRCs; same Arrow
-                #    batch, zero extra byte reads) --
-                if container_audit:
-                    if blob is not None and sniff_png(bytes(blob)):
-                        try:
-                            bad = [t for t, _, _, ok in
-                                   audit_chunks(bytes(blob)) if not ok]
-                            out["container_ok"].append(not bad)
-                            out["container_msg"].append(
-                                "CRC mismatch: " + ",".join(bad)
-                                if bad else None)
-                        except ValueError as e:
-                            out["container_ok"].append(False)
-                            out["container_msg"].append(str(e)[:120])
-                    else:
-                        out["container_ok"].append(None)
-                        out["container_msg"].append(None)
-                # -- metadata family (one decode, same verdicts as
-                #    metadata_consistency_violations) --
-                if decode_err is not None:
-                    msgs.append(
-                        f"decode_unsupported: {decode_err}" if unsupported
-                        else f"undecodable payload: {decode_err}")
-                else:
-                    meta_fmt = pdf["meta_fmt"].iloc[idx]
-                    if not pd.isna(meta_fmt) and fmt != meta_fmt:
-                        msgs.append(f"payload is {fmt}, metadata "
-                                    f"says {meta_fmt}")
-                    if check_dims:
-                        mw = pdf["meta_w"].iloc[idx]
-                        mh = pdf["meta_h"].iloc[idx]
-                        if not pd.isna(mw) and px.shape[1] != int(mw):
-                            msgs.append(f"payload width {px.shape[1]}"
-                                        f" != metadata {mw}")
-                        if not pd.isna(mh) and px.shape[0] != int(mh):
-                            msgs.append(f"payload height {px.shape[0]}"
-                                        f" != metadata {mh}")
-                out["n_meta_violations"].append(len(msgs))
-                out["meta_messages"].append(msgs)
-                # -- fidelity family (same verdicts as fidelity_check) --
-                try:
-                    i = int(str(img_id).rsplit("-", 1)[-1])
-                except (ValueError, AttributeError):
-                    i = None
-                expected_cap = (
-                    f"caption {i % 997} about image number {i}"
-                    if i is not None else None
-                )
-                out["caption_ok"].append(
-                    cap is not None and cap == expected_cap
-                )
-                if i is None or px is None:
-                    out["psnr_db"].append(None)
-                    out["pixels_ok"].append(False)
-                    out["verdict"].append(
-                        "decode_unsupported" if unsupported
-                        else ("undecodable" if px is None
-                              else "no_reference"))
-                    continue
-                ref = synth_pixels(
-                    pixel_seed(i, seed), px.shape[1], px.shape[0]
-                )
-                db = psnr(px, ref)
-                lossless = fmt == "png" or (
-                    fmt == "webp" and webp_is_lossless(bytes(blob)))
-                ok = (db == math.inf) if lossless \
-                    else (db >= psnr_threshold_db)
-                out["psnr_db"].append(
-                    None if db == math.inf else float(db)
-                )
-                out["pixels_ok"].append(bool(ok))
-                out["verdict"].append("ok" if ok else "mismatch")
-            if quality:
-                # nullable Int64, not float64-with-NaN: a float
-                # round-trip silently rounds int64 values past 2^53
-                for c in _q_cols:
-                    out[c] = pd.array(
-                        out[c],
-                        dtype="boolean" if c == "is_grayscale"
-                        else "Int64")
-            yield pd.DataFrame(out)
-
-    schema = ("image_id string, n_meta_violations int, "
-              "meta_messages array<string>, psnr_db double, "
-              "pixels_ok boolean, caption_ok boolean, verdict string")
-    if container_audit:
-        schema += ", container_ok boolean, container_msg string"
-    if quality:
-        schema += (", lap_abs_sum bigint, n_distinct_rgb bigint, "
-                   "is_grayscale boolean, luma1000_min bigint, "
-                   "luma1000_max bigint")
-    return src.mapInPandas(work, schema=schema)
-
-
 def pixel_phash(df: DataFrame, *, id_col: str = "image_id",
                 bytes_col: str = "bytes") -> DataFrame:
     """Perceptual hash computed from DECODED pixels (north_star's

@@ -20,10 +20,9 @@ Resize math is pure vectorized numpy over the in-repo codecs:
   arithmetic is portable); analytic pins in tests (identity at same
   size, exact constants, exact linear-ramp interpolation).
 
-Skew note: payload bytes vary ~10^4× between thumbnails and panoramas;
-feed this operator through ``partitioning.size_balanced`` (the
-north_star's size-based coalesce) when the input layout is
-byte-skewed — the stage itself stays narrow either way.
+Skew note: payload bytes vary ~10^4× between thumbnails and panoramas,
+so a byte-skewed input layout runs at the speed of its fattest
+partition; the stage itself stays narrow either way.
 """
 
 from __future__ import annotations
@@ -419,8 +418,7 @@ def image_quality_profile(
     decode_unsupported / undecodable, metric columns NULL on non-ok).
     Downstream filters (``lap_abs_sum < τ`` for blur,
     ``n_distinct_rgb = 1`` for blanks, ``is_grayscale``) are plain
-    pushdown-friendly predicates over the result. No shuffle; at
-    byte-skewed layouts feed through ``partitioning.size_balanced``.
+    pushdown-friendly predicates over the result. No shuffle.
     """
     src = df.select(F.col(id_col).alias("image_id"),
                     F.col(bytes_col).alias("bytes"))

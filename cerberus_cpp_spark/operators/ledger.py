@@ -178,23 +178,13 @@ def _part_key(partition_col: str):
 def pending_partitions(
     df: DataFrame, partition_col: str, ledger: ValidationLedger,
     lineage: str | None = None,
-    known_partitions: list[str] | None = None,
 ) -> list[str]:
     """Distinct partition values minus the ledger's completed set
     (for this ``lineage``, when given). Partition-list scale; safe to
-    collect driver-side. Pass ``known_partitions`` (e.g. from an
-    Iceberg ``<table>.partitions`` metadata table or hive directory
-    names) to skip the discovery scan entirely."""
-    if known_partitions is not None:
-        spark = df.sparkSession
-        parts = spark.createDataFrame(
-            [(str(p),) for p in known_partitions],
-            "partition_value: string",
-        ).distinct()
-    else:
-        parts = df.select(
-            _part_key(partition_col).alias("partition_value")
-        ).distinct()
+    collect driver-side."""
+    parts = df.select(
+        _part_key(partition_col).alias("partition_value")
+    ).distinct()
     todo = parts.join(
         ledger.completed_partitions(lineage), on="partition_value",
         how="left_anti",
@@ -210,14 +200,12 @@ def run_validation(
     *,
     partitions_per_commit: int = 4,
     fail_after_chunks: int | None = None,
-    run_id: str | None = None,
-    known_partitions: list[str] | None = None,
 ) -> dict:
     """Validate all pending partitions, committing the ledger after
     every chunk. Returns run summary. ``fail_after_chunks`` is the
     test fault-injector (raises KilledRun mid-run).
     """
-    run_id = run_id or uuid.uuid4().hex[:12]
+    run_id = uuid.uuid4().hex[:12]
     # the fingerprint covers the FULL rule tree (not just field
     # names) and the constructor's policy flags: any rule or policy
     # edit changes the lineage and forces re-validation of
@@ -230,14 +218,12 @@ def run_validation(
     }, sort_keys=True, default=str)
     # resume honors ONLY verdicts recorded under the same lineage
     # fingerprint — a schema/rule change re-validates everything
-    todo = pending_partitions(df, partition_col, ledger, lineage,
-                              known_partitions=known_partitions)
+    todo = pending_partitions(df, partition_col, ledger, lineage)
     chunks = [
         todo[i:i + partitions_per_commit]
         for i in range(0, len(todo), partitions_per_commit)
     ]
     processed = 0
-    empty_partitions: list[str] = []
     for ci, chunk in enumerate(chunks):
         if fail_after_chunks is not None and ci >= fail_after_chunks:
             raise KilledRun(
@@ -246,11 +232,11 @@ def run_validation(
         t0 = time.perf_counter()
         # pruning-friendly chunk predicate: a plain IN-list on the
         # partition column (pushes to parquet/Iceberg partition
-        # pruning), with the NULL sentinel handled via isNull — NOT
-        # the coalesce() key expression, which would defeat pushdown
-        vals = [p for p in chunk if p != NULL_PARTITION]
-        pred = F.col(partition_col).cast("string").isin(vals) \
-            if vals else F.lit(False)
+        # pruning), with NULL rows added via isNull under the
+        # sentinel — NOT the coalesce() key expression, which would
+        # defeat pushdown. The sentinel stays in the IN-list: a
+        # value that is literally NULL_PARTITION shares its key.
+        pred = F.col(partition_col).cast("string").isin(chunk)
         if NULL_PARTITION in chunk:
             pred = pred | F.col(partition_col).isNull()
         part_str = _part_key(partition_col)
@@ -277,17 +263,10 @@ def run_validation(
                 "lineage": lineage,
             })
         ledger.append(rows)
-        empty_partitions.extend(p for p in chunk if p not in got)
         processed += len(chunk)
     return {
         "run_id": run_id,
         "partitions_total": len(todo),
         "partitions_processed": processed,
         "chunks": len(chunks),
-        # a known partition that matched ZERO rows is either a
-        # genuinely empty partition or a value-encoding mismatch
-        # between the partition source and the column's string cast
-        # (e.g. un-decoded hive escapes) — surfaced, never silent:
-        # each is recorded done/rows=0 in the ledger AND listed here
-        "empty_partitions": empty_partitions,
     }

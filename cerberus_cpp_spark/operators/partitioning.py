@@ -1,4 +1,4 @@
-"""Shared partitioning helpers for fan-out-heavy operators.
+"""The shared partitioning gate of fan-out-heavy operators.
 
 One policy, used by every explode/HOF-heavy stage (``doc_shingles``,
 ``simhash``, ``text_profile``, the fingerprint queries): if the input
@@ -7,22 +7,11 @@ local-bench trap of a single small parquet file = ONE split — fan it
 out so the expensive per-row fold runs on every core. At real scale
 inputs already carry >= defaultParallelism splits, so the gate never
 fires and adds no shuffle on the 100 TB path.
-
-``size_balanced`` is the PAYLOAD-weighted sibling (north_star:
-"oversized image partitions ... handled with ... size-based
-coalesce"): splits of an image/audio/video table are frequently
-byte-skewed even when row counts are even (a handful of giant blobs
-land in one parquet row group), and the Arrow decode stage then runs
-at the speed of its fattest partition. ``size_balanced`` sizes the
-output partition count from the payload BYTES — estimated from a
-bounded partition probe, never a full scan — and round-robins rows
-so every partition carries ≈ ``target_bytes``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 # Logical operators that imply the frame is DERIVED (carries a
 # shuffle/join/agg upstream). Two reasons to skip the gate on such
@@ -78,96 +67,3 @@ def fanout_gate(df: DataFrame, *key_cols: str) -> DataFrame:
             else df.repartition(target)
         )
     return df
-
-
-def estimate_total_bytes(
-    df: DataFrame, bytes_col: str, *, max_probe: int = 8
-) -> tuple[int, int]:
-    """``(estimated total payload bytes, current partition count)``
-    WITHOUT a full scan: sum ``length(bytes_col)`` over at most
-    ``max_probe`` fixed-stride partitions via ``runJob`` (only those
-    tasks execute; non-probed splits are never read) and scale by the
-    partition count — the same bounded-probe pattern as
-    ``similarity.ivf_index``'s count-free sizing. Deterministic for a
-    fixed input layout.
-
-    CAVEAT (shared with every ``.rdd`` probe, see ``fanout_gate``):
-    on a DERIVED frame the probe eagerly executes the upstream
-    shuffle stages embedded in the plan. ``size_balanced`` therefore
-    only probes raw scans and asks for ``total_bytes`` explicitly
-    otherwise.
-    """
-    rdd = df.select(F.length(F.col(bytes_col)).alias("__sz")).rdd
-    nparts = rdd.getNumPartitions()
-    if nparts == 0:
-        return 0, 0
-    if nparts <= max_probe:
-        # the probe would read every partition anyway — same data
-        # through a JVM aggregate costs no Python-worker round trip
-        # (same shortcut as similarity._bounded_sample_matrix)
-        total = df.agg(
-            F.sum(F.coalesce(F.length(F.col(bytes_col)), F.lit(0)))
-        ).collect()[0][0]
-        return int(total or 0), nparts
-    stride = -(-nparts // max_probe)  # ceil → <= max_probe probed
-    probe = list(range(0, nparts, stride))
-    sums = df.sparkSession.sparkContext.runJob(
-        rdd, lambda it: [sum(r["__sz"] or 0 for r in it)], probe)
-    return int(sum(sums) * nparts / len(probe)), nparts
-
-
-def size_balanced(
-    df: DataFrame,
-    bytes_col: str = "bytes",
-    *,
-    target_bytes: int = 64 << 20,
-    total_bytes: int | None = None,
-    min_partitions: int | None = None,
-    coalesce_only: bool = False,
-) -> DataFrame:
-    """Re-split ``df`` so each partition carries ≈ ``target_bytes``
-    of ``bytes_col`` payload.
-
-    Why row-count-even splits are not enough: a decode stage's cost
-    is proportional to payload BYTES, and parquet splits of a media
-    table are routinely byte-skewed (a run of giant blobs fills one
-    row group). The straggler partition then sets the stage's wall
-    time. This helper computes ``n = ceil(total_bytes /
-    target_bytes)`` (floored at ``min_partitions``, default
-    ``defaultParallelism`` so a small table still uses every core)
-    and round-robin ``repartition(n)``s — row-uniform placement makes
-    per-partition payload concentrate tightly around ``total/n``
-    whenever single rows are small relative to ``target_bytes``; a
-    single over-``target`` row is indivisible and lower-bounds the
-    achievable skew (document sizes, don't split rows).
-
-    ``total_bytes`` skips the partition probe — REQUIRED for derived
-    frames (joins/aggregates upstream), where the probe would eagerly
-    execute the embedded query stages; ``size_balanced`` raises in
-    that case rather than silently re-running them.
-
-    ``coalesce_only=True`` is the narrow no-shuffle variant for the
-    too-many-tiny-files shape (10k × 1 MB splits): merges adjacent
-    splits down to ``n`` WITHOUT moving bytes between executors
-    (``coalesce`` to a number >= the current split count is already a
-    no-op, so no partition-count probe is needed). Adjacent-merge
-    cannot break up a fat split, so it fixes file fragmentation, not
-    payload skew — use the default full round-robin for skew.
-
-    At 100 TB: one extra shuffle of the payload — worth it exactly
-    when the decode stage behind it is the dominant cost and the
-    input layout is skewed; a no-op layout question otherwise, so
-    this is opt-in plumbing (``run_full_validation(...,
-    balance_image_bytes=...)``), not a default.
-    """
-    if total_bytes is None:
-        if _has_wide_ancestor(df):
-            raise ValueError(
-                "size_balanced on a derived frame needs an explicit "
-                "total_bytes= (the partition probe would eagerly "
-                "execute the upstream shuffle stages)")
-        total_bytes, _ = estimate_total_bytes(df, bytes_col)
-    floor = (df.sparkSession.sparkContext.defaultParallelism
-             if min_partitions is None else min_partitions)
-    n = max(1, floor, -(-int(total_bytes) // int(target_bytes)))
-    return df.coalesce(n) if coalesce_only else df.repartition(n)

@@ -1,39 +1,25 @@
 """Full-table validation pipeline — the one-call production surface.
 
-Composes the engine's pieces in the shape the north_star describes:
-row-level rule validation (ledgered per partition, resumable) +
-dataset-level checks (uniqueness, referential, drift) + optional
-image-payload checks — each an independent Spark job with its own
-metrics, all summarized in one report dict.
+Runs the row-level rule pass over a partitioned table, ledgered per
+partition and resumable (see operators/ledger.py): a narrow
+projection + per-partition agg per chunk of partitions, each chunk
+committed to the ledger, so a rerun after a crash skips the
+partitions already validated under the same lineage. The report
+carries the run summary and the ledger's per-partition verdicts.
 
-Job layout at scale (each bullet = one job, no cross-talk):
-- rule pass: narrow projection + per-partition agg, chunk-committed
-  to the ledger (resume = anti-join; see operators/ledger.py)
-- uniqueness: hash agg on the key (partial aggregation handles hot
-  keys for counts — BENCH.md §3; salt only if you aggregate
-  combine-less payloads)
-- referential: broadcast LEFT ANTI per (fk, dim) pair
-- drift: quantile sketch per snapshot + tiny driver compare
-- image checks: ONE fused Arrow-batched decode stage over
-  (id, bytes, caption, fmt, w, h) emitting both verdict families
-  (metadata consistency + pixel/caption fidelity) — bytes decoded
-  exactly once per row, both counts from one action; opt-in
-  ``balance_image_bytes`` pre-shuffles byte-skewed splits so the
-  decode stage has no straggler partition
-  (``partitioning.size_balanced``)
+The dataset-level checks are separate calls, each its own Spark job:
+``checks.duplicate_keys`` (uniqueness), ``checks.referential_violations``
+(broadcast LEFT ANTI per foreign key), ``checks.tdigest_pair`` (drift)
+and the image operators in ``operators/image_checks.py``.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Any, Optional, Sequence
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..plans.engine import TableValidator
-from . import checks
-from .image_checks import image_full_check
 from .ledger import ValidationLedger, run_validation
 
 
@@ -41,28 +27,9 @@ from .ledger import ValidationLedger, run_validation
 class PipelineReport:
     run: dict
     partition_verdicts: list
-    unique_violations: int
-    referential_violations: dict
-    drift: Optional[dict]
-    image_metadata_violations: Optional[int]
-    image_fidelity_failures: Optional[int]
-    container_violations: Optional[int] = None
-    blurry_images: Optional[int] = None
-    blank_images: Optional[int] = None
 
     def passed(self) -> bool:
-        checks_ok = (
-            self.unique_violations == 0
-            and all(v == 0 for v in self.referential_violations.values())
-            and (self.drift is None or not self.drift["drifted"])
-            and not self.image_metadata_violations
-            and not self.image_fidelity_failures
-            and not self.container_violations
-            and not self.blurry_images
-            and not self.blank_images
-        )
-        rows_ok = all(p["passed"] for p in self.partition_verdicts)
-        return checks_ok and rows_ok
+        return all(p["passed"] for p in self.partition_verdicts)
 
 
 def run_full_validation(
@@ -71,28 +38,18 @@ def run_full_validation(
     *,
     partition_col: str,
     ledger_path: str,
-    unique_key: str | None = None,
-    referential: Sequence[tuple[DataFrame, str, str]] = (),
-    drift_against: DataFrame | None = None,
-    drift_col: str | None = None,
-    image_checks: bool = False,
-    png_container_audit: bool = False,
-    blur_threshold: int | None = None,
-    count_blank_images: bool = False,
-    balance_image_bytes: int | None = None,
-    image_total_bytes: int | None = None,
-    allow_unknown: bool = True,
     partitions_per_commit: int = 8,
 ) -> PipelineReport:
-    """Run every check family over ``df``; returns a
-    :class:`PipelineReport`. Rule validation commits per-chunk to the
-    ledger at ``ledger_path`` — rerunning after a crash resumes.
+    """Validate ``df`` against ``rules`` partition by partition;
+    returns a :class:`PipelineReport`. Rule validation commits
+    per-chunk to the ledger at ``ledger_path`` — rerunning after a
+    crash resumes. Unknown columns are allowed: the policy is part of
+    the run's lineage, so a resume skips only the partitions a run
+    under the same policy committed.
     """
-    spark = df.sparkSession
-    ledger = ValidationLedger(spark, ledger_path)
+    ledger = ValidationLedger(df.sparkSession, ledger_path)
     tv = TableValidator(
-        rules, allow_unknown=allow_unknown,
-        extra_cols=(partition_col,),
+        rules, allow_unknown=True, extra_cols=(partition_col,),
     )
     run = run_validation(
         df, tv, partition_col, ledger,
@@ -107,86 +64,4 @@ def run_full_validation(
         }
         for r in ledger.read().where("status = 'done'").collect()
     ]
-
-    unique_violations = 0
-    if unique_key is not None:
-        unique_violations = checks.duplicate_keys(
-            df, unique_key
-        ).count()
-
-    ref_out: dict[str, int] = {}
-    for dim, fk, pk in referential:
-        ref_out[fk] = checks.referential_violations(
-            df, dim, fk, pk
-        ).count()
-
-    drift = None
-    if drift_against is not None and drift_col:
-        drift = checks.quantile_drift(df, drift_against, drift_col)
-
-    img_meta = img_fid = container = blurry = blank = None
-    want_quality = blur_threshold is not None or count_blank_images
-    if image_checks:
-        # ONE decode pass for both image verdict families, and ONE
-        # action for both counts (r3 verdict #5: two full decodes of
-        # `bytes` was the dominant image-leg cost, paid twice; a
-        # second .count() would re-run the Arrow stage too)
-        img_in = df
-        if balance_image_bytes is not None:
-            # byte-skewed splits make the Arrow decode stage run at
-            # the speed of its fattest partition; one payload-sized
-            # round-robin shuffle evens it (north_star "size-based
-            # coalesce" for oversized image partitions). Opt-in: it
-            # IS an extra shuffle of the payload.
-            from .partitioning import size_balanced
-
-            img_in = size_balanced(
-                df, "bytes", target_bytes=balance_image_bytes,
-                total_bytes=image_total_bytes)
-        combined = image_full_check(
-            img_in, container_audit=png_container_audit,
-            quality=want_quality)
-        aggs = [
-            F.coalesce(F.sum("n_meta_violations"), F.lit(0))
-            .alias("meta"),
-            F.coalesce(
-                F.sum((~F.col("pixels_ok") | ~F.col("caption_ok"))
-                      .cast("long")), F.lit(0)).alias("fid"),
-        ]
-        if png_container_audit:
-            # NULL container_ok = non-PNG payload, not a violation
-            aggs.append(F.coalesce(
-                F.sum((F.col("container_ok") == F.lit(False))
-                      .cast("long")), F.lit(0)).alias("cont"))
-        if blur_threshold is not None:
-            # same decode pass, same single action: quality columns
-            # ride the fused stage (NULL = undecodable, counted by
-            # the metadata family, not here)
-            aggs.append(F.coalesce(
-                F.sum((F.col("lap_abs_sum") < F.lit(int(blur_threshold)))
-                      .cast("long")), F.lit(0)).alias("blur"))
-        if count_blank_images:
-            aggs.append(F.coalesce(
-                F.sum((F.col("n_distinct_rgb") == F.lit(1))
-                      .cast("long")), F.lit(0)).alias("blank"))
-        row = combined.agg(*aggs).collect()[0]
-        img_meta, img_fid = int(row["meta"]), int(row["fid"])
-        if png_container_audit:
-            container = int(row["cont"])
-        if blur_threshold is not None:
-            blurry = int(row["blur"])
-        if count_blank_images:
-            blank = int(row["blank"])
-
-    return PipelineReport(
-        run=run,
-        partition_verdicts=verdicts,
-        unique_violations=unique_violations,
-        referential_violations=ref_out,
-        drift=drift,
-        image_metadata_violations=img_meta,
-        image_fidelity_failures=img_fid,
-        container_violations=container,
-        blurry_images=blurry,
-        blank_images=blank,
-    )
+    return PipelineReport(run=run, partition_verdicts=verdicts)

@@ -211,9 +211,7 @@ def _attach_cosine_arrow(pairs: DataFrame,
                 vb, ob, lb = _flat(b_col, n)
                 for d in np.unique(la[(la == lb) & (la >= 0)]):
                     idx = np.nonzero((la == d) & (lb == d))[0]
-                    if d == 0:
-                        with np.errstate(invalid="ignore"):
-                            cos[idx] = 0.0 / 0.0
+                    if d == 0:  # two empty vectors: cos stays NaN
                         continue
                     gather = np.arange(int(d))[None, :]
                     a_m = va[oa[idx][:, None] + gather]

@@ -52,14 +52,6 @@ def test_exact_quantile_drift_frame_self_is_zero(spark, orders) -> None:
     assert all(r["rel_gap"] == 0.0 and not r["drifted"] for r in out)
 
 
-def test_quantile_drift_sketch_detects_shift(spark, orders) -> None:
-    shifted = orders.withColumn(
-        "o_totalprice", F.col("o_totalprice") * 2
-    )
-    res = checks.quantile_drift(orders, shifted, "o_totalprice")
-    assert res["drifted"] and res["max_rel_gap"] > 0.4
-
-
 def test_cross_modal_conflicts(spark) -> None:
     """One melted scan finds both conflict families; the two-distinct
     threshold and NULL exclusion pinned; single-aggregation plan (≤2

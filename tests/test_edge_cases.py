@@ -85,6 +85,20 @@ def test_similarity_empty_queries(spark) -> None:
         .count() == 0
 
 
+def test_cosine_of_two_empty_embeddings_is_nan(spark) -> None:
+    """A pair of two empty embeddings yields a NaN cosine, like any
+    other pair with no defined angle; it must not fail the job."""
+    import math
+
+    pairs = spark.createDataFrame(
+        [(1, [], []), (2, [1.0], [1.0])],
+        "pid long, vec_a array<double>, vec_b array<double>")
+    got = {r["pid"]: r["cosine"]
+           for r in SIM._attach_cosine_arrow(pairs).collect()}
+    assert math.isnan(got[1])
+    assert got[2] == 1.0
+
+
 def test_referential_empty_dim(spark) -> None:
     fact = spark.createDataFrame([(1, 10), (2, 20)], ["id", "fk"])
     dim = spark.createDataFrame([], "pk long")

@@ -281,63 +281,11 @@ def test_pixel_phash_groups_and_distinctness(spark):
     assert got["d"] is None and got["e"] is None
 
 
-def test_image_full_check_equivalence_and_single_decode(
-        spark, with_bytes) -> None:
-    """The fused single-decode stage (r4, pipeline's path) must agree
-    with BOTH standalone families on a corpus with seeded metadata
-    corruptions, and its plan must contain exactly one Arrow stage —
-    one read of `bytes`."""
-    from cerberus_cpp_spark.operators.image_checks import (
-        image_full_check,
-    )
-
-    df = (
-        with_bytes
-        .withColumn("i", F.expr("cast(substring(image_id, 5) as long)"))
-        .withColumn("w", F.expr("cast(8 + i % 9 as int)"))
-        .withColumn("h", F.expr("cast(8 + i % 7 as int)"))
-        .withColumn("fmt", F.expr("IF(i = 7, 'webp', fmt)"))
-        .withColumn("bytes", F.expr(
-            "IF(i = 11, substring(bytes, 1, 10), bytes)"))
-        .drop("i")
-    )
-    combined = image_full_check(df)
-    plan = combined._jdf.queryExecution().executedPlan().toString()
-    # exactly ONE check stage ('work'); the fixture's synthetic byte
-    # GENERATOR is itself a MapInPandas ('gen'), so count by name
-    assert plan.count("MapInPandas work") == 1, plan
-    assert "Exchange" not in plan  # narrow: no shuffle either
-    got = combined.collect()
-
-    # metadata family: sum of per-row counts == standalone row count,
-    # and the per-row messages match the standalone (id, path) set
-    meta_rows = metadata_consistency_violations(df).collect()
-    assert sum(r["n_meta_violations"] for r in got) == len(meta_rows)
-    fused_msgs = sorted(
-        (r["image_id"], m) for r in got for m in r["meta_messages"])
-    standalone_msgs = sorted(
-        (r["image_id"], r["message"]) for r in meta_rows)
-    assert fused_msgs == standalone_msgs
-
-    # fidelity family: per-row verdicts identical (the truncated
-    # payload at i=11 now also fails pixels_ok — same in both)
-    fid = {r["image_id"]: r for r in fidelity_check(df).collect()}
-    for r in got:
-        f = fid[r["image_id"]]
-        assert r["pixels_ok"] == f["pixels_ok"], r["image_id"]
-        assert r["caption_ok"] == f["caption_ok"], r["image_id"]
-        assert r["psnr_db"] == f["psnr_db"], r["image_id"]
-        assert r["verdict"] == f["verdict"], r["image_id"]
-
-
 def test_lossy_vp8_routes_to_decode_unsupported(spark) -> None:
     """r3 verdict #6: a well-formed lossy-VP8 container must surface
     as a distinct decode_unsupported verdict — never a job-killing
     error, never conflated with corruption. Planted via the same
     id%30==8 rule the img_fidelity contract query uses."""
-    from cerberus_cpp_spark.operators.image_checks import (
-        image_full_check,
-    )
     from cerberus_cpp_spark.sources.imagegen import (
         UnsupportedCodecError,
         decode_image,
@@ -367,8 +315,7 @@ def test_lossy_vp8_routes_to_decode_unsupported(spark) -> None:
         else:
             assert r["verdict"] != "decode_unsupported", img_id
 
-    # metadata family: distinct message prefix (not "undecodable"),
-    # in both the standalone and the fused single-decode stage
+    # metadata family: distinct message prefix (not "undecodable")
     meta = metadata_consistency_violations(
         df.withColumn("i", F.expr("cast(substring(image_id, 5) as long)"))
         .withColumn("w", F.expr("cast(8 + i % 9 as int)"))
@@ -379,9 +326,6 @@ def test_lossy_vp8_routes_to_decode_unsupported(spark) -> None:
     assert len(lossy_msgs) == len(planted)
     assert all(r["message"].startswith("decode_unsupported:")
                for r in lossy_msgs)
-    full = {r["image_id"]: r for r in image_full_check(df).collect()}
-    for img_id in planted:
-        assert full[img_id]["verdict"] == "decode_unsupported"
 
 
 def test_fidelity_verdicts_partition_the_corpus(spark, with_bytes) -> None:
@@ -427,35 +371,6 @@ def test_png_chunk_audit_operator(spark) -> None:
     assert "truncated" in got["trunc"]["message"]
     assert got["foreign"]["verdict"] == "malformed"
     assert got["nopay"]["verdict"] == "no_payload"
-
-
-def test_image_full_check_container_column(spark) -> None:
-    """container_audit=True: PNG rows get a real verdict from the
-    chunk walk; non-PNG rows are NULL (their containers have no
-    CRCs); schema is unchanged when the flag is off."""
-    import numpy as np
-
-    from cerberus_cpp_spark.operators.image_checks import image_full_check
-    from cerberus_cpp_spark.sources.imagegen import encode_pixels
-
-    px = np.arange(5 * 7 * 3, dtype=np.uint8).reshape(5, 7, 3)
-    good = encode_pixels(px, "png")
-    bad = good[:-4] + b"\x00\x00\x00\x00"
-    jpg = encode_pixels(px, "jpeg")
-    df = spark.createDataFrame(
-        [("img-000000000001", good, "c", "png", 7, 5),
-         ("img-000000000002", bad, "c", "png", 7, 5),
-         ("img-000000000003", jpg, "c", "jpeg", 7, 5)],
-        "image_id string, bytes binary, caption string, fmt string,"
-        " w int, h int")
-    out = {r["image_id"][-1]: r
-           for r in image_full_check(df, container_audit=True).collect()}
-    assert out["1"]["container_ok"] is True
-    assert out["2"]["container_ok"] is False
-    assert "IEND" in out["2"]["container_msg"]
-    assert out["3"]["container_ok"] is None
-    cols = image_full_check(df).columns
-    assert "container_ok" not in cols
 
 
 def test_image_content_drift(spark) -> None:

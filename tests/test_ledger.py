@@ -171,6 +171,25 @@ def test_null_partition_values_handled(spark, tmp_path) -> None:
         F.col("partition_value") == NULL_PARTITION).collect()
     assert len(null_row) == 1 and null_row[0]["rows"] == 250
 
+    # a value that is literally the sentinel shares the NULL key; its
+    # rows are validated too, so the ledger sums to counts()
+    lit = spark.createDataFrame(
+        [("a", 1), (NULL_PARTITION, -1), (NULL_PARTITION, -2), (None, 3)],
+        "p string, v bigint")
+    lit_tv = TableValidator({"v": {"type": "integer", "min": 0}},
+                            extra_cols=("p",))
+    lit_ledger = ValidationLedger(spark, str(tmp_path / "lit"))
+    run_validation(lit, lit_tv, "p", lit_ledger)
+    want = lit_tv.validate(lit).counts()
+    assert (want["rows"], want["violations"]) == (4, 2)
+    got = lit_ledger.read().agg(F.sum("rows"), F.sum("violations")) \
+        .collect()[0]
+    assert (got[0], got[1]) == (want["rows"], want["violations"])
+    sentinel = lit_ledger.read().where(
+        F.col("partition_value") == NULL_PARTITION).collect()
+    assert len(sentinel) == 1 and sentinel[0]["rows"] == 3
+    assert sentinel[0]["passed"] is False
+
 
 def test_missing_ledger_reads_empty_but_corruption_raises(
     spark, tmp_path
@@ -285,7 +304,6 @@ def test_thousand_partition_resume_cost_stays_flat(spark, tmp_path) -> None:
     # (a) the resume planned exactly the uncommitted remainder
     assert summary["partitions_total"] == n_parts - 18 * per_commit
     assert summary["chunks"] == 2
-    assert summary["empty_partitions"] == []
     assert ledger.completed_partitions().count() == n_parts
     assert pending_partitions(df, "part", ledger) == []
 
@@ -293,3 +311,27 @@ def test_thousand_partition_resume_cost_stays_flat(spark, tmp_path) -> None:
     # overhead (ledger read + discovery scan) and host noise while
     # still failing loudly if resume re-validates committed chunks
     assert resume_wall < kill_wall * 0.6, (resume_wall, kill_wall)
+
+
+def test_hive_escaped_and_null_partition_values(spark, tmp_path) -> None:
+    """A hive-partitioned table whose partition values need escaping
+    in directory names (':' as %3A) or are NULL: every row is
+    validated under the column's own string value or the
+    NULL_PARTITION sentinel."""
+    from cerberus_cpp_spark.operators.ledger import NULL_PARTITION
+
+    path = str(tmp_path / "esc")
+    df = spark.createDataFrame(
+        [(1, "a"), (2, None), (3, "b:c")], "id int, day string")
+    df.write.partitionBy("day").mode("overwrite").parquet(path)
+
+    ledger = ValidationLedger(spark, str(tmp_path / "led"))
+    table = spark.read.parquet(path)
+    tv = TableValidator({"id": {"type": "integer", "min": 0}},
+                        allow_unknown=True)
+    summary = run_validation(table, tv, "day", ledger)
+    assert summary["partitions_processed"] == 3
+    done = {r["partition_value"]: r
+            for r in ledger.read().collect()}
+    assert sorted(done) == sorted([NULL_PARTITION, "a", "b:c"])
+    assert all(r["rows"] == 1 for r in done.values())

@@ -324,7 +324,9 @@ def test_name_collision_no_longer_hides_dead_code(colliding) -> None:
 # ---------------------------------------------------------------------------
 
 #: the layers the system is made of; their options are checked
-OPTION_SCOPE = ("plans/", "dynamic/", "operators/checks.py")
+OPTION_SCOPE = ("plans/", "dynamic/", "operators/checks.py",
+                "operators/pipeline.py", "operators/ledger.py",
+                "operators/partitioning.py")
 #: the three reasons an option may stay without a real caller
 OPTION_REASONS = ("policy:", "extension point:", "cost bound:")
 
@@ -363,6 +365,8 @@ ALLOWED_OPTIONS = {
         "extension point: registerType for the interpreter twin",
     "operators/checks.py::missing_time_buckets(max_buckets)":
         "cost bound: tests lower it to reach the guarded explode",
+    "operators/ledger.py::ValidationLedger.__init__(compact_every)":
+        "cost bound: tests lower it to reach compaction",
 }
 
 _FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)

@@ -155,4 +155,4 @@ def test_every_worker_closure_runs_the_task_prelude() -> None:
                         and _runs_prelude(defs[arg.id], defs)):
                     missing.append(f"{path.relative_to(LIB)}:{call.lineno}")
     assert not missing
-    assert workers >= 59 and bootstraps >= 58
+    assert workers >= 58 and bootstraps >= 57
